@@ -104,24 +104,9 @@ object TopoIntersections {
       // persist so the subtree executes once, not four times
       .cache()
 
-    if (sys.env.contains("GRAFT_PROFILE")) {
-      def t[T](n: String)(f: => T): T = {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(f"[profile]     topo/$n%-20s ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
-      }
-      t("ints0")(ints0.cache().count())
-      val aj = averageJunctionDuplicates(ints0).cache()
-      t("afterJunction")(aj.count())
-      val co = averageNearbyDuplicates(spark, aj).cache()
-      t("coalesced")(co.count())
-      val rj = removeJunctions(co)
-      t("removeJunctions")(rj.count())
-      rj
-    } else {
-      val afterJunction = averageJunctionDuplicates(ints0).cache()
-      val coalesced = averageNearbyDuplicates(spark, afterJunction)
-      removeJunctions(coalesced)
-    }
+    val afterJunction = averageJunctionDuplicates(ints0).cache()
+    val coalesced = averageNearbyDuplicates(spark, afterJunction)
+    removeJunctions(coalesced)
   }
 
   /** A4 (geo.js:738-766): JUNCTION-named intersections with identical streets

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.streaming.Streaming
@@ -378,5 +379,110 @@ class StreamCkptSpec extends AnyFunSuite {
     // and a healthy checkpoint still skips
     Lineage.materialize(spark, dir, input, stage)
     assert(counter.get() === 2)
+  }
+
+  // ---- skip-path checks: every way a stored checkpoint can be wrong -------
+  private def sqStage(counter: java.util.concurrent.atomic.AtomicInteger)(df: DataFrame) = {
+    counter.incrementAndGet()
+    df.withColumn("sq", col("id") * col("id"))
+  }
+
+  /** a committed checkpoint of `sqStage` over range(100); `damage` then
+    * rewrites part of it, and the next materialize must recompute exactly
+    * once and serve the correct rows. */
+  private def assertRecomputes(what: String)(damage: String => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("ckpt_skip").toString
+    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
+    val input = spark.range(100).toDF("id")
+    Lineage.materialize(spark, dir, input, sqStage(counter))
+    damage(dir)
+    val out = Lineage.materialize(spark, dir, input, sqStage(counter))
+    assert(counter.get() === 2, s"$what must recompute, not serve")
+    assert(out.agg(count(lit(1)), sum(col("sq"))).as[(Long, Long)].head() ===
+      ((100L, (0L until 100L).map(i => i * i).sum)))
+  }
+
+  test("lineage skip path: same row count, one value changed → recompute") {
+    assertRecomputes("a changed value under a matching row count") { dir =>
+      spark.range(100).toDF("id")
+        .withColumn("sq", when(col("id") === 42, lit(0L)).otherwise(col("id") * col("id")))
+        .write.mode("overwrite").parquet(s"$dir/data")
+    }
+  }
+
+  test("lineage skip path: manifest without a recorded schema → recompute") {
+    assertRecomputes("a manifest without a schema") { dir =>
+      val path = java.nio.file.Paths.get(dir, "_lineage_manifest.json")
+      val m = new com.fasterxml.jackson.databind.ObjectMapper().readTree(path.toFile)
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      assert(m.remove("schema") != null)
+      java.nio.file.Files.writeString(path, m.toString)
+    }
+  }
+
+  test("lineage skip path: stored column type differs from the recorded schema → recompute, not throw") {
+    assertRecomputes("data unreadable with the recorded schema") { dir =>
+      spark.range(100).toDF("id").withColumn("sq", (col("id") * col("id")).cast("string"))
+        .write.mode("overwrite").parquet(s"$dir/data")
+    }
+  }
+
+  test("lineage skip path: a healthy checkpoint skips; the stage closure runs 0 times") {
+    val dir = java.nio.file.Files.createTempDirectory("ckpt_ok").toString
+    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
+    val input = spark.range(0, 100, 1, 3).toDF("id")
+    val committed = Lineage.materialize(spark, dir, input, sqStage(counter))
+    assert(counter.get() === 1)
+    val resumed = Lineage.materialize(spark, dir, input, sqStage(counter))
+    assert(counter.get() === 1, "a healthy checkpoint must not rerun its stage")
+    assert(resumed.schema === committed.schema)
+    assert(resumed.orderBy("id").collect().toSeq === committed.orderBy("id").collect().toSeq)
+  }
+
+  test("lineage fingerprint: xor of map-only partStats equals a global bit_xor(xxhash64)") {
+    def globalXor(df: DataFrame, cols: Seq[String]): Long = {
+      val r = df.select(xxhash64(cols.map(col): _*).as("h")).agg(expr("bit_xor(h)")).head()
+      if (r.isNullAt(0)) 0L else r.getLong(0)
+    }
+    def xorOf(stats: Array[Lineage.PartStat]) = stats.foldLeft(0L)(_ ^ _.contentHash)
+    // columns z, a, m: not in sorted order; 8 partitions of 5 ids, only the
+    // first 3 keep rows after the filter
+    val df = spark.range(0, 40, 1, 8).filter(col("id") < 15)
+      .select((col("id") * 7 % 13).as("z"), col("id").as("a"),
+        when(col("id") % 5 =!= 0, concat(lit("s"), col("id").cast("string"))).as("m"))
+    val stats = Lineage.partStats(df)
+    assert(stats.length === 8 && stats.count(_.rows == 0) === 5, stats.toSeq)
+    assert(stats.map(_.rows).sum === 15L)
+    assert(xorOf(stats) === globalXor(df, Seq("z", "a", "m")))
+    assert(Lineage.fingerprint(df) === globalXor(df, Seq("a", "m", "z")))
+    assert(Lineage.fingerprint(df) === Lineage.fingerprint(df.select("m", "z", "a").repartition(3)),
+      "the fingerprint ignores column order and partition layout")
+    assert(Lineage.fingerprint(df) != xorOf(stats), "column order matters to the row hash")
+    val empty = df.filter(lit(false))
+    assert(Lineage.fingerprint(empty) === 0L && globalXor(empty, Seq("a", "m", "z")) === 0L)
+    assert(xorOf(Lineage.partStats(empty)) === 0L)
+  }
+
+  test("lineage bookkeeping: exactly 2 jobs beyond the stage's own, committing and resuming") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    def jobs(action: => Unit): Int = {
+      org.apache.spark.graft.ListenerBus.drain(sc)
+      val n = new java.util.concurrent.atomic.AtomicInteger(0)
+      val counter = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+      }
+      sc.addSparkListener(counter)
+      try { action; org.apache.spark.graft.ListenerBus.drain(sc); n.get() }
+      finally sc.removeSparkListener(counter)
+    }
+    val input = spark.range(0, 1000, 1, 4).toDF("id")
+    def stage(df: DataFrame) = df.withColumn("sq", col("id") * col("id")) // map-only
+    val scratch = java.nio.file.Files.createTempDirectory("ckpt_jobs").toString
+    val own = jobs(stage(input).write.parquet(s"$scratch/plain"))
+    assert(own >= 1)
+    val dir = s"$scratch/ckpt"
+    assert(jobs(Lineage.materialize(spark, dir, input, stage)) === own + 2, "commit")
+    assert(jobs(Lineage.materialize(spark, dir, input, stage)) === 2, "resume")
   }
 }
