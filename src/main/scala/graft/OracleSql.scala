@@ -408,13 +408,6 @@ ORDER BY streets, raw, node_id""",
 SELECT * FROM ($geomBody)
 ORDER BY streets, raw, lat, lon""",
 
-    // same oracle as q_geom_intersections: the segment-indexed finder must
-    // be row-identical to the bbox-binned one (the 100× scale path)
-    "q_geom_seg_indexed" ->
-      s"""WITH $gridCte
-SELECT * FROM ($geomBody)
-ORDER BY streets, raw, lat, lon""",
-
     // ---- closed form: full feature set with city assignment (J6 on the
     // intersection output; u/v recovered from the fix6-rounded coords) ------
     "q_feature_city" ->

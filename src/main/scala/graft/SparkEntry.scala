@@ -99,18 +99,6 @@ object SparkEntry {
         concat_ws(",", col("wayIds")).as("way_ids"))
         .orderBy("streets", "raw", "lat", "lon")),
 
-    // the segment-indexed scale path, gated against the SAME oracle as the
-    // bbox-binned finder (row-identical by construction; GeomSpec asserts it)
-    "q_geom_seg_indexed" -> ((s, dir) => {
-      val (_, _, wayData) = Pipeline.prepared(s, dir)
-      GeomIntersections.applySegmentIndexed(s, wayData).select(
-        col("streets"), col("raw"),
-        round(col("lat"), 6).as("lat"), round(col("lon"), 6).as("lon"),
-        col("nodeId").as("node_id"),
-        concat_ws(",", col("wayIds")).as("way_ids"))
-        .orderBy("streets", "raw", "lat", "lon")
-    }),
-
     "q_deadends" -> ((s, dir) => {
       val (_, _, wayData) = Pipeline.prepared(s, dir)
       WayOps.deadEnds(wayData)

@@ -819,18 +819,6 @@ object PqOps {
   }
 }
 
-/** ArrayData wrapper over Geom.segHit for StaticInvoke codegen: the scalar
-  * refine of the segment-indexed geometric finder is its hot inner op (one
-  * call per candidate segment pair), so it must stay inside whole-stage
-  * codegen. Misses return null with no allocation (hit rows are rare). */
-object GeomEval {
-  def segHitArray(lat1: Double, lon1: Double, lat2: Double, lon2: Double,
-                  lat3: Double, lon3: Double, lat4: Double, lon4: Double): ArrayData = {
-    val hit = Geom.segHit(lat1, lon1, lat2, lon2, lat3, lon3, lat4, lon4)
-    if (hit == null) null else new GenericArrayData(Array[Any](hit(0), hit(1)))
-  }
-}
-
 /** Matches `text` against a whole pattern TABLE at once, returning the
   * indices of satisfied entries (RLIKE find() semantics, XOR the per-entry
   * negate flag). The point is compilation cost: `streets RLIKE regex` with a
@@ -1025,13 +1013,6 @@ object fns {
     c(WalkWithinWay(e(nodes), e(flat), e(nodeId), e(meters)))
   def patterns_matched(text: Column, regexes: Array[String], negates: Array[Boolean]): Column =
     c(MultiPatternMatch(e(text), regexes, negates))
-  def seg_seg_hit(cols: Column*): Column =
-    c(org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke(
-      classOf[GeomEval.type],
-      ArrayType(DoubleType, containsNull = false),
-      "segHitArray",
-      cols.map(e),
-      propagateNull = true))
   def pq_encode(emb: Column, books: Array[Array[Array[Float]]]): Column =
     c(PqEncode(e(emb), books))
   def pq_dot_table(emb: Column, books: Array[Array[Array[Float]]]): Column =

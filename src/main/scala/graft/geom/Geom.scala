@@ -67,16 +67,6 @@ object Geom {
     } else false
   }
 
-  /** segment × segment first-hit as an allocation-per-hit wrapper (hit rows
-    * are rare; misses return null with no allocation). Used by the
-    * segment-indexed geometric finder. */
-  def segHit(lat1: Double, lon1: Double, lat2: Double, lon2: Double,
-             lat3: Double, lon3: Double, lat4: Double, lon4: Double): Array[Double] = {
-    val out = new Array[Double](2)
-    if (segSegIntersect(lat1, lon1, lat2, lon2, lat3, lon3, lat4, lon4, out)) out
-    else null
-  }
-
   /** First intersection point of two polylines (flat arrays: lat0,lon0,lat1,lon1,...).
     * Scans segments in order (i outer, j inner) and returns the first hit —
     * this matches the reference keeping `lineIntersect(...).features[0]`

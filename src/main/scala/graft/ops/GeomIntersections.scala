@@ -13,6 +13,15 @@ import graft.exprs.fns
   * motorway subset (P4: `way.bridge` is never set on the objects the
   * reference tests, so the effective predicate is motorway-only) — tiny,
   * so Spark broadcasts it.
+  *
+  * The reference's bin iterator may yield the same way pair once per shared
+  * cell and tolerates the duplicate output rows ("intersections of >2 ways
+  * could appear multiple times", geo.js:270); here cross-cell duplicate
+  * pairs are dropped before the refine (W4 normalization).
+  *
+  * Output columns: lat, lon, raw, streets, wayIds array<long>, nodeId
+  * string ('Geom' or first common node id), ord (large sentinel — geometric
+  * rows come after topological ones in the reference output).
   */
 object GeomIntersections {
 
@@ -24,22 +33,7 @@ object GeomIntersections {
       .withColumn("min_lon", array_min(transform(col("geometry"), g => g.getField("lon"))))
       .withColumn("max_lon", array_max(transform(col("geometry"), g => g.getField("lon"))))
 
-  /** Output columns: lat, lon, raw, streets, wayIds array<long>,
-    * nodeId string ('Geom' or first common node id), ord (large sentinel —
-    * geometric rows come after topological ones in the reference output).
-    */
-  /** broadcastLeft: the left side is the named-motorway subset (~1% of ways
-    * in the reference world) — broadcast by default; at planet scale pass
-    * false to build a shuffled hash join on cell instead (same result, no
-    * driver-sized relation; mirrors SpatialOps.imageWayCellJoin's knob).
-    *
-    * dedupPairs (W4 divergence knob): the reference's bin iterator may yield
-    * the same way pair once per shared cell and tolerates the duplicate
-    * output rows ("intersections of >2 ways could appear multiple times",
-    * geo.js:270). Default true normalizes with dropDuplicates; pass false
-    * for reference-exact duplicate emission. */
-  def apply(spark: SparkSession, wayData: DataFrame, res: Int = 2,
-            broadcastLeft: Boolean = true, dedupPairs: Boolean = true): DataFrame = {
+  def apply(spark: SparkSession, wayData: DataFrame, res: Int = 2): DataFrame = {
     val bounded = withBounds(wayData)
     val withCells = bounded
       .select(col("way_id"), col("name"), col("highway"), col("nodes"), col("geometry"),
@@ -58,13 +52,12 @@ object GeomIntersections {
 
     // J3 symmetry breaking (gpsBins.js:216-226): yield way2 iff it fails the
     // predicate or has a larger id; never self-pair. Cross-cell duplicate
-    // pairs are dropped (W4 normalization knob; the reference may emit them).
-    val leftK = if (broadcastLeft) broadcast(left) else left.hint("SHUFFLE_HASH")
-    val joined = leftK.join(right,
+    // pairs are dropped (W4).
+    val pairs = broadcast(left).join(right,
         left("cell") === right("cell") &&
           col("id1") =!= col("id2") &&
           (col("hw2") =!= "motorway" || col("id2") > col("id1")), "inner")
-    val pairs = if (dedupPairs) joined.dropDuplicates("id1", "id2") else joined
+      .dropDuplicates("id1", "id2")
 
     val refined = pairs
       // J4: exact polyline intersection, first hit (geo.js:201-215)
@@ -92,90 +85,6 @@ object GeomIntersections {
 
     // only removeJUNCTIONS runs on the geometric path (geo.js:305-325;
     // junction/boulevard averaging is commented out there)
-    TopoIntersections.removeJunctions(rows)
-  }
-
-  /** THE SCALE PATH (PERF.md "known costs" item): same results as apply(),
-    * but candidates come from a SEGMENT-level cell index instead of
-    * replicating whole-way geometry into every bbox-covering cell.
-    *
-    * Why it survives 100×: a long way covers O(length²/cell²) bbox cells
-    * but only O(length/cell) segment cells; candidate rows are 6 doubles +
-    * ids (never geometry arrays); and the refine is one codegen'd
-    * segment×segment kernel per candidate instead of an O(|A|·|B|)
-    * polyline scan per way pair. Correct because two intersecting polylines
-    * have an intersecting SEGMENT pair, whose bboxes both contain the
-    * intersection point and therefore share its covering cell — no true
-    * pair is lost, and pruned candidates are exactly the ones the polyline
-    * refine would reject anyway.
-    *
-    * First-hit parity: the reference keeps the polyline scan's first hit
-    * (outer i over way1 segments, inner j over way2). Aggregating hits with
-    * min over (i1, i2) lexicographic reproduces that choice exactly, so
-    * the output is row-identical to apply() (asserted in GeomSpec).
-    */
-  def applySegmentIndexed(spark: SparkSession, wayData: DataFrame, res: Int = 2): DataFrame = {
-    val named = wayData.filter(length(col("name")) > 0)
-    def segsOf(df: DataFrame): DataFrame = df
-      .select(col("way_id"), col("highway"),
-        posexplode(expr(
-          """transform(sequence(0, size(geometry) - 2), i -> struct(
-               geometry[i].lat as lat1, geometry[i].lon as lon1,
-               geometry[i+1].lat as lat2, geometry[i+1].lon as lon2))"""))
-          .as(Seq("i", "seg")))
-      .select(col("way_id"), col("highway"), col("i"),
-        col("seg.lat1"), col("seg.lon1"), col("seg.lat2"), col("seg.lon2"))
-      .withColumn("cell", explode(fns.cells_covering(
-        least(col("lat1"), col("lat2")), least(col("lon1"), col("lon2")),
-        greatest(col("lat1"), col("lat2")), greatest(col("lon1"), col("lon2")), res)))
-
-    val l = segsOf(named.filter(col("highway") === "motorway"))
-      .select(col("cell"), col("way_id").as("id1"), col("i").as("i1"),
-        col("lat1").as("a_lat1"), col("lon1").as("a_lon1"),
-        col("lat2").as("a_lat2"), col("lon2").as("a_lon2"))
-    val r = segsOf(named)
-      .select(col("cell"), col("way_id").as("id2"), col("highway").as("hw2"),
-        col("i").as("i2"),
-        col("lat1").as("b_lat1"), col("lon1").as("b_lon1"),
-        col("lat2").as("b_lat2"), col("lon2").as("b_lon2"))
-
-    // J3 symmetry break at the segment level (same way-level predicate);
-    // a segment pair sharing k cells collapses in the min-aggregate below
-    val firstHits = l.join(r.hint("SHUFFLE_HASH"),
-        l("cell") === r("cell") && col("id1") =!= col("id2") &&
-          (col("hw2") =!= "motorway" || col("id2") > col("id1")))
-      .withColumn("hit", fns.seg_seg_hit(
-        col("a_lat1"), col("a_lon1"), col("a_lat2"), col("a_lon2"),
-        col("b_lat1"), col("b_lon1"), col("b_lat2"), col("b_lon2")))
-      .filter(col("hit").isNotNull)
-      .groupBy(col("id1"), col("id2"))
-      .agg(min(struct(col("i1"), col("i2"), col("hit"))).as("first"))
-      .select(col("id1"), col("id2"), col("first.hit").as("hit"))
-
-    // way-level attributes join back only for the (rare) hit pairs
-    val attrs = wayData.select(col("way_id"), col("name"), col("highway"), col("nodes"))
-    val refined = firstHits
-      .join(attrs.select(col("way_id").as("id1"), col("name").as("name1"),
-        col("nodes").as("nodes1")), Seq("id1"))
-      .join(attrs.select(col("way_id").as("id2"), col("name").as("name2"),
-        col("highway").as("hw2"), col("nodes").as("nodes2")), Seq("id2"))
-      .withColumn("common", array_intersect(col("nodes1"), col("nodes2")))
-      .withColumn("has_common", size(col("common")) > 0)
-      .filter(
-        when(col("hw2") === "motorway", !col("has_common"))
-          .when(col("hw2") === "motorway_link", lit(false))
-          .otherwise(lit(true)))
-
-    val rows = refined.select(
-      element_at(col("hit"), 1).as("lat"),
-      element_at(col("hit"), 2).as("lon"),
-      concat(col("name1"), lit("/"), col("name2")).as("raw"),
-      fns.clean_street_key(concat(col("name1"), lit("/"), col("name2"))).as("streets"),
-      sort_array(array(col("id1"), col("id2"))).as("wayIds"),
-      when(col("has_common"), element_at(col("common"), 1).cast("string"))
-        .otherwise(lit("Geom")).as("nodeId"),
-      (lit(4000000000000000L) + col("id1") * 1000000L + col("id2")).as("ord"))
-
     TopoIntersections.removeJunctions(rows)
   }
 }

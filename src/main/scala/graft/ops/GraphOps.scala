@@ -50,7 +50,6 @@ object GraphOps {
     if (smallMax > 0 && driverOrd.isDefined) {
       val probe = e.limit(smallMax + 1).collect()
       if (probe.length <= smallMax) {
-        System.err.println(s"[cc] small-graph driver closure (${probe.length} edges)")
         val mapping = driverComponents(e.sparkSession, probe, e.schema, driverOrd.get)
         return nodes.join(broadcast(mapping), Seq("id"), "left")
           .select(col("id"), coalesce(col("component"), col("id")).as("component"))
@@ -70,7 +69,6 @@ object GraphOps {
       converged = nextSig == sig
       e = next; sig = nextSig; it += 1
     }
-    System.err.println(s"[cc] converged in $it rounds (${sig._1} edges)")
     require(converged, s"connectedComponents did not converge in $maxIter rounds")
     // star forest: children map to their root; roots and isolated originals
     // map to themselves

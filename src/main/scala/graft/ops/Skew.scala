@@ -51,8 +51,8 @@ object Skew {
         transform(sequence(lit(0L), lit(nSalts - 1L)), s => col(cellCol) * 64 + s))
         .otherwise(array(col(cellCol) * 64))))
 
-  /** images×segments join with salting on hot cells; result columns match
-    * SpatialOps.imageWayCellJoin. */
+  /** images×segments join with salting on hot cells: only the keys differ
+    * from SpatialOps.imageWayCellJoin, the join body is shared. */
   def saltedImageWayJoin(images: DataFrame, wayData: DataFrame, res: Int,
                          maxDistDeg: Double, hotThreshold: Long,
                          nSalts: Int = 8): DataFrame = {
@@ -64,13 +64,7 @@ object Skew {
     val probes = imgCells
       .withColumn("salt_key", saltedPointKey(col("cell"), col("image_id"), hot, nSalts))
       .drop("cell")
-    probes.join(segs.hint("SHUFFLE_HASH"), Seq("salt_key"))
-      .withColumn("seg_dist", fns.point_seg_dist(col("lat"), col("lon"),
-        col("lat1"), col("lon1"), col("lat2"), col("lon2")))
-      .filter(col("seg_dist") <= maxDistDeg)
-      .groupBy(col("image_id"), col("way_id"), col("name"))
-      .agg(min(col("seg_dist")).as("dist_deg"),
-        first(col("lat")).as("lat"), first(col("lon")).as("lon"))
+    SpatialOps.imageWayJoin(probes, segs, "salt_key", maxDistDeg)
   }
 
   /** ADAPTIVE-RES point key: hot coarse cells re-encode at fine res.
@@ -84,11 +78,12 @@ object Skew {
 
   /** images×segments join with ADAPTIVE SUBDIVISION on hot cells: points in
     * hot coarse cells re-key at the fine res, the segment index carries hot
-    * regions fine and cold regions coarse; result columns match
-    * SpatialOps.imageWayCellJoin (equivalence proven in SkewSpec and gated
-    * by the same driver oracle as the plain/salted paths). Unlike salting,
-    * the per-key bound comes from geometry (fine cells hold fewer points),
-    * with NO point-side replication and no salt fan-out of the build side —
+    * regions fine and cold regions coarse; only the keys differ from
+    * SpatialOps.imageWayCellJoin, the join body is shared (equivalence proven
+    * in SkewSpec and gated by the same registry oracle as the plain/salted
+    * paths). Unlike salting, the per-key bound comes from geometry (fine
+    * cells hold fewer points), with NO point-side replication and no salt
+    * fan-out of the build side —
     * the right tool when a hot cell is dense but spatially spread, while
     * salting remains the answer for degenerate same-coordinate pileups. */
   def adaptiveImageWayJoin(images: DataFrame, wayData: DataFrame,
@@ -104,13 +99,7 @@ object Skew {
     val probes = imgCells
       .withColumn("akey", adaptivePointKey(col("lat"), col("lon"), resCoarse, resFine, hot))
       .drop("cell")
-    probes.join(segs.hint("SHUFFLE_HASH"), Seq("akey"))
-      .withColumn("seg_dist", fns.point_seg_dist(col("lat"), col("lon"),
-        col("lat1"), col("lon1"), col("lat2"), col("lon2")))
-      .filter(col("seg_dist") <= maxDistDeg)
-      .groupBy(col("image_id"), col("way_id"), col("name"))
-      .agg(min(col("seg_dist")).as("dist_deg"),
-        first(col("lat")).as("lat"), first(col("lon")).as("lon"))
+    SpatialOps.imageWayJoin(probes, segs, "akey", maxDistDeg)
   }
 
   /** ADAPTIVE-RES build side: segments index hot regions at fine res (cells

@@ -201,28 +201,31 @@ object SpatialOps {
   /** J2 applied to the image workload: geotagged images equi-joined to the
     * segment-cell index on their single cell, refined by codegen'd point-seg
     * distance, min per (image, way). The big (image) side is never
-    * replicated; the way side absorbs the distance buffer.
-    *
-    * The segment side is SHUFFLE_HASH by default: at planet scale (~10⁹
-    * segment rows) a broadcast OOMs the driver, and even when it fits the
-    * build is driver-serial (measured ~10 s at 1.8 M rows, PERF.md) while a
-    * shuffled build parallelizes with cores. Callers with a genuinely tiny
-    * dimension table can pass broadcastSegs = true. Skewed inputs route
-    * through Skew.saltedImageWayJoin (result-identical, salted keys). */
+    * replicated; the way side absorbs the distance buffer. Skewed inputs
+    * route through Skew.saltedImageWayJoin / Skew.adaptiveImageWayJoin,
+    * which only re-key both sides and share this join body. */
   def imageWayCellJoin(images: DataFrame, wayData: DataFrame,
-                       res: Int, maxDistDeg: Double,
-                       broadcastSegs: Boolean = false): DataFrame = {
-    val segs0 = segmentCells(wayData, res, maxDistDeg)
-    val segs = if (broadcastSegs) broadcast(segs0) else segs0.hint("SHUFFLE_HASH")
-    val imgCells = images.withColumn("cell", fns.cell_encode(col("lat"), col("lon"), res))
-    imgCells.join(segs, Seq("cell"))
+                       res: Int, maxDistDeg: Double): DataFrame =
+    imageWayJoin(images.withColumn("cell", fns.cell_encode(col("lat"), col("lon"), res)),
+      segmentCells(wayData, res, maxDistDeg), "cell", maxDistDeg)
+
+  /** The image↔way join body under any key policy: `probes` (image rows)
+    * and `segs` (segment rows) meet on the column `key`, candidates are
+    * refined by point-seg distance, min per (image, way).
+    *
+    * The segment side is SHUFFLE_HASH: at planet scale (~10⁹ segment rows)
+    * a broadcast OOMs the driver, and even when it fits the build is
+    * driver-serial (measured ~10 s at 1.8 M rows, PERF.md) while a shuffled
+    * build parallelizes with cores. */
+  private[ops] def imageWayJoin(probes: DataFrame, segs: DataFrame, key: String,
+                                maxDistDeg: Double): DataFrame =
+    probes.join(segs.hint("SHUFFLE_HASH"), Seq(key))
       .withColumn("seg_dist", fns.point_seg_dist(col("lat"), col("lon"),
         col("lat1"), col("lon1"), col("lat2"), col("lon2")))
       .filter(col("seg_dist") <= maxDistDeg)
       .groupBy(col("image_id"), col("way_id"), col("name"))
       .agg(min(col("seg_dist")).as("dist_deg"),
         first(col("lat")).as("lat"), first(col("lon")).as("lon"))
-  }
 
   /** J7 kNN: k nearest ways per image via cell-disk candidate join + exact
     * refinement + row_number top-k, with CELL-RING EXPANSION (the reference's
@@ -328,7 +331,6 @@ object SpatialOps {
           pending = pending.join(proven, Seq("image_id"), "left_anti")
             .localCheckpoint(true)
           nPending = pending.count()
-          System.err.println(s"[knn] ring $r: $nPending images unsettled")
           if (nPending == 0) remaining = false else r *= 2
         }
       }

@@ -1,12 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.plans.Inner
-import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.types.{DataType, IntegerType}
 
 import graft.cells.GridCell
 import graft.exprs.{CellDiskRect, CellEncode, Haversine}
@@ -28,24 +25,19 @@ case class CellDiskK(lat: Expression, meters: Double, res: Int)
   override protected def withNewChildInternal(c: Expression): Expression = copy(lat = c)
 }
 
-/** Optimizer rule: rewrites a naive distance theta-join —
+/** Blocked-join rule ([[BlockedJoin]]) for a naive distance theta-join —
   *
   *   a.join(b, haversine_m(a.lat, a.lon, b.lat, b.lon) <= meters)
   *
-  * which Spark can only execute as a broadcast-nested-loop / cartesian
-  * product — into the cell-bucketed equi-join this library builds by hand in
-  * SpatialOps: one side is exploded into the cell disk that covers its
-  * `meters`-neighborhood, the other side keeps its single cell, the join key
-  * is cell equality, and the ORIGINAL distance predicate is retained as the
-  * exact refinement. Declarative for the user, index-backed in the plan.
+  * the cell-bucketed equi-join this library builds by hand in SpatialOps:
+  * one side is exploded into the cell disk that covers its
+  * `meters`-neighborhood, the other side keeps its single cell, and the join
+  * key is cell equality. A pair meets in exactly one cell (the one-cell
+  * side's), so no owner conjunct is needed.
   *
-  * Fires only when ALL of:
-  *   - inner join whose condition has NO equi-join conjunct between the
-  *     sides (if one exists, Spark already has a hash key — and this guard
-  *     makes the rule idempotent: the rewritten join gains a cell equality);
-  *   - some conjunct is `Haversine(latA, lonA, latB, lonB) <= / < lit` with
-  *     the two point expressions cleanly split across the two sides, all
-  *     four deterministic, and the literal radius in (0, 100 km].
+  * Pattern: some conjunct is `Haversine(latA, lonA, latB, lonB) <= / < lit`
+  * with the two points cleanly split across the two sides and the literal
+  * radius in (0, 100 km].
   *
   * Resolution is the finest grid res whose cell covers the latitude radius;
   * the per-row longitude radius (grows with |lat|) is absorbed by CellDiskK
@@ -60,44 +52,17 @@ case class CellDiskK(lat: Expression, meters: Double, res: Int)
   * indices modulo the full span (the reference's bins, gpsBins.js:60-63,
   * do not wrap; this rule is strictly more complete). The side with the
   * smaller size estimate is the one replicated into the disk.
-  *
-  * Registered at session build via `spark.sql.extensions=graft.plans.GraftExtensions`
-  * or injected into a live session with `GraftPlans.enable(spark)`.
   */
-object DistanceJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
+object DistanceJoinRewrite extends BlockedJoin {
 
   /** beyond this the disk would be enormous at any sensible res — a distance
     * join this coarse is better served by a coarser manual layout. */
   private val MaxMeters = 100000.0
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case j @ Join(left, right, Inner, Some(cond), _) =>
-      val conjuncts = splitConjunctivePredicates(cond)
-      if (hasEquiKey(conjuncts, left, right)) j
-      else {
-        conjuncts.iterator.flatMap(distancePred(_, left, right)).nextOption() match {
-          case Some((latL, lonL, latR, lonR, meters)) =>
-            rewrite(j, latL, lonL, latR, lonR, meters)
-          case None => j
-        }
-      }
-  }
-
-  private def hasEquiKey(conjuncts: Seq[Expression],
-                         left: LogicalPlan, right: LogicalPlan): Boolean =
-    conjuncts.exists {
-      case EqualTo(a, b)       => splitsAcross(a, b, left, right)
-      case EqualNullSafe(a, b) => splitsAcross(a, b, left, right)
-      case _                   => false
+  override protected def rewrite(j: Join, conjuncts: Seq[Expression]): Option[LogicalPlan] =
+    conjuncts.iterator.flatMap(distancePred(_, j.left, j.right)).nextOption().map {
+      case (latL, lonL, latR, lonR, meters) => blocked(j, latL, lonL, latR, lonR, meters)
     }
-
-  private def splitsAcross(a: Expression, b: Expression,
-                           left: LogicalPlan, right: LogicalPlan): Boolean =
-    (fromSide(a, left) && fromSide(b, right)) ||
-      (fromSide(a, right) && fromSide(b, left))
-
-  private def fromSide(e: Expression, side: LogicalPlan): Boolean =
-    e.references.nonEmpty && e.references.subsetOf(side.outputSet) && e.deterministic
 
   private def litDouble(e: Expression): Option[Double] = e match {
     case Literal(v: Double, _) => Some(v)
@@ -128,7 +93,7 @@ object DistanceJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     }
   }
 
-  private def rewrite(j: Join, latL: Expression, lonL: Expression,
+  private def blocked(j: Join, latL: Expression, lonL: Expression,
                       latR: Expression, lonR: Expression, meters: Double): LogicalPlan = {
     // finest res whose cell size covers the latitude radius → the disk is
     // (2k+1)² with k == 1 in lat; only the lon extent can push k above 1
@@ -136,55 +101,18 @@ object DistanceJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     val res = math.max(0, math.min(5,
       math.floor(-math.log10(math.max(latRadDeg, 1e-12))).toInt))
 
+    def disk(child: LogicalPlan, lat: Expression, lon: Expression) =
+      exploded(child, CellDiskRect(CellEncode(lat, lon, res),
+        CellDiskK(lat, meters, res), Literal(GridCell.kLatFor(meters, res)), res),
+        "_graft_cell")
+    def cell(child: LogicalPlan, lat: Expression, lon: Expression) =
+      keyed(child, CellEncode(lat, lon, res), "_graft_cell_o")
+
     // replicate the smaller side into the disk; the bigger side keeps 1 cell
-    val explodeLeft = j.left.stats.sizeInBytes <= j.right.stats.sizeInBytes
-    val (expChild, expLat, expLon, othChild, othLat, othLon) =
-      if (explodeLeft) (j.left, latL, lonL, j.right, latR, lonR)
-      else (j.right, latR, lonR, j.left, latL, lonL)
-
-    val disk = Explode(CellDiskRect(
-      CellEncode(expLat, expLon, res), CellDiskK(expLat, meters, res),
-      Literal(GridCell.kLatFor(meters, res)), res))
-    val cellAttr = AttributeReference("_graft_cell", LongType, nullable = false)()
-    val gen = Generate(disk, unrequiredChildIndex = Nil, outer = false,
-      qualifier = None, generatorOutput = Seq(cellAttr), child = expChild)
-
-    val othCell = Alias(CellEncode(othLat, othLon, res), "_graft_cell_o")()
-    val proj = Project(othChild.output :+ othCell, othChild)
-
-    // cell equality is the new hash key; the original condition (including
-    // the haversine conjunct) stays as the exact refinement, so results are
-    // identical to the naive join
-    val newCond = And(EqualTo(cellAttr, othCell.toAttribute), j.condition.get)
-    val newJoin =
-      if (explodeLeft) Join(gen, proj, Inner, Some(newCond), j.hint)
-      else Join(proj, gen, Inner, Some(newCond), j.hint)
-    Project(j.output, newJoin)
-  }
-}
-
-/** `spark.sql.extensions` entry point: registers DistanceJoinRewrite in the
-  * session optimizer and the `graft_*` SQL function surface at build time. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => DistanceJoinRewrite)
-    ext.injectOptimizerRule(_ => HammingJoinRewrite)
-    ext.injectOptimizerRule(_ => RangeJoinRewrite)
-    GraftFunctions.all.foreach(ext.injectFunction)
-  }
-}
-
-/** Injection into a LIVE session (the driver owns session construction, so
-  * queries can't pass `spark.sql.extensions`): appends the rule to the
-  * experimental optimizer batch and registers the `graft_*` SQL functions,
-  * idempotently. */
-object GraftPlans {
-  def enable(spark: SparkSession): Unit = synchronized {
-    val cur = spark.experimental.extraOptimizations
-    val add = Seq(DistanceJoinRewrite, HammingJoinRewrite, RangeJoinRewrite)
-      .filterNot(cur.contains)
-    if (add.nonEmpty)
-      spark.experimental.extraOptimizations = cur ++ add
-    org.apache.spark.sql.graft.FunctionBridge.register(spark, GraftFunctions.all)
+    val ((l, kl), (r, kr)) =
+      if (j.left.stats.sizeInBytes <= j.right.stats.sizeInBytes)
+        (disk(j.left, latL, lonL), cell(j.right, latR, lonR))
+      else (cell(j.left, latL, lonL), disk(j.right, latR, lonR))
+    assemble(j, l, r, Seq((kl, kr)), owner = None)
   }
 }

@@ -1,77 +1,45 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.Inner
-import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
 
-/** Optimizer rule: rewrites a naive Hamming-distance theta-join —
+/** Blocked-join rule ([[BlockedJoin]]) for a naive Hamming-distance
+  * theta-join —
   *
   *   a.join(b, bit_count(a.phash ^ b.phash) <= k)        (k ≤ 3, 64-bit)
   *
-  * which Spark can only execute as a broadcast-nested-loop / cartesian
-  * product — into the 4×16-bit band-blocked equi-join this library builds by
-  * hand in ImageOps.phashNearDups: both sides explode into their 4
-  * (band, bucket) keys, the join key is band+bucket equality (pigeonhole: a
-  * pair within Hamming distance ≤ 3 of a 64-bit key shares at least one
-  * intact 16-bit band), and the ORIGINAL bit_count predicate is retained as
-  * the exact refinement. Declarative for the user, index-backed in the plan.
+  * the 4×16-bit band-blocked equi-join this library builds by hand in
+  * ImageOps.phashNearDups: both sides explode into their 4 (band, bucket)
+  * keys and the join key is band+bucket equality (pigeonhole: a pair within
+  * Hamming distance ≤ 3 of a 64-bit key shares at least one intact 16-bit
+  * band).
   *
-  * Each qualifying pair can share up to 4 intact bands, so the banded join
-  * would emit it up to 4 times; a FIRST-MATCHING-BAND conjunct (band b
-  * matches AND every band below b differs) keeps exactly one copy of each
-  * pair — no dropDuplicates shuffle, arbitrary payload columns preserved.
+  * Each qualifying pair can share up to 4 intact bands; the owner conjunct
+  * is the FIRST MATCHING BAND (band b matches AND every band below b
+  * differs), which keeps exactly one copy of each pair.
   *
-  * Fires only when ALL of:
-  *   - inner join whose condition has NO equi-join conjunct between the
-  *     sides (the guard also makes the rule idempotent: the rewritten join
-  *     gains band/bucket equality);
-  *   - some conjunct is `bit_count(el ^ er) <= / < lit` with el/er LongType,
-  *     deterministic, and cleanly split across the two sides;
-  *   - the effective max distance is in [0, 3] — 4 bands are complete
-  *     exactly for Hamming < 4; a coarser threshold needs more/wider bands
-  *     and is left to the hand-built operator.
+  * Pattern: some conjunct is `bit_count(el ^ er) <= / < lit` with el/er
+  * LongType and cleanly split across the two sides, and the effective max
+  * distance is in [0, 3] — 4 bands are complete exactly for Hamming < 4; a
+  * coarser threshold needs more/wider bands and is left to the hand-built
+  * operator.
   *
-  * Registered alongside DistanceJoinRewrite via GraftExtensions /
-  * GraftPlans.enable. Scale shape: candidate generation is an equi-join on
-  * narrow ×4-replicated rows, never all-pairs; hot 16-bit buckets (e.g.
+  * Scale shape: candidate generation is an equi-join on narrow
+  * ×4-replicated rows, never all-pairs; hot 16-bit buckets (e.g.
   * near-constant hash regions) route through the same skew machinery as any
   * hot key (graft.ops.Skew / AQE skew join).
   */
-object HammingJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
+object HammingJoinRewrite extends BlockedJoin {
 
   private val Bands = 4
   private val BandBits = 16
   private val BandMask = 0xFFFFL
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case j @ Join(left, right, Inner, Some(cond), _) =>
-      val conjuncts = splitConjunctivePredicates(cond)
-      if (hasEquiKey(conjuncts, left, right)) j
-      else {
-        conjuncts.iterator.flatMap(hammingPred(_, left, right)).nextOption() match {
-          case Some((el, er)) => rewrite(j, el, er)
-          case None           => j
-        }
-      }
-  }
-
-  private def hasEquiKey(conjuncts: Seq[Expression],
-                         left: LogicalPlan, right: LogicalPlan): Boolean =
-    conjuncts.exists {
-      case EqualTo(a, b)       => splitsAcross(a, b, left, right)
-      case EqualNullSafe(a, b) => splitsAcross(a, b, left, right)
-      case _                   => false
+  override protected def rewrite(j: Join, conjuncts: Seq[Expression]): Option[LogicalPlan] =
+    conjuncts.iterator.flatMap(hammingPred(_, j.left, j.right)).nextOption().map {
+      case (el, er) => blocked(j, el, er)
     }
-
-  private def splitsAcross(a: Expression, b: Expression,
-                           left: LogicalPlan, right: LogicalPlan): Boolean =
-    (fromSide(a, left) && fromSide(b, right)) ||
-      (fromSide(a, right) && fromSide(b, left))
-
-  private def fromSide(e: Expression, side: LogicalPlan): Boolean =
-    e.references.nonEmpty && e.references.subsetOf(side.outputSet) && e.deterministic
 
   private def litMax(e: Expression, strict: Boolean): Option[Int] = {
     val v = e match {
@@ -98,37 +66,27 @@ object HammingJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
       case _ => None
     }
     bc.filter { case (a, b) => a.dataType == LongType && b.dataType == LongType }
-      .flatMap { case (a, b) =>
-        if (fromSide(a, left) && fromSide(b, right)) Some((a, b))
-        else if (fromSide(a, right) && fromSide(b, left)) Some((b, a))
-        else None
-      }
+      .flatMap { case (a, b) => orient(a, b, left, right) }
   }
 
   /** bucket of `key` at a band given by an expression (0..3). */
   private def bucketAt(key: Expression, band: Expression): Expression =
     BitwiseAnd(ShiftRight(key, Multiply(band, Literal(BandBits))), Literal(BandMask))
 
-  private def rewrite(j: Join, el: Expression, er: Expression): LogicalPlan = {
+  private def blocked(j: Join, el: Expression, er: Expression): LogicalPlan = {
     val bandsLit = Literal.create((0 until Bands).toSeq,
       ArrayType(IntegerType, containsNull = false))
 
-    def banded(child: LogicalPlan, key: Expression, tag: String)
-        : (LogicalPlan, AttributeReference, Attribute) = {
-      val bandAttr = AttributeReference(s"_graft_band$tag", IntegerType,
-        nullable = false)()
-      val gen = Generate(Explode(bandsLit), unrequiredChildIndex = Nil,
-        outer = false, qualifier = None, generatorOutput = Seq(bandAttr),
-        child = child)
-      val bkt = Alias(bucketAt(key, bandAttr), s"_graft_bkt$tag")()
-      (Project(child.output :+ bandAttr :+ bkt, gen), bandAttr, bkt.toAttribute)
+    def banded(child: LogicalPlan, key: Expression, tag: String) = {
+      val (gen, band) = exploded(child, bandsLit, s"_graft_band$tag")
+      val (p, bkt) = keyed(gen, bucketAt(key, band), s"_graft_bkt$tag")
+      (p, band, bkt)
     }
-
     val (lp, bandL, bktL) = banded(j.left, el, "l")
     val (rp, bandR, bktR) = banded(j.right, er, "r")
 
-    // first-matching-band: keep the pair only at the LOWEST shared band, so
-    // each qualifying pair survives exactly once (one exists by pigeonhole)
+    // first-matching-band: keep the pair only at the LOWEST shared band (one
+    // exists by pigeonhole)
     def bandsDifferBelow(b: Int): Expression =
       (0 until b).map { i =>
         Not(EqualTo(bucketAt(el, Literal(i)), bucketAt(er, Literal(i))))
@@ -138,11 +96,6 @@ object HammingJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
       And(EqualTo(bandL, Literal(b)), bandsDifferBelow(b)): Expression
     }.reduce(Or)
 
-    // band+bucket equality is the new hash key; the original condition
-    // (including the bit_count conjunct) stays as the exact refinement, so
-    // results are identical to the naive join
-    val newCond = And(And(EqualTo(bandL, bandR), EqualTo(bktL, bktR)),
-      And(firstMatch, j.condition.get))
-    Project(j.output, Join(lp, rp, Inner, Some(newCond), j.hint))
+    assemble(j, lp, rp, Seq((bandL, bandR), (bktL, bktR)), Some(firstMatch))
   }
 }

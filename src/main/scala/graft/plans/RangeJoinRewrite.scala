@@ -2,9 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.plans.Inner
-import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
@@ -60,38 +58,29 @@ case class FloorDivBin(child: Expression, bin: Long) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** Optimizer rule: rewrites a naive 1-D range/interval theta-join —
+/** Blocked-join rule ([[BlockedJoin]]) for a naive 1-D range/interval
+  * theta-join —
   *
   *   point-in-interval:  p.ts >= i.s AND p.ts <= i.e       (BETWEEN)
   *   interval overlap:   a.s <= b.e AND b.s <= a.e
   *
-  * which Spark can only execute as a broadcast-nested-loop / cartesian
-  * product — into a bin-bucketed equi-join: both sides explode their interval
-  * into the fixed-width bins it covers (a point is the degenerate interval
-  * [p,p] — exactly one bin), the join key is bin equality, and the ORIGINAL
-  * predicate is retained as the exact refinement. This is the temporal twin
-  * of DistanceJoinRewrite's cell disk (same bucketing idea the hand-built
-  * operators use; Spark itself has no range-join strategy, cf. the public
-  * binned-range-join literature).
+  * a bin-bucketed equi-join: both sides explode their interval into the
+  * fixed-width bins it covers (a point is the degenerate interval [p,p] —
+  * exactly one bin) and the join key is bin equality. This is the temporal
+  * twin of DistanceJoinRewrite's cell disk (Spark itself has no range-join
+  * strategy, cf. the public binned-range-join literature).
   *
   * A pair of overlapping intervals shares every bin their intersection
-  * touches, so the binned join would emit it multiple times; a FIRST-SHARED-BIN
-  * conjunct (`bin == floorDiv(max(loL, loR))` — the first bin of the
-  * normalized intersection, which is nonempty whenever the original predicate
-  * holds) keeps exactly one copy per pair, no dedup shuffle, arbitrary
-  * payload columns preserved (same trick as HammingJoinRewrite's
-  * first-matching-band).
+  * touches; the owner conjunct is the FIRST SHARED BIN
+  * (`bin == floorDiv(max(loL, loR))` — the first bin of the normalized
+  * intersection, which is nonempty whenever the original predicate holds),
+  * which keeps exactly one copy per pair.
   *
-  * Fires only when ALL of:
-  *   - inner join whose condition has NO equi-join conjunct between the
-  *     sides (the guard also makes the rule idempotent: the rewritten join
-  *     gains bin equality);
-  *   - two inequality conjuncts cross the sides in opposite directions —
-  *     `x ≤/< y` with x from L, y from R and `u ≤/< v` with u from R, v from
-  *     L — yielding L interval [x, v] and R interval [u, y] (for BETWEEN one
-  *     side's lo/hi are the same expression); all four exprs deterministic,
-  *     integral (int/long — timestamps should be projected through
-  *     unix_micros first).
+  * Pattern: two inequality conjuncts cross the sides in opposite directions
+  * — `x ≤/< y` with x from L, y from R and `u ≤/< v` with u from R, v from
+  * L — yielding L interval [x, v] and R interval [u, y] (for BETWEEN one
+  * side's lo/hi are the same expression); all four exprs integral (int/long
+  * — timestamps should be projected through unix_micros first).
   *
   * Correctness of coverage: if the original predicate holds then
   * x ≤ y ≤ max(u,y) and u ≤ v ≤ max(x,v), so the NORMALIZED intervals
@@ -108,37 +97,16 @@ case class FloorDivBin(child: Expression, bin: Long) extends UnaryExpression {
   * rows, never all-pairs; a hot bin (burst hour) routes through the same
   * skew machinery as any hot key (graft.ops.Skew / AQE skew join).
   */
-object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
+object RangeJoinRewrite extends BlockedJoin {
 
   val MaxBinsPerRow = 4096L
   val BinConfKey = "spark.graft.range.bin"
   val DefaultBin = 3600000000L // 1 h in micros
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case j @ Join(left, right, Inner, Some(cond), _) =>
-      val conjuncts = splitConjunctivePredicates(cond)
-      if (hasEquiKey(conjuncts, left, right)) j
-      else intervalPair(conjuncts, left, right) match {
-        case Some((sL, eL, sR, eR)) => rewrite(j, sL, eL, sR, eR)
-        case None                   => j
-      }
-  }
-
-  private def hasEquiKey(conjuncts: Seq[Expression],
-                         left: LogicalPlan, right: LogicalPlan): Boolean =
-    conjuncts.exists {
-      case EqualTo(a, b)       => splitsAcross(a, b, left, right)
-      case EqualNullSafe(a, b) => splitsAcross(a, b, left, right)
-      case _                   => false
+  override protected def rewrite(j: Join, conjuncts: Seq[Expression]): Option[LogicalPlan] =
+    intervalPair(conjuncts, j.left, j.right).map {
+      case (sL, eL, sR, eR) => blocked(j, sL, eL, sR, eR)
     }
-
-  private def splitsAcross(a: Expression, b: Expression,
-                           left: LogicalPlan, right: LogicalPlan): Boolean =
-    (fromSide(a, left) && fromSide(b, right)) ||
-      (fromSide(a, right) && fromSide(b, left))
-
-  private def fromSide(e: Expression, side: LogicalPlan): Boolean =
-    e.references.nonEmpty && e.references.subsetOf(side.outputSet) && e.deterministic
 
   private def integral(e: Expression): Boolean =
     e.dataType == LongType || e.dataType == IntegerType
@@ -166,7 +134,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     out.nextOption()
   }
 
-  private def rewrite(j: Join, sL: Expression, eL: Expression,
+  private def blocked(j: Join, sL: Expression, eL: Expression,
                       sR: Expression, eR: Expression): LogicalPlan = {
     val bin = conf.getConfString(BinConfKey, DefaultBin.toString).toLong
     require(bin > 0, s"$BinConfKey must be positive: $bin")
@@ -174,29 +142,12 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     def asLong(e: Expression): Expression =
       if (e.dataType == LongType) e else Cast(e, LongType)
 
-    def binned(child: LogicalPlan, lo: Expression, hi: Expression, tag: String)
-        : (LogicalPlan, AttributeReference) = {
-      val binAttr = AttributeReference(s"_graft_rbin$tag", LongType,
-        nullable = false)()
-      val gen = Generate(Explode(RangeBins(asLong(lo), asLong(hi), bin)),
-        unrequiredChildIndex = Nil, outer = false, qualifier = None,
-        generatorOutput = Seq(binAttr), child = child)
-      (gen, binAttr)
-    }
+    val (lp, binL) = exploded(j.left, RangeBins(asLong(sL), asLong(eL), bin), "_graft_rbinl")
+    val (rp, binR) = exploded(j.right, RangeBins(asLong(sR), asLong(eR), bin), "_graft_rbinr")
 
-    val (lp, binL) = binned(j.left, sL, eL, "l")
-    val (rp, binR) = binned(j.right, sR, eR, "r")
-
-    // first shared bin of the (nonempty-by-predicate) intersection of the
-    // normalized intervals — each qualifying pair survives exactly once
     val firstShared = FloorDivBin(
       Greatest(Seq(Least(Seq(asLong(sL), asLong(eL))),
                    Least(Seq(asLong(sR), asLong(eR))))), bin)
-
-    // bin equality is the new hash key; the original condition stays as the
-    // exact refinement, so results are identical to the naive join
-    val newCond = And(EqualTo(binL, binR),
-      And(EqualTo(binL, firstShared), j.condition.get))
-    Project(j.output, Join(lp, rp, Inner, Some(newCond), j.hint))
+    assemble(j, lp, rp, Seq((binL, binR)), Some(EqualTo(binL, firstShared)))
   }
 }

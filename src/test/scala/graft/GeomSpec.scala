@@ -143,48 +143,14 @@ class GeomSpec extends AnyFunSuite {
     assert(Geom.tileY(85.0, 1) === 0 && Geom.tileY(-85.0, 1) === 1)
   }
 
-  test("segment-indexed geometric finder is row-identical to the bbox-binned path") {
-    val spark = SparkTestSession.spark
-    val (_, _, wayData) = Pipeline.prepared(spark, "/root/testdata/sf0.001")
-    def canon(df: org.apache.spark.sql.DataFrame): Set[String] = {
-      import org.apache.spark.sql.functions._
-      df.select(concat_ws("|", round(col("lat"), 9), round(col("lon"), 9),
-          col("raw"), col("streets"), concat_ws(",", col("wayIds")),
-          col("nodeId"), col("ord")).as("k"))
-        .collect().map(_.getString(0)).toSet
-    }
-    val bbox = canon(ops.GeomIntersections(spark, wayData))
-    val seg = canon(ops.GeomIntersections.applySegmentIndexed(spark, wayData))
-    assert(bbox.nonEmpty)
-    assert(seg === bbox)
-  }
-
-  test("W4 knob: dedupPairs=false reproduces the reference's duplicate emission") {
+  test("W4: a way pair sharing three cells is emitted once") {
     // two crossing ways whose bboxes share THREE 0.01° cells: the reference's
-    // bin iterator yields the pair once per shared cell and tolerates the
-    // duplicate output rows (geo.js:270). Exact mode must emit one row per
-    // shared cell on a single partition; normalized mode collapses to 1.
+    // bin iterator yields the pair once per shared cell (geo.js:270); the
+    // finder drops the cross-cell duplicates
     val spark = SparkTestSession.spark
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val ways = Seq(
-      (1L, Seq(1L, 2L), Seq((0.005, 0.0), (0.005, 0.025)),
-        Map("highway" -> "motorway", "name" -> "M")),
-      (2L, Seq(3L, 4L), Seq((0.004, 0.0124), (0.006, 0.0126)),
-        Map("highway" -> "residential", "name" -> "R")))
-      .toDF("id", "nodes", "g0", "tags")
-      .withColumn("geometry", expr("transform(g0, g -> struct(g._1 as lat, g._2 as lon))"))
-      .drop("g0")
-    val wd = ops.WayOps.deriveWayData(spark, ways).coalesce(1)
-    val exact = ops.GeomIntersections(spark, wd, dedupPairs = false)
-    val normal = ops.GeomIntersections(spark, wd)
-    assert(normal.count() === 1L)
-    // way 1 spans lon cells 0..2 at res 2; way 2 spans cells 1 only → shared
-    // cell count 1? — assert duplicates appear whenever >1 shared cell:
-    val nShared = exact.count()
-    assert(nShared >= 1L)
-    // make the sharing explicit: widen way 2 to span the same three cells
-    val ways3 = Seq(
       (1L, Seq(1L, 2L), Seq((0.005, 0.0), (0.005, 0.025)),
         Map("highway" -> "motorway", "name" -> "M")),
       (2L, Seq(3L, 4L), Seq((0.004, 0.0), (0.006, 0.025)),
@@ -192,9 +158,13 @@ class GeomSpec extends AnyFunSuite {
       .toDF("id", "nodes", "g0", "tags")
       .withColumn("geometry", expr("transform(g0, g -> struct(g._1 as lat, g._2 as lon))"))
       .drop("g0")
-    val wd3 = ops.WayOps.deriveWayData(spark, ways3).coalesce(1)
-    assert(ops.GeomIntersections(spark, wd3, dedupPairs = false).count() === 3L)
-    assert(ops.GeomIntersections(spark, wd3).count() === 1L)
+    val wd = ops.WayOps.deriveWayData(spark, ways).coalesce(1)
+    val cells = ops.GeomIntersections.withBounds(wd)
+      .select(size(graft.exprs.fns.cells_covering(col("min_lat"), col("min_lon"),
+        col("max_lat"), col("max_lon"), 2)))
+      .as[Int].collect()
+    assert(cells.toSeq === Seq(3, 3))
+    assert(ops.GeomIntersections(spark, wd).count() === 1L)
   }
 }
 

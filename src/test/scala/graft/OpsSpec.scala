@@ -183,18 +183,6 @@ class OpsSpec extends AnyFunSuite {
     assert(out.select("nodeId").as[String].head() === "Geom")
   }
 
-  test("geometric finder: shuffled-hash build (broadcastLeft=false) is result-identical") {
-    val g = graft.synth.Synth.gridSize(spark, "/root/testdata/sf0.001")
-    val ways = graft.synth.Synth.ways(spark, g)
-    val wd = WayOps.deriveWayData(spark, ways)
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("streets"), col("lat"), col("lon"), col("nodeId"))
-        .as[(String, Double, Double, String)].collect().toSet
-    assert(key(GeomIntersections(spark, wd)) ===
-      key(GeomIntersections(spark, wd, broadcastLeft = false)))
-    assert(g > 0)
-  }
-
   test("geometric: first common node id reported when ways touch") {
     val ways = waysDf(Seq(
       mkWay(1, Seq(1, 2, 3), Seq((0.0, -1.0), (0.0, 0.0), (0.0, 1.0)),

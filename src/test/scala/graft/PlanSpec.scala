@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.SpatialOps
+import graft.ops.{Skew, SpatialOps}
 
 /** Physical-plan regression guards for the scale-critical properties: these
   * are the shapes that make the engine survive 100 TB, so a refactor that
@@ -38,16 +38,20 @@ class PlanSpec extends AnyFunSuite {
 
   test("imageWayCellJoin default: segment side shuffled-hash, never broadcast") {
     val (g, _, wayData) = Pipeline.prepared(spark, sf)
-    val images = graft.synth.Synth.images(spark, sf, g, withBytes = false)
-    val joined = SpatialOps.imageWayCellJoin(
-      graft.synth.Synth.withGeotag(images, g), wayData, res = 3, maxDistDeg = 0.001)
-    val plan = planOf(joined)
-    assert(plan.contains("ShuffledHashJoin"), s"no shuffled-hash join in:\n$plan")
-    // the cell join of images×segments must not broadcast either side (the
-    // names join-back may broadcast a projection — that one scales with the
-    // DISTINCT name table, not the segment index)
-    val cellJoinIdx = plan.indexOf("ShuffledHashJoin [cell")
-    assert(cellJoinIdx >= 0, s"cell equi-join not shuffled-hash:\n$plan")
+    val images = graft.synth.Synth.withGeotag(
+      graft.synth.Synth.images(spark, sf, g, withBytes = false), g)
+    // every key policy shares the join body: plain cell, salted, adaptive
+    val joins = Seq(
+      "cell" -> SpatialOps.imageWayCellJoin(images, wayData, res = 3, maxDistDeg = 0.001),
+      "salt_key" -> Skew.saltedImageWayJoin(images, wayData, res = 3, maxDistDeg = 0.001,
+        hotThreshold = 1L, nSalts = 4),
+      "akey" -> Skew.adaptiveImageWayJoin(images, wayData, resCoarse = 2, resFine = 3,
+        maxDistDeg = 0.001, hotThreshold = 1L))
+    for ((key, joined) <- joins) {
+      val plan = planOf(joined)
+      // the key join of images×segments must not broadcast either side
+      assert(plan.contains(s"ShuffledHashJoin [$key"), s"$key equi-join not shuffled-hash:\n$plan")
+    }
   }
 
   test("top-n query plans as TakeOrdered, not a global sort") {
