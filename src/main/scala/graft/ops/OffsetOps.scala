@@ -15,7 +15,7 @@ import graft.exprs.fns
   *    after an equi-join of pending requests to the way index on way_id;
   *  - the cross-way continuation is an equi-join of run-off requests to the
   *    node→ways index, kept only when the same-named candidate is UNIQUE;
-  *  - rounds iterate like the X1 name fixpoint — hop counts are small and
+  *  - rounds are a driver loop of Spark joins — hop counts are small and
   *    the pending set shrinks monotonically, the standard iterative-join
   *    shape (cf. connected components). localCheckpoint truncates lineage
   *    per round.

@@ -240,9 +240,16 @@ object SpatialOps {
     * inequality also excludes equal-distance unseen ties). Dense inputs
     * settle in round 1 and pay one cheap extra aggregate vs the fixed-ring
     * plan; only the unsettled residue (usually a tiny fraction) re-joins at
-    * wider rings, so the expansion is driver-looped like X1/X2 with
+    * wider rings: a driver loop of one candidate join per round, with
     * localCheckpoint per round. Images still unsettled at maxRing return
     * best-effort top-k over the final disk (the fixed-ring behavior).
+    *
+    * `ring` is the first disk radius in cells; rounds double it, and the
+    * last is the largest ring·2^j ≤ maxRing. A settled image's rows are
+    * exact, and it would settle at any wider ring too, so two starts with
+    * the same last ring return the same rows: every power-of-two start ≤
+    * maxRing matches a start of 1 (`q_image_knn_expand` starts at 2; pinned
+    * in OpsSpec).
     *
     * Distances are rounded to 1e-9 degrees before ranking so ordering is
     * reproducible across engines; ties break by way_id.

@@ -1,13 +1,15 @@
 package graft.ops
 
+import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.functions._
 
 /** Way preparation: derived names (F1, geo.js:171-186), motorway_link name
   * propagation fixpoint (X1, geo.js:445-544), JUNCTION fake names (A10,
   * geo.js:554-593), and dead-end detection (A7, geo.js:599-656) — all as
-  * declarative DataFrame transforms; only the X1 fixpoint is a driver loop
-  * (label propagation, one Spark job per round, localCheckpoint per round).
+  * declarative DataFrame transforms except X1, which, like the reference,
+  * runs its rounds in memory: on the driver, between two bounded collects
+  * and one broadcast join, so its Spark job count does not grow with them.
   *
   * Output wayData columns: way_id, name, highway, nodes, geometry, way_pos
   * (insertion-order key reproducing the reference's array push order: named
@@ -30,6 +32,36 @@ object WayOps {
     ways.filter(col("tags").isNotNull)
       .withColumn("way_pos", col("id"))
 
+  // X1 driver caps: one county holds at most a few thousand motorway links
+  private val MaxLinks = 200000
+  private val MaxLinkBytes = 256L << 20
+
+  /** X1 rounds over the unnamed links (way_id, way_pos, nodes) from `first`:
+    * node → (way_pos, name) of its first naming source in input order. A
+    * round names each link from the sources present before it, first node
+    * before last; its newly named links then become sources at all their
+    * nodes. Stops on no progress or after `maxIter` rounds; way_id → name.
+    */
+  private def solveLinkNames(links: Seq[(Long, Long, Seq[Long])],
+                             first: mutable.Map[Long, (Long, String)],
+                             maxIter: Int): Map[Long, String] = {
+    def nameAt(n: Long) = first.get(n).map(_._2)
+    val named = mutable.Map.empty[Long, String]
+    var round = 0
+    var progress = true
+    while (progress && round < maxIter) {
+      val hits = links.filterNot(l => named.contains(l._1)).flatMap { case l @ (_, _, nodes) =>
+        nodes.headOption.flatMap(nameAt).orElse(nodes.lastOption.flatMap(nameAt)).map(l -> _)
+      }
+      for (((_, pos, nodes), name) <- hits; n <- nodes)
+        if (first.get(n).forall(_._1 > pos)) first(n) = (pos, name)
+      named ++= hits.map { case ((id, _, _), name) => id -> name }
+      progress = hits.nonEmpty
+      round += 1
+    }
+    named.toMap
+  }
+
   /** X1 + A10: returns wayData (way_id, name, highway, nodes, geometry,
     * way_pos, src) where src ∈ {named, link, fake}.
     */
@@ -47,78 +79,51 @@ object WayOps {
       .select(col("way_id"), col("fname").as("name"), col("highway"),
         col("nodes"), col("geometry"), col("way_pos"), lit("named").as("src"))
 
-    // --- X1 fixpoint: unnamed motorway_links take ref of an adjacent
-    // motorway or name of an adjacent named link (first/last node, first
-    // matching way in input order), repeated until no progress.
-    var links = tagged.filter(col("highway") === "motorway_link" && col("tag_name").isNull)
-      .select(col("way_id"), col("highway"), col("nodes"), col("geometry"), col("way_pos"),
-        element_at(col("nodes"), 1).as("first_node"),
-        element_at(col("nodes"), -1).as("last_node"))
-      .localCheckpoint()
-    // naming sources present from the start: motorways with ref; named links
-    val motorwaySrc = tagged
-      .filter(col("highway") === "motorway" && col("tag_ref").isNotNull)
-      .select(col("way_pos"), col("tag_ref").as("src_name"), explode(col("nodes")).as("node"))
-    val namedLinkSrc0 = tagged
-      .filter(col("highway") === "motorway_link" && col("tag_name").isNotNull)
-      .select(col("way_pos"), col("tag_name").as("src_name"), explode(col("nodes")).as("node"))
-    var sources = motorwaySrc.unionByName(namedLinkSrc0).localCheckpoint()
-
-    var resolved = spark.emptyDataFrame
-    var resolvedInit = false
-    var remaining = links.count()
-    var iter = 0
-    var progress = true
-    while (remaining > 0 && progress && iter < maxIter) {
-      // first matching source way per node, by input order
-      val perNode = sources.groupBy("node")
-        .agg(min_by(col("src_name"), col("way_pos")).as("node_name"))
-      val cand = links
-        .join(perNode.withColumnRenamed("node", "fn").withColumnRenamed("node_name", "name_first"),
-          links("first_node") === col("fn"), "left")
-        .join(perNode.withColumnRenamed("node", "ln").withColumnRenamed("node_name", "name_last"),
-          links("last_node") === col("ln"), "left")
-        .withColumn("new_name", coalesce(col("name_first"), col("name_last")))
-      val newlyNamed = cand.filter(col("new_name").isNotNull)
-        .select(col("way_id"), col("new_name").as("name"), col("highway"),
-          col("nodes"), col("geometry"), col("way_pos"),
-          col("first_node"), col("last_node"))
-        .localCheckpoint()
-      val n = newlyNamed.count()
-      if (n == 0) progress = false
-      else {
-        val newRows = newlyNamed.drop("first_node", "last_node")
-        resolved = if (resolvedInit) resolved.unionByName(newRows) else newRows
-        resolvedInit = true
-        links = cand.filter(col("new_name").isNull)
-          .select(col("way_id"), col("highway"), col("nodes"), col("geometry"),
-            col("way_pos"), col("first_node"), col("last_node"))
-          .localCheckpoint()
-        sources = sources.unionByName(
-          newlyNamed.select(col("way_pos"), col("name").as("src_name"),
-            explode(col("nodes")).as("node"))).localCheckpoint()
-        remaining -= n
-      }
-      iter += 1
+    // --- X1: unnamed motorway_links take the ref of an adjacent motorway or
+    // the name of an adjacent named link (first/last node, first matching
+    // way in input order), repeated until no progress. Both collects run as
+    // one task (a county's links and their endpoint sources are a few
+    // thousand rows): no incremental limit scan, no shuffle for the min.
+    val links = tagged.filter(col("highway") === "motorway_link" && col("tag_name").isNull)
+    val linkWays = Driver.collectBounded(links.select("way_id", "way_pos", "nodes").coalesce(1),
+      MaxLinks, MaxLinkBytes, "X1 unnamed motorway links")
+      .map(r => (r.getLong(0), r.getLong(1), Option(r.getSeq[Long](2)).getOrElse(Nil)))
+    val linkNames = if (linkWays.isEmpty) Map.empty[Long, String] else {
+      // naming sources present from the start: motorways by ref, named links
+      // by name; only the first source at each link endpoint is read
+      val ends = links.select(
+        explode(array(element_at(col("nodes"), 1), element_at(col("nodes"), -1))).as("node"))
+      val first = tagged
+        .filter(col("highway") === "motorway" && col("tag_ref").isNotNull ||
+          col("highway") === "motorway_link" && col("tag_name").isNotNull)
+        .select(col("way_pos"), explode(col("nodes")).as("node"),
+          when(col("highway") === "motorway", col("tag_ref")).otherwise(col("tag_name")).as("src_name"))
+        .join(ends, Seq("node"), "left_semi").coalesce(1)
+        .groupBy("node").agg(min(col("way_pos")), min_by(col("src_name"), col("way_pos")))
+      solveLinkNames(linkWays.toSeq, mutable.HashMap.from(
+        Driver.collectBounded(first, 2 * MaxLinks, MaxLinkBytes, "X1 link endpoint sources")
+          .map(r => r.getLong(0) -> (r.getLong(1), r.getString(2)))), maxIter)
     }
+    // the solved names as a driver-built relation (a plan of constant size);
     // X1-named links are pushed after all named ways (reference push order)
-    val linkRows =
-      if (resolvedInit)
-        resolved.select(col("way_id"), col("name"), col("highway"),
-          col("nodes"), col("geometry"),
-          (col("way_pos") + 1000000000L).as("way_pos"), lit("link").as("src"))
-      else named.limit(0)
+    lazy val solved = broadcast(spark.createDataFrame(
+      spark.sparkContext.parallelize(linkNames.toSeq, 1)).toDF("way_id", "name"))
+    val linkRows = if (linkNames.isEmpty) named.limit(0) else links.join(solved, Seq("way_id"))
+      .select(col("way_id"), col("name"), col("highway"), col("nodes"), col("geometry"),
+        (col("way_pos") + 1000000000L).as("way_pos"), lit("link").as("src"))
 
     // --- A10 fake names for still-unnamed ways: sorted union of adjacent
     // named-way names + sentinel ('motorway_link' for unnamed links that X1
-    // could not name, 'JUNCTION' otherwise).
+    // could not name, 'JUNCTION' otherwise). X1-named links drop out by a
+    // left join + null filter, not left_anti: it reads the columns of
+    // `solved` that linkRows reads, so the plan reuses that broadcast.
     val namedSoFar = named.unionByName(linkRows)
     val nodeNames = namedSoFar
       .select(explode(col("nodes")).as("node"), col("name"))
       .groupBy("node").agg(collect_set(col("name")).as("nnames"))
-    val unnamed = tagged.filter(length(col("fname")) === 0)
-      .join(linkRows.select(col("way_id")).withColumn("was_named", lit(true)),
-        Seq("way_id"), "left_anti")
+    val unnamed0 = tagged.filter(length(col("fname")) === 0)
+    val unnamed = if (linkNames.isEmpty) unnamed0
+      else unnamed0.join(solved, Seq("way_id"), "left").filter(col("name").isNull).drop("name")
     val fakeRows = unnamed
       .select(col("way_id"), col("highway"), col("nodes"), col("geometry"), col("way_pos"),
         posexplode(col("nodes")))

@@ -69,8 +69,8 @@ object ZoneOps {
     *
     * Shape: one groupBy-window per level on (zone, parent) — the data
     * SHRINKS monotonically (promoted levels are 1% the size), so the loop
-    * cost is dominated by the first level; res−minRes is small and driver-
-    * bounded, the X1 fixpoint pattern without the data-dependent rounds.
+    * cost is dominated by the first level; the loop runs res−minRes rounds,
+    * a small count fixed before it starts, not a data-dependent fixpoint.
     */
   def compact(cells: DataFrame, res: Int, minRes: Int): DataFrame =
     compactBy(cells, res, minRes, 100, (c, r) => fns.cell_parent(c, r, r - 1))

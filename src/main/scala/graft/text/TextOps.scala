@@ -1264,7 +1264,7 @@ object TextOps {
     * aggregation, a global argmax (LIMIT 1 — one row to the driver, the same
     * bounded-artifact pattern as ivfTopK's quantizer), and a map-side fold
     * applying the winning rule. Per-round localCheckpoint bounds lineage
-    * exactly like the X1 fixpoint and pageRank loops.
+    * exactly like the pageRank loop.
     *
     * Charset contract: symbols are Unicode CODEPOINT-sized (substring
     * semantics); the DuckDB oracle indexes by grapheme cluster, which

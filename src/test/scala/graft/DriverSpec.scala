@@ -1,0 +1,51 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions._
+import org.apache.spark.util.SizeEstimator
+import graft.ops.Driver
+
+/** The bounded driver collect, and the ratchet that keeps raw driver
+  * collects in operator code from growing. */
+class DriverSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+
+  test("collectBounded: the row cap passes at the row count and throws one below") {
+    val df = spark.range(0, 10, 1, 3).toDF("id")
+    assert(Driver.collectBounded(df, 10, 1L << 20, "ten ids").map(_.getLong(0)).sorted.toSeq ===
+      (0L until 10L))
+    val e = intercept[IllegalStateException](Driver.collectBounded(df, 9, 1L << 20, "ten ids"))
+    assert(e.getMessage.contains("ten ids") && e.getMessage.contains("10 rows") &&
+      e.getMessage.contains("cap of 9 rows"), e.getMessage)
+  }
+
+  test("collectBounded: the byte cap passes at the estimate and throws one byte below") {
+    val df = spark.range(0, 20, 1, 2).select(repeat(lit("x"), 1000).as("s"))
+    val bytes = SizeEstimator.estimate(df.collect())
+    assert(bytes > 20 * 1000)
+    assert(Driver.collectBounded(df, 20, bytes, "wide strings").length === 20)
+    val e = intercept[IllegalStateException](Driver.collectBounded(df, 20, bytes - 1, "wide strings"))
+    assert(e.getMessage.contains("wide strings") && e.getMessage.contains(s"about $bytes bytes") &&
+      e.getMessage.contains(s"cap of ${bytes - 1} bytes"), e.getMessage)
+  }
+
+  test("lint: no new raw .collect() in ops, text, sim and sources") {
+    // new driver pulls go through Driver.collectBounded; these counts may
+    // only go down
+    val allowed = Map("Driver.scala" -> 1, "Skew.scala" -> 1, "GraphOps.scala" -> 1,
+      "ClusterOps.scala" -> 1, "QuantileOps.scala" -> 5, "TextOps.scala" -> 3,
+      "SimOps.scala" -> 3, "GeoJson.scala" -> 1)
+    val root = new java.io.File("src/main/scala/graft")
+    val files = Seq("ops", "text", "sim", "sources")
+      .flatMap(d => Option(new java.io.File(root, d).listFiles()).getOrElse(Array.empty[java.io.File]))
+      .filter(_.getName.endsWith(".scala"))
+    assert(files.exists(_.getName == "WayOps.scala"), s"sources not found under ${root.getAbsolutePath}")
+    val over = files.flatMap { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      val n = "\\.collect\\(\\)".r.findAllMatchIn(src).length
+      val cap = allowed.getOrElse(f.getName, 0)
+      if (n > cap) Some(s"${f.getPath}: $n raw .collect() calls, at most $cap") else None
+    }
+    assert(over.isEmpty, over.mkString("\n"))
+  }
+}

@@ -238,4 +238,23 @@ class OpsSpec extends AnyFunSuite {
       .select("rk", "way_id").as[(Int, Long)].collect().sortBy(_._1)
     assert(out === Seq((1, 1L)))
   }
+
+  test("J7: power-of-two start rings return the rows of a start at ring 1") {
+    // ways within 8 cells of the origin, images within 14, so images settle
+    // in different rounds and some only at the last ring (maxRing 8: rings
+    // 1,2,4,8 against 2,4,8 and 4,8)
+    val rnd = new scala.util.Random(20261018L)
+    def at(scale: Double) = rnd.nextDouble() * scale
+    val ways = knnWaysDf((1L to 12L).map { id =>
+      val (lat, lon) = (at(0.006), at(0.006)) // + up to 0.002: inside 8 cells
+      (id, s"W$id", Seq((lat, lon), (lat + at(0.002), lon + at(0.002))))
+    })
+    val imgs = (0 until 40).map(i => (s"i$i", at(0.014), at(0.014))).toDF("image_id", "lat", "lon")
+    def rows(ring: Int) = SpatialOps.knnWays(imgs, ways, k = 2, res = 3, ring = ring, maxRing = 8)
+      .select("image_id", "rk", "way_id").as[(String, Int, Long)].collect().sorted.toSeq
+    val base = rows(1)
+    assert(base.map(_._1).distinct.length >= 30)
+    assert(rows(2) === base)
+    assert(rows(4) === base)
+  }
 }

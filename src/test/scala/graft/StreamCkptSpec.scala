@@ -464,18 +464,7 @@ class StreamCkptSpec extends AnyFunSuite {
   }
 
   test("lineage bookkeeping: exactly 2 jobs beyond the stage's own, committing and resuming") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    def jobs(action: => Unit): Int = {
-      org.apache.spark.graft.ListenerBus.drain(sc)
-      val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      val counter = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-      }
-      sc.addSparkListener(counter)
-      try { action; org.apache.spark.graft.ListenerBus.drain(sc); n.get() }
-      finally sc.removeSparkListener(counter)
-    }
+    def jobs(action: => Unit): Int = JobCounter.jobs(spark)(action)
     val input = spark.range(0, 1000, 1, 4).toDF("id")
     def stage(df: DataFrame) = df.withColumn("sq", col("id") * col("id")) // map-only
     val scratch = java.nio.file.Files.createTempDirectory("ckpt_jobs").toString
