@@ -1019,12 +1019,6 @@ object fns {
     c(PqDotTable(e(emb), books))
   def pq_adc_cos9(table: Column, codes: Column, books: Array[Array[Array[Float]]]): Column =
     c(PqAdcCos9(e(table), e(codes), books))
-
-  /** Manhattan-degree pseudo-meters (geo.js:661-666) from built-ins. */
-  def manhattan_deg(lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column = {
-    import org.apache.spark.sql.functions.{abs, lit}
-    lit(1e5) * (abs(lat1 - lat2) + abs(lon1 - lon2))
-  }
 }
 
 /** Static kernel for fns.sorted_inter_count: linear merge over two sorted

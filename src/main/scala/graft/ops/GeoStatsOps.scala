@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -19,6 +19,81 @@ import graft.synth.Codec
   * evaluating the identical dag reproduces every output bit.
   */
 object GeoStatsOps {
+
+  /** A µ° offset of the corpus frame in degrees: `origin + x·1e-6` (lat from
+    * u, lon from v). */
+  private[ops] def frameDeg(x: Column, origin: Double): Column =
+    lit(origin) + x.cast("double") * lit(1e-6)
+
+  /** The µ°-radius pair join under idwInterpolate, semivariogram,
+    * semivariogramDirectional, ripleyK, nnDistance and kernelDensity: every
+    * (focal, sample) pair within `rMicro` µ°, plus nearby pairs that the
+    * caller's refine drops, each with its squared µ° distance `d2` as an
+    * exact BIGINT.
+    *
+    * Each sample keeps its single grid cell at `res` (`s_cell`, a
+    * SHUFFLE_HASH index: the sample side is corpus-sized); each focal
+    * explodes the bounded cell disk of k = ⌊R/cell⌋ + 1 rings around its own
+    * cell and equi-joins the index — never a theta join, candidate fan-out
+    * O((2k+1)²) per focal. A sample within R of a focal lies inside that
+    * disk and sits in one cell only, so every pair meets exactly once and no
+    * dedup step is needed: the grid join of adaptive replication (EDBT 2025)
+    * with the focal side replicated.
+    *
+    * `focals` carries u, v plus payload; `samples` carries su, sv plus
+    * payload named apart from the focal side. Self pairs, the `<` or `<=`
+    * bound and the aggregates stay with the caller. */
+  private[graft] def radiusPairs(focals: DataFrame, samples: DataFrame, rMicro: Long,
+      res: Int, frameLat0: Double, frameLon0: Double): DataFrame = {
+    require(res >= 0 && res <= 5, s"grid res out of range: $res")
+    val cellMicro = math.round(1e6 / graft.cells.GridCell.pow10(res))
+    val k = (rMicro / cellMicro + 1L).toInt
+    def cell(u: Column, v: Column) =
+      fns.cell_encode(frameDeg(u, frameLat0), frameDeg(v, frameLon0), res)
+    val samp = samples.withColumn("s_cell", cell(col("su"), col("sv"))).hint("SHUFFLE_HASH")
+    focals
+      .withColumn("p_cell", cell(col("u"), col("v")))
+      .withColumn("cand_cell", explode(fns.cell_disk(col("p_cell"), lit(k), res)))
+      .join(samp, col("cand_cell") === col("s_cell"))
+      .withColumn("d2",
+        (col("su") - col("u")) * (col("su") - col("u")) +
+          (col("sv") - col("v")) * (col("sv") - col("v")))
+  }
+
+  /** Per-tile point counts at `zoom`: (tile_id, n). */
+  private def tileCounts(points: DataFrame, zoom: Int): DataFrame =
+    points.select(fns.tile_id(col("lat"), col("lon"), zoom).as("tile_id"))
+      .groupBy(col("tile_id")).agg(count(lit(1)).as("n"))
+
+  /** Offset sets of the tile-neighbour join: the 8-ring (binary contiguity,
+    * self excluded), the 8-ring plus self (the 3×3 window) and the 4-cross. */
+  private[graft] val Ring8: Seq[(Int, Int)] =
+    for (du <- -1 to 1; dv <- -1 to 1 if du != 0 || dv != 0) yield (du, dv)
+  private[graft] val Ring8Self: Seq[(Int, Int)] = for (du <- -1 to 1; dv <- -1 to 1) yield (du, dv)
+  private[graft] val Cross4: Seq[(Int, Int)] = Seq((-1, 0), (1, 0), (0, -1), (0, 1))
+
+  /** The tile-neighbour join under moranI, giStarHotspots, localMoran,
+    * focalStats, regionGroup and regionStats: each `probe` row meets every
+    * `nbrs` row whose tile lies at one of the `offsets` (du, dv) from its
+    * `tile_id`, as `nbr_id` plus the `nbrs` payload.
+    *
+    * The neighbour id is packed-id arithmetic, tile_id + du·2²⁶ + dv on
+    * zoom·2⁵² + x·2²⁶ + y: no unpacking, no range join and no wrap. An
+    * offset off the raster (x or y stepping below 0 or past 2^zoom − 1, at
+    * zoom < 26) lands on an id that no tile of this zoom has, so it finds
+    * nothing; the oracles do the same arithmetic. The offsets ride a per-row
+    * generator: a join with an offset table would plan as a
+    * BroadcastNestedLoopJoin for no benefit. */
+  private[graft] def tileNeighbours(probe: DataFrame, nbrs: DataFrame,
+      offsets: Seq[(Int, Int)]): DataFrame = {
+    val offArray = offsets
+      .map { case (du, dv) => s"struct(CAST($du AS BIGINT) AS du, CAST($dv AS BIGINT) AS dv)" }
+      .mkString("array(", ", ", ")")
+    probe.select(col("*"), explode(expr(offArray)).as("o"))
+      .select(probe.columns.map(col) :+
+        (col("tile_id") + col("o.du") * lit(67108864L) + col("o.dv")).as("nbr_id"): _*)
+      .join(nbrs.withColumnRenamed("tile_id", "nbr_id"), "nbr_id")
+  }
 
   /** Zonal image statistics: per-zone aggregates of DECODED pixel values —
     * the canonical raster/vector assignment of a geo imagery corpus ("how
@@ -100,25 +175,17 @@ object GeoStatsOps {
     * Si = Σ n_i over pairs, S1/S2 the count moments — five integers and one
     * fixed double dag, mirrored verbatim in the oracle.
     *
-    * Scale shape: tile counts = one partial aggregate; pairs = the same
-    * 9-offset packed-id equi-join as Gi* (minus self); both reductions are
-    * distributed and only SIX scalars reach the driver (BM25 pattern),
-    * re-emitted as one literal row. Output: one row
+    * Scale shape: tile counts = one partial aggregate; pairs = the 8-ring
+    * tile-neighbour join; both reductions are distributed and only SIX
+    * scalars reach the driver (BM25 pattern), re-emitted as one literal row.
+    * Output: one row
     * (n_tiles, w_pairs, p_sum, si_sum, s1_sum, s2_sum, moran_micro).
     */
   def moranI(points: DataFrame, zoom: Int): DataFrame = {
-    val tiles = points
-      .select(fns.tile_id(col("lat"), col("lon"), zoom).as("tile_id"))
-      .groupBy(col("tile_id")).agg(count(lit(1)).as("n"))
+    val tiles = tileCounts(points, zoom)
       .localCheckpoint(true) // reused 3x: moments, probe side, neighbor side
-    val offArray = (for (du <- -1 to 1; dv <- -1 to 1 if du != 0 || dv != 0)
-      yield s"struct(CAST($du AS BIGINT) AS du, CAST($dv AS BIGINT) AS dv)")
-      .mkString("array(", ", ", ")")
-    val pairs = tiles
-      .select(col("n").as("ni"), col("tile_id"), explode(expr(offArray)).as("o"))
-      .select(col("ni"),
-        (col("tile_id") + col("o.du") * lit(67108864L) + col("o.dv")).as("nbr_id"))
-      .join(tiles.select(col("tile_id").as("nbr_id"), col("n").as("nj")), "nbr_id")
+    val pairs = tileNeighbours(tiles.select(col("tile_id"), col("n").as("ni")),
+      tiles.select(col("tile_id"), col("n").as("nj")), Ring8)
     val pa = pairs.agg(count(lit(1)).as("wp"),
       sum(col("ni") * col("nj")).as("p"), sum(col("ni")).as("si")).head()
     val ta = tiles.agg(count(lit(1)).as("nt"),
@@ -192,20 +259,17 @@ object GeoStatsOps {
     * DuckDB oracle), reported in rounded integer micro-units.
     *
     * Scale shape: tile counts are one partial-aggregated groupBy (output
-    * size = occupied tiles, never points); the neighborhood sum is a 9-way
-    * OFFSET EQUI-JOIN on the packed tile id (neighbor id = id + du·2²⁶ + dv
-    * — no unpacking, no range join, no wrap needed away from the
-    * antimeridian); the three global moments are distributed-aggregated and
-    * re-enter the plan as literals (BM25 global-stats pattern). At 10^12
-    * points this is the tile-pyramid cost profile, not the corpus's.
+    * size = occupied tiles, never points); the neighborhood sum is the
+    * tile-neighbour equi-join over the 8-ring plus self; the three global
+    * moments are distributed-aggregated and re-enter the plan as literals
+    * (BM25 global-stats pattern). At 10^12 points this is the tile-pyramid
+    * cost profile, not the corpus's.
     *
     * Input: (lat, lon). Output per occupied tile:
     * (tile_id, n, w_i, s_i, z_micro — null when the variance degenerates).
     */
   def giStarHotspots(points: DataFrame, zoom: Int): DataFrame = {
-    val tiles = points
-      .select(fns.tile_id(col("lat"), col("lon"), zoom).as("tile_id"))
-      .groupBy(col("tile_id")).agg(count(lit(1)).as("n"))
+    val tiles = tileCounts(points, zoom)
       .localCheckpoint(true) // reused 3x: moments, probe side, neighbor side
     // global moments: a fully distributed aggregate whose THREE scalars come
     // back to the driver and re-enter the plan as codegen'd literals (the
@@ -215,17 +279,8 @@ object GeoStatsOps {
       sum(col("n")).as("sn"),
       sum(col("n") * col("n")).as("sn2")).head()
     val (nt, sn, sn2) = (g.getLong(0), g.getLong(1), g.getLong(2))
-    // 9-offset neighborhood probes via a per-row generator — a join with a
-    // 9-row table would plan as BroadcastNestedLoopJoin for no benefit
-    val offArray = (for (du <- -1 to 1; dv <- -1 to 1)
-      yield s"struct(CAST($du AS BIGINT) AS du, CAST($dv AS BIGINT) AS dv)")
-      .mkString("array(", ", ", ")")
-    val probe = tiles
-      .select(col("tile_id"), explode(expr(offArray)).as("o"))
-      .select(col("tile_id"),
-        (col("tile_id") + col("o.du") * lit(67108864L) + col("o.dv")).as("nbr_id"))
-    val hood = probe
-      .join(tiles.select(col("tile_id").as("nbr_id"), col("n").as("nbr_n")), "nbr_id")
+    val hood = tileNeighbours(tiles.select(col("tile_id")),
+        tiles.select(col("tile_id"), col("n").as("nbr_n")), Ring8Self)
       .groupBy(col("tile_id"))
       .agg(count(lit(1)).as("w_i"), sum(col("nbr_n")).as("s_i"))
     tiles.join(hood, "tile_id")
@@ -326,13 +381,9 @@ object GeoStatsOps {
     * every weight and partial sum is an exact integer and the result is
     * partitioning/association/engine-invariant (no double accumulation).
     *
-    * Scale shape: samples are keyed map-side by their single grid cell; each
-    * probe explodes a bounded cell disk covering the radius and equi-joins
-    * the sample index — candidate fan-out is O((2k+1)²) per probe with
-    * k = ⌈radius/cellSize⌉+1, never a theta join. One shuffle for the join
-    * (SHUFFLE_HASH: the sample index is planet-sized), one partial-aggregated
-    * groupBy per probe. Both inputs scale to billions of rows; skewed probe
-    * cells route through the same salting machinery as every cell join here.
+    * Scale shape: the radius pair join (`radiusPairs`, probes as focals),
+    * one shuffle for the join, one partial-aggregated groupBy per probe.
+    * Both inputs scale to billions of rows.
     *
     * Input: probes (probe_id, u, v), samples (u, v, value) — u/v integer
     * microdegree offsets in the corpus frame (exactness contract); `value`
@@ -343,25 +394,8 @@ object GeoStatsOps {
                      radiusMicroDeg: Long, res: Int,
                      frameLat0: Double = graft.synth.Synth.LAT0,
                      frameLon0: Double = graft.synth.Synth.LON0): DataFrame = {
-    require(res >= 0 && res <= 5, s"grid res out of range: $res")
-    val cellMicro = math.round(1e6 / graft.cells.GridCell.pow10(res))
-    val k = (radiusMicroDeg / cellMicro + 1L).toInt
-    val uDeg = (u: org.apache.spark.sql.Column) =>
-      lit(frameLat0) + u.cast("double") * lit(1e-6)
-    val vDeg = (v: org.apache.spark.sql.Column) =>
-      lit(frameLon0) + v.cast("double") * lit(1e-6)
-    val samp = samples
-      .withColumn("s_cell", fns.cell_encode(uDeg(col("u")), vDeg(col("v")), res))
-      .select(col("s_cell"), col("u").as("su"), col("v").as("sv"), col("value"))
-      .hint("SHUFFLE_HASH")
-    probes
-      .withColumn("p_cell", fns.cell_encode(uDeg(col("u")), vDeg(col("v")), res))
-      .withColumn("cand_cell",
-        explode(fns.cell_disk(col("p_cell"), lit(k), res)))
-      .join(samp, col("cand_cell") === col("s_cell"))
-      .withColumn("d2",
-        (col("su") - col("u")) * (col("su") - col("u")) +
-          (col("sv") - col("v")) * (col("sv") - col("v")))
+    val samp = samples.select(col("u").as("su"), col("v").as("sv"), col("value"))
+    radiusPairs(probes, samp, radiusMicroDeg, res, frameLat0, frameLon0)
       .filter(col("d2") <= lit(radiusMicroDeg * radiusMicroDeg))
       .withColumn("wgt", expr("CAST(1000000000000 AS BIGINT) DIV (1 + d2)"))
       .groupBy(col("probe_id"))
@@ -389,32 +423,24 @@ object GeoStatsOps {
     * verbatim in the oracle. Tiles with no occupied neighbor keep w_i = 0
     * (f2 = 0 → 'NA', I_i = 0 exactly).
     *
-    * Scale shape: identical to Gi* — one partial-aggregated tile count, a
-    * 9-offset (minus self) packed-id EQUI-join for the neighborhoods, three
-    * global moments reduced to driver scalars that re-enter the plan as
-    * codegen'd literals (the BM25 global-stats pattern). Cost is the tile
-    * pyramid's, never the corpus's.
+    * Scale shape: identical to Gi* — one partial-aggregated tile count, the
+    * 8-ring tile-neighbour join for the neighborhoods, three global moments
+    * reduced to driver scalars that re-enter the plan as codegen'd literals
+    * (the BM25 global-stats pattern). Cost is the tile pyramid's, never the
+    * corpus's.
     *
     * Input: (lat, lon). Output per occupied tile:
     * (tile_id, n, w_i, s_i, f1, f2, quadrant, i_micro).
     */
   def localMoran(points: DataFrame, zoom: Int): DataFrame = {
-    val tiles = points
-      .select(fns.tile_id(col("lat"), col("lon"), zoom).as("tile_id"))
-      .groupBy(col("tile_id")).agg(count(lit(1)).as("n"))
+    val tiles = tileCounts(points, zoom)
       .localCheckpoint(true) // reused 3x: moments, probe side, neighbor side
     val g = tiles.agg(count(lit(1)).as("nt"), sum(col("n")).as("s1"),
       sum(col("n") * col("n")).as("s2")).head()
     val (nt, s1) = (g.getLong(0), g.getLong(1))
     val s2 = g.getLong(2)
-    val offArray = (for (du <- -1 to 1; dv <- -1 to 1 if du != 0 || dv != 0)
-      yield s"struct(CAST($du AS BIGINT) AS du, CAST($dv AS BIGINT) AS dv)")
-      .mkString("array(", ", ", ")")
-    val hood = tiles
-      .select(col("tile_id"), explode(expr(offArray)).as("o"))
-      .select(col("tile_id"),
-        (col("tile_id") + col("o.du") * lit(67108864L) + col("o.dv")).as("nbr_id"))
-      .join(tiles.select(col("tile_id").as("nbr_id"), col("n").as("nbr_n")), "nbr_id")
+    val hood = tileNeighbours(tiles.select(col("tile_id")),
+        tiles.select(col("tile_id"), col("n").as("nbr_n")), Ring8)
       .groupBy(col("tile_id"))
       .agg(count(lit(1)).as("w_i"), sum(col("nbr_n")).as("s_i"))
     tiles.join(hood, Seq("tile_id"), "left") // isolated tiles keep w_i = 0
@@ -448,25 +474,17 @@ object GeoStatsOps {
     * bit-for-bit with no float anywhere.
     *
     * Scale shape: identical to Gi* and LISA — one partial-aggregated tile
-    * count, one 9-offset packed-id EQUI-join, one partial-aggregated
-    * groupBy. Tile-pyramid cost, never corpus cost.
+    * count, the tile-neighbour join over the 8-ring plus self, one
+    * partial-aggregated groupBy. Tile-pyramid cost, never corpus cost.
     *
     * Input: (lat, lon). Output per occupied tile:
     * (tile_id, n, focal_n, focal_sum, focal_min, focal_max).
     */
   def focalStats(points: DataFrame, zoom: Int): DataFrame = {
-    val tiles = points
-      .select(fns.tile_id(col("lat"), col("lon"), zoom).as("tile_id"))
-      .groupBy(col("tile_id")).agg(count(lit(1)).as("n"))
+    val tiles = tileCounts(points, zoom)
       .localCheckpoint(true) // reused 2x: probe side, neighbor side
-    val offArray = (for (du <- -1 to 1; dv <- -1 to 1)
-      yield s"struct(CAST($du AS BIGINT) AS du, CAST($dv AS BIGINT) AS dv)")
-      .mkString("array(", ", ", ")")
-    val hood = tiles
-      .select(col("tile_id"), explode(expr(offArray)).as("o"))
-      .select(col("tile_id"),
-        (col("tile_id") + col("o.du") * lit(67108864L) + col("o.dv")).as("nbr_id"))
-      .join(tiles.select(col("tile_id").as("nbr_id"), col("n").as("nbr_n")), "nbr_id")
+    val hood = tileNeighbours(tiles.select(col("tile_id")),
+        tiles.select(col("tile_id"), col("n").as("nbr_n")), Ring8Self)
       .groupBy(col("tile_id"))
       .agg(count(lit(1)).as("focal_n"), sum(col("nbr_n")).as("focal_sum"),
         min(col("nbr_n")).as("focal_min"), max(col("nbr_n")).as("focal_max"))
@@ -476,65 +494,35 @@ object GeoStatsOps {
         col("focal_sum"), col("focal_min"), col("focal_max"))
   }
 
-  /** Ripley's K neighbor counts (Ripley, JRSS-B 1977 — public): the
-    * point-pattern statistic the tile family can't see — for radii r, the
-    * MEAN number of corpus points within r of a focal point (the empirical
-    * K numerator K̂(r)·λ̂). Rising-faster-than-πr² means clustering at that
-    * scale; the multi-radius profile locates the clustering scale itself,
-    * which one Moran/Gi* zoom level cannot.
-    *
-    * Exactness: distances are squared integer microdegrees (d² ≤ r² on
-    * BIGINTs), counts are integers, the mean is an integral DIV in milli —
-    * no float anywhere.
-    *
-    * Scale shape: focals are an id-sampled subset; candidates come from the
-    * SAME bounded cell-disk equi-join as idwInterpolate (k = ⌈maxR/cell⌉+1
-    * ring, SHUFFLE_HASH sample index — never a theta join); counts reduce
-    * to |radii| driver scalars re-emitted as literal rows (the BM25
-    * global-stats pattern). The DuckDB oracle is the quadratic brute force
-    * (focals × corpus) — documented oracle cost, not engine cost.
-    *
-    * Input: points (pid, u, v) in integer µ° frame offsets. Output per
-    * radius: (r_micro, n_focals, n_neighbors, mean_milli).
-    */
+  /** An id-sampled focal subset (pid % sampleMod = 0) of `points` against
+    * all of them through `radiusPairs`, self pairs dropped: focals keep
+    * their columns, samples are (spid, su, sv) plus `carry`. */
+  private def sampledPairs(points: DataFrame, rMicro: Long, res: Int, sampleMod: Long,
+      frameLat0: Double, frameLon0: Double, carry: Column*): DataFrame = {
+    val samp = points.select(Seq(col("pid").as("spid"), col("u").as("su"),
+      col("v").as("sv")) ++ carry: _*)
+    radiusPairs(points.filter(col("pid") % sampleMod === 0), samp, rMicro, res,
+        frameLat0, frameLon0)
+      .filter(col("spid") =!= col("pid"))
+  }
+
   /** Empirical semivariogram (the kriging precursor; Matheron 1963):
     * γ(h) = Σ(z_i − z_j)² / (2·|pairs|) over pair lag-distance annuli
     * (lo, hi] — the spatial-correlation-range diagnostic that says how far
     * a measurement predicts its surroundings. Sampled-focal form: an
-    * id-sampled focal set against the full corpus through the SAME bounded
-    * cell-disk equi-join as ripleyK/idwInterpolate (never a theta join);
-    * distances and squared value differences are exact BIGINTs (µ° and
-    * value² units), γ returned as exact milli by integer division. The
-    * |lags| output rows are driver scalars re-emitted as literal rows
-    * (bounded by construction). At 100 TB: one narrow equi-join shuffle,
-    * counts reduce map-side to 2·|lags| scalars. */
+    * id-sampled focal set against the full corpus through the radius pair
+    * join (`radiusPairs`); distances and squared value differences are
+    * exact BIGINTs (µ° and value² units), γ returned as exact milli by
+    * integer division. The |lags| output rows are driver scalars re-emitted
+    * as literal rows (bounded by construction). At 100 TB: one narrow
+    * equi-join shuffle, counts reduce map-side to 2·|lags| scalars. */
   def semivariogram(points: DataFrame, lagsMicroDeg: Seq[Long], res: Int,
                     sampleMod: Long,
                     frameLat0: Double = graft.synth.Synth.LAT0,
                     frameLon0: Double = graft.synth.Synth.LON0): DataFrame = {
-    require(lagsMicroDeg.nonEmpty && lagsMicroDeg == lagsMicroDeg.sorted &&
-      res >= 0 && res <= 5)
-    val maxR = lagsMicroDeg.max
-    val cellMicro = math.round(1e6 / graft.cells.GridCell.pow10(res))
-    val k = (maxR / cellMicro + 1L).toInt
-    val uDeg = (u: org.apache.spark.sql.Column) =>
-      lit(frameLat0) + u.cast("double") * lit(1e-6)
-    val vDeg = (v: org.apache.spark.sql.Column) =>
-      lit(frameLon0) + v.cast("double") * lit(1e-6)
-    val samp = points
-      .withColumn("s_cell", fns.cell_encode(uDeg(col("u")), vDeg(col("v")), res))
-      .select(col("s_cell"), col("pid").as("spid"),
-        col("u").as("su"), col("v").as("sv"), col("value").as("sval"))
-      .hint("SHUFFLE_HASH")
-    val focals = points.filter(col("pid") % sampleMod === 0)
-    val cand = focals
-      .withColumn("p_cell", fns.cell_encode(uDeg(col("u")), vDeg(col("v")), res))
-      .withColumn("cand_cell", explode(fns.cell_disk(col("p_cell"), lit(k), res)))
-      .join(samp, col("cand_cell") === col("s_cell"))
-      .filter(col("spid") =!= col("pid"))
-      .withColumn("d2",
-        (col("su") - col("u")) * (col("su") - col("u")) +
-          (col("sv") - col("v")) * (col("sv") - col("v")))
+    require(lagsMicroDeg.nonEmpty && lagsMicroDeg == lagsMicroDeg.sorted)
+    val cand = sampledPairs(points, lagsMicroDeg.max, res, sampleMod, frameLat0, frameLon0,
+        col("value").as("sval"))
       .withColumn("dz2",
         (col("sval") - col("value")) * (col("sval") - col("value")))
     val bounds = (0L +: lagsMicroDeg).zip(lagsMicroDeg)
@@ -562,39 +550,21 @@ object GeoStatsOps {
     * 2|dv|, EW ⟺ |dv| ≥ 2|du|, else DIAG — the turn-stats convention, no
     * atan); all sums exact BIGINTs, γ exact-milli. Empty (lag, dir) cells
     * are kept at zero via the literal combo table, so the output shape is
-    * fixed. Same bounded cell-disk equi-join as the isotropic op. */
+    * fixed. Same radius pair join as the isotropic op. */
   def semivariogramDirectional(points: DataFrame, lagsMicroDeg: Seq[Long],
       res: Int, sampleMod: Long,
       frameLat0: Double = graft.synth.Synth.LAT0,
       frameLon0: Double = graft.synth.Synth.LON0): DataFrame = {
-    require(lagsMicroDeg.nonEmpty && lagsMicroDeg == lagsMicroDeg.sorted &&
-      res >= 0 && res <= 5)
-    val maxR = lagsMicroDeg.max
-    val cellMicro = math.round(1e6 / graft.cells.GridCell.pow10(res))
-    val k = (maxR / cellMicro + 1L).toInt
-    val uDeg = (u: org.apache.spark.sql.Column) =>
-      lit(frameLat0) + u.cast("double") * lit(1e-6)
-    val vDeg = (v: org.apache.spark.sql.Column) =>
-      lit(frameLon0) + v.cast("double") * lit(1e-6)
-    val samp = points
-      .withColumn("s_cell", fns.cell_encode(uDeg(col("u")), vDeg(col("v")), res))
-      .select(col("s_cell"), col("pid").as("spid"),
-        col("u").as("su"), col("v").as("sv"), col("value").as("sval"))
-      .hint("SHUFFLE_HASH")
-    val focals = points.filter(col("pid") % sampleMod === 0)
+    require(lagsMicroDeg.nonEmpty && lagsMicroDeg == lagsMicroDeg.sorted)
     val bounds = (0L +: lagsMicroDeg).zip(lagsMicroDeg)
     val lagCol = bounds.foldLeft(lit(null).cast("long")) { case (acc, (lo, hi)) =>
       when(col("d2") > lit(lo * lo) && col("d2") <= lit(hi * hi), lit(hi))
         .otherwise(acc)
     }
-    val cand = focals
-      .withColumn("p_cell", fns.cell_encode(uDeg(col("u")), vDeg(col("v")), res))
-      .withColumn("cand_cell", explode(fns.cell_disk(col("p_cell"), lit(k), res)))
-      .join(samp, col("cand_cell") === col("s_cell"))
-      .filter(col("spid") =!= col("pid"))
+    val cand = sampledPairs(points, lagsMicroDeg.max, res, sampleMod, frameLat0, frameLon0,
+        col("value").as("sval"))
       .withColumn("du", abs(col("su") - col("u")))
       .withColumn("dv", abs(col("sv") - col("v")))
-      .withColumn("d2", col("du") * col("du") + col("dv") * col("dv"))
       .withColumn("dz2",
         (col("sval") - col("value")) * (col("sval") - col("value")))
       .withColumn("lag_micro", lagCol)
@@ -630,9 +600,7 @@ object GeoStatsOps {
     * ppm), so every digit is bit-decided. One tile-keyed count (map-side
     * combinable) + one scalar rollup. */
   def tileCoverageEntropy(points: DataFrame, zoom: Int): DataFrame = {
-    val tiles = points
-      .select(fns.tile_id(col("lat"), col("lon"), zoom).as("tile_id"))
-      .groupBy(col("tile_id")).agg(count(lit(1)).as("n"))
+    val tiles = tileCounts(points, zoom)
     def ln9(c: org.apache.spark.sql.Column) =
       round(log(c.cast("double")) * lit(1e9), 0).cast("long")
     tiles.agg(
@@ -651,34 +619,34 @@ object GeoStatsOps {
           |ELSE 0 END""".stripMargin))
   }
 
+  /** Ripley's K neighbor counts (Ripley, JRSS-B 1977 — public): the
+    * point-pattern statistic the tile family can't see — for radii r, the
+    * MEAN number of corpus points within r of a focal point (the empirical
+    * K numerator K̂(r)·λ̂). Rising-faster-than-πr² means clustering at that
+    * scale; the multi-radius profile locates the clustering scale itself,
+    * which one Moran/Gi* zoom level cannot.
+    *
+    * Exactness: distances are squared integer microdegrees (d² ≤ r² on
+    * BIGINTs), counts are integers, the mean is an integral DIV in milli —
+    * no float anywhere.
+    *
+    * Scale shape: focals are an id-sampled subset; candidates come from the
+    * radius pair join (`radiusPairs`) at maxR; counts reduce to |radii|
+    * driver scalars re-emitted as literal rows (the BM25 global-stats
+    * pattern). The DuckDB oracle is the quadratic brute force (focals ×
+    * corpus) — documented oracle cost, not engine cost.
+    *
+    * Input: points (pid, u, v) in integer µ° frame offsets. Output per
+    * radius: (r_micro, n_focals, n_neighbors, mean_milli).
+    */
   def ripleyK(points: DataFrame, radiiMicroDeg: Seq[Long], res: Int,
               sampleMod: Long,
               frameLat0: Double = graft.synth.Synth.LAT0,
               frameLon0: Double = graft.synth.Synth.LON0): DataFrame = {
-    require(radiiMicroDeg.nonEmpty && res >= 0 && res <= 5)
-    val maxR = radiiMicroDeg.max
-    val cellMicro = math.round(1e6 / graft.cells.GridCell.pow10(res))
-    val k = (maxR / cellMicro + 1L).toInt
-    val uDeg = (u: org.apache.spark.sql.Column) =>
-      lit(frameLat0) + u.cast("double") * lit(1e-6)
-    val vDeg = (v: org.apache.spark.sql.Column) =>
-      lit(frameLon0) + v.cast("double") * lit(1e-6)
-    val samp = points
-      .withColumn("s_cell", fns.cell_encode(uDeg(col("u")), vDeg(col("v")), res))
-      .select(col("s_cell"), col("pid").as("spid"),
-        col("u").as("su"), col("v").as("sv"))
-      .hint("SHUFFLE_HASH")
-    val focals = points.filter(col("pid") % sampleMod === 0)
-    val nf = focals.count()
+    require(radiiMicroDeg.nonEmpty)
+    val cand = sampledPairs(points, radiiMicroDeg.max, res, sampleMod, frameLat0, frameLon0)
+    val nf = points.filter(col("pid") % sampleMod === 0).count()
     require(nf > 0, s"no focal points at sampleMod=$sampleMod")
-    val cand = focals
-      .withColumn("p_cell", fns.cell_encode(uDeg(col("u")), vDeg(col("v")), res))
-      .withColumn("cand_cell", explode(fns.cell_disk(col("p_cell"), lit(k), res)))
-      .join(samp, col("cand_cell") === col("s_cell"))
-      .filter(col("spid") =!= col("pid"))
-      .withColumn("d2",
-        (col("su") - col("u")) * (col("su") - col("u")) +
-          (col("sv") - col("v")) * (col("sv") - col("v")))
     val aggs = radiiMicroDeg.map(r =>
       sum(when(col("d2") <= lit(r * r), 1L).otherwise(0L)).as(s"c_$r"))
     val row = cand.agg(aggs.head, aggs.tail: _*).head()
@@ -697,8 +665,7 @@ object GeoStatsOps {
     * the truncation is part of the CONTRACT, reproduced exactly by the
     * oracle: focals with no neighbor inside R report min_d2 = −1, never a
     * fabricated distance). Exact squared-µ° BIGINT distances through the
-    * same bounded cell-disk equi-join as ripleyK (never a theta join);
-    * min_d_micro = floor(sqrt(min_d2)) is exact (d2 ≤ R² ≤ 4e6 is
+    * radius pair join (`radiusPairs`); min_d_micro = floor(sqrt(min_d2)) is exact (d2 ≤ R² ≤ 4e6 is
     * double-exact, sqrt is correctly rounded in both engines).
     *
     * Input: (pid, u, v). Output per focal (pid % sampleMod == 0):
@@ -707,31 +674,12 @@ object GeoStatsOps {
                  sampleMod: Long,
                  frameLat0: Double = graft.synth.Synth.LAT0,
                  frameLon0: Double = graft.synth.Synth.LON0): DataFrame = {
-    require(res >= 0 && res <= 5)
-    val cellMicro = math.round(1e6 / graft.cells.GridCell.pow10(res))
-    val k = (rMicro / cellMicro + 1L).toInt
-    val uDeg = (u: org.apache.spark.sql.Column) =>
-      lit(frameLat0) + u.cast("double") * lit(1e-6)
-    val vDeg = (v: org.apache.spark.sql.Column) =>
-      lit(frameLon0) + v.cast("double") * lit(1e-6)
-    val samp = points
-      .withColumn("s_cell", fns.cell_encode(uDeg(col("u")), vDeg(col("v")), res))
-      .select(col("s_cell"), col("pid").as("spid"),
-        col("u").as("su"), col("v").as("sv"))
-      .hint("SHUFFLE_HASH")
-    val focals = points.filter(col("pid") % sampleMod === 0)
-    val near = focals
-      .withColumn("p_cell", fns.cell_encode(uDeg(col("u")), vDeg(col("v")), res))
-      .withColumn("cand_cell", explode(fns.cell_disk(col("p_cell"), lit(k), res)))
-      .join(samp, col("cand_cell") === col("s_cell"))
-      .filter(col("spid") =!= col("pid"))
-      .withColumn("d2",
-        (col("su") - col("u")) * (col("su") - col("u")) +
-          (col("sv") - col("v")) * (col("sv") - col("v")))
+    val near = sampledPairs(points, rMicro, res, sampleMod, frameLat0, frameLon0)
       .filter(col("d2") <= lit(rMicro * rMicro))
       .groupBy("pid")
       .agg(count(lit(1)).as("n_in_disk"), min(col("d2")).as("mind2"))
-    focals.select(col("pid")).join(near, Seq("pid"), "left")
+    points.filter(col("pid") % sampleMod === 0).select(col("pid"))
+      .join(near, Seq("pid"), "left")
       .select(col("pid"),
         coalesce(col("n_in_disk"), lit(0L)).as("n_in_disk"),
         coalesce(col("mind2"), lit(-1L)).as("min_d2"),
@@ -797,41 +745,22 @@ object GeoStatsOps {
     * smoothing/heat-surface primitive, made EXACT by evaluating the kernel
     * on squared integer µ° distances (a triangular kernel needs sqrt; the
     * parabolic one is a polynomial in d², so every weight and the summed
-    * density are BIGINTs). Same bounded cell-disk equi-join as
-    * ripleyK/variogram — never a theta join; the kernel's compact support
-    * IS the disk bound, so the join prunes exactly the zero-weight pairs.
+    * density are BIGINTs). Candidates come from the radius pair join
+    * (`radiusPairs`): the kernel's compact support IS its disk bound, so the
+    * join prunes exactly the zero-weight pairs.
     *
     * Input: (pid, u, v). Output per focal: (pid, n_in_disk, density). */
   def kernelDensity(points: DataFrame, rMicro: Long, res: Int,
                     sampleMod: Long,
                     frameLat0: Double = graft.synth.Synth.LAT0,
                     frameLon0: Double = graft.synth.Synth.LON0): DataFrame = {
-    require(res >= 0 && res <= 5)
-    val cellMicro = math.round(1e6 / graft.cells.GridCell.pow10(res))
-    val k = (rMicro / cellMicro + 1L).toInt
-    val uDeg = (u: org.apache.spark.sql.Column) =>
-      lit(frameLat0) + u.cast("double") * lit(1e-6)
-    val vDeg = (v: org.apache.spark.sql.Column) =>
-      lit(frameLon0) + v.cast("double") * lit(1e-6)
-    val samp = points
-      .withColumn("s_cell", fns.cell_encode(uDeg(col("u")), vDeg(col("v")), res))
-      .select(col("s_cell"), col("pid").as("spid"),
-        col("u").as("su"), col("v").as("sv"))
-      .hint("SHUFFLE_HASH")
-    val focals = points.filter(col("pid") % sampleMod === 0)
-    val near = focals
-      .withColumn("p_cell", fns.cell_encode(uDeg(col("u")), vDeg(col("v")), res))
-      .withColumn("cand_cell", explode(fns.cell_disk(col("p_cell"), lit(k), res)))
-      .join(samp, col("cand_cell") === col("s_cell"))
-      .filter(col("spid") =!= col("pid"))
-      .withColumn("d2",
-        (col("su") - col("u")) * (col("su") - col("u")) +
-          (col("sv") - col("v")) * (col("sv") - col("v")))
+    val near = sampledPairs(points, rMicro, res, sampleMod, frameLat0, frameLon0)
       .filter(col("d2") < lit(rMicro * rMicro))
       .groupBy("pid")
       .agg(count(lit(1)).as("n_in_disk"),
         sum(lit(rMicro * rMicro) - col("d2")).as("density"))
-    focals.select(col("pid")).join(near, Seq("pid"), "left")
+    points.filter(col("pid") % sampleMod === 0).select(col("pid"))
+      .join(near, Seq("pid"), "left")
       .select(col("pid"),
         coalesce(col("n_in_disk"), lit(0L)).as("n_in_disk"),
         coalesce(col("density"), lit(0L)).as("density"))
@@ -894,25 +823,16 @@ object GeoStatsOps {
     * (dissolve, compactness scoring, alert sizing) read off a region map;
     * compactness ∝ area/perimeter² needs exactly these two integers.
     *
-    * Scale shape: regionGroup's cost + ONE more 4-offset equi-join (the
-    * same-class neighbor count) + one region-sized groupBy. All integers.
+    * Scale shape: regionGroup's cost + ONE more 4-cross tile-neighbour join
+    * (the same-class neighbor count) + one region-sized groupBy. All
+    * integers.
     *
     * Input: (lat, lon). Output per region:
     * (region_id, cls, n_tiles, sum_n, n_boundary).
     */
   def regionStats(points: DataFrame, zoom: Int, t1: Long, t2: Long): DataFrame = {
     val labeled = regionGroup(points, zoom, t1, t2).localCheckpoint(true)
-    val offArray =
-      (for ((du, dv) <- Seq((-1, 0), (1, 0), (0, -1), (0, 1)))
-        yield s"struct(CAST($du AS BIGINT) AS du, CAST($dv AS BIGINT) AS dv)")
-        .mkString("array(", ", ", ")")
-    val sameNbr = labeled
-      .select(col("tile_id"), col("cls"), explode(expr(offArray)).as("o"))
-      .select(col("tile_id"), col("cls"),
-        (col("tile_id") + col("o.du") * lit(67108864L) + col("o.dv")).as("nbr_id"))
-      .join(labeled.select(col("tile_id").as("nbr_id"), col("cls").as("nbr_cls")),
-        "nbr_id")
-      .filter(col("cls") === col("nbr_cls"))
+    val sameNbr = sameClassNeighbours(labeled)
       .groupBy(col("tile_id")).agg(count(lit(1)).as("n_same"))
     labeled.join(sameNbr, Seq("tile_id"), "left")
       .withColumn("boundary", coalesce(col("n_same"), lit(0L)) < 4)
@@ -985,8 +905,8 @@ object GeoStatsOps {
     * density surface into discrete named zones ("this contiguous stretch is
     * high-density") — the input to dissolve/choropleth/alerting layers.
     *
-    * Scale shape: one partial-aggregated tile count; FOUR offset probes
-    * (N/S/E/W) through the same packed-id equi-join as Gi*; labeling by the
+    * Scale shape: one partial-aggregated tile count; the 4-cross (N/S/E/W)
+    * tile-neighbour join; labeling by the
     * large/small-star CC (O(log n) shuffle rounds, driver sees a 2-long
     * checksum per round, never the graph). Isolated tiles skip the CC
     * entirely (left join + coalesce). All tile-pyramid cost.
@@ -996,23 +916,11 @@ object GeoStatsOps {
     */
   def regionGroup(points: DataFrame, zoom: Int, t1: Long, t2: Long): DataFrame = {
     require(t1 < t2, s"thresholds must be ordered: $t1 >= $t2")
-    val tiles = points
-      .select(fns.tile_id(col("lat"), col("lon"), zoom).as("tile_id"))
-      .groupBy(col("tile_id")).agg(count(lit(1)).as("n"))
+    val tiles = tileCounts(points, zoom)
       .withColumn("cls",
         when(col("n") < t1, lit(0)).when(col("n") < t2, lit(1)).otherwise(lit(2)))
       .localCheckpoint(true) // reused 3x: probe side, neighbor side, final join
-    val offArray =
-      (for ((du, dv) <- Seq((-1, 0), (1, 0), (0, -1), (0, 1)))
-        yield s"struct(CAST($du AS BIGINT) AS du, CAST($dv AS BIGINT) AS dv)")
-        .mkString("array(", ", ", ")")
-    val edges = tiles
-      .select(col("tile_id"), col("cls"), explode(expr(offArray)).as("o"))
-      .select(col("tile_id"), col("cls"),
-        (col("tile_id") + col("o.du") * lit(67108864L) + col("o.dv")).as("nbr_id"))
-      .join(tiles.select(col("tile_id").as("nbr_id"), col("cls").as("nbr_cls")),
-        "nbr_id")
-      .filter(col("cls") === col("nbr_cls"))
+    val edges = sameClassNeighbours(tiles)
       .select(col("tile_id").as("src"), col("nbr_id").as("dst"))
     val comps = GraphOps.connectedComponents(edges)
       .select(col("id").as("tile_id"), col("component"))
@@ -1020,6 +928,12 @@ object GeoStatsOps {
       .select(col("tile_id"), col("n"), col("cls"),
         coalesce(col("component"), col("tile_id")).as("region_id"))
   }
+
+  /** (tile_id, cls, nbr_id) for each 4-cross neighbour of the same class. */
+  private def sameClassNeighbours(tiles: DataFrame): DataFrame =
+    tileNeighbours(tiles.select(col("tile_id"), col("cls")),
+        tiles.select(col("tile_id"), col("cls").as("nbr_cls")), Cross4)
+      .filter(col("cls") === col("nbr_cls"))
 
   /** Origin–destination flow matrix over trajectories: each track
     * contributes ONE (origin zone, destination zone) pair — the zone of its

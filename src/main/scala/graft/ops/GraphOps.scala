@@ -33,26 +33,29 @@ object GraphOps {
       .filter(col("a") =!= col("b")).distinct()
       .localCheckpoint(true)
     // SMALL-GRAPH FAST PATH (broadcast-join spirit, guide §3.1): when the
-    // DEDUPED edge set fits the same few-MB budget Spark grants a broadcast
-    // relation, close the components in one bounded driver union-find
-    // instead of paying 2 shuffle jobs per star round. The probe reads from
-    // the checkpoint (never re-executes the upstream pair join), costs one
-    // limit-collect on the small path and one tiny extra job on the big
-    // path, and the collect is CONSTANT-bounded by the threshold — the same
-    // kB/MB-bounded-artifact contract as the IVF-centroid collects, never a
-    // fraction of the input. Labels are identical by construction: component
-    // = min member id under Spark's own ordering (mirrored exactly for the
-    // supported integral/UTF8-string id types; any other type routes to the
-    // distributed loop).
+    // DEDUPED edge set fits the budget Spark grants a broadcast relation
+    // (spark.sql.autoBroadcastJoinThreshold bytes, and at most
+    // spark.graft.cc.smallGraphEdges edges), close the components in one
+    // bounded driver union-find instead of paying 2 shuffle jobs per star
+    // round. The probe is one bounded collect of the checkpoint (it never
+    // re-executes the upstream pair join); an over-cap graph costs the cap
+    // and takes the distributed loop. Labels are identical by construction:
+    // component = min member id under Spark's own ordering (mirrored exactly
+    // for the supported integral/UTF8-string id types; any other type routes
+    // to the distributed loop). With broadcasts disabled (threshold ≤ 0)
+    // only the edge cap applies.
     val smallMax = e.sparkSession.conf
       .get("spark.graft.cc.smallGraphEdges", "131072").toInt
     val driverOrd = driverOrdering(e.schema.head.dataType)
     if (smallMax > 0 && driverOrd.isDefined) {
-      val probe = e.limit(smallMax + 1).collect()
-      if (probe.length <= smallMax) {
-        val mapping = driverComponents(e.sparkSession, probe, e.schema, driverOrd.get)
-        return nodes.join(broadcast(mapping), Seq("id"), "left")
-          .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+      val threshold = e.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sessionState.conf.autoBroadcastJoinThreshold
+      Driver.collectWithin(e, smallMax, if (threshold > 0) threshold else Long.MaxValue) match {
+        case Right(probe) =>
+          val mapping = driverComponents(e.sparkSession, probe, e.schema, driverOrd.get)
+          return nodes.join(broadcast(mapping), Seq("id"), "left")
+            .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+        case Left(_) =>
       }
     }
     var sig = signature(e)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession, Dataset, Row}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, Dataset, Row}
 import org.apache.spark.sql.functions._
 import graft.synth.{Bmp, Codec}
 
@@ -22,12 +22,15 @@ object ImageOps {
       mean_r: Double, mean_g: Double, mean_b: Double, decode_ok: Boolean)
 
   /** Perceptual-hash near-duplicate image pairs — the image twin of SimHash
-    * text dedup: band-blocked Hamming join over the 64-bit `phash` column.
-    * 4×16-bit bands: a pair within Hamming distance ≤ 3 must share at least
-    * one intact band (pigeonhole), so candidate generation is a
-    * (band, bucket) equi-join on narrow (id, phash) rows — never all-pairs,
-    * and image bytes never enter the join at all — with the exact
-    * bit_count(xor) verify on candidates only.
+    * text dedup: the naive Hamming theta-join bit_count(p1 ^ p2) ≤ maxHam
+    * over the 64-bit `phash` column (id1 < id2), which
+    * plans/HammingJoinRewrite plans as its 4×16-bit band-blocked equi-join:
+    * a pair within Hamming distance ≤ 3 must share at least one intact band
+    * (pigeonhole), so candidates come from a (band, bucket) equi-join on
+    * narrow (id, phash) rows — never all-pairs, and image bytes never enter
+    * the join — with the first-matching-band owner conjunct (each pair
+    * exactly once, no dedup shuffle) and the exact bit_count(xor) verify on
+    * candidates only.
     *
     * Scale rung: the bucket space is 2^16 per band, so at corpus sizes far
     * beyond that, per-bucket collision lists grow linearly and the
@@ -36,51 +39,30 @@ object ImageOps {
     * bits — any ≤3-flip pair still collides in one refined bucket because
     * the intact band plus intact other-band prefix pigeonhole again), the
     * same remedy Skew.scala applies to hot spatial cells. */
-  /** (band, bucket) explode of the 4×16-bit phash bands — the blocking key
-    * shared by the pairwise and incremental dedup paths. */
-  private def phashBanded(images: DataFrame): DataFrame =
-    Par.spread(images, col("image_id"))
-      .select(col("image_id"), col("phash"),
-        explode(expr(
-          "transform(sequence(0, 3), b -> struct(b AS band, shiftright(phash, b * 16) & 65535 AS bucket))"))
-          .as("bb"))
-      .select(col("image_id"), col("phash"), col("bb.band"), col("bb.bucket"))
-
-  /** first-matching-band conjunct (requires a `band` column in scope): a
-    * pair sharing several intact bands would emit once per shared band;
-    * keeping it only at the LOWEST shared band makes each pair emit exactly
-    * once WITHOUT a dropDuplicates shuffle (the same conjunct
-    * plans/HammingJoinRewrite synthesizes). */
-  private def firstMatchingBand(p1: org.apache.spark.sql.Column,
-                                p2: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    def bkt(p: org.apache.spark.sql.Column, b: Int) =
-      shiftright(p, b * 16).bitwiseAND(lit(65535L))
-    (0 until 4).map { b =>
-      (0 until b).map(i => bkt(p1, i) =!= bkt(p2, i))
-        .foldLeft(col("band") === b)(_ && _)
-    }.reduce(_ || _)
-  }
-
   def phashNearDups(images: DataFrame, maxHam: Int = 3): DataFrame = {
     require(maxHam >= 0 && maxHam < 4, "4-band blocking is complete only for hamming < 4")
-    val banded = phashBanded(images)
-    val l = banded.select(col("band"), col("bucket"),
-      col("image_id").as("id1"), col("phash").as("p1"))
-    val r = banded.select(col("band"), col("bucket"),
-      col("image_id").as("id2"), col("phash").as("p2"))
-    l.join(r, Seq("band", "bucket"))
-      .filter(col("id1") < col("id2") && firstMatchingBand(col("p1"), col("p2")))
-      .withColumn("hamming", bit_count(col("p1").bitwiseXOR(col("p2"))))
-      .filter(col("hamming") <= maxHam)
+    hammingJoin(images.select(col("image_id").as("id1"), col("phash").as("p1")),
+        images.select(col("image_id").as("id2"), col("phash").as("p2")),
+        col("p1"), col("p2"), maxHam, col("id1") < col("id2"))
       .select("id1", "id2", "hamming")
   }
 
+  /** `l` × `r` pairs within Hamming distance `maxHam` of keys `pl`, `pr`
+    * (and `cond`), with their `hamming`: the naive join, blocked by
+    * plans/HammingJoinRewrite, which this enables on the session. */
+  private def hammingJoin(l: DataFrame, r: DataFrame, pl: Column, pr: Column,
+                          maxHam: Int, cond: Column = lit(true)): DataFrame = {
+    graft.plans.GraftPlans.enable(l.sparkSession)
+    l.join(r, cond && bit_count(pl.bitwiseXOR(pr)) <= lit(maxHam))
+      .withColumn("hamming", bit_count(pl.bitwiseXOR(pr)))
+  }
+
   /** INCREMENTAL phash dedup — the daily-ingest shape: a new batch is
-    * checked against the AT-REST corpus band index plus itself, without ever
-    * re-pairing the corpus. At 100 TB the corpus's (band, bucket, id, phash)
-    * rows are stored bucketed by (band, bucket), so the probe is a co-located
-    * equi-join touching only buckets the batch occupies; corpus×corpus pairs
-    * (the expensive part of a full re-dedup) are never generated.
+    * checked against the AT-REST corpus plus itself, without ever re-pairing
+    * the corpus. The corpus probe is phashNearDups' band-blocked Hamming
+    * join, batch × corpus: only the (band, bucket) keys the batch occupies
+    * meet, and corpus×corpus pairs (the expensive part of a full re-dedup)
+    * are never generated.
     *
     * Policy (documented): a batch image is a duplicate iff it is within
     * `maxHam` of ANY corpus image or any LEXICOGRAPHICALLY-EARLIER batch
@@ -93,12 +75,9 @@ object ImageOps {
   def incrementalPhashDedup(corpus: DataFrame, batch: DataFrame,
                             maxHam: Int = 3): DataFrame = {
     require(maxHam >= 0 && maxHam < 4, "4-band blocking is complete only for hamming < 4")
-    val ci = phashBanded(corpus).select(col("band"), col("bucket"),
-      col("image_id").as("match_id"), col("phash").as("c_phash"))
-    val vsCorpus = phashBanded(batch).join(ci, Seq("band", "bucket"))
-      .filter(firstMatchingBand(col("phash"), col("c_phash")))
-      .withColumn("hamming", bit_count(col("phash").bitwiseXOR(col("c_phash"))))
-      .filter(col("hamming") <= maxHam)
+    val vsCorpus = hammingJoin(batch.select(col("image_id"), col("phash")),
+        corpus.select(col("image_id").as("match_id"), col("phash").as("c_phash")),
+        col("phash"), col("c_phash"), maxHam)
       .select(col("image_id"), col("match_id"), col("hamming"))
     // batch-internal: the pair (id1 < id2) makes id2 the duplicate
     val internal = phashNearDups(batch, maxHam)

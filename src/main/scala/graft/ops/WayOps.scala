@@ -85,7 +85,7 @@ object WayOps {
     // one task (a county's links and their endpoint sources are a few
     // thousand rows): no incremental limit scan, no shuffle for the min.
     val links = tagged.filter(col("highway") === "motorway_link" && col("tag_name").isNull)
-    val linkWays = Driver.collectBounded(links.select("way_id", "way_pos", "nodes").coalesce(1),
+    val linkWays = Driver.collectBounded(links.select("way_id", "way_pos", "nodes"),
       MaxLinks, MaxLinkBytes, "X1 unnamed motorway links")
       .map(r => (r.getLong(0), r.getLong(1), Option(r.getSeq[Long](2)).getOrElse(Nil)))
     val linkNames = if (linkWays.isEmpty) Map.empty[Long, String] else {
@@ -156,11 +156,4 @@ object WayOps {
       .filter(col("count") % 2 === 1)
       .groupBy("node").agg(sort_array(collect_set(col("name"))).as("dead_names"))
   }
-
-  /** per-node memberships over ALL wayData rows (used by onSameWay,
-    * geo.js:359-372): (node, ways array<struct<way_id,name>>). */
-  def nodeMemberships(wayData: DataFrame): DataFrame =
-    wayData.select(explode(col("nodes")).as("node"),
-        struct(col("way_id"), col("name")).as("m"))
-      .groupBy("node").agg(collect_set(col("m")).as("memberships"))
 }

@@ -230,8 +230,8 @@ object ZoneOps {
   def extentZoneJoin(extents: DataFrame, zones: DataFrame, res: Int,
                      frameLat0: Double = graft.synth.Synth.LAT0,
                      frameLon0: Double = graft.synth.Synth.LON0): DataFrame = {
-    val uDeg = (u: Column) => lit(frameLat0) + u.cast("double") * lit(1e-6)
-    val vDeg = (v: Column) => lit(frameLon0) + v.cast("double") * lit(1e-6)
+    val uDeg = (u: Column) => GeoStatsOps.frameDeg(u, frameLat0)
+    val vDeg = (v: Column) => GeoStatsOps.frameDeg(v, frameLon0)
     val a = extents.withColumn("cell", explode(fns.cells_covering(
       uDeg(col("uLo")), vDeg(col("vLo")), uDeg(col("uHi")), vDeg(col("vHi")), res)))
     val b = zones

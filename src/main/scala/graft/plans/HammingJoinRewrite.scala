@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
   *
   *   a.join(b, bit_count(a.phash ^ b.phash) <= k)        (k ≤ 3, 64-bit)
   *
-  * the 4×16-bit band-blocked equi-join this library builds by hand in
-  * ImageOps.phashNearDups: both sides explode into their 4 (band, bucket)
+  * the 4×16-bit band-blocked equi-join under ImageOps.phashNearDups and
+  * incrementalPhashDedup: both sides explode into their 4 (band, bucket)
   * keys and the join key is band+bucket equality (pigeonhole: a pair within
   * Hamming distance ≤ 3 of a 64-bit key shares at least one intact 16-bit
   * band).
@@ -22,8 +22,7 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
   * Pattern: some conjunct is `bit_count(el ^ er) <= / < lit` with el/er
   * LongType and cleanly split across the two sides, and the effective max
   * distance is in [0, 3] — 4 bands are complete exactly for Hamming < 4; a
-  * coarser threshold needs more/wider bands and is left to the hand-built
-  * operator.
+  * coarser threshold needs more/wider bands, so the rule leaves it alone.
   *
   * Scale shape: candidate generation is an equi-join on narrow
   * ×4-replicated rows, never all-pairs; hot 16-bit buckets (e.g.

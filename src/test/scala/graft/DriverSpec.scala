@@ -29,10 +29,40 @@ class DriverSpec extends AnyFunSuite {
       e.getMessage.contains(s"cap of ${bytes - 1} bytes"), e.getMessage)
   }
 
+  test("collectBounded: one Spark job whatever the input's partition count") {
+    val want = (0L until 2400L)
+    def run(parts: Int) = {
+      var rows = Array.empty[org.apache.spark.sql.Row]
+      val jobs = JobCounter.jobs(spark) {
+        rows = Driver.collectBounded(spark.range(0, 2400, 1, parts).toDF("id"), 2400, 1L << 24, "ids")
+      }
+      assert(rows.map(_.getLong(0)).sorted.toSeq === want)
+      jobs
+    }
+    assert(run(1) === 1)
+    assert(run(24) === 1)
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      spark.range(1).schema)
+    assert(JobCounter.jobs(spark)(Driver.collectBounded(empty, 10, 1L << 20, "none")) === 0)
+    // over the cap: still one job, which reads only up to the cap
+    val over = spark.range(0, 2400, 1, 24).toDF("id")
+    var r: Either[String, Array[org.apache.spark.sql.Row]] = Right(Array.empty)
+    assert(JobCounter.jobs(spark) { r = Driver.collectWithin(over, 100, 1L << 24) } === 1)
+    assert(r.left.exists(_.contains("cap of 100 rows")), r)
+  }
+
+  test("collectWithin: rows inside both caps, the broken cap otherwise, never a throw") {
+    val df = spark.range(0, 20, 1, 2).select(repeat(lit("x"), 1000).as("s"))
+    val bytes = SizeEstimator.estimate(df.collect())
+    assert(Driver.collectWithin(df, 20, bytes).map(_.length) === Right(20))
+    assert(Driver.collectWithin(df, 19, bytes).left.exists(_.contains("cap of 19 rows")))
+    assert(Driver.collectWithin(df, 20, bytes - 1).left.exists(_.contains(s"cap of ${bytes - 1} bytes")))
+  }
+
   test("lint: no new raw .collect() in ops, text, sim and sources") {
     // new driver pulls go through Driver.collectBounded; these counts may
     // only go down
-    val allowed = Map("Driver.scala" -> 1, "Skew.scala" -> 1, "GraphOps.scala" -> 1,
+    val allowed = Map("Driver.scala" -> 1, "Skew.scala" -> 1,
       "ClusterOps.scala" -> 1, "QuantileOps.scala" -> 5, "TextOps.scala" -> 3,
       "SimOps.scala" -> 3, "GeoJson.scala" -> 1)
     val root = new java.io.File("src/main/scala/graft")

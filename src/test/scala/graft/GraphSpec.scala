@@ -97,6 +97,25 @@ class GraphSpec extends AnyFunSuite {
     assert(big === fast)
   }
 
+  test("small-graph probe: over the broadcast byte budget the star loop runs, same labels") {
+    val edges = (0 until 300).map(i => ((i * 7919L) % 90L, (i * 104729L + 3L) % 90L))
+      .filter(e => e._1 != e._2)
+    val df = edges.toDF("src", "dst")
+    def labels() = GraphOps.connectedComponents(df).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    var fast = Map.empty[Long, Long]
+    val fastJobs = JobCounter.jobs(spark) { fast = labels() }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1") // one byte: no edge set fits
+    var star = Map.empty[Long, Long]
+    val starJobs = try JobCounter.jobs(spark) { star = labels() }
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(fast === unionFind(edges))
+    assert(star === fast)
+    assert(starJobs > fastJobs, s"star loop $starJobs jobs, driver path $fastJobs")
+  }
+
   test("no driver-side graph state: plan has no collect of edges") {
     // structural property: the DISTRIBUTED path (small-graph closure
     // disabled) runs a 2k-node graph without materializing nodes on the
