@@ -16,8 +16,10 @@ import graft.exprs.fns
   *
   * The reference's bin iterator may yield the same way pair once per shared
   * cell and tolerates the duplicate output rows ("intersections of >2 ways
-  * could appear multiple times", geo.js:270); here cross-cell duplicate
-  * pairs are dropped before the refine (W4 normalization).
+  * could appear multiple times", geo.js:270); here each pair is kept in
+  * exactly one shared cell by a reference-point owner conjunct (W4
+  * normalization): the low corner of the two coverings' overlap, in index
+  * space, lies in both coverings exactly once. No dedup shuffle.
   *
   * Output columns: lat, lon, raw, streets, wayIds array<long>, nodeId
   * string ('Geom' or first common node id), ord (large sentinel — geometric
@@ -37,6 +39,7 @@ object GeomIntersections {
     val bounded = withBounds(wayData)
     val withCells = bounded
       .select(col("way_id"), col("name"), col("highway"), col("nodes"), col("geometry"),
+        col("min_lat"), col("min_lon"),
         explode(fns.cells_covering(col("min_lat"), col("min_lon"),
           col("max_lat"), col("max_lon"), res)).as("cell"))
 
@@ -44,20 +47,23 @@ object GeomIntersections {
     val left = withCells
       .filter(col("highway") === "motorway" && length(col("name")) > 0)
       .select(col("cell"), col("way_id").as("id1"), col("name").as("name1"),
-        col("highway").as("hw1"), col("nodes").as("nodes1"), col("geometry").as("geom1"))
+        col("highway").as("hw1"), col("nodes").as("nodes1"), col("geometry").as("geom1"),
+        col("min_lat").as("min_lat1"), col("min_lon").as("min_lon1"))
     val right = withCells
       .filter(length(col("name")) > 0)
       .select(col("cell"), col("way_id").as("id2"), col("name").as("name2"),
-        col("highway").as("hw2"), col("nodes").as("nodes2"), col("geometry").as("geom2"))
+        col("highway").as("hw2"), col("nodes").as("nodes2"), col("geometry").as("geom2"),
+        col("min_lat").as("min_lat2"), col("min_lon").as("min_lon2"))
 
     // J3 symmetry breaking (gpsBins.js:216-226): yield way2 iff it fails the
-    // predicate or has a larger id; never self-pair. Cross-cell duplicate
-    // pairs are dropped (W4).
+    // predicate or has a larger id; never self-pair. W4 owner: the pair is
+    // kept only in the cell of its coverings' common low corner.
     val pairs = broadcast(left).join(right,
         left("cell") === right("cell") &&
+          left("cell") === fns.cell_encode(greatest(col("min_lat1"), col("min_lat2")),
+            greatest(col("min_lon1"), col("min_lon2")), res) &&
           col("id1") =!= col("id2") &&
           (col("hw2") =!= "motorway" || col("id2") > col("id1")), "inner")
-      .dropDuplicates("id1", "id2")
 
     val refined = pairs
       // J4: exact polyline intersection, first hit (geo.js:201-215)

@@ -11,9 +11,11 @@ import org.apache.spark.sql.functions._
   * Mirrokni, Rastogi, Vassilvitskii, "Connected Components in MapReduce and
   * Beyond", SoCC'14 — public). Each round is two shuffle-by-node passes;
   * converges in O(log n) rounds on any graph (vs O(diameter) for plain
-  * min-label propagation, which dies on long chains). No graph state ever
-  * touches the driver: per round the driver sees only a (count, xor-of-hash)
-  * checksum, so the operator scales with the cluster, not the driver heap.
+  * min-label propagation, which dies on long chains). In the star loop no
+  * graph state touches the driver: per round it sees only a (count,
+  * xor-of-hash) checksum, so the loop scales with the cluster, not the
+  * driver heap. Only a small graph comes to the driver, as one bounded
+  * collect of its deduped edges (the fast path below).
   *
   * Edge invariant maintained throughout: (a, b) with a > b ("child" →
   * smaller "parent"), dedup'd. At convergence the edge set is a star forest

@@ -1,12 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession, Dataset}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.exprs.fns
 import graft.geom.Geom
 
-/** Working row for the order-sensitive coalescing stages (A4/A6). */
+/** Working row for the order-sensitive coalescing stages (A4/A5/A6). */
 case class Memb(way_id: Long, name: String)
 case class TopoRow(
     lat: Double, lon: Double, raw: String, streets: String,
@@ -15,36 +15,42 @@ case class TopoRow(
 
 /** Topological intersection finding (SURVEY J1/A1/P5/P6/W1/A4/A5/A6):
   * reference `findintersections` geo.js:1136-1223 + coalescing
-  * geo.js:738-967. The core is a hash aggregation (groupBy node →
-  * collect_set(name)) — exactly the reference's Map<node, Set<name>> made
-  * explicit as a shuffle. The greedy 50 m clustering (A6) is an
-  * order-sensitive typed island (groupByKey.flatMapGroups) because its
-  * semantics (greedy first-element clusters, early-return neighbor pairing,
-  * geo.js:827-967) are not relational.
+  * geo.js:738-967. Two passes, like the reference's one
+  * Map<node, Set<name>> and one avgGps:
+  *   - ONE node-keyed aggregate over the exploded wayData (names, order,
+  *     gps, memberships, highway types, dead-end parity), then the W1
+  *     intString window;
+  *   - ONE typed pass over the `streets` groups (groupByKey.flatMapGroups)
+  *     for A4+A5+A6. Whether a row is a JUNCTION row depends only on its
+  *     streets, so a group is all junction (A4: one averaged row) or all
+  *     plain (A5 singleton pass-through, A6 greedy 50 m clustering, whose
+  *     first-element clusters and early-return neighbor pairing,
+  *     geo.js:827-967, are not relational).
   */
 object TopoIntersections {
 
-  /** Full topological pipeline. Inputs: wayData (WayOps.deriveWayData) and
-    * the raw ways table. Output columns:
-    * lat, lon, raw, streets, wayIds array<long>, nodeId long, ord.
+  /** Full topological pipeline over wayData (WayOps.deriveWayData). Output
+    * columns: lat, lon, raw, streets, wayIds array<long>, nodeId long, ord.
+    *
+    * `rawWays` is no longer read: every tagged way is in wayData at least
+    * once with its raw nodes and highway (named, X1-named link and
+    * fake-named rows), so the per-node highway set and way ids come from
+    * the same aggregate. The parameter stays for source compatibility.
     */
   def apply(spark: SparkSession, wayData: DataFrame, rawWays: DataFrame): DataFrame = {
     import spark.implicits._
 
-    // ONE explode + ONE groupBy(node) per source table (was 6 separate
-    // explode→shuffle→aggregate passes + 5 node joins in round 1 — at scale
-    // the shuffle volume of the exploded node table dominates this job, so
-    // every per-node aggregate that shares a source must share its pass):
-    //
-    // wayData pass: names set + first-insertion order (J1/A1/W1), first-
-    // occurrence gps (mapNodeIdToGps), memberships (onSameWay), and the A7
-    // dead-end parity (endpoint occurrences per name, odd count = dead end —
-    // computed from the per-node endpoint-name list, which is degree-bounded).
+    // ONE explode + ONE groupBy(node): names set + first-insertion order
+    // (J1/A1/W1), first-occurrence gps (mapNodeIdToGps), memberships
+    // (onSameWay and the wayIds output column, geo.js:1132), highway types
+    // (P5/P6, mapNodeIdToWays) and the A7 dead-end parity (endpoint
+    // occurrences per name, odd count = dead end — computed from the
+    // per-node endpoint-name list, which is degree-bounded).
     val n = size(col("nodes"))
     val exploded = wayData
-      .select(col("way_pos"), col("way_id"), col("name"), col("src"), n.as("n"),
+      .select(col("way_pos"), col("way_id"), col("name"), col("highway"), col("src"), n.as("n"),
         posexplode(arrays_zip(col("nodes"), col("geometry"))))
-      .select(col("name"), col("way_id"),
+      .select(col("name"), col("way_id"), col("highway"),
         col("col.nodes").as("node"),
         col("col.geometry.lat").as("lat"), col("col.geometry.lon").as("lon"),
         (col("way_pos") * 1000000L + col("pos")).as("okey"),
@@ -57,34 +63,16 @@ object TopoIntersections {
         min(col("okey")).as("ord"),
         min_by(struct(col("lat"), col("lon")), col("okey")).as("g"),
         collect_set(struct(col("way_id"), col("name"))).as("memberships"),
+        collect_set(col("highway")).as("hws"),
         collect_list(when(col("is_end"), col("name"))).as("end_names"))
       .filter(size(col("names")) > 1)
-      .withColumn("dead_names",
-        sort_array(filter(array_distinct(col("end_names")),
-          nm => size(filter(col("end_names"), x => x === nm)) % 2 === 1)))
-      .select(col("node"), col("names"), col("ord"),
-        col("g.lat").as("lat"), col("g.lon").as("lon"),
-        col("memberships"), col("dead_names"))
-
-    // rawWays pass: per-node highway types (P5/P6, mapNodeIdToWays) + the
-    // wayIds output column (all tagged ways touching the node, geo.js:1132)
-    val tagged = rawWays.filter(col("tags").isNotNull)
-    val rawAgg = tagged
-      .select(explode(col("nodes")).as("node"), col("id"),
-        col("tags").getItem("highway").as("hw"))
-      .groupBy("node").agg(
-        collect_set(col("hw")).as("hws"),
-        sort_array(collect_set(col("id"))).as("wayIds"))
-
-    val wIntString = Window.partitionBy("intString").orderBy("ord")
-    // single node-keyed join (both aggregation outputs are hash partitioned
-    // on node — no extra exchange), THEN the intString windows (one reshuffle)
-    val ints0 = wdAgg
-      .join(rawAgg, Seq("node"))
       // P5: not all motorway_links (geo.js:1098-1108)
       .filter(exists(col("hws"), h => h =!= "motorway_link"))
       // P6: not all motorway+links (geo.js:1111-1123)
       .filter(!forall(col("hws"), h => h === "motorway" || h === "motorway_link"))
+
+    val wIntString = Window.partitionBy("intString").orderBy("ord")
+    val ints = wdAgg
       .withColumn("intString", concat_ws("/", array_sort(col("names"))))
       .withColumn("rn", row_number().over(wIntString))
       .withColumn("mx", max(col("rn")).over(Window.partitionBy("intString")))
@@ -95,53 +83,26 @@ object TopoIntersections {
       .withColumn("raw",
         when(col("rn") === 1 || col("rn") >= 10, col("intString"))
           .otherwise(concat(col("intString"), lit("_"), col("rn"))))
-      .withColumn("streets", fns.clean_street_key(col("raw")))
-      .select(col("lat"), col("lon"), col("raw"), col("streets"), col("wayIds"),
+      .select(col("g.lat").as("lat"), col("g.lon").as("lon"), col("raw"),
+        fns.clean_street_key(col("raw")).as("streets"),
+        array_sort(array_distinct(transform(col("memberships"), m => m.getField("way_id"))))
+          .as("wayIds"),
         col("node").as("nodeId"), col("ord"),
-        coalesce(col("dead_names"), array().cast("array<string>")).as("deadNames"),
+        sort_array(filter(array_distinct(col("end_names")),
+          nm => size(filter(col("end_names"), x => x === nm)) % 2 === 1)).as("deadNames"),
         col("memberships"))
-      // A4/A6 each split-and-union this relation (2×2 downstream branches);
-      // persist so the subtree executes once, not four times
-      .cache()
-
-    val afterJunction = averageJunctionDuplicates(ints0).cache()
-    val coalesced = averageNearbyDuplicates(spark, afterJunction)
-    removeJunctions(coalesced)
-  }
-
-  /** A4 (geo.js:738-766): JUNCTION-named intersections with identical streets
-    * collapse to one averaged point; first row (by streets sort, ties by
-    * insertion) supplies raw/streets/nodeId. */
-  def averageJunctionDuplicates(ints: DataFrame): DataFrame = {
-    val isJ = col("streets").contains("JUNCTION")
-    val simple = ints.filter(!isJ)
-    val junction = ints.filter(isJ)
-      .groupBy(col("streets"))
-      .agg(
-        avg(col("lat")).as("lat"), avg(col("lon")).as("lon"),
-        min_by(col("raw"), col("ord")).as("raw"),
-        sort_array(array_distinct(flatten(collect_list(col("wayIds"))))).as("wayIds"),
-        min_by(col("nodeId"), col("ord")).as("nodeId"),
-        min(col("ord")).as("ord"),
-        min_by(col("deadNames"), col("ord")).as("deadNames"),
-        min_by(col("memberships"), col("ord")).as("memberships"))
-      .select(simple.columns.map(col).toIndexedSeq: _*)
-    simple.unionByName(junction)
-  }
-
-  /** A5+A6 (geo.js:904-967): singleton streets pass through; duplicate
-    * streets go through greedy 50 m clustering with dead-end rules.
-    * Duplicate groups are tiny (same street-pair) → typed flatMapGroups. */
-  def averageNearbyDuplicates(spark: SparkSession, ints: DataFrame): DataFrame = {
-    import spark.implicits._
-    val counted = ints.withColumn("ct", count(lit(1)).over(Window.partitionBy("streets")))
-      .cache() // consumed by both the singles and dupes branches
-    val singles = counted.filter(col("ct") === 1).drop("ct")
-    val dupes = counted.filter(col("ct") > 1).drop("ct")
       .as[TopoRow]
+
+    // A4 (geo.js:738-766): a JUNCTION group collapses to one averaged row
+    // led by its first row; A5+A6 (geo.js:904-967): a singleton passes
+    // through greedyCluster unchanged, duplicates cluster greedily
+    val coalesced = ints
       .groupByKey(_.streets)
-      .flatMapGroups((_: String, it: Iterator[TopoRow]) => greedyCluster(it.toSeq))
-    singles.unionByName(dupes.toDF())
+      .flatMapGroups { (streets: String, it: Iterator[TopoRow]) =>
+        if (streets.contains("JUNCTION")) Seq(avgRows(it.toSeq.sortBy(_.ord)))
+        else greedyCluster(it.toSeq)
+      }
+    removeJunctions(coalesced.toDF())
   }
 
   private def manhattan(a: TopoRow, b: TopoRow): Double =

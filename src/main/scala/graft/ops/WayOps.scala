@@ -129,12 +129,15 @@ object WayOps {
         posexplode(col("nodes")))
       .withColumnRenamed("col", "node")
       .join(nodeNames, Seq("node"), "left")
-      .groupBy("way_id", "highway", "nodes", "geometry", "way_pos")
-      .agg(array_sort(array_distinct(concat(
-        array(when(col("highway") === "motorway_link", lit("motorway_link"))
-          .otherwise(lit("JUNCTION"))),
-        flatten(collect_list(coalesce(col("nnames"), array().cast("array<string>"))))
-      ))).as("names_arr"))
+      // way_id fixes the other columns: carry them, do not hash them
+      .groupBy("way_id")
+      .agg(any_value(col("highway")).as("highway"), any_value(col("nodes")).as("nodes"),
+        any_value(col("geometry")).as("geometry"), any_value(col("way_pos")).as("way_pos"),
+        array_sort(array_distinct(concat(
+          array(when(any_value(col("highway")) === "motorway_link", lit("motorway_link"))
+            .otherwise(lit("JUNCTION"))),
+          flatten(collect_list(coalesce(col("nnames"), array().cast("array<string>"))))
+        ))).as("names_arr"))
       .select(col("way_id"), concat_ws("/", col("names_arr")).as("name"), col("highway"),
         col("nodes"), col("geometry"),
         (col("way_pos") + 2000000000L).as("way_pos"), lit("fake").as("src"))

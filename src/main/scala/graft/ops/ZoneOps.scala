@@ -222,10 +222,13 @@ object ZoneOps {
     * quarter-µ°² integers (extent edges whole-µ°, zone edges half-µ°).
     *
     * Scale shape: both sides explode their bbox covering map-side, the
-    * candidate join is a SHUFFLE_HASH equi-join on the cell, pairs dedup
-    * with ONE dropDuplicates, and the refine is a per-row codegen'd static
-    * call. At 10⁶ polygons × 10⁶ extents nothing is broadcast and nothing
-    * is quadratic; res trades candidate fan-out against refine count.
+    * candidate join is a SHUFFLE_HASH equi-join on the cell, each pair is
+    * kept in ONE shared cell by a reference-point owner conjunct (the cell
+    * of the two bboxes' common low corner, which both coverings hold
+    * exactly once: no dedup shuffle), and the refine is a per-row
+    * codegen'd static call. At 10⁶ polygons × 10⁶ extents nothing is
+    * broadcast and nothing is quadratic; res trades candidate fan-out
+    * against refine count.
     */
   def extentZoneJoin(extents: DataFrame, zones: DataFrame, res: Int,
                      frameLat0: Double = graft.synth.Synth.LAT0,
@@ -240,12 +243,14 @@ object ZoneOps {
         "transform(sequence(0, size(zf_flat) DIV 2 - 1), i -> zf_flat[2*i+1])"))
       .withColumn("zf_lons", expr(
         "transform(sequence(0, size(zf_flat) DIV 2 - 1), i -> zf_flat[2*i])"))
-      .withColumn("cell", explode(fns.cells_covering(
-        array_min(col("zf_lats")), array_min(col("zf_lons")),
+      .withColumn("zf_lat0", array_min(col("zf_lats")))
+      .withColumn("zf_lon0", array_min(col("zf_lons")))
+      .withColumn("cell", explode(fns.cells_covering(col("zf_lat0"), col("zf_lon0"),
         array_max(col("zf_lats")), array_max(col("zf_lons")), res)))
-      .select(col("zone"), col("rings"), col("cell"))
+      .select(col("zone"), col("rings"), col("zf_lat0"), col("zf_lon0"), col("cell"))
     a.join(b.hint("SHUFFLE_HASH"), Seq("cell"))
-      .dropDuplicates("id", "zone")
+      .filter(col("cell") === fns.cell_encode(greatest(uDeg(col("uLo")), col("zf_lat0")),
+        greatest(vDeg(col("vLo")), col("zf_lon0")), res))
       .withColumn("overlap_q4", round(fns.clip_rect_area(col("rings"),
         uDeg(col("uLo")), vDeg(col("vLo")), uDeg(col("uHi")), vDeg(col("vHi")))
         * lit(4.0e12)).cast("long"))

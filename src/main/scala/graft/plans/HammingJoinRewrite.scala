@@ -68,9 +68,9 @@ object HammingJoinRewrite extends BlockedJoin {
       .flatMap { case (a, b) => orient(a, b, left, right) }
   }
 
-  /** bucket of `key` at a band given by an expression (0..3). */
-  private def bucketAt(key: Expression, band: Expression): Expression =
-    BitwiseAnd(ShiftRight(key, Multiply(band, Literal(BandBits))), Literal(BandMask))
+  /** bucket of `key` at the band that starts at bit `shift`. */
+  private def bucketAt(key: Expression, shift: Expression): Expression =
+    BitwiseAnd(ShiftRight(key, shift), Literal(BandMask))
 
   private def blocked(j: Join, el: Expression, er: Expression): LogicalPlan = {
     val bandsLit = Literal.create((0 until Bands).toSeq,
@@ -78,18 +78,19 @@ object HammingJoinRewrite extends BlockedJoin {
 
     def banded(child: LogicalPlan, key: Expression, tag: String) = {
       val (gen, band) = exploded(child, bandsLit, s"_graft_band$tag")
-      val (p, bkt) = keyed(gen, bucketAt(key, band), s"_graft_bkt$tag")
+      val (p, bkt) = keyed(gen, bucketAt(key, Multiply(band, Literal(BandBits))), s"_graft_bkt$tag")
       (p, band, bkt)
     }
     val (lp, bandL, bktL) = banded(j.left, el, "l")
     val (rp, bandR, bktR) = banded(j.right, er, "r")
 
     // first-matching-band: keep the pair only at the LOWEST shared band (one
-    // exists by pigeonhole)
+    // exists by pigeonhole). The rule runs after constant folding, so the
+    // static bands' shifts are emitted folded.
     def bandsDifferBelow(b: Int): Expression =
       (0 until b).map { i =>
-        Not(EqualTo(bucketAt(el, Literal(i)), bucketAt(er, Literal(i))))
-          : Expression
+        val shift = Literal(i * BandBits)
+        Not(EqualTo(bucketAt(el, shift), bucketAt(er, shift))): Expression
       }.reduceOption(And).getOrElse(Literal.TrueLiteral)
     val firstMatch = (0 until Bands).map { b =>
       And(EqualTo(bandL, Literal(b)), bandsDifferBelow(b)): Expression

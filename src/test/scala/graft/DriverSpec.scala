@@ -59,23 +59,35 @@ class DriverSpec extends AnyFunSuite {
     assert(Driver.collectWithin(df, 20, bytes - 1).left.exists(_.contains(s"cap of ${bytes - 1} bytes")))
   }
 
-  test("lint: no new raw .collect() in ops, text, sim and sources") {
-    // new driver pulls go through Driver.collectBounded; these counts may
-    // only go down
-    val allowed = Map("Driver.scala" -> 1, "Skew.scala" -> 1,
-      "ClusterOps.scala" -> 1, "QuantileOps.scala" -> 5, "TextOps.scala" -> 3,
-      "SimOps.scala" -> 3, "GeoJson.scala" -> 1)
+  /** files of ops, text, sim and sources holding more `pattern` matches
+    * than `allowed` grants them (0 when unnamed) */
+  private def overCap(pattern: String, allowed: Map[String, Int]): Seq[String] = {
     val root = new java.io.File("src/main/scala/graft")
     val files = Seq("ops", "text", "sim", "sources")
       .flatMap(d => Option(new java.io.File(root, d).listFiles()).getOrElse(Array.empty[java.io.File]))
       .filter(_.getName.endsWith(".scala"))
     assert(files.exists(_.getName == "WayOps.scala"), s"sources not found under ${root.getAbsolutePath}")
-    val over = files.flatMap { f =>
+    files.flatMap { f =>
       val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      val n = "\\.collect\\(\\)".r.findAllMatchIn(src).length
+      val n = pattern.r.findAllMatchIn(src).length
       val cap = allowed.getOrElse(f.getName, 0)
-      if (n > cap) Some(s"${f.getPath}: $n raw .collect() calls, at most $cap") else None
+      if (n > cap) Some(s"${f.getPath}: $n matches of $pattern, at most $cap") else None
     }
+  }
+
+  test("lint: no new raw .collect() in ops, text, sim and sources") {
+    // new driver pulls go through Driver.collectBounded; these counts may
+    // only go down
+    val over = overCap("\\.collect\\(\\)", Map("Driver.scala" -> 1, "Skew.scala" -> 1,
+      "ClusterOps.scala" -> 1, "QuantileOps.scala" -> 5, "TextOps.scala" -> 3,
+      "SimOps.scala" -> 3, "GeoJson.scala" -> 1))
+    assert(over.isEmpty, over.mkString("\n"))
+  }
+
+  test("lint: no new .cache() in ops, text, sim and sources") {
+    // a cache nobody releases pins its blocks for the session's life; these
+    // counts may only go down
+    val over = overCap("\\.cache\\(\\)", Map("TextOps.scala" -> 1))
     assert(over.isEmpty, over.mkString("\n"))
   }
 }

@@ -144,9 +144,10 @@ class GeomSpec extends AnyFunSuite {
   }
 
   test("W4: a way pair sharing three cells is emitted once") {
-    // two crossing ways whose bboxes share THREE 0.01° cells: the reference's
+    // crossing ways whose bboxes share THREE 0.01° cells: the reference's
     // bin iterator yields the pair once per shared cell (geo.js:270); the
-    // finder drops the cross-cell duplicates
+    // finder keeps each pair in one cell. Way 3's covering starts one lat
+    // cell below the motorway's, so only the larger low corner is shared.
     val spark = SparkTestSession.spark
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -154,17 +155,20 @@ class GeomSpec extends AnyFunSuite {
       (1L, Seq(1L, 2L), Seq((0.005, 0.0), (0.005, 0.025)),
         Map("highway" -> "motorway", "name" -> "M")),
       (2L, Seq(3L, 4L), Seq((0.004, 0.0), (0.006, 0.025)),
-        Map("highway" -> "residential", "name" -> "R")))
+        Map("highway" -> "residential", "name" -> "R")),
+      (3L, Seq(5L, 6L), Seq((-0.005, 0.008), (0.015, 0.028)),
+        Map("highway" -> "residential", "name" -> "S")))
       .toDF("id", "nodes", "g0", "tags")
       .withColumn("geometry", expr("transform(g0, g -> struct(g._1 as lat, g._2 as lon))"))
       .drop("g0")
     val wd = ops.WayOps.deriveWayData(spark, ways).coalesce(1)
     val cells = ops.GeomIntersections.withBounds(wd)
-      .select(size(graft.exprs.fns.cells_covering(col("min_lat"), col("min_lon"),
+      .select(col("way_id"), size(graft.exprs.fns.cells_covering(col("min_lat"), col("min_lon"),
         col("max_lat"), col("max_lon"), 2)))
-      .as[Int].collect()
-    assert(cells.toSeq === Seq(3, 3))
-    assert(ops.GeomIntersections(spark, wd).count() === 1L)
+      .as[(Long, Int)].collect().sorted
+    assert(cells.toSeq === Seq((1L, 3), (2L, 3), (3L, 9)))
+    val pairs = ops.GeomIntersections(spark, wd).select("wayIds").as[Seq[Long]].collect()
+    assert(pairs.toSeq.sortBy(_.last) === Seq(Seq(1L, 2L), Seq(1L, 3L)))
   }
 }
 

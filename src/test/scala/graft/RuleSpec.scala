@@ -244,6 +244,17 @@ class RuleSpec extends AnyFunSuite {
     }
   }
 
+  test("hamming rewrite: the owner conjunct's band shifts are folded, no Multiply per pair") {
+    val (df, _) = hamCorpus(50)
+    GraftPlans.enable(spark)
+    val conds = hamJoin(df).queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j.condition
+    }.flatten
+    assert(conds.exists(_.toString.contains("_graft_band")), conds.mkString("\n"))
+    assert(!conds.exists(_.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.Multiply])),
+      conds.mkString("\n"))
+  }
+
   test("hamming rewrite: distance-0 twin pairs (strict < form) survive exactly once") {
     import spark.implicits._
     val df = (Seq(("x1", 42L), ("x2", 42L), ("y1", 7L)))
