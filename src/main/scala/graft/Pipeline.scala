@@ -10,21 +10,25 @@ import graft.synth.Synth
   */
 object Pipeline {
 
-  /** memoized per (session, sfDir): grid size + cached way tables. */
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, (Int, DataFrame, DataFrame)]()
+  /** memoized per (sfDir, session): grid size + cached way tables. The key
+    * holds the session object itself, so two sessions never share an entry
+    * (SparkSession compares by reference). */
+  private val cache =
+    new java.util.concurrent.ConcurrentHashMap[(String, SparkSession), (Int, DataFrame, DataFrame)]()
 
   def prepared(spark: SparkSession, sfDir: String): (Int, DataFrame, DataFrame) =
-    cache.computeIfAbsent(sfDir + "@" + System.identityHashCode(spark), { _ =>
+    cache.computeIfAbsent((sfDir, spark), { _ =>
       val g = Synth.gridSize(spark, sfDir)
       val raw = Synth.ways(spark, g).cache()
       val wayData = WayOps.deriveWayData(spark, raw).cache()
       (g, raw, wayData)
     })
 
-  private val featCache = new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame, DataFrame)]()
+  private val featCache =
+    new java.util.concurrent.ConcurrentHashMap[(String, SparkSession), (DataFrame, DataFrame, DataFrame)]()
 
   private def derived(spark: SparkSession, sfDir: String): (DataFrame, DataFrame, DataFrame) =
-    featCache.computeIfAbsent(sfDir + "@" + System.identityHashCode(spark), { _ =>
+    featCache.computeIfAbsent((sfDir, spark), { _ =>
       val (g, raw, wayData) = prepared(spark, sfDir)
       // the topological/geometric DAGs are reused by several queries
       // (features, filters, anti-join) — cache the materialized results

@@ -1659,7 +1659,7 @@ object SparkEntry {
     // oracle's pixel re-derivation stays bounded — every bucket histogram
     // argmax must match the splitmix closed form
     "q_image_dominant_color" -> ((s, dir) =>
-      graft.ops.ImageOps.dominantColor(s,
+      graft.ops.ImageOps.dominantColor(
           Synth.images(s, dir, Pipeline.prepared(s, dir)._1)
             .withColumn("k", expr("CAST(substr(image_id, 4, 20) AS BIGINT)"))
             .filter(col("k") % 97 === 0 && col("fmt") =!= "jpeg"))
@@ -1674,11 +1674,7 @@ object SparkEntry {
         .as[(Long, String, Array[Byte])]
         .map { case (k, fmt, bytes) =>
           val (rgb, dw, dh) = graft.synth.Codec.decodeAny(fmt, bytes).get
-          var r = 0L; var g = 0L; var b = 0L; var i = 0
-          while (i < rgb.length) {
-            r += rgb(i) & 0xff; g += rgb(i + 1) & 0xff; b += rgb(i + 2) & 0xff
-            i += 3
-          }
+          val (r, g, b) = graft.synth.Codec.channelSums(rgb)
           (k, fmt, dw, dh, r, g, b)
         }
         .toDF("k", "fmt", "w", "h", "sum_r", "sum_g", "sum_b")
@@ -1752,7 +1748,7 @@ object SparkEntry {
         .select(concat(col("image_id"), lit("_p")).as("image_id"),
           encPost(col("phash"), col("w"), col("h")).as("bytes"),
           lit("bmp").as("fmt"))
-      ImageOps.paletteStats(s,
+      ImageOps.paletteStats(
           base.select("image_id", "bytes", "fmt").unionByName(planted),
           maxColors = 48L)
         .select(
@@ -1787,7 +1783,7 @@ object SparkEntry {
         .select(concat(col("image_id"), lit("_g")).as("image_id"),
           encGray(col("phash"), col("w"), col("h")).as("bytes"),
           lit("bmp").as("fmt"))
-      ImageOps.channelCorrStats(s,
+      ImageOps.channelCorrStats(
           base.select("image_id", "bytes", "fmt").unionByName(planted))
         .select(
           expr("CAST(regexp_extract(image_id, '^img([0-9]+)', 1) AS BIGINT)").as("k"),
@@ -1818,7 +1814,7 @@ object SparkEntry {
         .select(concat(col("image_id"), lit("_lb")).as("image_id"),
           encLb(col("phash"), col("w"), col("h")).as("bytes"),
           lit("bmp").as("fmt"))
-      ImageOps.borderStats(s,
+      ImageOps.borderStats(
           base.select("image_id", "bytes", "fmt").unionByName(planted))
         .select(
           expr("CAST(regexp_extract(image_id, '^img([0-9]+)', 1) AS BIGINT)").as("k"),
@@ -1847,7 +1843,7 @@ object SparkEntry {
         .select(concat(col("image_id"), lit("_re")).as("image_id"),
           encPng(col("phash"), col("w"), col("h")).as("bytes"),
           col("w"), col("h"), lit("png").as("fmt"), col("caption"), col("phash"))
-      ImageOps.pixelDedupGroups(s, base.unionByName(planted))
+      ImageOps.pixelDedupGroups(base.unionByName(planted))
         .select("keep_id", "n_copies", "w", "h", "fmts", "digest")
         .orderBy("keep_id")
     }),
@@ -1872,7 +1868,7 @@ object SparkEntry {
         .select(concat(col("image_id"), lit("_f")).as("image_id"),
           encFlip(col("phash"), col("w"), col("h")).as("bytes"),
           col("w"), col("h"), lit("bmp").as("fmt"), col("caption"), col("phash"))
-      ImageOps.dihedralDedupGroups(s, base.unionByName(planted))
+      ImageOps.dihedralDedupGroups(base.unionByName(planted))
         .select("keep_id", "n_copies", "w", "h", "fmts", "canon")
         .orderBy("keep_id")
     }),
@@ -1934,7 +1930,7 @@ object SparkEntry {
           cropEnc(col("phash"), col("w"), col("h")).as("bytes"),
           (col("w") - 2).as("w"), (col("h") - 2).as("h"),
           lit("bmp").as("fmt"), col("caption"), col("phash"))
-      ImageOps.cropDups(s, base.unionByName(planted))
+      ImageOps.cropDups(base.unionByName(planted))
         .orderBy("id1", "id2")
     }),
 
@@ -2007,7 +2003,7 @@ object SparkEntry {
         .withColumn("bytes", encPng(col("phash"), col("w"), col("h")))
         .withColumn("fmt", lit("png"))
         .select(keep.head, keep.tail: _*)
-      ImageOps.curatePipeline(s, base.unionByName(planted), Synth.cityPolys(g0),
+      ImageOps.curatePipeline(base.unionByName(planted), Synth.cityPolys(g0),
           minVar = 5400L, cellMicro = 5000L, budgetBytes = 4096L)
         .orderBy("image_id")
     }),
@@ -2022,7 +2018,7 @@ object SparkEntry {
       val imgs = Synth.images(s, dir, g0)
         .withColumn("k", expr("CAST(substr(image_id, 4, 20) AS BIGINT)"))
         .filter(col("k") % 29 === 0 && col("fmt") =!= "jpeg")
-      ImageOps.augmentDigests(s, imgs, Seq("hflip", "rot180"))
+      ImageOps.augmentDigests(imgs, Seq("hflip", "rot180"))
         .select(expr("CAST(substr(image_id, 4, 20) AS BIGINT)").as("k"),
           col("fmt"), col("aug"), col("w"), col("h"), col("digest"))
         .orderBy("k", "aug")
@@ -2037,7 +2033,7 @@ object SparkEntry {
       val imgs = Synth.images(s, dir, g0)
         .withColumn("k", expr("CAST(substr(image_id, 4, 20) AS BIGINT)"))
         .filter(col("k") % 17 === 0 && col("fmt") =!= "jpeg")
-      ImageOps.qualityStats(s, imgs, minVar = 5400L)
+      ImageOps.qualityStats(imgs, minVar = 5400L)
         .select(expr("CAST(substr(image_id, 4, 20) AS BIGINT)").as("k"),
           col("fmt"), col("w"), col("h"), col("sum_v"), col("var_num"),
           col("keep"))
@@ -2055,7 +2051,7 @@ object SparkEntry {
       val imgs = Synth.images(s, dir, g0)
         .withColumn("k", expr("CAST(substr(image_id, 4, 20) AS BIGINT)"))
         .filter(col("k") % 13 === 0 && col("fmt") =!= "jpeg")
-      ImageOps.sharpnessStats(s, imgs, minVar = 320000L)
+      ImageOps.sharpnessStats(imgs, minVar = 320000L)
         .select(expr("CAST(substr(image_id, 4, 20) AS BIGINT)").as("k"),
           col("fmt"), col("w"), col("h"), col("m"), col("lap_sum"),
           col("lap_var_num"), col("sharp"))
@@ -2073,7 +2069,7 @@ object SparkEntry {
       val imgs = Synth.images(s, dir, g0)
         .withColumn("k", expr("CAST(substr(image_id, 4, 20) AS BIGINT)"))
         .filter(col("k") % 19 === 0 && col("fmt") =!= "jpeg")
-      ImageOps.equalizeStats(s, imgs)
+      ImageOps.equalizeStats(imgs)
         .select(expr("CAST(substr(image_id, 4, 20) AS BIGINT)").as("k"),
           col("fmt"), col("w"), col("h"), col("eq_digest"), col("min_eq"),
           col("max_eq"), col("sum_eq"))
@@ -2089,7 +2085,7 @@ object SparkEntry {
       val imgs = Synth.images(s, dir, g0)
         .withColumn("k", expr("CAST(substr(image_id, 4, 20) AS BIGINT)"))
         .filter(col("k") % 59 === 0 && col("fmt") =!= "jpeg")
-      ImageOps.boxDownsample(s, imgs)
+      ImageOps.boxDownsample(imgs)
         .select(expr("CAST(substr(image_id, 4, 20) AS BIGINT)").as("k"),
           col("fmt"), col("w"), col("h"), col("dw"), col("dh"),
           col("down_digest"), col("sum_down"))
@@ -2112,7 +2108,7 @@ object SparkEntry {
       val imgs = Synth.images(s, dir, g0)
         .withColumn("k", expr("CAST(substr(image_id, 4, 20) AS BIGINT)"))
         .filter(col("k") % 53 === 0 && col("fmt") =!= "jpeg")
-      ImageOps.rleStats(s, imgs, maxRatioPpm = 1985000L)
+      ImageOps.rleStats(imgs, maxRatioPpm = 1985000L)
         .select(expr("CAST(substr(image_id, 4, 20) AS BIGINT)").as("k"),
           col("fmt"), col("w"), col("h"), col("n_bytes"), col("n_runs"),
           col("ratio_ppm"), col("compressible"))
@@ -2130,7 +2126,7 @@ object SparkEntry {
       val imgs = Synth.images(s, dir, g0)
         .withColumn("k", expr("CAST(substr(image_id, 4, 20) AS BIGINT)"))
         .filter(col("k") % 23 === 0 && col("fmt") =!= "jpeg")
-      ImageOps.otsuStats(s, imgs)
+      ImageOps.otsuStats(imgs)
         .select(expr("CAST(substr(image_id, 4, 20) AS BIGINT)").as("k"),
           col("fmt"), col("w"), col("h"), col("t_star"), col("score_q"),
           col("n_bg"), col("n_fg"))
@@ -2146,7 +2142,7 @@ object SparkEntry {
       val imgs = Synth.images(s, dir, g0)
         .withColumn("k", expr("CAST(substr(image_id, 4, 20) AS BIGINT)"))
         .filter(col("k") % 41 === 0 && col("fmt") =!= "jpeg")
-      ImageOps.entropyStats(s, imgs)
+      ImageOps.entropyStats(imgs)
         .select(expr("CAST(substr(image_id, 4, 20) AS BIGINT)").as("k"),
           col("fmt"), col("w"), col("h"), col("n_px"), col("n_bins"),
           col("ent_num"), col("ratio_ppm"))
@@ -2162,7 +2158,7 @@ object SparkEntry {
       val imgs = Synth.images(s, dir, g0)
         .withColumn("k", expr("CAST(substr(image_id, 4, 20) AS BIGINT)"))
         .filter(col("k") % 43 === 0 && col("fmt") =!= "jpeg")
-      ImageOps.sobelStats(s, imgs, minMag2 = 1500000L)
+      ImageOps.sobelStats(imgs, minMag2 = 1500000L)
         .select(expr("CAST(substr(image_id, 4, 20) AS BIGINT)").as("k"),
           col("fmt"), col("w"), col("h"), col("m"), col("n_edge"),
           col("sum_abs_gx"), col("sum_abs_gy"), col("h_cnt"), col("v_cnt"),
@@ -2272,11 +2268,7 @@ object SparkEntry {
         .as[(Long, Int, Array[Byte])]
         .map { case (k, f, bytes) =>
           val (rgb, dw, dh) = graft.synth.Bmp.decode(bytes)
-          var r = 0L; var g = 0L; var b = 0L; var i = 0
-          while (i < rgb.length) {
-            r += rgb(i) & 0xff; g += rgb(i + 1) & 0xff; b += rgb(i + 2) & 0xff
-            i += 3
-          }
+          val (r, g, b) = graft.synth.Codec.channelSums(rgb)
           (k, f, dw, dh, r, g, b)
         }
         .toDF("k", "frame_idx", "w", "h", "sum_r", "sum_g", "sum_b")

@@ -135,12 +135,7 @@ object GeoStatsOps {
         it.map { case (id, fmt, bytes, lat, lon) =>
           val (rgb, w, h) = Codec.decodeAny(fmt, bytes).getOrElse(
             throw new IllegalStateException(s"lossless decode failed for $id ($fmt)"))
-          var r = 0L; var g = 0L; var b = 0L
-          var i = 0
-          while (i < rgb.length) {
-            r += rgb(i) & 0xff; g += rgb(i + 1) & 0xff; b += rgb(i + 2) & 0xff
-            i += 3
-          }
+          val (r, g, b) = Codec.channelSums(rgb)
           (id, lat, lon, (w * h).toLong, r, g, b)
         }
       }

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession, Dataset, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.functions._
 import graft.synth.{Bmp, Codec}
 
@@ -20,6 +21,57 @@ object ImageOps {
   case class ImageFeatures(
       image_id: String, fmt: String, w: Int, h: Int,
       mean_r: Double, mean_g: Double, mean_b: Double, decode_ok: Boolean)
+
+  /** The decode island of the image operators: selects (image_id, fmt,
+    * bytes), decodes each payload once inside ONE typed mapPartitions
+    * (DeserializeToObject → MapPartitions → SerializeFromObject; bytes are
+    * read once and never shuffle) and hands `f` the id, fmt and decoded
+    * row-major RGB with its (w, h). `f` emits zero or more rows, named
+    * `cols`. An undecodable payload (decodeAny's None: unknown fmt,
+    * truncated or garbled bytes) emits no row. The operators that emit a
+    * decode_ok=false row instead, or carry other columns through the
+    * island, write their own pass. */
+  private def decoded[T <: Product : TypeTag](images: DataFrame, cols: String*)(
+      f: (String, String, Array[Byte], Int, Int) => IterableOnce[T]): DataFrame = {
+    val spark = images.sparkSession
+    import spark.implicits._
+    images.select("image_id", "fmt", "bytes")
+      .as[(String, String, Array[Byte])]
+      .mapPartitions(_.flatMap { case (id, fmt, bytes) =>
+        Codec.decodeAny(fmt, bytes) match {
+          case Some((rgb, w, h)) => f(id, fmt, rgb, w, h)
+          case None => Iterator.empty
+        }
+      })(Encoders.product[T])
+      .toDF(cols: _*)
+  }
+
+  /** Integer gray r+g+b (0..765) of pixel (x, y) of a w-wide RGB buffer. */
+  @inline private def gray(rgb: Array[Byte], w: Int, x: Int, y: Int): Long = {
+    val i = (y * w + x) * 3
+    (rgb(i) & 0xff).toLong + (rgb(i + 1) & 0xff) + (rgb(i + 2) & 0xff)
+  }
+
+  /** Histogram of the integer gray r+g+b over every pixel: 766 bins. */
+  private def grayHist(rgb: Array[Byte]): Array[Long] = {
+    val hist = new Array[Long](766)
+    var i = 0
+    while (i < rgb.length) {
+      hist((rgb(i) & 0xff) + (rgb(i + 1) & 0xff) + (rgb(i + 2) & 0xff)) += 1
+      i += 3
+    }
+    hist
+  }
+
+  /** (Σv, n·Σv² − (Σv)²) over all n channel bytes: the value sum and the
+    * exact variance numerator. */
+  private def valueVariance(rgb: Array[Byte]): (Long, Long) = {
+    var s1 = 0L; var s2 = 0L; var i = 0
+    while (i < rgb.length) {
+      val v = (rgb(i) & 0xff).toLong; s1 += v; s2 += v * v; i += 1
+    }
+    (s1, rgb.length.toLong * s2 - s1 * s1)
+  }
 
   /** Perceptual-hash near-duplicate image pairs — the image twin of SimHash
     * text dedup: the naive Hamming theta-join bit_count(p1 ^ p2) ≤ maxHam
@@ -138,12 +190,7 @@ object ImageOps {
         it.map { case (id, fmt, w, h, bytes, phash) =>
           Codec.decodeAny(fmt, bytes) match {
             case Some((rgb, dw, dh)) =>
-              var r = 0L; var g = 0L; var b = 0L
-              var i = 0
-              while (i < rgb.length) {
-                r += rgb(i) & 0xff; g += rgb(i + 1) & 0xff; b += rgb(i + 2) & 0xff
-                i += 3
-              }
+              val (r, g, b) = Codec.channelSums(rgb)
               val n = (dw * dh).toDouble
               ImageFeatures(id, fmt, dw, dh, r / n, g / n, b / n, decode_ok = true)
             case None =>
@@ -163,29 +210,22 @@ object ImageOps {
     * Decode + histogram are one map-side pass over the partition-batched
     * typed island (bytes never shuffle); output rows are 5 scalars/image.
     * Unknown formats are skipped (the decodeAny None contract). */
-  def dominantColor(spark: SparkSession, images: DataFrame): DataFrame = {
-    import spark.implicits._
-    images.select("image_id", "fmt", "bytes")
-      .as[(String, String, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, fmt, bytes) =>
-          Codec.decodeAny(fmt, bytes).map { case (rgb, dw, dh) =>
-            val counts = new Array[Long](512)
-            var i = 0
-            while (i < rgb.length) {
-              val bk = ((rgb(i) & 0xff) >> 5) * 64 +
-                ((rgb(i + 1) & 0xff) >> 5) * 8 + ((rgb(i + 2) & 0xff) >> 5)
-              counts(bk) += 1
-              i += 3
-            }
-            var best = 0
-            var j = 1
-            while (j < 512) { if (counts(j) > counts(best)) best = j; j += 1 }
-            (id, fmt, dw.toLong * dh, best.toLong, counts(best))
-          }
+  def dominantColor(images: DataFrame): DataFrame =
+    decoded(images, "image_id", "fmt", "n_px", "dom_bucket", "dom_count") {
+      (id, fmt, rgb, dw, dh) =>
+        val counts = new Array[Long](512)
+        var i = 0
+        while (i < rgb.length) {
+          val bk = ((rgb(i) & 0xff) >> 5) * 64 +
+            ((rgb(i + 1) & 0xff) >> 5) * 8 + ((rgb(i + 2) & 0xff) >> 5)
+          counts(bk) += 1
+          i += 3
         }
-      }.toDF("image_id", "fmt", "n_px", "dom_bucket", "dom_count")
-  }
+        var best = 0
+        var j = 1
+        while (j < 512) { if (counts(j) > counts(best)) best = j; j += 1 }
+        Some((id, fmt, dw.toLong * dh, best.toLong, counts(best)))
+    }
 
   /** thumbnail (nearest-neighbor resize) of the decoded image. Decodes all
     * three real codecs (bmp/png/jpeg); thumbs re-encode as BMP regardless of
@@ -420,22 +460,10 @@ object ImageOps {
     * Decode + augment + digest all happen map-side in one partition-batched
     * pass; only (id, fmt, aug, w, h, digest) ever leaves the executor —
     * at 100 TB the augmented bytes are never shuffled, never collected. */
-  def augmentDigests(spark: SparkSession, images: DataFrame,
-      augs: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val augsArr = augs.toArray
-    images.select("image_id", "fmt", "bytes")
-      .as[(String, String, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, fmt, bytes) =>
-          Codec.decodeAny(fmt, bytes).toSeq.flatMap { case (rgb, w, h) =>
-            augsArr.map { a =>
-              (id, fmt, a, w, h, pixelDigest(augmentPixels(rgb, w, h, a)))
-            }
-          }
-        }
-      }.toDF("image_id", "fmt", "aug", "w", "h", "digest")
-  }
+  def augmentDigests(images: DataFrame, augs: Seq[String]): DataFrame =
+    decoded(images, "image_id", "fmt", "aug", "w", "h", "digest") { (id, fmt, rgb, w, h) =>
+      augs.iterator.map(a => (id, fmt, a, w, h, pixelDigest(augmentPixels(rgb, w, h, a))))
+    }
 
   /** Image quality gate (low-contrast / blank-image filter, a standard
     * multimodal-curation pass): per-image channel-value sum and EXACT
@@ -444,25 +472,13 @@ object ImageOps {
     * i.e. population variance ≥ minVar in value² units). Bounded: n ≤ 675,
     * v ≤ 255 ⇒ n·Σv² < 2^35 — plain Long math, SQL-rebuildable from the
     * splitmix closed form. All map-side; bytes never shuffle. */
-  def qualityStats(spark: SparkSession, images: DataFrame,
-                   minVar: Long = 1000L): DataFrame = {
-    import spark.implicits._
-    images.select("image_id", "fmt", "bytes")
-      .as[(String, String, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, fmt, bytes) =>
-          Codec.decodeAny(fmt, bytes).map { case (rgb, w, h) =>
-            var s1 = 0L; var s2 = 0L; var i = 0
-            while (i < rgb.length) {
-              val v = (rgb(i) & 0xff).toLong; s1 += v; s2 += v * v; i += 1
-            }
-            val n = rgb.length.toLong
-            val varNum = n * s2 - s1 * s1
-            (id, fmt, w, h, s1, varNum, varNum >= minVar * n * n)
-          }
-        }
-      }.toDF("image_id", "fmt", "w", "h", "sum_v", "var_num", "keep")
-  }
+  def qualityStats(images: DataFrame, minVar: Long = 1000L): DataFrame =
+    decoded(images, "image_id", "fmt", "w", "h", "sum_v", "var_num", "keep") {
+      (id, fmt, rgb, w, h) =>
+        val (s1, varNum) = valueVariance(rgb)
+        val n = rgb.length.toLong
+        Some((id, fmt, w, h, s1, varNum, varNum >= minVar * n * n))
+    }
 
   /** Blur/sharpness detection — variance of the 3×3 Laplacian (the classic
     * focus measure; Pech-Pacheco et al., ICPR 2000): per decoded image,
@@ -474,36 +490,24 @@ object ImageOps {
     * from the splitmix closed form. One map-side pass over the typed
     * island; bytes never shuffle — at 100 TB this is a pure scan whose
     * output is 7 scalars/image. */
-  def sharpnessStats(spark: SparkSession, images: DataFrame,
-                     minVar: Long = 320000L): DataFrame = {
-    import spark.implicits._
-    images.select("image_id", "fmt", "bytes")
-      .as[(String, String, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, fmt, bytes) =>
-          Codec.decodeAny(fmt, bytes).map { case (rgb, w, h) =>
-            @inline def gray(x: Int, y: Int): Long = {
-              val i = (y * w + x) * 3
-              (rgb(i) & 0xff).toLong + (rgb(i + 1) & 0xff) + (rgb(i + 2) & 0xff)
-            }
-            var m = 0L; var s1 = 0L; var s2 = 0L
-            var y = 1
-            while (y < h - 1) {
-              var x = 1
-              while (x < w - 1) {
-                val lp = 4L * gray(x, y) - gray(x - 1, y) - gray(x + 1, y) -
-                  gray(x, y - 1) - gray(x, y + 1)
-                m += 1; s1 += lp; s2 += lp * lp
-                x += 1
-              }
-              y += 1
-            }
-            val varNum = m * s2 - s1 * s1
-            (id, fmt, w, h, m, s1, varNum, m > 0 && varNum >= minVar * m * m)
+  def sharpnessStats(images: DataFrame, minVar: Long = 320000L): DataFrame =
+    decoded(images, "image_id", "fmt", "w", "h", "m", "lap_sum", "lap_var_num", "sharp") {
+      (id, fmt, rgb, w, h) =>
+        @inline def g(x: Int, y: Int): Long = gray(rgb, w, x, y)
+        var m = 0L; var s1 = 0L; var s2 = 0L
+        var y = 1
+        while (y < h - 1) {
+          var x = 1
+          while (x < w - 1) {
+            val lp = 4L * g(x, y) - g(x - 1, y) - g(x + 1, y) - g(x, y - 1) - g(x, y + 1)
+            m += 1; s1 += lp; s2 += lp * lp
+            x += 1
           }
+          y += 1
         }
-      }.toDF("image_id", "fmt", "w", "h", "m", "lap_sum", "lap_var_num", "sharp")
-  }
+        val varNum = m * s2 - s1 * s1
+        Some((id, fmt, w, h, m, s1, varNum, m > 0 && varNum >= minVar * m * m))
+    }
 
   /** Histogram equalization (global contrast normalization — the standard
     * preprocessing pass before training/feature extraction): per channel,
@@ -516,52 +520,45 @@ object ImageOps {
     * ever shuffling pixels. Histogram + LUT + remap fuse into the decode
     * pass: one map-side scan, 256-long thread-local tables, 7 scalars/image
     * out. */
-  def equalizeStats(spark: SparkSession, images: DataFrame): DataFrame = {
-    import spark.implicits._
-    images.select("image_id", "fmt", "bytes")
-      .as[(String, String, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, fmt, bytes) =>
-          Codec.decodeAny(fmt, bytes).map { case (rgb, w, h) =>
-            val n = w.toLong * h
-            val eq = new Array[Byte](rgb.length)
-            var minEq = 255L; var maxEq = 0L; var sumEq = 0L
-            var c = 0
-            while (c < 3) {
-              val hist = new Array[Long](256)
-              var i = c
-              while (i < rgb.length) { hist(rgb(i) & 0xff) += 1; i += 3 }
-              var cdfMin = 0L; var acc = 0L; var v = 0
-              val lutCdf = new Array[Long](256)
-              while (v < 256) {
-                if (cdfMin == 0L && hist(v) > 0) cdfMin = acc + hist(v)
-                acc += hist(v); lutCdf(v) = acc; v += 1
-              }
-              val lut = new Array[Byte](256)
-              v = 0
-              while (v < 256) {
-                lut(v) = if (n > cdfMin)
-                  (((lutCdf(v) - cdfMin) * 255L) / (n - cdfMin)).toByte
-                else 0.toByte
-                v += 1
-              }
-              i = c
-              while (i < rgb.length) {
-                val e = lut(rgb(i) & 0xff)
-                eq(i) = e
-                val ev = e & 0xff
-                if (ev < minEq) minEq = ev
-                if (ev > maxEq) maxEq = ev
-                sumEq += ev
-                i += 3
-              }
-              c += 1
-            }
-            (id, fmt, w, h, pixelDigest(eq), minEq, maxEq, sumEq)
+  def equalizeStats(images: DataFrame): DataFrame =
+    decoded(images, "image_id", "fmt", "w", "h", "eq_digest", "min_eq", "max_eq", "sum_eq") {
+      (id, fmt, rgb, w, h) =>
+        val n = w.toLong * h
+        val eq = new Array[Byte](rgb.length)
+        var minEq = 255L; var maxEq = 0L; var sumEq = 0L
+        var c = 0
+        while (c < 3) {
+          val hist = new Array[Long](256)
+          var i = c
+          while (i < rgb.length) { hist(rgb(i) & 0xff) += 1; i += 3 }
+          var cdfMin = 0L; var acc = 0L; var v = 0
+          val lutCdf = new Array[Long](256)
+          while (v < 256) {
+            if (cdfMin == 0L && hist(v) > 0) cdfMin = acc + hist(v)
+            acc += hist(v); lutCdf(v) = acc; v += 1
           }
+          val lut = new Array[Byte](256)
+          v = 0
+          while (v < 256) {
+            lut(v) = if (n > cdfMin)
+              (((lutCdf(v) - cdfMin) * 255L) / (n - cdfMin)).toByte
+            else 0.toByte
+            v += 1
+          }
+          i = c
+          while (i < rgb.length) {
+            val e = lut(rgb(i) & 0xff)
+            eq(i) = e
+            val ev = e & 0xff
+            if (ev < minEq) minEq = ev
+            if (ev > maxEq) maxEq = ev
+            sumEq += ev
+            i += 3
+          }
+          c += 1
         }
-      }.toDF("image_id", "fmt", "w", "h", "eq_digest", "min_eq", "max_eq", "sum_eq")
-  }
+        Some((id, fmt, w, h, pixelDigest(eq), minEq, maxEq, sumEq))
+    }
 
   /** Otsu global threshold (Otsu, IEEE TSMC 1979 — public): the
     * between-class-variance-maximizing binarization cut on integer gray
@@ -577,45 +574,32 @@ object ImageOps {
     * Scale shape: histogram + prefix scan fuse into the decode pass (one
     * 766-long thread-local table); only 8 scalars per image shuffle —
     * bytes never travel. */
-  def otsuStats(spark: SparkSession, images: DataFrame): DataFrame = {
-    import spark.implicits._
-    images.select("image_id", "fmt", "bytes")
-      .as[(String, String, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, fmt, bytes) =>
-          Codec.decodeAny(fmt, bytes).flatMap { case (rgb, w, h) =>
-            val hist = new Array[Long](766)
-            var i = 0
-            while (i < rgb.length) {
-              hist((rgb(i) & 0xff) + (rgb(i + 1) & 0xff) + (rgb(i + 2) & 0xff)) += 1
-              i += 3
+  def otsuStats(images: DataFrame): DataFrame =
+    decoded(images, "image_id", "fmt", "w", "h", "t_star", "score_q", "n_bg", "n_fg") {
+      (id, fmt, rgb, w, h) =>
+        val hist = grayHist(rgb)
+        val n = w.toLong * h
+        var s = 0L
+        var g = 0
+        while (g < 766) { s += g * hist(g); g += 1 }
+        var n0 = 0L; var s0 = 0L
+        var bestT = -1L; var bestScore = -1L; var bestN0 = 0L
+        g = 0
+        while (g < 766) {
+          if (hist(g) > 0) {
+            n0 += hist(g); s0 += g.toLong * hist(g)
+            val n1 = n - n0
+            if (n1 > 0) {
+              val a = s0 * n1 - (s - s0) * n0
+              val score = (a * a) / (n0 * n1)
+              if (score > bestScore) { bestScore = score; bestT = g; bestN0 = n0 }
             }
-            val n = w.toLong * h
-            var s = 0L
-            var g = 0
-            while (g < 766) { s += g * hist(g); g += 1 }
-            var n0 = 0L; var s0 = 0L
-            var bestT = -1L; var bestScore = -1L; var bestN0 = 0L
-            g = 0
-            while (g < 766) {
-              if (hist(g) > 0) {
-                n0 += hist(g); s0 += g.toLong * hist(g)
-                val n1 = n - n0
-                if (n1 > 0) {
-                  val a = s0 * n1 - (s - s0) * n0
-                  val score = (a * a) / (n0 * n1)
-                  if (score > bestScore) { bestScore = score; bestT = g; bestN0 = n0 }
-                }
-              }
-              g += 1
-            }
-            if (bestT >= 0)
-              Some((id, fmt, w, h, bestT, bestScore, bestN0, n - bestN0))
-            else None
           }
+          g += 1
         }
-      }.toDF("image_id", "fmt", "w", "h", "t_star", "score_q", "n_bg", "n_fg")
-  }
+        if (bestT >= 0) Some((id, fmt, w, h, bestT, bestScore, bestN0, n - bestN0))
+        else None
+    }
 
   /** Shannon entropy of the integer-gray histogram (Shannon 1948) — the
     * information-content triage signal (flat/synthetic/low-texture detection
@@ -626,35 +610,23 @@ object ImageOps {
     *
     * Scale shape: histogram + both sums fuse into the decode pass; 7
     * scalars per image shuffle, bytes never travel. */
-  def entropyStats(spark: SparkSession, images: DataFrame): DataFrame = {
-    import spark.implicits._
-    images.select("image_id", "fmt", "bytes")
-      .as[(String, String, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, fmt, bytes) =>
-          Codec.decodeAny(fmt, bytes).map { case (rgb, w, h) =>
-            val hist = new Array[Long](766)
-            var i = 0
-            while (i < rgb.length) {
-              hist((rgb(i) & 0xff) + (rgb(i + 1) & 0xff) + (rgb(i + 2) & 0xff)) += 1
-              i += 3
-            }
-            @inline def ln9(x: Long): Long = Math.round(math.log(x.toDouble) * 1e9)
-            val n = w.toLong * h
-            var bins = 0L; var acc = 0L
-            var g = 0
-            while (g < 766) {
-              if (hist(g) > 0) { bins += 1; acc += hist(g) * ln9(hist(g)) }
-              g += 1
-            }
-            val entNum = n * ln9(n) - acc
-            val ratioPpm =
-              if (n > 1) 1000000L * entNum / (n * ln9(n)) else 0L
-            (id, fmt, w, h, n, bins, entNum, ratioPpm)
-          }
+  def entropyStats(images: DataFrame): DataFrame =
+    decoded(images, "image_id", "fmt", "w", "h", "n_px", "n_bins", "ent_num", "ratio_ppm") {
+      (id, fmt, rgb, w, h) =>
+        val hist = grayHist(rgb)
+        @inline def ln9(x: Long): Long = Math.round(math.log(x.toDouble) * 1e9)
+        val n = w.toLong * h
+        var bins = 0L; var acc = 0L
+        var g = 0
+        while (g < 766) {
+          if (hist(g) > 0) { bins += 1; acc += hist(g) * ln9(hist(g)) }
+          g += 1
         }
-      }.toDF("image_id", "fmt", "w", "h", "n_px", "n_bins", "ent_num", "ratio_ppm")
-  }
+        val entNum = n * ln9(n) - acc
+        val ratioPpm =
+          if (n > 1) 1000000L * entNum / (n * ln9(n)) else 0L
+        Some((id, fmt, w, h, n, bins, entNum, ratioPpm))
+    }
 
   /** Sobel gradient statistics (Sobel & Feldman 1968 — public): per
     * interior pixel the two 3×3 gradient kernels on integer gray
@@ -665,46 +637,34 @@ object ImageOps {
     * horizontal-gradient |gx| ≥ 2|gy|, vertical |gy| ≥ 2|gx|, else
     * diagonal split by sign(gx·gy) — every count is bit-decided. One
     * map-side decode pass; 12 scalars per image shuffle. */
-  def sobelStats(spark: SparkSession, images: DataFrame,
-                 minMag2: Long): DataFrame = {
-    import spark.implicits._
-    images.select("image_id", "fmt", "bytes")
-      .as[(String, String, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, fmt, bytes) =>
-          Codec.decodeAny(fmt, bytes).map { case (rgb, w, h) =>
-            @inline def gray(x: Int, y: Int): Long = {
-              val i = (y * w + x) * 3
-              (rgb(i) & 0xff).toLong + (rgb(i + 1) & 0xff) + (rgb(i + 2) & 0xff)
-            }
-            var m = 0L; var nEdge = 0L; var sGx = 0L; var sGy = 0L
-            var cH = 0L; var cV = 0L; var cD1 = 0L; var cD2 = 0L
-            var y = 1
-            while (y < h - 1) {
-              var x = 1
-              while (x < w - 1) {
-                val gx = gray(x + 1, y - 1) + 2 * gray(x + 1, y) + gray(x + 1, y + 1) -
-                  gray(x - 1, y - 1) - 2 * gray(x - 1, y) - gray(x - 1, y + 1)
-                val gy = gray(x - 1, y + 1) + 2 * gray(x, y + 1) + gray(x + 1, y + 1) -
-                  gray(x - 1, y - 1) - 2 * gray(x, y - 1) - gray(x + 1, y - 1)
-                m += 1; sGx += math.abs(gx); sGy += math.abs(gy)
-                if (gx * gx + gy * gy >= minMag2) {
-                  nEdge += 1
-                  if (math.abs(gx) >= 2 * math.abs(gy)) cH += 1
-                  else if (math.abs(gy) >= 2 * math.abs(gx)) cV += 1
-                  else if (gx * gy > 0) cD1 += 1
-                  else cD2 += 1
-                }
-                x += 1
-              }
-              y += 1
-            }
-            (id, fmt, w, h, m, nEdge, sGx, sGy, cH, cV, cD1, cD2)
+  def sobelStats(images: DataFrame, minMag2: Long): DataFrame =
+    decoded(images, "image_id", "fmt", "w", "h", "m", "n_edge", "sum_abs_gx",
+        "sum_abs_gy", "h_cnt", "v_cnt", "d1_cnt", "d2_cnt") { (id, fmt, rgb, w, h) =>
+      @inline def g(x: Int, y: Int): Long = gray(rgb, w, x, y)
+      var m = 0L; var nEdge = 0L; var sGx = 0L; var sGy = 0L
+      var cH = 0L; var cV = 0L; var cD1 = 0L; var cD2 = 0L
+      var y = 1
+      while (y < h - 1) {
+        var x = 1
+        while (x < w - 1) {
+          val gx = g(x + 1, y - 1) + 2 * g(x + 1, y) + g(x + 1, y + 1) -
+            g(x - 1, y - 1) - 2 * g(x - 1, y) - g(x - 1, y + 1)
+          val gy = g(x - 1, y + 1) + 2 * g(x, y + 1) + g(x + 1, y + 1) -
+            g(x - 1, y - 1) - 2 * g(x, y - 1) - g(x + 1, y - 1)
+          m += 1; sGx += math.abs(gx); sGy += math.abs(gy)
+          if (gx * gx + gy * gy >= minMag2) {
+            nEdge += 1
+            if (math.abs(gx) >= 2 * math.abs(gy)) cH += 1
+            else if (math.abs(gy) >= 2 * math.abs(gx)) cV += 1
+            else if (gx * gy > 0) cD1 += 1
+            else cD2 += 1
           }
+          x += 1
         }
-      }.toDF("image_id", "fmt", "w", "h", "m", "n_edge", "sum_abs_gx",
-        "sum_abs_gy", "h_cnt", "v_cnt", "d1_cnt", "d2_cnt")
-  }
+        y += 1
+      }
+      Some((id, fmt, w, h, m, nEdge, sGx, sGy, cH, cV, cD1, cD2))
+    }
 
   /** Scene-cut detection over fixed-frame video clips (the shot-boundary
     * pre-pass of a video curation pipeline — frame-difference SAD is the
@@ -756,43 +716,35 @@ object ImageOps {
     * pure integer comparisons in the decode pass, 9 scalars per image
     * shuffle. A fully-uniform image reports top = bottom = h (the loop
     * convention the oracle mirrors). */
-  def borderStats(spark: SparkSession, images: DataFrame): DataFrame = {
-    import spark.implicits._
-    images.select("image_id", "fmt", "bytes")
-      .as[(String, String, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, fmt, bytes) =>
-          Codec.decodeAny(fmt, bytes).map { case (rgb, w, h) =>
-            @inline def eqPx(i: Int, j: Int): Boolean =
-              rgb(i) == rgb(j) && rgb(i + 1) == rgb(j + 1) && rgb(i + 2) == rgb(j + 2)
-            def rowUni(y: Int): Boolean = {
-              val base = y * w * 3
-              var x = 1
-              while (x < w && eqPx(base + x * 3, base)) x += 1
-              x == w
-            }
-            def colUni(x: Int): Boolean = {
-              val base = x * 3
-              var y = 1
-              while (y < h && eqPx((y * w) * 3 + base, base)) y += 1
-              y == h
-            }
-            var top = 0; while (top < h && rowUni(top)) top += 1
-            var bottom = 0
-            while (bottom < h - top && rowUni(h - 1 - bottom)) bottom += 1
-            // convention: fully-uniform image → top = h, bottom = h
-            if (top == h) bottom = h
-            var left = 0; while (left < w && colUni(left)) left += 1
-            var right = 0
-            while (right < w - left && colUni(w - 1 - right)) right += 1
-            if (left == w) right = w
-            (id, fmt, w, h, top.toLong, bottom.toLong, left.toLong,
-              right.toLong, top + bottom + left + right > 0)
-          }
-        }
-      }.toDF("image_id", "fmt", "w", "h", "top_rows", "bottom_rows",
-        "left_cols", "right_cols", "boxed")
-  }
+  def borderStats(images: DataFrame): DataFrame =
+    decoded(images, "image_id", "fmt", "w", "h", "top_rows", "bottom_rows",
+        "left_cols", "right_cols", "boxed") { (id, fmt, rgb, w, h) =>
+      @inline def eqPx(i: Int, j: Int): Boolean =
+        rgb(i) == rgb(j) && rgb(i + 1) == rgb(j + 1) && rgb(i + 2) == rgb(j + 2)
+      def rowUni(y: Int): Boolean = {
+        val base = y * w * 3
+        var x = 1
+        while (x < w && eqPx(base + x * 3, base)) x += 1
+        x == w
+      }
+      def colUni(x: Int): Boolean = {
+        val base = x * 3
+        var y = 1
+        while (y < h && eqPx((y * w) * 3 + base, base)) y += 1
+        y == h
+      }
+      var top = 0; while (top < h && rowUni(top)) top += 1
+      var bottom = 0
+      while (bottom < h - top && rowUni(h - 1 - bottom)) bottom += 1
+      // convention: fully-uniform image → top = h, bottom = h
+      if (top == h) bottom = h
+      var left = 0; while (left < w && colUni(left)) left += 1
+      var right = 0
+      while (right < w - left && colUni(w - 1 - right)) right += 1
+      if (left == w) right = w
+      Some((id, fmt, w, h, top.toLong, bottom.toLong, left.toLong,
+        right.toLong, top + bottom + left + right > 0))
+    }
 
   /** RLE compressibility triage (the cheap complexity proxy behind
     * flat/synthetic/screenshot detection — a near-incompressible photo and
@@ -800,29 +752,19 @@ object ImageOps {
     * equal-byte run count over the decoded RGB scan order, rle_size =
     * 2·n_runs (count, value pairs), ratio_ppm = 1e6·rle_size DIV n_bytes.
     * Pure integers in the decode pass; 5 scalars per image shuffle. */
-  def rleStats(spark: SparkSession, images: DataFrame,
-               maxRatioPpm: Long): DataFrame = {
-    import spark.implicits._
-    images.select("image_id", "fmt", "bytes")
-      .as[(String, String, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, fmt, bytes) =>
-          Codec.decodeAny(fmt, bytes).map { case (rgb, w, h) =>
-            var runs = if (rgb.nonEmpty) 1L else 0L
-            var i = 1
-            while (i < rgb.length) {
-              if (rgb(i) != rgb(i - 1)) runs += 1
-              i += 1
-            }
-            val ratio = if (rgb.isEmpty) 0L
-              else 1000000L * 2L * runs / rgb.length
-            (id, fmt, w, h, rgb.length.toLong, runs, ratio,
-              ratio < maxRatioPpm)
-          }
-        }
-      }.toDF("image_id", "fmt", "w", "h", "n_bytes", "n_runs", "ratio_ppm",
-        "compressible")
-  }
+  def rleStats(images: DataFrame, maxRatioPpm: Long): DataFrame =
+    decoded(images, "image_id", "fmt", "w", "h", "n_bytes", "n_runs", "ratio_ppm",
+        "compressible") { (id, fmt, rgb, w, h) =>
+      var runs = if (rgb.nonEmpty) 1L else 0L
+      var i = 1
+      while (i < rgb.length) {
+        if (rgb(i) != rgb(i - 1)) runs += 1
+        i += 1
+      }
+      val ratio = if (rgb.isEmpty) 0L
+        else 1000000L * 2L * runs / rgb.length
+      Some((id, fmt, w, h, rgb.length.toLong, runs, ratio, ratio < maxRatioPpm))
+    }
 
   /** 2×2 box-average downsample (the anti-aliased mip level — `thumbs` is
     * the every-2nd-pixel DECIMATION; this is the AVERAGING variant that
@@ -830,44 +772,37 @@ object ImageOps {
     * floor mean of its 2×2 source block, odd edge rows/cols drop (floor
     * dims). The position-weighted digest of the downsampled bytes pins
     * EVERY output pixel while only 8 scalars per image shuffle. */
-  def boxDownsample(spark: SparkSession, images: DataFrame): DataFrame = {
-    import spark.implicits._
-    images.select("image_id", "fmt", "bytes")
-      .as[(String, String, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, fmt, bytes) =>
-          Codec.decodeAny(fmt, bytes).flatMap { case (rgb, w, h) =>
-            val dw = w / 2; val dh = h / 2
-            if (dw == 0 || dh == 0) None
-            else {
-              val out = new Array[Byte](dw * dh * 3)
-              var sum = 0L
-              var y = 0
-              while (y < dh) {
-                var x = 0
-                while (x < dw) {
-                  var c = 0
-                  while (c < 3) {
-                    val i00 = ((2 * y) * w + 2 * x) * 3 + c
-                    val i01 = i00 + 3
-                    val i10 = ((2 * y + 1) * w + 2 * x) * 3 + c
-                    val i11 = i10 + 3
-                    val v = ((rgb(i00) & 0xff) + (rgb(i01) & 0xff) +
-                      (rgb(i10) & 0xff) + (rgb(i11) & 0xff)) / 4
-                    out((y * dw + x) * 3 + c) = v.toByte
-                    sum += v
-                    c += 1
-                  }
-                  x += 1
-                }
-                y += 1
+  def boxDownsample(images: DataFrame): DataFrame =
+    decoded(images, "image_id", "fmt", "w", "h", "dw", "dh", "down_digest", "sum_down") {
+      (id, fmt, rgb, w, h) =>
+        val dw = w / 2; val dh = h / 2
+        if (dw == 0 || dh == 0) None
+        else {
+          val out = new Array[Byte](dw * dh * 3)
+          var sum = 0L
+          var y = 0
+          while (y < dh) {
+            var x = 0
+            while (x < dw) {
+              var c = 0
+              while (c < 3) {
+                val i00 = ((2 * y) * w + 2 * x) * 3 + c
+                val i01 = i00 + 3
+                val i10 = ((2 * y + 1) * w + 2 * x) * 3 + c
+                val i11 = i10 + 3
+                val v = ((rgb(i00) & 0xff) + (rgb(i01) & 0xff) +
+                  (rgb(i10) & 0xff) + (rgb(i11) & 0xff)) / 4
+                out((y * dw + x) * 3 + c) = v.toByte
+                sum += v
+                c += 1
               }
-              Some((id, fmt, w, h, dw, dh, pixelDigest(out), sum))
+              x += 1
             }
+            y += 1
           }
+          Some((id, fmt, w, h, dw, dh, pixelDigest(out), sum))
         }
-      }.toDF("image_id", "fmt", "w", "h", "dw", "dh", "down_digest", "sum_down")
-  }
+    }
 
   /** Inter-channel correlation — monochrome/grayscale/sepia detection (a
     * curation gate: grayscale re-encodes of color images are a distinct
@@ -876,32 +811,23 @@ object ImageOps {
     * var numerators likewise — and the grayscale verdict r=g=b∀px as an
     * exact equality count. No float correlation is ever formed; the
     * monochrome test is n_eq = n. One decode pass, 8 scalars/image. */
-  def channelCorrStats(spark: SparkSession, images: DataFrame): DataFrame = {
-    import spark.implicits._
-    images.select("image_id", "fmt", "bytes")
-      .as[(String, String, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, fmt, bytes) =>
-          Codec.decodeAny(fmt, bytes).map { case (rgb, w, h) =>
-            var sr = 0L; var sg = 0L; var srg = 0L
-            var sr2 = 0L; var sg2 = 0L; var nEq = 0L
-            var i = 0
-            while (i < rgb.length) {
-              val r = (rgb(i) & 0xff).toLong; val g = (rgb(i + 1) & 0xff).toLong
-              val b = (rgb(i + 2) & 0xff).toLong
-              sr += r; sg += g; srg += r * g; sr2 += r * r; sg2 += g * g
-              if (r == g && g == b) nEq += 1
-              i += 3
-            }
-            val n = w.toLong * h
-            (id, fmt, w, h, n, nEq,
-              n * srg - sr * sg, n * sr2 - sr * sr, n * sg2 - sg * sg,
-              nEq == n)
-          }
-        }
-      }.toDF("image_id", "fmt", "w", "h", "n_px", "n_eq",
-        "cov_num", "varr_num", "varg_num", "grayscale")
-  }
+  def channelCorrStats(images: DataFrame): DataFrame =
+    decoded(images, "image_id", "fmt", "w", "h", "n_px", "n_eq",
+        "cov_num", "varr_num", "varg_num", "grayscale") { (id, fmt, rgb, w, h) =>
+      var sr = 0L; var sg = 0L; var srg = 0L
+      var sr2 = 0L; var sg2 = 0L; var nEq = 0L
+      var i = 0
+      while (i < rgb.length) {
+        val r = (rgb(i) & 0xff).toLong; val g = (rgb(i + 1) & 0xff).toLong
+        val b = (rgb(i + 2) & 0xff).toLong
+        sr += r; sg += g; srg += r * g; sr2 += r * r; sg2 += g * g
+        if (r == g && g == b) nEq += 1
+        i += 3
+      }
+      val n = w.toLong * h
+      Some((id, fmt, w, h, n, nEq,
+        n * srg - sr * sg, n * sr2 - sr * sr, n * sg2 - sg * sg, nEq == n))
+    }
 
   /** Distinct-color (palette) counting — the graphic/synthetic-image
     * detector complementing RLE: photographs use thousands of distinct
@@ -910,37 +836,28 @@ object ImageOps {
     * exact ppm (argmax ties to the smallest packed color); limited-palette
     * flag at ≤ maxColors. One decode pass with a per-image hash set;
     * 6 scalars per image shuffle. */
-  def paletteStats(spark: SparkSession, images: DataFrame,
-                   maxColors: Long): DataFrame = {
-    import spark.implicits._
-    images.select("image_id", "fmt", "bytes")
-      .as[(String, String, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, fmt, bytes) =>
-          Codec.decodeAny(fmt, bytes).map { case (rgb, w, h) =>
-            val counts = new java.util.HashMap[Integer, Long]()
-            var i = 0
-            while (i < rgb.length) {
-              val c = ((rgb(i) & 0xff) << 16) | ((rgb(i + 1) & 0xff) << 8) |
-                (rgb(i + 2) & 0xff)
-              counts.merge(c, 1L, (a, b) => a + b)
-              i += 3
-            }
-            var bestC = -1L; var bestN = 0L
-            val itr = counts.entrySet().iterator()
-            while (itr.hasNext) {
-              val e = itr.next()
-              val c = e.getKey.toLong; val n0 = e.getValue
-              if (n0 > bestN || (n0 == bestN && c < bestC)) { bestN = n0; bestC = c }
-            }
-            val n = w.toLong * h
-            (id, fmt, w, h, counts.size.toLong, bestC,
-              1000000L * bestN / n, counts.size.toLong <= maxColors)
-          }
-        }
-      }.toDF("image_id", "fmt", "w", "h", "n_colors", "top_color",
-        "top_share_ppm", "limited_palette")
-  }
+  def paletteStats(images: DataFrame, maxColors: Long): DataFrame =
+    decoded(images, "image_id", "fmt", "w", "h", "n_colors", "top_color",
+        "top_share_ppm", "limited_palette") { (id, fmt, rgb, w, h) =>
+      val counts = new java.util.HashMap[Integer, Long]()
+      var i = 0
+      while (i < rgb.length) {
+        val c = ((rgb(i) & 0xff) << 16) | ((rgb(i + 1) & 0xff) << 8) |
+          (rgb(i + 2) & 0xff)
+        counts.merge(c, 1L, (a, b) => a + b)
+        i += 3
+      }
+      var bestC = -1L; var bestN = 0L
+      val itr = counts.entrySet().iterator()
+      while (itr.hasNext) {
+        val e = itr.next()
+        val c = e.getKey.toLong; val n0 = e.getValue
+        if (n0 > bestN || (n0 == bestN && c < bestC)) { bestN = n0; bestC = c }
+      }
+      val n = w.toLong * h
+      Some((id, fmt, w, h, counts.size.toLong, bestC,
+        1000000L * bestN / n, counts.size.toLong <= maxColors))
+    }
 
   /** Reduced aspect-ratio histogram — the shape-distribution audit behind
     * aspect-ratio bucketing (how many distinct w:h shapes does the corpus
@@ -971,23 +888,10 @@ object ImageOps {
     * (groupBy 8-byte digest), the payload never travels — the same shape
     * that makes exact text dedup survive 100 TB. Undecodable rows are
     * dropped (they cannot have content-equal twins). */
-  def pixelDedupGroups(spark: SparkSession, images: DataFrame): DataFrame = {
-    import spark.implicits._
-    val digests = images.select("image_id", "fmt", "bytes")
-      .as[(String, String, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, fmt, bytes) =>
-          Codec.decodeAny(fmt, bytes).map { case (rgb, w, h) =>
-            (id, fmt, w, h, pixelDigest(rgb))
-          }
-        }
-      }.toDF("image_id", "fmt", "w", "h", "digest")
-    digests.groupBy("digest", "w", "h")
-      .agg(min(col("image_id")).as("keep_id"),
-        count(lit(1)).as("n_copies"),
-        concat_ws(",", sort_array(collect_set(col("fmt")))).as("fmts"))
-      .filter(col("n_copies") > 1)
-  }
+  def pixelDedupGroups(images: DataFrame): DataFrame =
+    dupGroups(decoded(images, "image_id", "fmt", "w", "h", "digest") { (id, fmt, rgb, w, h) =>
+      Some((id, fmt, w, h, pixelDigest(rgb)))
+    }, "digest")
 
   /** Digests of an image's ORBIT under the orientation Klein four-group
     * {identity, hflip, vflip, rot180} — one pass over the pixels, four
@@ -1029,23 +933,20 @@ object ImageOps {
     * zero pairwise work. Same scale shape as pixelDedupGroups — the four
     * digests are computed in the single decode pass, one narrow shuffle on
     * the 8-byte canonical key, payload bytes never travel. */
-  def dihedralDedupGroups(spark: SparkSession, images: DataFrame): DataFrame = {
-    import spark.implicits._
-    val digests = images.select("image_id", "fmt", "bytes")
-      .as[(String, String, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, fmt, bytes) =>
-          Codec.decodeAny(fmt, bytes).map { case (rgb, w, h) =>
-            (id, fmt, w, h, orbitDigests(rgb, w, h).min)
-          }
-        }
-      }.toDF("image_id", "fmt", "w", "h", "canon")
-    digests.groupBy("canon", "w", "h")
+  def dihedralDedupGroups(images: DataFrame): DataFrame =
+    dupGroups(decoded(images, "image_id", "fmt", "w", "h", "canon") { (id, fmt, rgb, w, h) =>
+      Some((id, fmt, w, h, orbitDigests(rgb, w, h).min))
+    }, "canon")
+
+  /** Duplicate groups over digest rows (image_id, fmt, w, h, `key`): one row
+    * per (`key`, w, h) with more than one member — the min image_id keeper,
+    * the copy count and the sorted distinct fmts. */
+  private def dupGroups(digests: DataFrame, key: String): DataFrame =
+    digests.groupBy(key, "w", "h")
       .agg(min(col("image_id")).as("keep_id"),
         count(lit(1)).as("n_copies"),
         concat_ws(",", sort_array(collect_set(col("fmt")))).as("fmts"))
       .filter(col("n_copies") > 1)
-  }
 
   /** CROSS-MODAL duplicate classification: exact pixel duplicates split by
     * whether their CAPTIONS also agree. Pixel-identical pairs with equal
@@ -1095,44 +996,36 @@ object ImageOps {
     * never all-pairs, bytes never travel; the pair aggregate is a count.
     * Output: (id1, id2, n_shared, is_crop) — is_crop ⇔ id2's full window
     * set is shared. */
-  def cropDups(spark: SparkSession, images: DataFrame,
-               minShared: Int = 4, patch: Int = 4): DataFrame = {
-    import spark.implicits._
-    val patches = images.select("image_id", "fmt", "bytes")
-      .as[(String, String, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, fmt, bytes) =>
-          Codec.decodeAny(fmt, bytes).toSeq.flatMap { case (rgb, w, h) =>
-            val fps = scala.collection.mutable.HashSet.empty[Long]
-            var oy = 0
-            while (oy + patch <= h) {
-              var ox = 0
-              while (ox + patch <= w) {
-                var d = 0L
-                var py = 0
-                while (py < patch) {
-                  var px = 0
-                  while (px < patch) {
-                    val si = ((oy + py) * w + ox + px) * 3
-                    val lp = (py * patch + px) * 3
-                    var c = 0
-                    while (c < 3) {
-                      d += (lp + c + 1L) * (lp + c + 7L) * ((rgb(si + c) & 0xff) + 17L)
-                      c += 1
-                    }
-                    px += 1
-                  }
-                  py += 1
-                }
-                fps += d
-                ox += 1
+  def cropDups(images: DataFrame, minShared: Int = 4, patch: Int = 4): DataFrame = {
+    val patches = decoded(images, "image_id", "w", "h", "fp") { (id, _, rgb, w, h) =>
+      val fps = scala.collection.mutable.HashSet.empty[Long]
+      var oy = 0
+      while (oy + patch <= h) {
+        var ox = 0
+        while (ox + patch <= w) {
+          var d = 0L
+          var py = 0
+          while (py < patch) {
+            var px = 0
+            while (px < patch) {
+              val si = ((oy + py) * w + ox + px) * 3
+              val lp = (py * patch + px) * 3
+              var c = 0
+              while (c < 3) {
+                d += (lp + c + 1L) * (lp + c + 7L) * ((rgb(si + c) & 0xff) + 17L)
+                c += 1
               }
-              oy += 1
+              px += 1
             }
-            fps.iterator.map(d => (id, w, h, d))
+            py += 1
           }
+          fps += d
+          ox += 1
         }
-      }.toDF("image_id", "w", "h", "fp")
+        oy += 1
+      }
+      fps.iterator.map(d => (id, w, h, d))
+    }
     val l = patches.select(col("fp"), col("image_id").as("id1"))
     val r = patches.select(col("fp"), col("image_id").as("id2"),
       col("w").as("w2"), col("h").as("h2"))
@@ -1212,26 +1105,14 @@ object ImageOps {
     * Input must carry bytes AND u, v, lat, lon geotag columns.
     * Output: one row per exported image —
     * (image_id, w, h, digest, city, u_out, v_out, cell, shard, offset_b). */
-  def curatePipeline(spark: SparkSession, images: DataFrame,
+  def curatePipeline(images: DataFrame,
                      polys: Array[(String, Array[Array[Double]])],
                      minVar: Long, cellMicro: Long, budgetBytes: Long,
                      scrubCellMicro: Long = 10000L): DataFrame = {
-    import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val stats = images.select("image_id", "fmt", "bytes")
-      .as[(String, String, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, fmt, bytes) =>
-          Codec.decodeAny(fmt, bytes).map { case (rgb, w, h) =>
-            var s1 = 0L; var s2 = 0L; var i = 0
-            while (i < rgb.length) {
-              val v = (rgb(i) & 0xff).toLong; s1 += v; s2 += v * v; i += 1
-            }
-            val n = rgb.length.toLong
-            (id, fmt, w, h, pixelDigest(rgb), n * s2 - s1 * s1)
-          }
-        }
-      }.toDF("image_id", "fmt", "w", "h", "digest", "var_num")
+    val stats = decoded(images, "image_id", "fmt", "w", "h", "digest", "var_num") {
+      (id, fmt, rgb, w, h) => Some((id, fmt, w, h, pixelDigest(rgb), valueVariance(rgb)._2))
+    }
     val n = (col("w") * col("h") * 3).cast("long")
     val gated = stats.filter(col("var_num") >= lit(minVar) * n * n)
     val survivors = gated
@@ -1286,18 +1167,6 @@ object ImageOps {
 
   /** pixel-level PSNR between two byte payloads of the same fmt/size
     * (verification path per input_hint: ≥40 dB for lossy, ∞/exact for BMP). */
-  def psnr(a: Array[Byte], b: Array[Byte]): Double = {
-    val (ra, _, _) = Bmp.decode(a)
-    val (rb, _, _) = Bmp.decode(b)
-    require(ra.length == rb.length, "size mismatch")
-    var se = 0.0
-    var i = 0
-    while (i < ra.length) {
-      val d = ((ra(i) & 0xff) - (rb(i) & 0xff)).toDouble
-      se += d * d
-      i += 1
-    }
-    if (se == 0.0) Double.PositiveInfinity
-    else 10.0 * math.log10(255.0 * 255.0 * ra.length / se)
-  }
+  def psnr(a: Array[Byte], b: Array[Byte]): Double =
+    Codec.psnrRgb(Bmp.decode(a)._1, Bmp.decode(b)._1)
 }

@@ -103,15 +103,17 @@ object PatternOps {
       .drop("u")
   }
 
-  /** memoized per sfDir: features written PARTITIONED BY county (the
-    * reference's per-county processing unit as a storage layout); returns
-    * the path. Reading with a county filter is partition-pruned (verified in
-    * PatternCountySpec via the plan's PartitionFilters). */
-  private val partCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** memoized per (sfDir, session): features written PARTITIONED BY county
+    * (the reference's per-county processing unit as a storage layout) into
+    * a fresh temp directory; returns the path. Reading with a county filter
+    * is partition-pruned (verified in PatternCountySpec via the plan's
+    * PartitionFilters). */
+  private val partCache = new java.util.concurrent.ConcurrentHashMap[(String, SparkSession), String]()
   def countyPartitionedPath(spark: SparkSession, feats: DataFrame, g: Int,
                             sfDir: String): String =
-    partCache.computeIfAbsent(sfDir + "@" + System.identityHashCode(spark), { _ =>
-      val dir = s"/tmp/graft_county_${new java.io.File(sfDir).getName}_${System.identityHashCode(spark)}"
+    partCache.computeIfAbsent((sfDir, spark), { _ =>
+      val dir = java.nio.file.Files.createTempDirectory(
+        s"graft_county_${new java.io.File(sfDir).getName}_").toString
       withCounty(feats, g)
         .write.mode("overwrite").partitionBy("county").parquet(dir)
       dir

@@ -27,11 +27,15 @@ object Skew {
   def cellHistogram(df: DataFrame, cellCol: String = "cell"): DataFrame =
     df.groupBy(col(cellCol)).agg(count(lit(1)).as("n"))
 
-  /** cells whose population exceeds `threshold` (collected — hot sets are
-    * tiny by definition; broadcast into the expressions below). */
+  private val HotCellRows = 1 << 16
+  private val HotCellBytes = 16L << 20
+
+  /** cells whose population exceeds `threshold` (collected, at most
+    * HotCellRows of them — hot sets are tiny by definition; broadcast into
+    * the expressions below). */
   def hotCells(df: DataFrame, threshold: Long, cellCol: String = "cell"): Set[Long] =
-    cellHistogram(df, cellCol).filter(col("n") > threshold)
-      .select(cellCol).collect().map(_.getLong(0)).toSet
+    Driver.collectBounded(cellHistogram(df, cellCol).filter(col("n") > threshold)
+      .select(cellCol), HotCellRows, HotCellBytes, "hot cells").map(_.getLong(0)).toSet
 
   private def isHot(cell: Column, hot: Set[Long]): Column =
     if (hot.isEmpty) lit(false)

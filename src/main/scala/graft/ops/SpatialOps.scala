@@ -238,7 +238,7 @@ object SpatialOps {
     * k-th candidate distance is strictly < ring·cellSize no unseen way can
     * enter the top-k (or tie under the (dist, way_id) order — strict
     * inequality also excludes equal-distance unseen ties). Dense inputs
-    * settle in round 1 and pay one cheap extra aggregate vs the fixed-ring
+    * settle in round 1 and pay two cheap counts vs the fixed-ring
     * plan; only the unsettled residue (usually a tiny fraction) re-joins at
     * wider rings: a driver loop of one candidate join per round, with
     * localCheckpoint per round. Images still unsettled at maxRing return
@@ -253,6 +253,10 @@ object SpatialOps {
     *
     * Distances are rounded to 1e-9 degrees before ranking so ordering is
     * reproducible across engines; ties break by way_id.
+    *
+    * Input contract: `image_id` is unique in `images`. The settle loop
+    * counts pending images by subtracting the proven ones, and an image
+    * settled in one round must not be pending in the next.
     *
     * Antimeridian: the cell disk wraps lon indices (GridCell.disk), so
     * far-side segments DO enter the candidate set at ±180° — but the
@@ -319,26 +323,26 @@ object SpatialOps {
         // an image is PROVEN exact iff k candidates were found AND the k-th
         // is strictly inside the guaranteed-covered radius (rounding to 1e-9
         // is conservative here: a borderline image re-expands, never settles
-        // wrong). Images with zero in-disk candidates never reach topk, so
-        // all-settled is detected by count parity with the probe set — the
-        // dense common case then skips the semi/anti-join machinery and this
-        // loop costs one candidate pass plus two small aggregates.
+        // wrong). Ranks are ordered by (dist9, way_id), so both halves are
+        // one filter on the rank-k row, whatever k. Images with zero in-disk
+        // candidates never reach topk, so all-settled is detected by count
+        // parity with the probe set — the dense common case then skips the
+        // semi/anti-join machinery and this loop costs one candidate pass
+        // plus two counts.
         if (nPending < 0) nPending = pending.count()
         val bound = math.round(r * cs * 1e9)
-        val proven =
-          (if (k == 1) topk.filter(col("dist9") < lit(bound))
-           else topk.groupBy(col("image_id"))
-             .agg(count(lit(1)).as("nk"), max(col("dist9")).as("d9max"))
-             .filter(col("nk") === k && col("d9max") < lit(bound)))
-            .select(col("image_id"))
+        val proven = topk.filter(col("rk") === k && col("dist9") < lit(bound))
+          .select(col("image_id"))
         val nProven = proven.count()
         if (nProven == nPending) { settledParts += topk; remaining = false }
         else {
           settledParts += topk.join(proven, Seq("image_id"), "left_semi")
           pending = pending.join(proven, Seq("image_id"), "left_anti")
             .localCheckpoint(true)
-          nPending = pending.count()
-          if (nPending == 0) remaining = false else r *= 2
+          // proven ⊆ pending and image_id is unique, so the anti-join keeps
+          // nPending − nProven > 0 rows: no count job, and another round
+          nPending -= nProven
+          r *= 2
         }
       }
     }

@@ -31,9 +31,16 @@ object GeoJson {
   def writeJsonl(features: DataFrame, path: String): Unit =
     featureJson(features).write.mode("overwrite").text(path)
 
+  /** Caps of the single-file sink's driver collect: the reference's
+    * per-county outputs are at most a few MB; larger sets take the jsonl
+    * path. */
+  private val SingleFileRows = 1 << 20
+  private val SingleFileBytes = 512L << 20
+
   /** single-file FeatureCollection (reference-shaped). */
   def writeSingle(features: DataFrame, path: String): Unit = {
-    val lines = featureJson(features).collect().map(_.getString(0))
+    val lines = graft.ops.Driver.collectBounded(featureJson(features), SingleFileRows,
+      SingleFileBytes, "single-file GeoJSON features").map(_.getString(0))
     val body = lines.mkString("{\"type\":\"FeatureCollection\",\"features\":[\n", ",\n", "\n]}")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(path), body)
   }

@@ -117,18 +117,28 @@ object Codec {
     (rgb, w, h)
   }
 
-  /** Dispatch decode across the three real codecs; None for unknown fmts
-    * (the only remaining stub path — exercised by tests, never by synth). */
-  /** None for unknown container formats AND for malformed payloads of known
-    * ones — at corpus scale a truncated or bit-flipped file is routine, and
-    * a decoder that throws turns one bad record into a dead job. Callers
-    * uniformly treat None as decode_ok=false / row-dropped. */
+  /** Dispatch decode across the three real codecs. None for unknown
+    * container formats AND for malformed payloads of known ones — at corpus
+    * scale a truncated or bit-flipped file is routine, and a decoder that
+    * throws turns one bad record into a dead job. Callers uniformly treat
+    * None as decode_ok=false / row-dropped. */
   def decodeAny(fmt: String, bytes: Array[Byte]): Option[(Array[Byte], Int, Int)] =
     try fmt match {
       case "bmp"          => Some(Bmp.decode(bytes))
       case "png" | "jpeg" => Some(decode(bytes))
       case _              => None
     } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** Per-channel value sums (Σr, Σg, Σb) of a row-major RGB buffer. */
+  def channelSums(rgb: Array[Byte]): (Long, Long, Long) = {
+    var r = 0L; var g = 0L; var b = 0L
+    var i = 0
+    while (i < rgb.length) {
+      r += rgb(i) & 0xff; g += rgb(i + 1) & 0xff; b += rgb(i + 2) & 0xff
+      i += 3
+    }
+    (r, g, b)
+  }
 
   /** The reference pixel pattern a synthetic image of `fmt` was encoded
     * from (the PSNR ground truth). */

@@ -78,9 +78,9 @@ class DriverSpec extends AnyFunSuite {
   test("lint: no new raw .collect() in ops, text, sim and sources") {
     // new driver pulls go through Driver.collectBounded; these counts may
     // only go down
-    val over = overCap("\\.collect\\(\\)", Map("Driver.scala" -> 1, "Skew.scala" -> 1,
+    val over = overCap("\\.collect\\(\\)", Map("Driver.scala" -> 1,
       "ClusterOps.scala" -> 1, "QuantileOps.scala" -> 5, "TextOps.scala" -> 3,
-      "SimOps.scala" -> 3, "GeoJson.scala" -> 1))
+      "SimOps.scala" -> 3))
     assert(over.isEmpty, over.mkString("\n"))
   }
 

@@ -46,7 +46,7 @@ class ImageCurationSpec extends AnyFunSuite {
       ("b1", "bmp", Codec.encodeFor("bmp", 778L, 6, 4)), // different pixels
       ("c1", "png", Codec.encodeFor("png", 779L, 5, 5))
     ).toDF("image_id", "fmt", "bytes")
-    val groups = ImageOps.pixelDedupGroups(spark, imgs).collect()
+    val groups = ImageOps.pixelDedupGroups(imgs).collect()
     assert(groups.length === 1)
     val g = groups.head
     assert(g.getAs[String]("keep_id") === "a1")
@@ -89,7 +89,7 @@ class ImageCurationSpec extends AnyFunSuite {
       255.toByte, 0, 0,     10, 10, 230.toByte)
     // 2x1 tie: one black (bucket 0), one white (bucket 511) -> lowest wins
     val tie = Array[Byte](0, 0, 0, 255.toByte, 255.toByte, 255.toByte)
-    val got = ImageOps.dominantColor(spark,
+    val got = ImageOps.dominantColor(
         Seq(("red", "bmp", Bmp.encode(redDom, 2, 2)),
             ("tie", "bmp", Bmp.encode(tie, 2, 1)),
             ("bad", "gif", Array[Byte](1, 2, 3)))
@@ -107,7 +107,7 @@ class ImageCurationSpec extends AnyFunSuite {
     val flat = Bmp.encode(Array.fill(6 * 4 * 3)(100.toByte), 6, 4)
     // splitmix noise: variance ≈ 5461 ≫ 1000
     val noise = Codec.encodeFor("png", 999L, 6, 4)
-    val got = ImageOps.qualityStats(spark,
+    val got = ImageOps.qualityStats(
         Seq(("flat", "bmp", flat), ("noise", "png", noise))
           .toDF("image_id", "fmt", "bytes"), minVar = 1000L)
       .collect().map(r => r.getAs[String]("image_id") ->
@@ -135,7 +135,7 @@ class ImageCurationSpec extends AnyFunSuite {
     // 2×2: no interior pixels → m = 0, never sharp (no 0 ≥ 0 vacuity)
     val tiny = Bmp.encode(Array.fill(2 * 2 * 3)(7.toByte), 2, 2)
     val noise = Codec.encodeFor("png", 424242L, 9, 7)
-    val got = ImageOps.sharpnessStats(spark,
+    val got = ImageOps.sharpnessStats(
         Seq(("flat", "bmp", flat), ("cb", "bmp", cb), ("tiny", "bmp", tiny),
           ("noise", "png", noise)).toDF("image_id", "fmt", "bytes"),
         minVar = 320000L)
@@ -165,7 +165,7 @@ class ImageCurationSpec extends AnyFunSuite {
     val two = Bmp.encode(Array[Byte](10, 10, 10, 10, 10, 10,
       200.toByte, 200.toByte, 200.toByte, 200.toByte, 200.toByte, 200.toByte), 4, 1)
     val noise = Codec.encodeFor("png", 77L, 8, 6)
-    val got = ImageOps.equalizeStats(spark,
+    val got = ImageOps.equalizeStats(
         Seq(("flat", "bmp", flat), ("two", "bmp", two), ("noise", "png", noise))
           .toDF("image_id", "fmt", "bytes"))
       .collect().map(r => r.getAs[String]("image_id") ->
@@ -202,7 +202,7 @@ class ImageCurationSpec extends AnyFunSuite {
       200.toByte, 200.toByte, 200.toByte, 200.toByte, 200.toByte, 200.toByte), 4, 1)
     val flat = Bmp.encode(Array.fill(3 * 2 * 3)(100.toByte), 3, 2)
     val noise = Codec.encodeFor("png", 550055L, 9, 8)
-    val got = ImageOps.otsuStats(spark,
+    val got = ImageOps.otsuStats(
         Seq(("two", "bmp", two), ("flat", "bmp", flat), ("noise", "png", noise))
           .toDF("image_id", "fmt", "bytes"))
       .collect().map(r => r.getAs[String]("image_id") ->
@@ -232,7 +232,7 @@ class ImageCurationSpec extends AnyFunSuite {
     val two = Bmp.encode(Array[Byte](10, 10, 10, 10, 10, 10,
       200.toByte, 200.toByte, 200.toByte, 200.toByte, 200.toByte, 200.toByte), 4, 1)
     val noise = Codec.encodeFor("png", 808080L, 8, 7)
-    val got = ImageOps.entropyStats(spark,
+    val got = ImageOps.entropyStats(
         Seq(("flat", "bmp", flat), ("two", "bmp", two), ("noise", "png", noise))
           .toDF("image_id", "fmt", "bytes"))
       .collect().map(r => r.getAs[String]("image_id") ->
@@ -261,7 +261,7 @@ class ImageCurationSpec extends AnyFunSuite {
       val v = if (i / 4 >= 2) 255.toByte else 0.toByte; Seq(v, v, v)
     }.toArray, 4, 4)
     val noise = Codec.encodeFor("png", 660066L, 9, 8)
-    val got = ImageOps.sobelStats(spark,
+    val got = ImageOps.sobelStats(
         Seq(("v", "bmp", vstep), ("h", "bmp", hstep), ("n", "png", noise))
           .toDF("image_id", "fmt", "bytes"), minMag2 = 1000L)
       .collect().map(r => r.getAs[String]("image_id") ->
@@ -309,7 +309,7 @@ class ImageCurationSpec extends AnyFunSuite {
     val pb = Bmp.encode(pbPx, 5, 3)
     val flat = Bmp.encode(Array.fill(3 * 2 * 3)(42.toByte), 3, 2)
     val clean = Codec.encodeFor("png", 909090L, 8, 7)
-    val got = ImageOps.borderStats(spark,
+    val got = ImageOps.borderStats(
         Seq(("lb", "bmp", lb), ("pb", "bmp", pb), ("flat", "bmp", flat),
           ("clean", "png", clean)).toDF("image_id", "fmt", "bytes"))
       .collect().map(r => r.getAs[String]("image_id") ->
@@ -326,7 +326,7 @@ class ImageCurationSpec extends AnyFunSuite {
     val flat = Bmp.encode(Array.fill(4 * 2 * 3)(50.toByte), 4, 2)
     // 2×1: pixels (1,2,3), (4,5,6) → 6 bytes all distinct → 6 runs
     val dist = Bmp.encode(Array[Byte](1, 2, 3, 4, 5, 6), 2, 1)
-    val got = ImageOps.rleStats(spark,
+    val got = ImageOps.rleStats(
         Seq(("flat", "bmp", flat), ("dist", "bmp", dist))
           .toDF("image_id", "fmt", "bytes"), maxRatioPpm = 1985000L)
       .collect().map(r => r.getAs[String]("image_id") ->
@@ -344,7 +344,7 @@ class ImageCurationSpec extends AnyFunSuite {
     // 3×3: odd row+col drop → 1×1 = mean of the top-left 2×2 block
     val nine = Codec.encodeFor("bmp", 31337L, 3, 3)
     val tiny = Bmp.encode(Array.fill(2 * 1 * 3)(5.toByte), 2, 1) // dh=0 → no row
-    val got = ImageOps.boxDownsample(spark,
+    val got = ImageOps.boxDownsample(
         Seq(("four", "bmp", four), ("nine", "bmp", nine), ("tiny", "bmp", tiny))
           .toDF("image_id", "fmt", "bytes"))
       .collect().map(r => r.getAs[String]("image_id") ->
@@ -371,7 +371,7 @@ class ImageCurationSpec extends AnyFunSuite {
     // anti-correlated: r high where g low → cov_num < 0; never r=g=b
     val anti = Bmp.encode(Array[Byte](200.toByte, 10, 0, 10, 200.toByte, 0), 2, 1)
     val noise = Codec.encodeFor("png", 424243L, 7, 6)
-    val got = ImageOps.channelCorrStats(spark,
+    val got = ImageOps.channelCorrStats(
         Seq(("gray", "bmp", gray), ("anti", "bmp", anti), ("noise", "png", noise))
           .toDF("image_id", "fmt", "bytes"))
       .collect().map(r => r.getAs[String]("image_id") ->
@@ -396,7 +396,7 @@ class ImageCurationSpec extends AnyFunSuite {
     val two = Bmp.encode(Array[Byte](1, 2, 3, 200.toByte, 0, 0, 1, 2, 3), 3, 1)
     // 2 pixels, 2 distinct colors with EQUAL counts → smallest packed wins
     val tie = Bmp.encode(Array[Byte](5, 0, 0, 1, 0, 0), 2, 1)
-    val got = ImageOps.paletteStats(spark,
+    val got = ImageOps.paletteStats(
         Seq(("two", "bmp", two), ("tie", "bmp", tie))
           .toDF("image_id", "fmt", "bytes"), maxColors = 2L)
       .collect().map(r => r.getAs[String]("image_id") ->
@@ -512,7 +512,7 @@ class ImageCurationSpec extends AnyFunSuite {
       ("x1", "bmp", Codec.encodeFor("bmp", 424242L, 7, 5)),
       ("x2", "png", Codec.encodeFor("png", 434343L, 4, 9))
     ).toDF("image_id", "fmt", "bytes")
-    val got = ImageOps.augmentDigests(spark, imgs, Seq("hflip", "rot180"))
+    val got = ImageOps.augmentDigests(imgs, Seq("hflip", "rot180"))
       .select("image_id", "aug", "digest").as[(String, String, Long)]
       .collect().map { case (id, a, d) => (id, a) -> d }.toMap
     for ((id, ph, w, h) <- Seq(("x1", 424242L, 7, 5), ("x2", 434343L, 4, 9));
@@ -599,11 +599,11 @@ class ImageCurationSpec extends AnyFunSuite {
     val df = Seq(
       ("a", "bmp", Bmp.encode(a, w, h)),
       ("a_f", "bmp", Bmp.encode(fl, w, h))).toDF("image_id", "fmt", "bytes")
-    val groups = ImageOps.dihedralDedupGroups(spark, df).collect()
+    val groups = ImageOps.dihedralDedupGroups(df).collect()
     assert(groups.length === 1)
     assert(groups(0).getAs[Long]("n_copies") === 2L)
     assert(groups(0).getAs[String]("keep_id") === "a")
-    assert(ImageOps.pixelDedupGroups(spark, df).count() === 0L)
+    assert(ImageOps.pixelDedupGroups(df).count() === 0L)
   }
 
   test("atlasDigests: hand-derived single-blit digest; 17 members chop into 16+1 shards") {
@@ -639,7 +639,7 @@ class ImageCurationSpec extends AnyFunSuite {
       ("a_c", "bmp", Bmp.encode(crop, cw, ch)),
       ("b", "bmp", Bmp.encode(Bmp.pixels(777L, w, h), w, h)))
       .toDF("image_id", "fmt", "bytes")
-    val rows = ImageOps.cropDups(spark, df).collect()
+    val rows = ImageOps.cropDups(df).collect()
     assert(rows.length === 1)
     assert(rows(0).getString(0) === "a" && rows(0).getString(1) === "a_c")
     assert(rows(0).getAs[Long]("n_shared") === ((cw - 3) * (ch - 3)).toLong)
@@ -656,5 +656,70 @@ class ImageCurationSpec extends AnyFunSuite {
     val rows = ImageOps.crossmodalDedup(spark, df).orderBy("dup_id").collect()
     assert(rows.map(r => (r.getString(0), r.getString(1),
       r.getBoolean(3))).toSeq === Seq(("a", "b", true), ("a", "c", false)))
+  }
+
+  // ---- the decode island's failure contract and its lint ratchet ----
+
+  /** decodable bmp, png and jpeg rows beside a truncated bmp, a png with a
+    * garbled signature and an unknown fmt */
+  private def corruptCorpus = {
+    val bmp = Codec.encodeFor("bmp", 515151L, 6, 5)
+    val png = Codec.encodeFor("png", 525252L, 5, 7)
+    val garbled = png.clone(); garbled(1) = 'X'.toByte; garbled(2) = 'Y'.toByte
+    Seq(
+      ("ok_bmp", "bmp", bmp),
+      ("ok_png", "png", png),
+      ("ok_jpeg", "jpeg", Codec.encodeFor("jpeg", 535353L, 8, 8)),
+      ("truncated", "bmp", bmp.dropRight(7)),
+      ("garbled", "png", garbled),
+      ("unknown", "gif", bmp))
+  }
+
+  test("decode island: undecodable rows drop, decodable rows match a direct decode") {
+    val corpus = corruptCorpus
+    val direct = corpus.flatMap { case (id, fmt, bytes) =>
+      Codec.decodeAny(fmt, bytes).map(d => id -> d) }.toMap
+    assert(direct.keySet === Set("ok_bmp", "ok_png", "ok_jpeg"))
+    val df = corpus.toDF("image_id", "fmt", "bytes")
+
+    val quality = ImageOps.qualityStats(df, minVar = 1000L)
+      .select("image_id", "w", "h", "sum_v", "var_num", "keep")
+      .as[(String, Int, Int, Long, Long, Boolean)].collect()
+      .map(r => r._1 -> (r._2, r._3, r._4, r._5, r._6)).toMap
+    assert(quality === direct.map { case (id, (rgb, w, h)) =>
+      val v = rgb.map(_ & 0xff).map(_.toLong)
+      val n = v.length.toLong
+      val varNum = n * v.map(x => x * x).sum - v.sum * v.sum
+      id -> (w, h, v.sum, varNum, varNum >= 1000L * n * n)
+    })
+
+    val augs = Seq("hflip", "rot180")
+    val digests = ImageOps.augmentDigests(df, augs)
+      .select("image_id", "aug", "w", "h", "digest")
+      .as[(String, String, Int, Int, Long)].collect()
+    assert(digests.sorted.toSeq === (for {
+      (id, (rgb, w, h)) <- direct.toSeq
+      a <- augs
+    } yield (id, a, w, h, ImageOps.pixelDigest(ImageOps.augmentPixels(rgb, w, h, a)))).sorted)
+  }
+
+  test("lint: one decode island in ImageOps, one channel-sum loop in src/main") {
+    val root = new java.io.File("src/main/scala/graft")
+    def read(f: java.io.File) = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    def count(src: String, literal: String) =
+      java.util.regex.Pattern.quote(literal).r.findAllMatchIn(src).length
+    def files(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).toSeq.flatten.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    val imageOps = new java.io.File(root, "ops/ImageOps.scala")
+    assert(imageOps.isFile, s"ImageOps not found under ${root.getAbsolutePath}")
+    // the helper, the four paths that emit a row for an undecodable payload
+    // (decodeFeatures, thumbnails, decodeSse, psnrVsSource), crossmodalDedup
+    // (carries caption) and atlasDigests (decodes inside its cell groups)
+    val decodes = count(read(imageOps), "Codec.decodeAny(")
+    assert(decodes <= 7, s"$decodes Codec.decodeAny( calls in ImageOps.scala, at most 7")
+    val sums = files(root).filter(_.getName.endsWith(".scala"))
+      .map(f => f.getPath -> count(read(f), "r += rgb(i) & 0xff"))
+      .filter(_._2 > 0)
+    assert(sums.map(_._2).sum === 1, s"channel-sum loops (Codec.channelSums is the one): $sums")
   }
 }

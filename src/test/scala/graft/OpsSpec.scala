@@ -239,10 +239,10 @@ class OpsSpec extends AnyFunSuite {
     assert(out === Seq((1, 1L)))
   }
 
-  test("J7: power-of-two start rings return the rows of a start at ring 1") {
-    // ways within 8 cells of the origin, images within 14, so images settle
-    // in different rounds and some only at the last ring (maxRing 8: rings
-    // 1,2,4,8 against 2,4,8 and 4,8)
+  /** the ring fixture: ways within 8 cells of the origin, images within
+    * 14, so images settle in different rounds and some only at the last
+    * ring (maxRing 8: rings 1,2,4,8) */
+  private lazy val ringFixture = {
     val rnd = new scala.util.Random(20261018L)
     def at(scale: Double) = rnd.nextDouble() * scale
     val ways = knnWaysDf((1L to 12L).map { id =>
@@ -250,11 +250,30 @@ class OpsSpec extends AnyFunSuite {
       (id, s"W$id", Seq((lat, lon), (lat + at(0.002), lon + at(0.002))))
     })
     val imgs = (0 until 40).map(i => (s"i$i", at(0.014), at(0.014))).toDF("image_id", "lat", "lon")
+    (ways, imgs)
+  }
+
+  test("J7: power-of-two start rings return the rows of a start at ring 1") {
+    // rings 1,2,4,8 against 2,4,8 and 4,8
+    val (ways, imgs) = ringFixture
     def rows(ring: Int) = SpatialOps.knnWays(imgs, ways, k = 2, res = 3, ring = ring, maxRing = 8)
       .select("image_id", "rk", "way_id").as[(String, Int, Long)].collect().sorted.toSeq
     val base = rows(1)
     assert(base.map(_._1).distinct.length >= 30)
     assert(rows(2) === base)
     assert(rows(4) === base)
+  }
+
+  test("J7: the settle loop's Spark jobs on the ring fixture") {
+    // four rounds (rings 1,2,4,8), three of them leaving images unsettled.
+    // A settle round checkpoints the top-k, counts the proven images with
+    // one filter whatever k, and checkpoints the pending rest; the pending
+    // count is taken once, at the first check, then kept by subtraction.
+    val (ways, imgs) = ringFixture
+    def jobs(k: Int) = JobCounter.jobs(spark) {
+      SpatialOps.knnWays(imgs, ways, k = k, res = 3, ring = 1, maxRing = 8)
+    }
+    assert(jobs(2) === 34)
+    assert(jobs(1) === 30)
   }
 }

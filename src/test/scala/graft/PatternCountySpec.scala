@@ -49,4 +49,24 @@ class PatternCountySpec extends AnyFunSuite {
     val expected = PatternOps.withCounty(feats, g).filter(col("county") === "c1").count()
     assert(pruned.count() === expected)
   }
+
+  test("memo caches: two sessions in one JVM each get their own frames, with equal rows") {
+    val sfDir = "/root/testdata/sf0.001"
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val got = Seq(spark.newSession(), spark.newSession()).map { s =>
+      val (g, raw, wayData) = Pipeline.prepared(s, sfDir)
+      val feats = Pipeline.features(s, sfDir).select("streets", "raw", "lat", "lon")
+      val path = PatternOps.countyPartitionedPath(s, feats, g, sfDir)
+      val county = s.read.parquet(path)
+      for (df <- Seq(raw, wayData, feats, county))
+        assert(df.sparkSession eq s, "a memoized frame is bound to another session")
+      // a second call in the same session is a cache hit
+      assert(Pipeline.prepared(s, sfDir)._3 eq wayData)
+      assert(PatternOps.countyPartitionedPath(s, feats, g, sfDir) === path)
+      (path, Seq(rows(wayData), rows(feats), rows(county)))
+    }
+    assert(got(0)._1 !== got(1)._1, "two sessions share one county directory")
+    assert(got(0)._2.forall(_.nonEmpty))
+    assert(got(0)._2 === got(1)._2)
+  }
 }
