@@ -70,15 +70,55 @@ object SparkEntry {
         .otherwise(col("text")))
       .select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text"))
 
-  /** replayed streams are tiny (bounded slices/collects): 32 state-store
-    * partitions are pure per-micro-batch task overhead, and every stateful
-    * operator here is keyed (partition-count-invariant output), so the
-    * micro-batches run at 8 and the session default is restored after —
-    * the same documented pattern q_stream_join shipped with. */
-  private def withStreamShuffle[T](s: SparkSession, n: Int)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  /** events as (ts, event_type, value in integer micros): the feed of the
+    * windowed stream twins */
+  private def microEvents(s: SparkSession, dir: String): DataFrame =
+    Synth.events(s, dir).select(col("ts").cast("timestamp").as("ts"), col("event_type"),
+      floor(col("value") * 1e6).cast("double").as("value"))
+
+  /** The id modulus of the sliced replay feeds (q_stream_join,
+    * q_stream_left_join, q_stream_geofence). It bounds the replay feed, not
+    * the operator, and grows with the corpus past sf0.1: 11 at ≤ 150k
+    * orders, the scales every gate runs at (the oracles' literal `% 11`),
+    * and 110 at sf1.0, so the feed stays at its sf0.1 size (545,480
+    * geofence points) instead of growing O(sf). */
+  private def replaySliceMod(s: SparkSession, dir: String): Long =
+    11L * math.max(1L, Synth.orders(s, dir).count() / 150000L)
+
+  /** The stream-stream join twins' replay: one sliced image feed whose
+    * pings (at base + u % pingSpan s) and captions (every v % 3 = 0 image,
+    * offset (v % 360) − 180 s from its ping) are two projections of the
+    * same stream, so both sides arrive in the same micro-batch. */
+  private def pingCaptionReplay(s: SparkSession, dir: String, table: String, pingSpan: Int)(
+      join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val base = 1767225600L // 2026-01-01T00:00:00Z
+    val feed = Pipeline.geoImages(s, dir)
+      .filter(expr(s"CAST(substring(image_id, 4) AS BIGINT) % ${replaySliceMod(s, dir)} = 0"))
+      .select(col("image_id"), col("lat"), col("lon"), col("u"), col("v"))
+    val pingTs = lit(base) + col("u") % pingSpan
+    Streaming.replay(s, feed, table, "append")(f => join(
+        f.select(col("image_id"), col("lat"), col("lon"), pingTs.cast("timestamp").as("ts")),
+        f.filter(col("v") % 3 === 0)
+          .select(col("image_id"), concat(lit("c"), col("image_id")).as("caption"),
+            (pingTs + (col("v") % 360) - 180).cast("timestamp").as("ts"))))
+      .select(col("image_id"), col("lat"), col("lon"),
+        col("ping_sec"), col("cap_sec"), col("caption"))
+      .orderBy("image_id", "cap_sec")
+  }
+
+  /** the distinct (way_id, node_id) pairs of the raw ways */
+  private def wayNodes(s: SparkSession, dir: String): DataFrame = {
+    val (_, raw, _) = Pipeline.prepared(s, dir)
+    raw.select(col("id").as("way_id"), explode(col("nodes")).as("node_id")).distinct()
+  }
+
+  /** the way-adjacency graph: one (src, dst) edge per ordered pair of
+    * distinct ways that share at least one node */
+  private def wayAdjacency(s: SparkSession, dir: String): DataFrame = {
+    val nw = wayNodes(s, dir)
+    nw.as("a").join(nw.as("b"), "node_id")
+      .filter(col("a.way_id") =!= col("b.way_id"))
+      .select(col("a.way_id").as("src"), col("b.way_id").as("dst")).distinct()
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -180,31 +220,22 @@ object SparkEntry {
     "q_geoturf_variant" -> ((s, dir) =>
       Pipeline.geoturfFeatures(s, dir).orderBy("streets", "raw", "lat", "lon")),
 
+    // integer-arithmetic PageRank over the way-adjacency graph (ways
+    // sharing >=1 node); 5 fixed iterations, oracle = the same recurrence
+    // unrolled as chained CTEs in DuckDB — exact BIGINT match per node
+    "q_graph_pagerank" -> ((s, dir) =>
+      GraphOps.pageRank(wayAdjacency(s, dir))
+        .select(col("id").as("way_id"), col("rank_micro"))
+        .orderBy("way_id")),
+
     // north_star parity item stated verbatim: "reproducing the reference's
     // ... per-way shared-node counts exactly as join output rows" — for
     // every way: node count, how many of its nodes are shared with another
     // way, and the total sharing degree Σ(ways_at_node − 1). One explode +
     // two partial-aggregated groupBys; the oracle rebuilds the way→node
     // relation closed-form for all six way families.
-    // integer-arithmetic PageRank over the way-adjacency graph (ways
-    // sharing >=1 node); 5 fixed iterations, oracle = the same recurrence
-    // unrolled as chained CTEs in DuckDB — exact BIGINT match per node
-    "q_graph_pagerank" -> ((s, dir) => {
-      val (_, raw, _) = Pipeline.prepared(s, dir)
-      val nw = raw.select(col("id").as("way_id"), explode(col("nodes")).as("node_id"))
-        .distinct()
-      val e = nw.as("a").join(nw.as("b"), "node_id")
-        .filter(col("a.way_id") =!= col("b.way_id"))
-        .select(col("a.way_id").as("src"), col("b.way_id").as("dst")).distinct()
-      GraphOps.pageRank(e)
-        .select(col("id").as("way_id"), col("rank_micro"))
-        .orderBy("way_id")
-    }),
-
     "q_way_shared_nodes" -> ((s, dir) => {
-      val (_, raw, _) = Pipeline.prepared(s, dir)
-      val nw = raw.select(col("id").as("way_id"), explode(col("nodes")).as("node_id"))
-        .distinct()
+      val nw = wayNodes(s, dir)
       val deg = nw.groupBy(col("node_id")).agg(count(lit(1)).as("n_ways"))
       nw.join(deg, Seq("node_id"))
         .groupBy(col("way_id"))
@@ -1072,36 +1103,23 @@ object SparkEntry {
           Pipeline.geoImages(s, dir).select(col("lat"), col("lon")), zoom = 14)
         .orderBy("tile_id")),
 
-    // bounded-hop shortest paths over the way-adjacency graph (4 rounds of
-    // Bellman-Ford from the motorway + fake-name ways, deterministic
-    // (src+dst)%97+1 weights); the oracle unrolls the identical recurrence
     // synchronous label propagation (Raghavan et al. 2007): 3 rounds of
     // most-frequent-neighbor-label with (count DESC, label ASC) argmax
     // over the way node-sharing graph; the oracle unrolls the identical
     // rounds — synchronous updates make it schedule-independent
-    "q_graph_label_prop" -> ((s, dir) => {
-      val (_, raw, _) = Pipeline.prepared(s, dir)
-      val nw = raw.select(col("id").as("way_id"), explode(col("nodes")).as("node_id"))
-        .distinct()
-      val e = nw.as("a").join(nw.as("b"), "node_id")
-        .filter(col("a.way_id") =!= col("b.way_id"))
-        .select(col("a.way_id").as("src"), col("b.way_id").as("dst")).distinct()
-      GraphOps.labelPropagation(e, rounds = 3)
+    "q_graph_label_prop" -> ((s, dir) =>
+      GraphOps.labelPropagation(wayAdjacency(s, dir), rounds = 3)
         .select(col("id").as("way_id"), col("lbl"))
-        .orderBy("way_id")
-    }),
+        .orderBy("way_id")),
 
+    // bounded-hop shortest paths over the way-adjacency graph (4 rounds of
+    // Bellman-Ford from the motorway + fake-name ways, deterministic
+    // (src+dst)%97+1 weights); the oracle unrolls the identical recurrence
     "q_graph_khop_dist" -> ((s, dir) => {
-      val (_, raw, _) = Pipeline.prepared(s, dir)
       val sess = s; import sess.implicits._
-      val nw = raw.select(col("id").as("way_id"), explode(col("nodes")).as("node_id"))
-        .distinct()
-      val e = nw.as("a").join(nw.as("b"), "node_id")
-        .filter(col("a.way_id") =!= col("b.way_id"))
-        .select(col("a.way_id").as("src"), col("b.way_id").as("dst")).distinct()
-        .withColumn("w", expr("(src + dst) % 97 + 1"))
       graft.ops.GraphOps.boundedDistances(
-          e, Seq(2000000L, 6000000L).toDF("id"), hops = 4)
+          wayAdjacency(s, dir).withColumn("w", expr("(src + dst) % 97 + 1")),
+          Seq(2000000L, 6000000L).toDF("id"), hops = 4)
         .select(col("id").as("way_id"), col("dist"))
         .orderBy("way_id")
     }),
@@ -1111,16 +1129,10 @@ object SparkEntry {
     // sources pred = −1) — routes reconstructible by walking pred links;
     // the oracle unrolls the identical argmin recurrence
     "q_graph_sp_tree" -> ((s, dir) => {
-      val (_, raw, _) = Pipeline.prepared(s, dir)
       val sess = s; import sess.implicits._
-      val nw = raw.select(col("id").as("way_id"), explode(col("nodes")).as("node_id"))
-        .distinct()
-      val e = nw.as("a").join(nw.as("b"), "node_id")
-        .filter(col("a.way_id") =!= col("b.way_id"))
-        .select(col("a.way_id").as("src"), col("b.way_id").as("dst")).distinct()
-        .withColumn("w", expr("(src + dst) % 97 + 1"))
       graft.ops.GraphOps.boundedPaths(
-          e, Seq(2000000L, 6000000L).toDF("id"), hops = 4)
+          wayAdjacency(s, dir).withColumn("w", expr("(src + dst) % 97 + 1")),
+          Seq(2000000L, 6000000L).toDF("id"), hops = 4)
         .select(col("id").as("way_id"), col("dist"), col("pred"))
         .orderBy("way_id")
     }),
@@ -2421,127 +2433,64 @@ object SparkEntry {
       EventOps.retention(Synth.events(s, dir))
         .orderBy("cohort_week", "week_offset")),
 
-    // ---- Structured Streaming twins, DRIVER-GATED: the same events replay
-    // through the streaming engine (MemoryStream, one batch) and must land
-    // on the exact rows of the batch oracle. Values stream as integer
+    // ---- Structured Streaming twins, DRIVER-GATED: the batch inputs replay
+    // through the streaming engine (Streaming.replay, one batch) and must
+    // land on the exact rows of the batch oracle. Values stream as integer
     // micros (each < 2^53, so double accumulation is exact and
-    // partitioning-invariant). The collect is the REPLAY HARNESS, not the
+    // partitioning-invariant). The replay's collect is the harness, not the
     // operator: at scale the stream arrives from a real source; the gate
     // proves engine-equivalence of the streaming plan itself.
-    "q_stream_tumbling" -> ((s, dir) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = Synth.events(s, dir)
-        .select(col("ts").cast("timestamp").as("ts"), col("event_type"),
-          floor(col("value") * 1e6).cast("double").as("value"))
-        .as[(java.sql.Timestamp, String, Double)].collect()
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(java.sql.Timestamp, String, Double)]
-      withStreamShuffle(s, 8) {
-        val q = Streaming.tumblingCounts(mem.toDF().toDF("ts", "event_type", "value"), 300)
-          .writeStream.format("memory").queryName("graft_q_stream_tumbling")
-          .outputMode("complete").start()
-        try { mem.addData(rows.toIndexedSeq); q.processAllAvailable() }
-        finally q.stop()
-      }
-      s.table("graft_q_stream_tumbling")
+    "q_stream_tumbling" -> ((s, dir) =>
+      Streaming.replay(s, microEvents(s, dir), "graft_q_stream_tumbling", "complete")(
+          Streaming.tumblingCounts(_, 300))
         .select(col("event_type"), col("window_start_sec"), col("n"),
           col("sum_value").cast("long").as("sum_value_micro"))
-        .orderBy("event_type", "window_start_sec")
-    }),
+        .orderBy("event_type", "window_start_sec")),
 
     // sliding (hopping) window stream twin: 600s windows every 300s — each
     // event contributes to exactly two overlapping panes; the oracle replays
     // Spark's window-assignment rule as a 2-offset cross join
-    "q_stream_sliding" -> ((s, dir) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = Synth.events(s, dir)
-        .select(col("ts").cast("timestamp").as("ts"), col("event_type"),
-          floor(col("value") * 1e6).cast("double").as("value"))
-        .as[(java.sql.Timestamp, String, Double)].collect()
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(java.sql.Timestamp, String, Double)]
-      withStreamShuffle(s, 8) {
-        val q = Streaming.slidingCounts(
-            mem.toDF().toDF("ts", "event_type", "value"), 600, 300)
-          .writeStream.format("memory").queryName("graft_q_stream_sliding")
-          .outputMode("complete").start()
-        try { mem.addData(rows.toIndexedSeq); q.processAllAvailable() }
-        finally q.stop()
-      }
-      s.table("graft_q_stream_sliding")
+    "q_stream_sliding" -> ((s, dir) =>
+      Streaming.replay(s, microEvents(s, dir), "graft_q_stream_sliding", "complete")(
+          Streaming.slidingCounts(_, 600, 300))
         .select(col("event_type"), col("window_start_sec"), col("n"),
           col("sum_value").cast("long").as("sum_value_micro"))
-        .orderBy("event_type", "window_start_sec")
-    }),
+        .orderBy("event_type", "window_start_sec")),
 
     // streaming windowed top-k: the k-bounded TopKAgg inside the streaming
     // aggregation (state = k pairs per window); the oracle is the batch
     // ROW_NUMBER cut over the same micro-exact values
-    "q_stream_topk" -> ((s, dir) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = Synth.events(s, dir)
-        .select(col("ts").cast("timestamp").as("ts"), col("user_id"), col("value"))
-        .as[(java.sql.Timestamp, Long, Double)].collect()
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(java.sql.Timestamp, Long, Double)]
-      withStreamShuffle(s, 8) {
-        val q = Streaming.windowTopK(
-            mem.toDF().toDF("ts", "user_id", "value"), 300, 3)
-          .writeStream.format("memory").queryName("graft_q_stream_topk")
-          .outputMode("complete").start()
-        try { mem.addData(rows.toIndexedSeq); q.processAllAvailable() }
-        finally q.stop()
-      }
-      s.table("graft_q_stream_topk")
-        .orderBy("window_start_sec", "rk")
-    }),
+    "q_stream_topk" -> ((s, dir) =>
+      Streaming.replay(s,
+          Synth.events(s, dir)
+            .select(col("ts").cast("timestamp").as("ts"), col("user_id"), col("value")),
+          "graft_q_stream_topk", "complete")(Streaming.windowTopK(_, 300, 3))
+        .orderBy("window_start_sec", "rk")),
 
     // gap-sessionization stream twin: one sentinel event per user past the
     // gap closes every real session inside the single replay batch, so the
     // Append-mode flatMapGroupsWithState emits deterministically (no
     // reliance on processing-time timeouts firing); the sentinel's own
-    // opened session is never emitted and never reaches the output.
+    // opened session is never emitted and never reaches the output. Over
+    // the replayed feed (events and sentinels), every emitted session is
+    // closed by exactly one gap, so the expected count is the feed's gaps.
+    // The state has a ProcessingTimeTimeout, so the harness polls to it.
     "q_stream_sessions" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+      val gapUs = 1800L * 1000000L
       val ev = Synth.events(s, dir)
         .select(col("user_id").cast("long").as("user_id"),
           expr("CAST(unix_micros(CAST(ts AS TIMESTAMP)) AS BIGINT)").as("ts_us"),
           floor(col("value") * 1e6).cast("double").as("value"))
-        .as[Streaming.Ev].collect()
-      val maxUs = ev.map(_.ts_us).max
-      val sentinels = ev.map(_.user_id).distinct
-        .map(u => Streaming.Ev(u, maxUs + 1800L * 1000000L + 1L, 0.0))
-      // expected session count, computed driver-side from the SAME events:
-      // sentinels close every real session in batch 0, so the memory table
-      // converges to exactly this many rows. processAllAvailable is NOT
-      // usable here: ProcessingTimeTimeout state makes the no-trigger query
-      // spin empty micro-batches forever (same trap StreamCkptSpec
-      // documents) — poll the result table instead.
-      val expected: Long = ev.groupBy(_.user_id).valuesIterator.map { es =>
-        val ts = es.map(_.ts_us).sorted
-        1L + ts.sliding(2).count(w => w.length == 2 && w(1) - w(0) > 1800L * 1000000L)
-      }.sum
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[Streaming.Ev]
-      withStreamShuffle(s, 8) {
-        val q = Streaming.sessionize(s, mem.toDS(), 1800L)
-          .writeStream.format("memory").queryName("graft_q_stream_sessions")
-          .outputMode("append").start()
-        try {
-          mem.addData((ev ++ sentinels).toIndexedSeq)
-          val deadline = System.currentTimeMillis() + 180000L
-          while (s.table("graft_q_stream_sessions").count() < expected &&
-                 System.currentTimeMillis() < deadline)
-            Thread.sleep(100)
-        } finally q.stop()
-      }
-      require(s.table("graft_q_stream_sessions").count() == expected,
-        s"q_stream_sessions: stream did not converge to $expected sessions")
-      s.table("graft_q_stream_sessions")
+      val feed = ev.unionByName(ev.groupBy(col("user_id"))
+        .agg((max(col("ts_us")) + gapUs + 1L).as("ts_us"), lit(0.0).as("value")))
+      val gaps = (rows: Seq[org.apache.spark.sql.Row]) =>
+        rows.groupBy(_.getAs[Long]("user_id")).valuesIterator.map { rs =>
+          val ts = rs.map(_.getAs[Long]("ts_us")).sorted
+          ts.sliding(2).count(w => w.length == 2 && w(1) - w(0) > gapUs).toLong
+        }.sum
+      Streaming.replay(s, feed, "graft_q_stream_sessions", "append", Some(gaps))(
+          f => Streaming.sessionize(s, f.as[Streaming.Ev], 1800L))
         .select(col("user_id"), col("sess_id"), col("n_events"), col("duration_sec"),
           col("sum_value").cast("long").as("sum_value_micro"))
         .orderBy("user_id", "sess_id")
@@ -2553,144 +2502,74 @@ object SparkEntry {
     // per md5 digest. The synthetic documents are all distinct, so every 7th
     // doc is re-emitted under doc_id+1e6 INSIDE the query (mirrored in the
     // oracle) to make the duplicate path do real work at the gate. Same
-    // ProcessingTimeTimeout caveat as sessions: poll the memory table to the
-    // driver-computed row count, never processAllAvailable.
+    // ProcessingTimeTimeout caveat as sessions: one output row per feed
+    // row, so the harness polls to the feed's row count.
     "q_stream_dedup" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val base = Synth.documents(s, dir)
         .select(col("doc_id").cast("long").as("doc_id"), col("text"))
       val docs = base
         .unionByName(base.filter(col("doc_id") % 7 === 0)
           .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
         .select(col("doc_id"), md5(col("text")).as("digest"))
-        .as[Streaming.DocIn].collect()
-      val expected = docs.length.toLong
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[Streaming.DocIn]
-      withStreamShuffle(s, 8) {
-        val q = Streaming.dedupStream(s, mem.toDS())
-          .writeStream.format("memory").queryName("graft_q_stream_dedup")
-          .outputMode("append").start()
-        try {
-          mem.addData(docs.toIndexedSeq)
-          val deadline = System.currentTimeMillis() + 180000L
-          while (s.table("graft_q_stream_dedup").count() < expected &&
-                 System.currentTimeMillis() < deadline)
-            Thread.sleep(100)
-        } finally q.stop()
-      }
-      require(s.table("graft_q_stream_dedup").count() == expected,
-        s"q_stream_dedup: stream did not converge to $expected rows")
-      s.table("graft_q_stream_dedup")
+      Streaming.replay(s, docs, "graft_q_stream_dedup", "append", Some(_.length.toLong))(
+          f => Streaming.dedupStream(s, f.as[Streaming.DocIn]))
         .select(col("doc_id"), col("digest"), col("is_first"))
         .orderBy("doc_id")
     }),
 
-    // STREAM-STREAM interval join twin: geotagged pings and a separately-
-    // arriving caption feed (both derived deterministically from the image
-    // table — ping at base + u%240 s, caption offset (v%360)-180 s, so
-    // roughly a third of captioned images land outside the ±120 s window)
-    // joined with watermarks on BOTH sides; the oracle is the equivalent
-    // batch interval join. No stateful timeout here, so a single replay
-    // batch + processAllAvailable is deterministic. Both feeds take the
-    // same corpus-scaled id slice as q_stream_geofence — it bounds the
-    // replay-harness collect (driver memory stays capped at the proven
-    // sf0.1 level instead of growing O(sf)), not the operator:
-    // pingCaptionJoin itself never collects. The modulus is 11 at every
-    // gate scale (sf ≤ 0.1 ⇒ orders ≤ 150k ⇒ mult = 1), matching the
-    // oracle's literal `% 11`; at sf1.0 it grows to 110 (the fixed 1/11
-    // slice measured 36 s wall there — all collect+replay rig).
-    "q_stream_join" -> ((s, dir) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val base = 1767225600L // 2026-01-01T00:00:00Z
-      val joinSliceMod = 11L * math.max(1L, Synth.orders(s, dir).count() / 150000L)
-      // cache the sliced feed table: both collects below read the same
-      // synthesized rows, so the splitmix image synthesis runs once
-      val gi = Pipeline.geoImages(s, dir)
-        .filter(expr(s"CAST(substring(image_id, 4) AS BIGINT) % $joinSliceMod = 0"))
-        .cache()
-      val (pings, caps) = try {
-        (gi.select(col("image_id"), col("lat"), col("lon"),
-            (lit(base) + col("u") % 240).cast("timestamp").as("ts"))
-          .as[(String, Double, Double, java.sql.Timestamp)].collect(),
-         gi.filter(col("v") % 3 === 0)
-          .select(col("image_id"), concat(lit("c"), col("image_id")).as("caption"),
-            (lit(base) + col("u") % 240 + (col("v") % 360) - 180).cast("timestamp").as("ts"))
-          .as[(String, String, java.sql.Timestamp)].collect())
-      } finally gi.unpersist()
-      val pMem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(String, Double, Double, java.sql.Timestamp)]
-      val cMem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(String, String, java.sql.Timestamp)]
-      // the replayed feed is ≤ the sf0.1 slice (~50k rows); 32 state-store
-      // partitions are pure per-task overhead at that volume, and an inner
-      // interval join's output is partition-count-invariant — run the
-      // micro-batches at 8 and restore the session default after
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q = Streaming.pingCaptionJoin(
-          pMem.toDF().toDF("image_id", "lat", "lon", "ts"),
-          cMem.toDF().toDF("image_id", "caption", "ts"), joinWindowSec = 120)
-        .writeStream.format("memory").queryName("graft_q_stream_join")
-        .outputMode("append").start()
-      try {
-        pMem.addData(pings.toIndexedSeq); cMem.addData(caps.toIndexedSeq)
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      }
-      s.table("graft_q_stream_join")
-        .select(col("image_id"), col("lat"), col("lon"),
-          col("ping_sec"), col("cap_sec"), col("caption"))
-        .orderBy("image_id", "cap_sec")
-    }),
+    // STREAM-STREAM interval join twin: geotagged pings and a caption feed
+    // (both derived deterministically from the image table — ping at
+    // base + u%240 s, caption offset (v%360)-180 s, so roughly a third of
+    // captioned images land outside the ±120 s window) joined with
+    // watermarks on BOTH sides; the oracle is the equivalent batch interval
+    // join. No stateful timeout here, so a single replay batch +
+    // processAllAvailable is deterministic.
+    "q_stream_join" -> ((s, dir) =>
+      pingCaptionReplay(s, dir, "graft_q_stream_join", 240)(
+        Streaming.pingCaptionJoin(_, _, joinWindowSec = 120))),
 
-    // LEFT OUTER stream-stream interval join twin: same sliced feeds as
+    // LEFT OUTER stream-stream interval join twin: same sliced feed as
     // q_stream_join; unmatched pings emit null-padded rows once the global
     // watermark passes their join horizon, and the oracle applies the
     // identical cutoff (LEAST of both feeds' max ts − delay) in SQL
-    "q_stream_left_join" -> ((s, dir) => {
+    "q_stream_left_join" -> ((s, dir) =>
+      pingCaptionReplay(s, dir, "graft_q_stream_left_join", 3600)(
+        Streaming.pingCaptionLeftJoin(_, _, joinWindowSec = 120))),
+
+    // streaming CUSUM (the q_events_cusum twin live): per-user drift alarms
+    // from flatMapGroupsWithState with TWO longs of state per user; the
+    // single-batch replay is bit-identical to the batch recurrence, so the
+    // same recursive-CTE oracle gates the stream, alarm row by alarm row
+    "q_stream_cusum" -> ((s, dir) => {
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val base = 1767225600L // 2026-01-01T00:00:00Z
-      val joinSliceMod = 11L * math.max(1L, Synth.orders(s, dir).count() / 150000L)
-      val gi = Pipeline.geoImages(s, dir)
-        .filter(expr(s"CAST(substring(image_id, 4) AS BIGINT) % $joinSliceMod = 0"))
-        .cache()
-      val (pings, caps) = try {
-        (gi.select(col("image_id"), col("lat"), col("lon"),
-            (lit(base) + col("u") % 3600).cast("timestamp").as("ts"))
-          .as[(String, Double, Double, java.sql.Timestamp)].collect(),
-         gi.filter(col("v") % 3 === 0)
-          .select(col("image_id"), concat(lit("c"), col("image_id")).as("caption"),
-            (lit(base) + col("u") % 3600 + (col("v") % 360) - 180).cast("timestamp").as("ts"))
-          .as[(String, String, java.sql.Timestamp)].collect())
-      } finally gi.unpersist()
-      val pMem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(String, Double, Double, java.sql.Timestamp)]
-      val cMem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(String, String, java.sql.Timestamp)]
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q = Streaming.pingCaptionLeftJoin(
-          pMem.toDF().toDF("image_id", "lat", "lon", "ts"),
-          cMem.toDF().toDF("image_id", "caption", "ts"), joinWindowSec = 120)
-        .writeStream.format("memory").queryName("graft_q_stream_left_join")
-        .outputMode("append").start()
-      try {
-        pMem.addData(pings.toIndexedSeq); cMem.addData(caps.toIndexedSeq)
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      }
-      s.table("graft_q_stream_left_join")
-        .select(col("image_id"), col("lat"), col("lon"),
-          col("ping_sec"), col("cap_sec"), col("caption"))
-        .orderBy("image_id", "cap_sec")
+      val feed = Synth.events(s, dir)
+        .select(col("user_id").cast("long").as("user_id"),
+          expr("CAST(unix_micros(CAST(ts AS TIMESTAMP)) AS BIGINT)").as("ts_us"),
+          col("event_id").cast("long").as("event_id"),
+          floor(col("value") * lit(1e6)).cast("long").as("v6"))
+      Streaming.replay(s, feed, "graft_q_stream_cusum", "append")(f =>
+          Streaming.cusumStream(s, f.as[Streaming.CEv],
+            targetMicro = 60000000L, hMicro = 400000000L))
+        .orderBy("user_id", "alarm_idx")
+    }),
+
+    // streaming geofence twin: GPS points replay through the track-keyed
+    // flatMapGroupsWithState (state = ONE (step, zone) pair per track) and
+    // must land on the batch lag-window oracle rows; NoTimeout state, so
+    // processAllAvailable terminates (no ProcessingTimeTimeout spin). The
+    // track slice (replaySliceMod) bounds the replay feed, not the operator.
+    "q_stream_geofence" -> ((s, dir) => {
+      import s.implicits._
+      val (g, _, _) = Pipeline.prepared(s, dir)
+      val feed = Synth.tracks(s, dir)
+        .filter(col("track_id") % replaySliceMod(s, dir) === 0)
+        .select(col("track_id"), posexplode(col("geometry")).as(Seq("step", "pt")))
+        .select(col("track_id"), col("step"),
+          col("pt.lat").as("lat"), col("pt.lon").as("lon"))
+      Streaming.replay(s, feed, "graft_q_stream_geofence", "append")(f =>
+          Streaming.geofenceStream(s, f.as[Streaming.GeoPt], Synth.cityPolys(g)))
+        .orderBy("track_id", "step")
     }),
 
     // ---- relational anchors (scan/filter/agg/join/window) ----------------
@@ -2706,66 +2585,6 @@ object SparkEntry {
     // selection (QuantileOps) — the oracle recomputes each rank by
     // row_number over the sorted column, fully independent of the
     // histogram machinery
-    // streaming geofence twin: GPS points replay through the track-keyed
-    // flatMapGroupsWithState (state = ONE (step, zone) pair per track) and
-    // must land on the batch lag-window oracle rows; NoTimeout state, so
-    // processAllAvailable terminates (no ProcessingTimeTimeout spin).
-    // The slice bounds the replay-harness collect, not the operator — and
-    // the modulus GROWS with the corpus past sf0.1 (11 at ≤150k tracks,
-    // the scales every gate runs at, so the sf0.01 oracle's literal
-    // `% 11` is untouched; 110 at sf1.0) so the harness's driver
-    // footprint is capped at the proven sf0.1 level instead of growing
-    // O(sf): the sf1.0 evidence run measured the fixed 1/11 slice at
-    // 36 s wall, all of it collect+replay rig, none of it operator.
-    // streaming CUSUM (the q_events_cusum twin live): per-user drift alarms
-    // from flatMapGroupsWithState with TWO longs of state per user; the
-    // single-batch replay is bit-identical to the batch recurrence, so the
-    // same recursive-CTE oracle gates the stream, alarm row by alarm row
-    "q_stream_cusum" -> ((s, dir) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = Synth.events(s, dir)
-        .select(col("user_id").cast("long").as("user_id"),
-          expr("CAST(unix_micros(CAST(ts AS TIMESTAMP)) AS BIGINT)").as("ts_us"),
-          col("event_id").cast("long").as("event_id"),
-          floor(col("value") * lit(1e6)).cast("long").as("v6"))
-        .as[Streaming.CEv].collect()
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[Streaming.CEv]
-      withStreamShuffle(s, 8) {
-        val q = Streaming.cusumStream(s, mem.toDS(),
-            targetMicro = 60000000L, hMicro = 400000000L)
-          .writeStream.format("memory").queryName("graft_q_stream_cusum")
-          .outputMode("append").start()
-        try { mem.addData(rows.toIndexedSeq); q.processAllAvailable() }
-        finally q.stop()
-      }
-      s.table("graft_q_stream_cusum").orderBy("user_id", "alarm_idx")
-    }),
-
-    "q_stream_geofence" -> ((s, dir) => {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val (g, _, _) = Pipeline.prepared(s, dir)
-      val sliceMod = 11L * math.max(1L, Synth.orders(s, dir).count() / 150000L)
-      val rows = Synth.tracks(s, dir)
-        .filter(col("track_id") % sliceMod === 0)
-        .select(col("track_id"), posexplode(col("geometry")).as(Seq("step", "pt")))
-        .select(col("track_id"), col("step"),
-          col("pt.lat").as("lat"), col("pt.lon").as("lon"))
-        .as[Streaming.GeoPt].collect()
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[Streaming.GeoPt]
-      withStreamShuffle(s, 8) {
-        val q = Streaming.geofenceStream(s, mem.toDS(), Synth.cityPolys(g))
-          .writeStream.format("memory").queryName("graft_q_stream_geofence")
-          .outputMode("append").start()
-        try { mem.addData(rows.toIndexedSeq); q.processAllAvailable() }
-        finally q.stop()
-      }
-      s.table("graft_q_stream_geofence").orderBy("track_id", "step")
-    }),
-
     "q_quantiles_exact" -> ((s, dir) =>
       QuantileOps.exactQuantiles(
         s.read.parquet(s"$dir/lineitem.parquet"), "l_extendedprice",

@@ -216,8 +216,9 @@ object GraphOps {
     * Scale shape: `iters` rounds, each = one equi-join of the 16-byte/node
     * rank state against edges on src (both sides co-partitionable on the
     * same key; AQE handles hub skew) + one partially-aggregated groupBy on
-    * dst. Edges and degrees are checkpointed once and reused; the per-round
-    * localCheckpoint truncates lineage so plan size stays O(1) in iters.
+    * dst. Edges and degrees are checkpointed once and reused; a
+    * localCheckpoint every 4th round bounds plan depth, and the returned
+    * frame carries up to 3 lazy rounds that each action recomputes.
     * Nothing graph-sized ever reaches the driver. Overflow headroom:
     * total mass ≤ |V|·scale, so scale=1e6 is safe to ~9e12 nodes.
     */
@@ -266,10 +267,12 @@ object GraphOps {
     *
     * Scale shape: each round is ONE edge-keyed join (only (id, lbl) pairs
     * shuffle, never adjacency payloads) + one (node, lbl)-keyed count with
-    * map-side combine + one node-keyed argmax window whose frames are
-    * distinct-neighbor-label-bounded; k rounds = k shuffles independent of
-    * graph size; localCheckpoint truncates per-round lineage (pageRank
-    * pattern).
+    * map-side combine + one node-keyed struct-min aggregate over (−count,
+    * lbl), also map-side combined; k rounds = k shuffles independent of
+    * graph size. The rounds run lazily as one plan, with a localCheckpoint
+    * every 4th round to bound plan depth (pageRank pattern): the returned
+    * frame carries up to 3 un-checkpointed rounds, which a caller running
+    * several actions on it recomputes per action.
     *
     * Input: symmetric edge list (src, dst). Output: (id, lbl). */
   def labelPropagation(edges: DataFrame, rounds: Int,

@@ -107,15 +107,17 @@ object PatternOps {
     * (the reference's per-county processing unit as a storage layout) into
     * a fresh temp directory; returns the path. Reading with a county filter
     * is partition-pruned (verified in PatternCountySpec via the plan's
-    * PartitionFilters). */
+    * PartitionFilters). The directory tree is deleted when the JVM exits
+    * (checked in a child JVM by PatternCountySpec). */
   private val partCache = new java.util.concurrent.ConcurrentHashMap[(String, SparkSession), String]()
   def countyPartitionedPath(spark: SparkSession, feats: DataFrame, g: Int,
                             sfDir: String): String =
     partCache.computeIfAbsent((sfDir, spark), { _ =>
       val dir = java.nio.file.Files.createTempDirectory(
-        s"graft_county_${new java.io.File(sfDir).getName}_").toString
+        s"graft_county_${new java.io.File(sfDir).getName}_")
+      sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile))
       withCounty(feats, g)
-        .write.mode("overwrite").partitionBy("county").parquet(dir)
-      dir
+        .write.mode("overwrite").partitionBy("county").parquet(dir.toString)
+      dir.toString
     })
 }

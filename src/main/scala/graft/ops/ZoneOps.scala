@@ -33,6 +33,22 @@ object ZoneOps {
   private def latIdx: Column = col("cell") % GridCell.SCALE - GridCell.OFF
   private def lonIdx: Column = expr(s"cell DIV ${GridCell.SCALE}") - GridCell.OFF
 
+  /** zones with the coordinates of all their rings split into `zf_lats`
+    * and `zf_lons` (rings are flat [lon, lat, ...] arrays) */
+  private def ringCoords(zones: DataFrame): DataFrame =
+    zones
+      .withColumn("zf_flat", flatten(col("rings")))
+      .withColumn("zf_lats", expr(
+        "transform(sequence(0, size(zf_flat) DIV 2 - 1), i -> zf_flat[2*i+1])"))
+      .withColumn("zf_lons", expr(
+        "transform(sequence(0, size(zf_flat) DIV 2 - 1), i -> zf_flat[2*i])"))
+
+  /** the res-`res` cells covering the rings' bbox, from its low corner
+    * (`lat0`, `lon0`) to the rings' maxima, one row each */
+  private def ringCover(lat0: Column, lon0: Column, res: Int): Column =
+    explode(fns.cells_covering(lat0, lon0,
+      array_max(col("zf_lats")), array_max(col("zf_lons")), res))
+
   /** POLYFILL: every res-`res` grid cell whose CENTER lies inside the
     * zone's polygon (the standard H3/S2 polyfill containment mode).
     * Input zones: (zone, rings array<array<double>>, flat [lon,lat,...]
@@ -46,15 +62,8 @@ object ZoneOps {
     */
   def polyfill(zones: DataFrame, res: Int): DataFrame = {
     val p10 = pow10(res)
-    zones
-      .withColumn("zf_flat", flatten(col("rings")))
-      .withColumn("zf_lats", expr(
-        "transform(sequence(0, size(zf_flat) DIV 2 - 1), i -> zf_flat[2*i+1])"))
-      .withColumn("zf_lons", expr(
-        "transform(sequence(0, size(zf_flat) DIV 2 - 1), i -> zf_flat[2*i])"))
-      .withColumn("cell", explode(fns.cells_covering(
-        array_min(col("zf_lats")), array_min(col("zf_lons")),
-        array_max(col("zf_lats")), array_max(col("zf_lons")), res)))
+    ringCoords(zones)
+      .withColumn("cell", ringCover(array_min(col("zf_lats")), array_min(col("zf_lons")), res))
       .withColumn("c_lat", (latIdx.cast("double") + lit(0.5)) / lit(p10))
       .withColumn("c_lon", (lonIdx.cast("double") + lit(0.5)) / lit(p10))
       .filter(fns.point_in_polygon(col("c_lat"), col("c_lon"), col("rings")))
@@ -186,15 +195,8 @@ object ZoneOps {
     */
   def cellOverlap(zones: DataFrame, res: Int): DataFrame = {
     val p10 = pow10(res)
-    zones
-      .withColumn("zf_flat", flatten(col("rings")))
-      .withColumn("zf_lats", expr(
-        "transform(sequence(0, size(zf_flat) DIV 2 - 1), i -> zf_flat[2*i+1])"))
-      .withColumn("zf_lons", expr(
-        "transform(sequence(0, size(zf_flat) DIV 2 - 1), i -> zf_flat[2*i])"))
-      .withColumn("cell", explode(fns.cells_covering(
-        array_min(col("zf_lats")), array_min(col("zf_lons")),
-        array_max(col("zf_lats")), array_max(col("zf_lons")), res)))
+    ringCoords(zones)
+      .withColumn("cell", ringCover(array_min(col("zf_lats")), array_min(col("zf_lons")), res))
       .withColumn("c_lat_lo", latIdx.cast("double") / lit(p10))
       .withColumn("c_lon_lo", lonIdx.cast("double") / lit(p10))
       .withColumn("area_q4", round(fns.clip_rect_area(col("rings"),
@@ -237,16 +239,10 @@ object ZoneOps {
     val vDeg = (v: Column) => GeoStatsOps.frameDeg(v, frameLon0)
     val a = extents.withColumn("cell", explode(fns.cells_covering(
       uDeg(col("uLo")), vDeg(col("vLo")), uDeg(col("uHi")), vDeg(col("vHi")), res)))
-    val b = zones
-      .withColumn("zf_flat", flatten(col("rings")))
-      .withColumn("zf_lats", expr(
-        "transform(sequence(0, size(zf_flat) DIV 2 - 1), i -> zf_flat[2*i+1])"))
-      .withColumn("zf_lons", expr(
-        "transform(sequence(0, size(zf_flat) DIV 2 - 1), i -> zf_flat[2*i])"))
+    val b = ringCoords(zones)
       .withColumn("zf_lat0", array_min(col("zf_lats")))
       .withColumn("zf_lon0", array_min(col("zf_lons")))
-      .withColumn("cell", explode(fns.cells_covering(col("zf_lat0"), col("zf_lon0"),
-        array_max(col("zf_lats")), array_max(col("zf_lons")), res)))
+      .withColumn("cell", ringCover(col("zf_lat0"), col("zf_lon0"), res))
       .select(col("zone"), col("rings"), col("zf_lat0"), col("zf_lon0"), col("cell"))
     a.join(b.hint("SHUFFLE_HASH"), Seq("cell"))
       .filter(col("cell") === fns.cell_encode(greatest(uDeg(col("uLo")), col("zf_lat0")),

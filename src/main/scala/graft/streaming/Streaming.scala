@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -312,5 +313,66 @@ object Streaming {
             closed.reverseIterator
           }
       }
+  }
+
+  /** Row cap of one replayed feed: the largest feed, the unsliced events
+    * table, is 1,000,000 rows at sf1.0 (the geofence slice stays at 545,480
+    * points at every scale because its modulus grows with the corpus). */
+  private val ReplayRows = 1 << 21
+  /** Byte cap of one replayed feed, against the JVM size estimate of its
+    * rows: the events feed estimates at 164 bytes a row (16.4 MB at sf0.1,
+    * so about 165 MB at sf1.0), the geofence slice at 72.4 MB. */
+  private val ReplayBytes = 1L << 29
+
+  /** The one replay harness of the registry's streaming twins. The reference
+    * is batch-only, so a twin replays its batch input through Structured
+    * Streaming and must land on the batch oracle's rows.
+    *
+    * `feed` is pulled to the driver once through `Driver.collectBounded`
+    * (caps `ReplayRows` and `ReplayBytes`) and added to one MemoryStream as
+    * one batch; `query` builds the streaming plan over that stream, which
+    * writes into the memory table `table` in `outputMode`. The collect is the
+    * harness, not the operator: at scale the stream arrives from a real
+    * source. Row order within the batch is free: every twin sorts inside
+    * its groups or aggregates exact integers.
+    *
+    * The micro-batches run at 8 shuffle partitions: the feeds are small, so
+    * more state-store partitions are per-task overhead only, and every
+    * stateful operator here is keyed, so its output does not depend on the
+    * partition count. The session's value is restored in a `finally` that
+    * also covers a query that fails to start.
+    *
+    * Waiting: `processAllAvailable`, unless `expectedRows` is given. A
+    * query with ProcessingTimeTimeout state spins empty micro-batches
+    * forever under `processAllAvailable`, so the harness polls the table up
+    * to the row count `expectedRows` computes from the replayed rows
+    * instead, and throws if the table does not hold exactly that many rows
+    * within 180 s. Returns the memory table. */
+  def replay(spark: SparkSession, feed: DataFrame, table: String, outputMode: String,
+             expectedRows: Option[Seq[Row] => Long] = None)(
+      query: DataFrame => Dataset[_]): DataFrame = {
+    val rows = graft.ops.Driver.collectBounded(feed, ReplayRows, ReplayBytes,
+      s"replay feed of $table").toIndexedSeq
+    val mem = MemoryStream[Row](Encoders.row(feed.schema), spark.sqlContext)
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "8")
+    try {
+      val q = query(mem.toDF()).writeStream.format("memory").queryName(table)
+        .outputMode(outputMode).start()
+      try {
+        mem.addData(rows)
+        expectedRows.map(_(rows)) match {
+          case None => q.processAllAvailable()
+          case Some(n) =>
+            val deadline = System.currentTimeMillis() + 180000L
+            while (spark.table(table).count() < n && System.currentTimeMillis() < deadline)
+              Thread.sleep(100)
+            val got = spark.table(table).count()
+            require(got == n, s"$table: the stream reached $got rows, not the expected $n")
+        }
+      } finally q.stop()
+    } finally spark.conf.set(key, prev)
+    spark.table(table)
   }
 }

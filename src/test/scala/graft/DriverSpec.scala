@@ -59,14 +59,16 @@ class DriverSpec extends AnyFunSuite {
     assert(Driver.collectWithin(df, 20, bytes - 1).left.exists(_.contains(s"cap of ${bytes - 1} bytes")))
   }
 
-  /** files of ops, text, sim and sources holding more `pattern` matches
-    * than `allowed` grants them (0 when unnamed) */
+  /** files of ops, text, sim and sources, and the query registry
+    * SparkEntry.scala, holding more `pattern` matches than `allowed` grants
+    * them (0 when unnamed) */
   private def overCap(pattern: String, allowed: Map[String, Int]): Seq[String] = {
     val root = new java.io.File("src/main/scala/graft")
     val files = Seq("ops", "text", "sim", "sources")
       .flatMap(d => Option(new java.io.File(root, d).listFiles()).getOrElse(Array.empty[java.io.File]))
-      .filter(_.getName.endsWith(".scala"))
-    assert(files.exists(_.getName == "WayOps.scala"), s"sources not found under ${root.getAbsolutePath}")
+      .filter(_.getName.endsWith(".scala")) :+ new java.io.File(root, "SparkEntry.scala")
+    assert(files.exists(_.getName == "WayOps.scala") && files.forall(_.isFile),
+      s"sources not found under ${root.getAbsolutePath}")
     files.flatMap { f =>
       val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
       val n = pattern.r.findAllMatchIn(src).length
@@ -89,5 +91,14 @@ class DriverSpec extends AnyFunSuite {
     // counts may only go down
     val over = overCap("\\.cache\\(\\)", Map("TextOps.scala" -> 1))
     assert(over.isEmpty, over.mkString("\n"))
+  }
+
+  test("lint: the registry replays streams only through Streaming.replay") {
+    // the streaming twins' MemoryStream, feed collect and shuffle-partition
+    // scope live in one harness
+    val src = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")), "UTF-8")
+    for (p <- Seq("MemoryStream", "spark.sql.shuffle.partitions", ".unpersist("))
+      assert(!src.contains(p), s"SparkEntry.scala holds $p")
   }
 }

@@ -81,30 +81,12 @@ object LineageKillMain {
 class LineageKillSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
-  private def javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
-
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
   test("SIGKILL mid-stage2 write: stage1 resumes without recompute, output matches uninterrupted run") {
     val dir = Files.createTempDirectory("lineage_kill").toString
 
     // ---- phase 1: fork the pipeline and pull the plug mid-stage2 --------
-    val cmd = (Seq(javaBin) ++ addOpens ++ Seq("-Xmx3g", "graft.LineageKillMain", dir))
-    val pb = new ProcessBuilder(cmd: _*)
-    // java honors CLASSPATH from the environment; the test JVM's own
-    // classpath carries the compiled test classes + all Spark jars
-    pb.environment().put("CLASSPATH", sys.props("java.class.path"))
-    pb.redirectErrorStream(true)
-    pb.redirectOutput(new java.io.File(s"$dir/child.log"))
-    val proc = pb.start()
+    val proc = ChildJvm.start("graft.LineageKillMain", Seq(dir),
+      new java.io.File(s"$dir/child.log"), Seq("-Xmx3g"))
     // kill the instant stage2's overwrite is physically in flight: Spark
     // creates <out>/data/_temporary at job start, tasks then stream rows
     // (slowed to ~30 s by the park) — SIGKILL lands mid-write by a margin

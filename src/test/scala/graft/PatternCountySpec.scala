@@ -4,6 +4,25 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.ops.PatternOps
 
+/** Child-JVM entry point: writes one county-partitioned directory, records
+  * its path in `args(1)` and exits. */
+object PatternCountyMain {
+  def main(args: Array[String]): Unit = {
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[1]")
+      .config("spark.sql.shuffle.partitions", "1")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    import spark.implicits._
+    val feats = Seq(("Main St", "Main St", 37.0001, -122.0001)).toDF("streets", "raw", "lat", "lon")
+    val path = PatternOps.countyPartitionedPath(spark, feats, 128, args(0))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(args(1)), path)
+    spark.stop()
+    sys.exit(0)
+  }
+}
+
 /** F16 pattern-table join semantics + county partition pruning. */
 class PatternCountySpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -68,5 +87,23 @@ class PatternCountySpec extends AnyFunSuite {
     assert(got(0)._1 !== got(1)._1, "two sessions share one county directory")
     assert(got(0)._2.forall(_.nonEmpty))
     assert(got(0)._2 === got(1)._2)
+  }
+
+  test("county directory: a JVM that wrote one leaves no directory behind at exit") {
+    import java.nio.file.{Files, Paths}
+    val tmp = Files.createTempDirectory("county_exit")
+    try {
+      val record = tmp.resolve("path.txt")
+      val proc = ChildJvm.start("graft.PatternCountyMain", Seq("sf_exit", record.toString),
+        tmp.resolve("child.log").toFile, Seq("-Xmx1g", s"-Djava.io.tmpdir=$tmp"))
+      assert(proc.waitFor(180, java.util.concurrent.TimeUnit.SECONDS) ||
+        { proc.destroyForcibly(); false }, "child JVM did not exit")
+      def log = scala.util.Try(Files.readString(tmp.resolve("child.log"))).getOrElse("")
+      assert(proc.exitValue() === 0, s"child log:\n$log")
+      val path = Paths.get(Files.readString(record))
+      assert(path.getParent === tmp &&
+        path.getFileName.toString.startsWith("graft_county_sf_exit_"), path)
+      assert(!Files.exists(path), s"$path outlived its JVM")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
   }
 }

@@ -336,6 +336,37 @@ class StreamCkptSpec extends AnyFunSuite {
     have().foreach { case (id, flags) => assert(flags.size === 1, s"flag flip on doc $id") }
   }
 
+  test("replay: one feed through the harness, micro-batches at 8 partitions, session value restored") {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    assert(before !== "8")
+    val feed = spark.range(0, 300, 1, 3).select((col("id") % 7).as("k"), col("id"))
+    var inside = ""
+    val out = Streaming.replay(spark, feed, "replay_counts", "complete") { f =>
+      inside = spark.conf.get(key)
+      f.groupBy(col("k")).agg(count(lit(1)).as("n"), sum(col("id")).as("s"))
+    }
+    assert(inside === "8")
+    assert(spark.conf.get(key) === before)
+    val want = (0L until 300L).groupBy(_ % 7).map { case (k, v) => (k, v.size.toLong, v.sum) }
+    assert(out.as[(Long, Long, Long)].collect().toSet === want.toSet)
+    // the polling wait: append mode, one output row per feed row
+    val polled = Streaming.replay(spark, feed, "replay_rows", "append", Some(_.length.toLong))(identity)
+    assert(polled.count() === 300L && spark.conf.get(key) === before)
+  }
+
+  test("replay: a query that fails at start() throws and leaves the shuffle partitions as they were") {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    assert(before !== "8")
+    // complete mode needs an aggregation: start() rejects this query
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      Streaming.replay(spark, spark.range(0, 10).toDF("id"), "replay_bad_start", "complete")(identity)
+    }
+    assert(e.getMessage.toLowerCase.contains("complete"), e.getMessage)
+    assert(spark.conf.get(key) === before)
+  }
+
   test("lineage checkpoint: stage skipped on resume, recomputed on input change") {
     val dir = java.nio.file.Files.createTempDirectory("ckpt").toString
     val counter = new java.util.concurrent.atomic.AtomicInteger(0)
