@@ -2,7 +2,7 @@ package graft.ckpt
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, XxHash64}
 import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
@@ -28,14 +28,7 @@ object Lineage {
     * aggregate. Xor is associative and overflow-free (ANSI-safe), so the xor
     * over all partitions equals a global `bit_xor(xxhash64(...))` whatever
     * the partition layout; empty partitions contribute (0 rows, 0). */
-  def partStats(df: DataFrame): Array[PartStat] =
-    df.select(xxhash64(df.columns.map(col).toIndexedSeq: _*)).queryExecution.toRdd
-      .mapPartitionsWithIndex { (p, rows) =>
-        var n = 0L
-        var h = 0L
-        while (rows.hasNext) { h ^= rows.next().getLong(0); n += 1 }
-        Iterator.single(PartStat(p, n, h))
-      }.collect()
+  def partStats(df: DataFrame): Array[PartStat] = hashed(Seq(inOrder(df))).head
 
   /** (total rows, xor of the per-partition hashes): partition-layout independent. */
   private def totals(stats: Seq[PartStat]): (Long, Long) =
@@ -44,8 +37,40 @@ object Lineage {
   /** order-insensitive fingerprint of an input DataFrame: xor of 64-bit row
     * hashes over the sorted columns (= global `bit_xor(xxhash64(sorted cols))`,
     * 0 for an empty input) — collision-safe enough for resume decisions. */
-  def fingerprint(df: DataFrame): Long =
-    totals(partStats(df.select(df.columns.sorted.map(col).toIndexedSeq: _*)))._2
+  def fingerprint(df: DataFrame): Long = totals(hashed(Seq(byName(df))).head)._2
+
+  /** a frame and the column ordinals its row hash reads, in hash order */
+  private type Hashed = (DataFrame, Seq[Int])
+  private def inOrder(df: DataFrame): Hashed = (df, df.schema.indices)
+  private def byName(df: DataFrame): Hashed = {
+    val names = df.schema.fieldNames
+    (df, names.indices.sortBy(names(_)))
+  }
+
+  /** `partStats` of several frames in ONE map-only job. Each frame's own
+    * `queryExecution.toRdd` is hashed with a bound `XxHash64` (seed 42, the
+    * value of `functions.xxhash64`); Spark keeps that RDD on the DataFrame
+    * object, so hashing a frame again plans nothing and re-runs none of its
+    * shuffle map stages. The union's per-partition results are split back
+    * per frame by partition offset. */
+  private def hashed(frames: Seq[Hashed]): Seq[Array[PartStat]] = {
+    val rdds = frames.map { case (df, ordinals) =>
+      val fields = df.schema.fields
+      val hash = XxHash64(ordinals.map(i =>
+        BoundReference(i, fields(i).dataType, fields(i).nullable)), 42L)
+      val check = hash.checkInputDataTypes()
+      require(check.isSuccess, s"cannot hash the rows of ${df.schema.simpleString}: $check")
+      df.queryExecution.toRdd.mapPartitionsWithIndex { (p, rows) =>
+        var n = 0L
+        var h = 0L
+        while (rows.hasNext) { h ^= hash.eval(rows.next()).asInstanceOf[Long]; n += 1 }
+        Iterator.single(PartStat(p, n, h))
+      }
+    }
+    val stats = rdds.head.sparkContext.union(rdds).collect()
+    val ends = rdds.scanLeft(0)(_ + _.getNumPartitions)
+    ends.zip(ends.tail).map { case (from, until) => stats.slice(from, until) }
+  }
 
   private def manifestPath(dir: String) = Paths.get(dir, "_lineage_manifest.json")
 
@@ -78,12 +103,23 @@ object Lineage {
     * output. This is the resume path: a killed job re-invokes materialize
     * and every finished stage short-circuits to a parquet read.
     *
-    * Job budget: 2 map-only bookkeeping jobs beyond the stage's own, whether
-    * committing or resuming (plus any shuffles in the input's own plan) — the
-    * input fingerprint and one `partStats` pass, over the read-back on commit
-    * (so the manifest describes the bytes on disk) or over the stored data on
-    * resume. Both reads use the recorded schema: no inference job, and the
-    * validated DataFrame is the one returned.
+    * Job budget, in map-only bookkeeping jobs beyond the stage's own (plus
+    * the shuffles of the input's own plan, the first time that frame is
+    * hashed):
+    *  - resume (manifest present): 1, hashing the input and the stored data
+    *    together; the stage is skipped iff the fingerprint and the stored
+    *    (rows, xor) totals both match the manifest;
+    *  - cold commit (no manifest): 1 after the write, hashing the input and
+    *    the read-back together, so the manifest describes the bytes on disk;
+    *  - stale manifest: the resume job, then `partStats` of the read-back;
+    *  - stored data unreadable with the recorded schema: the failed resume
+    *    job, a lone fingerprint job (an input that cannot be hashed throws
+    *    here, before the manifest is touched), then `partStats` of the
+    *    read-back.
+    * Each frame is planned once: the same input hashed by every stage, or a
+    * returned frame fed to the next stage, reuses its `toRdd`. Both reads
+    * use the recorded schema: no inference job, and the validated DataFrame
+    * is the one returned.
     *
     * Crash safety: the manifest is DELETED before the data rewrite starts —
     * a job killed mid-overwrite leaves data without a manifest, which can
@@ -94,21 +130,30 @@ object Lineage {
     * detected and recomputed too. */
   def materialize(spark: SparkSession, outDir: String, input: DataFrame,
                   stage: DataFrame => DataFrame): DataFrame = {
-    val fp = fingerprint(input)
     val data = s"$outDir/data"
-    val served = readManifest(outDir).filter(_.inputFingerprint == fp).flatMap { m =>
+    val in = byName(input)
+    // (input fingerprint, the stored frame if it is valid) when a manifest exists
+    val resumed = readManifest(outDir).map { m =>
       Try {
         val stored = spark.read.schema(m.schema).parquet(data)
-        (stored, totals(partStats(stored)))
-      }.toOption.collect { case (stored, actual) if actual == m.totals => stored }
+        val Seq(inStats, storedStats) = hashed(Seq(in, inOrder(stored)))
+        val fp = totals(inStats)._2
+        (fp, Option.when(fp == m.inputFingerprint && totals(storedStats) == m.totals)(stored))
+      }.getOrElse((fingerprint(input), None)) // stored side unreadable; input errors throw here
     }
-    served.getOrElse {
+    resumed.flatMap(_._2).getOrElse {
       // invalidate FIRST: no window where an old manifest covers new bytes
       Files.deleteIfExists(manifestPath(outDir))
       val out = stage(input)
       out.write.mode("overwrite").parquet(data)
       val written = spark.read.schema(out.schema).parquet(data)
-      writeManifest(outDir, fp, out.schema, partStats(written))
+      val (fp, stats) = resumed match {
+        case Some((fp, _)) => (fp, partStats(written))
+        case None =>
+          val Seq(inStats, writtenStats) = hashed(Seq(in, inOrder(written)))
+          (totals(inStats)._2, writtenStats)
+      }
+      writeManifest(outDir, fp, out.schema, stats)
       written
     }
   }

@@ -59,12 +59,12 @@ class DriverSpec extends AnyFunSuite {
     assert(Driver.collectWithin(df, 20, bytes - 1).left.exists(_.contains(s"cap of ${bytes - 1} bytes")))
   }
 
-  /** files of ops, text, sim and sources, and the query registry
+  /** files of ops, text, sim, sources and ckpt, and the query registry
     * SparkEntry.scala, holding more `pattern` matches than `allowed` grants
     * them (0 when unnamed) */
   private def overCap(pattern: String, allowed: Map[String, Int]): Seq[String] = {
     val root = new java.io.File("src/main/scala/graft")
-    val files = Seq("ops", "text", "sim", "sources")
+    val files = Seq("ops", "text", "sim", "sources", "ckpt")
       .flatMap(d => Option(new java.io.File(root, d).listFiles()).getOrElse(Array.empty[java.io.File]))
       .filter(_.getName.endsWith(".scala")) :+ new java.io.File(root, "SparkEntry.scala")
     assert(files.exists(_.getName == "WayOps.scala") && files.forall(_.isFile),
@@ -79,10 +79,11 @@ class DriverSpec extends AnyFunSuite {
 
   test("lint: no new raw .collect() in ops, text, sim and sources") {
     // new driver pulls go through Driver.collectBounded; these counts may
-    // only go down
+    // only go down. Lineage.scala's one is the per-partition stats array:
+    // one (rows, hash) row per partition, bounded by the partition count.
     val over = overCap("\\.collect\\(\\)", Map("Driver.scala" -> 1,
       "ClusterOps.scala" -> 1, "QuantileOps.scala" -> 5, "TextOps.scala" -> 3,
-      "SimOps.scala" -> 3))
+      "SimOps.scala" -> 3, "Lineage.scala" -> 1))
     assert(over.isEmpty, over.mkString("\n"))
   }
 

@@ -78,11 +78,11 @@ object LineageKillMain {
   * recompute only the torn stage2, and land on byte-identical results to an
   * uninterrupted run. (StreamCkptSpec covers the polite restarts and the
   * simulated torn-data cases; this one actually pulls the plug.) */
-class LineageKillSpec extends AnyFunSuite {
+class LineageKillSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkTestSession.spark
 
   test("SIGKILL mid-stage2 write: stage1 resumes without recompute, output matches uninterrupted run") {
-    val dir = Files.createTempDirectory("lineage_kill").toString
+    val dir = tempDir("lineage_kill")
 
     // ---- phase 1: fork the pipeline and pull the plug mid-stage2 --------
     val proc = ChildJvm.start("graft.LineageKillMain", Seq(dir),
@@ -119,7 +119,7 @@ class LineageKillSpec extends AnyFunSuite {
       s"resume must skip stage1 and recompute only stage2; got $runsAfterResume")
 
     // ---- phase 3: byte-equivalence with an uninterrupted run -------------
-    val cleanDir = Files.createTempDirectory("lineage_clean").toString
+    val cleanDir = tempDir("lineage_clean")
     val clean = LineageKillPipeline.run(spark, cleanDir)
     val a = resumed.orderBy("g").collect().map(_.toSeq).toSeq
     val b = clean.orderBy("g").collect().map(_.toSeq).toSeq

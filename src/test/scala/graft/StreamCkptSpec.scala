@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.streaming.Streaming
 import graft.ckpt.Lineage
+import scala.jdk.CollectionConverters._
 
-class StreamCkptSpec extends AnyFunSuite {
+class StreamCkptSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -299,7 +300,7 @@ class StreamCkptSpec extends AnyFunSuite {
     // including across a query kill + checkpoint restart, because the chosen
     // survivor lives in the versioned state store, not in task memory.
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("dedup_ckpt").toString
+    val ckpt = tempDir("dedup_ckpt")
     val mem = MemoryStream[Streaming.DocIn]
     val buf = new java.util.concurrent.ConcurrentLinkedQueue[Streaming.DedupOut]()
     def start() = Streaming.dedupStream(spark, mem.toDS())
@@ -368,7 +369,7 @@ class StreamCkptSpec extends AnyFunSuite {
   }
 
   test("lineage checkpoint: stage skipped on resume, recomputed on input change") {
-    val dir = java.nio.file.Files.createTempDirectory("ckpt").toString
+    val dir = tempDir("ckpt")
     val counter = new java.util.concurrent.atomic.AtomicInteger(0)
     val input1 = spark.range(100).toDF("id")
     def stage(df: org.apache.spark.sql.DataFrame) = {
@@ -391,7 +392,7 @@ class StreamCkptSpec extends AnyFunSuite {
   }
 
   test("lineage crash safety: stale manifest over torn data recomputes, never serves") {
-    val dir = java.nio.file.Files.createTempDirectory("ckpt2").toString
+    val dir = tempDir("ckpt2")
     val counter = new java.util.concurrent.atomic.AtomicInteger(0)
     val input = spark.range(100).toDF("id")
     def stage(df: org.apache.spark.sql.DataFrame) = {
@@ -422,7 +423,7 @@ class StreamCkptSpec extends AnyFunSuite {
     * rewrites part of it, and the next materialize must recompute exactly
     * once and serve the correct rows. */
   private def assertRecomputes(what: String)(damage: String => Unit): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory("ckpt_skip").toString
+    val dir = tempDir("ckpt_skip")
     val counter = new java.util.concurrent.atomic.AtomicInteger(0)
     val input = spark.range(100).toDF("id")
     Lineage.materialize(spark, dir, input, sqStage(counter))
@@ -459,7 +460,7 @@ class StreamCkptSpec extends AnyFunSuite {
   }
 
   test("lineage skip path: a healthy checkpoint skips; the stage closure runs 0 times") {
-    val dir = java.nio.file.Files.createTempDirectory("ckpt_ok").toString
+    val dir = tempDir("ckpt_ok")
     val counter = new java.util.concurrent.atomic.AtomicInteger(0)
     val input = spark.range(0, 100, 1, 3).toDF("id")
     val committed = Lineage.materialize(spark, dir, input, sqStage(counter))
@@ -494,15 +495,62 @@ class StreamCkptSpec extends AnyFunSuite {
     assert(xorOf(Lineage.partStats(empty)) === 0L)
   }
 
-  test("lineage bookkeeping: exactly 2 jobs beyond the stage's own, committing and resuming") {
+  test("lineage bookkeeping: 1 job beyond the stage's own to commit, 1 to resume") {
     def jobs(action: => Unit): Int = JobCounter.jobs(spark)(action)
     val input = spark.range(0, 1000, 1, 4).toDF("id")
     def stage(df: DataFrame) = df.withColumn("sq", col("id") * col("id")) // map-only
-    val scratch = java.nio.file.Files.createTempDirectory("ckpt_jobs").toString
+    val scratch = tempDir("ckpt_jobs")
     val own = jobs(stage(input).write.parquet(s"$scratch/plain"))
     assert(own >= 1)
     val dir = s"$scratch/ckpt"
-    assert(jobs(Lineage.materialize(spark, dir, input, stage)) === own + 2, "commit")
-    assert(jobs(Lineage.materialize(spark, dir, input, stage)) === 2, "resume")
+    assert(jobs(Lineage.materialize(spark, dir, input, stage)) === own + 1, "commit")
+    assert(jobs(Lineage.materialize(spark, dir, input, stage)) === 1, "resume")
+  }
+
+  test("lineage bookkeeping: a shuffled input frame materialized twice resumes in 1 job") {
+    // the hash reads the frame's own planned RDD: its shuffle map stage ran
+    // once, when the commit hashed it, and is neither planned nor run again
+    val input = spark.range(0, 1000, 1, 4).toDF("id").repartition(3, col("id") % 7)
+    def stage(df: DataFrame) = df.withColumn("sq", col("id") * col("id"))
+    val dir = s"${tempDir("ckpt_jobs")}/ckpt"
+    Lineage.materialize(spark, dir, input, stage)
+    assert(JobCounter.jobs(spark)(Lineage.materialize(spark, dir, input, stage)) === 1)
+  }
+
+  test("lineage resume job: the input and stored sides are split by partition offset") {
+    // 3 input partitions against 1 stored file: a split at the wrong offset,
+    // or the two sides swapped, puts one side's hashes in the other's place
+    def globalXor(df: DataFrame, cols: String*): Long =
+      df.select(xxhash64(cols.map(col): _*).as("h")).agg(expr("bit_xor(h)")).as[Long].head()
+    val dir = tempDir("ckpt_sides")
+    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
+    def stage(df: DataFrame) = sqStage(counter)(df).coalesce(1)
+    val input = spark.range(0, 90, 1, 3).toDF("id")
+    val committed = Lineage.materialize(spark, dir, input, stage)
+    assert(input.rdd.getNumPartitions === 3 && committed.rdd.getNumPartitions === 1)
+    val m = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(java.nio.file.Paths.get(dir, "_lineage_manifest.json").toFile)
+    assert(m.get("input_fingerprint").asLong === globalXor(input, "id"))
+    val parts = m.get("partitions").elements.asScala.toSeq
+    assert(parts.map(p => (p.get("rows").asLong, p.get("hash").asLong)) ===
+      Seq((90L, globalXor(committed, "id", "sq"))), "the stored side's one partition")
+
+    val resumed = Lineage.materialize(spark, dir, input, stage)
+    assert(counter.get() === 1, "a healthy checkpoint must skip")
+    assert(resumed.orderBy("id").collect().toSeq === committed.orderBy("id").collect().toSeq)
+
+    spark.range(0, 90).toDF("id")
+      .withColumn("sq", when(col("id") === 42, lit(0L)).otherwise(col("id") * col("id")))
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/data")
+    Lineage.materialize(spark, dir, input, stage)
+    assert(counter.get() === 2, "one changed stored value must recompute")
+
+    val changed = input.withColumn("id", when(col("id") === 42, lit(1042L)).otherwise(col("id")))
+    val out = Lineage.materialize(spark, dir, changed, stage)
+    assert(counter.get() === 3, "one changed input row must recompute")
+    assert(out.agg(sum(col("sq"))).as[Long].head() ===
+      (0L until 90L).map(i => if (i == 42) 1042L * 1042L else i * i).sum)
+    Lineage.materialize(spark, dir, changed, stage)
+    assert(counter.get() === 3, "the recomputed checkpoint must skip")
   }
 }
