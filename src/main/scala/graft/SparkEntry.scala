@@ -1156,7 +1156,7 @@ object SparkEntry {
         .orderBy("id1", "id2")),
 
     "q_doc_minhash_lsh" -> ((s, dir) =>
-      TextOps.minHashLshPairs(s, Synth.documents(s, dir), jaccardMin = 0.2)
+      TextOps.minHashLshPairs(Synth.documents(s, dir), jaccardMin = 0.2)
         .select(col("id1"), col("id2"), round(col("jaccard"), 6).as("jaccard"))
         .orderBy("id1", "id2")),
 
@@ -1271,7 +1271,7 @@ object SparkEntry {
     // the brute-force exact-Jaccard pair set.
     "q_doc_minhash_eval" -> ((s, dir) => {
       val docs = Synth.documents(s, dir).select("doc_id", "text")
-      TextOps.minHashLshEval(s, docs.unionByName(mutatedTwins(docs)))
+      TextOps.minHashLshEval(docs.unionByName(mutatedTwins(docs)))
     }),
 
     // the recall CURVE: the same audit swept across Jaccard thresholds
@@ -1280,7 +1280,7 @@ object SparkEntry {
     // empirically (recall rises with J, precision-at-t falls)
     "q_doc_minhash_sweep" -> ((s, dir) => {
       val docs = Synth.documents(s, dir).select("doc_id", "text")
-      TextOps.minHashLshThresholdSweep(s, docs.unionByName(mutatedTwins(docs)))
+      TextOps.minHashLshThresholdSweep(docs.unionByName(mutatedTwins(docs)))
         .orderBy("t_milli")
     }),
 
@@ -1290,7 +1290,7 @@ object SparkEntry {
     // minhash's tunable banding would be reconfigured instead
     "q_doc_simhash_eval" -> ((s, dir) => {
       val docs = Synth.documents(s, dir).select("doc_id", "text")
-      TextOps.simHashEval(s, docs.unionByName(mutatedTwins(docs)))
+      TextOps.simHashEval(docs.unionByName(mutatedTwins(docs)))
     }),
 
     // BPE APPLY: the corpus encoded with the 6 trained rules via dictionary
@@ -1374,7 +1374,7 @@ object SparkEntry {
     // recursive-CTE transitive closure over the exact-Jaccard pair set.
     "q_doc_dedup_components" -> ((s, dir) =>
       GraphOps.dedupClusters(
-        TextOps.minHashLshPairs(s, Synth.documents(s, dir), jaccardMin = 0.2))
+        TextOps.minHashLshPairs(Synth.documents(s, dir), jaccardMin = 0.2))
         .select(col("id").as("doc_id"), col("component"), col("is_survivor"))
         .orderBy("doc_id")),
 

@@ -1,6 +1,6 @@
 package graft.sim
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.exprs.fns
@@ -11,6 +11,18 @@ import graft.exprs.fns
   */
 object SimOps {
 
+  /** the candidate ranking key: cosine(q_emb, embedding) as nano-units */
+  private val cos9 = round(fns.cosine_sim(col("q_emb"), col("embedding")) * lit(1e9), 0).cast("long")
+
+  /** the k best candidates per query by (cos9 DESC, vec_id ASC), with the
+    * nano-rounded cosine back as a double named `cos` */
+  private def ranked(cand: DataFrame, k: Int, cos: String = "cos_sim"): DataFrame = {
+    val w = Window.partitionBy("q_id").orderBy(col("cos9").desc, col("vec_id"))
+    cand.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+      .select(col("q_id"), col("rk"), col("vec_id").as("neighbor"),
+        (col("cos9").cast("double") / lit(1e9)).as(cos))
+  }
+
   /** brute-force cosine top-k: queries (small, broadcast) × corpus.
     * Ranking key is round(cos*1e9) desc then vec_id asc so ordering is
     * engine-reproducible. */
@@ -20,12 +32,8 @@ object SimOps {
     val q = emb.filter(queryPred)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val cand = broadcast(q).join(emb, col("q_id") =!= col("vec_id"))
-      .withColumn("cos", fns.cosine_sim(col("q_emb"), col("embedding")))
-      .withColumn("cos9", round(col("cos") * lit(1e9), 0).cast("long"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos9").desc, col("vec_id"))
-    cand.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("q_id"), col("rk"), col("vec_id").as("neighbor"),
-        (col("cos9").cast("double") / lit(1e9)).as("cos_sim"))
+      .withColumn("cos9", cos9)
+    ranked(cand, k)
   }
 
   /** Exact k-NN PAIR graph over the whole corpus: (a = query id, b =
@@ -43,8 +51,7 @@ object SimOps {
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val cand = broadcast(q).join(emb, col("q_id") =!= col("vec_id"))
       .select(col("q_id"),
-        round(fns.cosine_sim(col("q_emb"), col("embedding")) * lit(1e9), 0)
-          .cast("long").as("cos9"),
+        cos9.as("cos9"),
         col("vec_id"))
     cand.groupBy("q_id")
       .agg(graft.exprs.topk.topk_agg(col("cos9"), col("vec_id"), k).as("top"))
@@ -92,8 +99,7 @@ object SimOps {
       col("embedding").as("q_emb"), col("label").as("true_label"))
     val top = broadcast(q).join(emb, col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("true_label"),
-        round(fns.cosine_sim(col("q_emb"), col("embedding")) * lit(1e9), 0)
-          .cast("long").as("cos9"),
+        cos9.as("cos9"),
         col("vec_id"))
       .groupBy("q_id", "true_label")
       .agg(graft.exprs.topk.topk_agg(col("cos9"), col("vec_id"), k).as("top"))
@@ -169,9 +175,6 @@ object SimOps {
 
   /** deterministic pseudo-random hyperplanes for sign-LSH (splitmix64 per
     * (table, plane, dim), mapped to [-1, 1)). */
-  def hyperplanes(nPlanes: Int, dim: Int): Array[Array[Double]] =
-    hyperplanesFor(0, nPlanes, dim)
-
   def hyperplanesFor(table: Int, nPlanes: Int, dim: Int): Array[Array[Double]] =
     Array.tabulate(nPlanes) { p0 =>
       val p = table * 1000 + p0
@@ -184,44 +187,32 @@ object SimOps {
       }
     }
 
-  /** sign-LSH bucket key: nPlanes sign bits of dot(embedding, plane). */
-  def lshBucket(emb: org.apache.spark.sql.Column, planes: Array[Array[Double]]): org.apache.spark.sql.Column = {
-    val bits = planes.zipWithIndex.map { case (plane, i) =>
-      val dot = aggregate(
-        zip_with(emb, lit(plane), (x, p) => x.cast("double") * p),
+  /** the sign-LSH bucket key of `emb` in each of `tables` plane sets: the
+    * nPlanes sign bits of dot(embedding, plane). */
+  private[graft] def lshKeys(emb: Column, nPlanes: Int, tables: Int, dim: Int): Seq[Column] =
+    (0 until tables).map(t => hyperplanesFor(t, nPlanes, dim).zipWithIndex.map { case (plane, i) =>
+      val dot = aggregate(zip_with(emb, lit(plane), (x, p) => x.cast("double") * p),
         lit(0.0), (acc, x) => acc + x)
       when(dot >= 0, lit(1L << i)).otherwise(lit(0L))
-    }
-    bits.reduce((a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) => a + b)
-  }
+    }.reduce(_ + _))
 
   /** Multi-table sign-LSH ANN: `tables` independent plane sets of `nPlanes`
     * bits each; candidates = union over tables of same-bucket rows (the
-    * standard LSH recall amplifier: P(hit) = 1-(1-p^k)^T). Scale path: each
-    * table is an equi-join on (table, bucket) — no all-pairs product.
+    * standard LSH recall amplifier: P(hit) = 1-(1-p^k)^T). Scale path: the
+    * BROADCAST query set probes the corpus in one banded pair join on
+    * (table, bucket), each (query, vector) pair kept at its first shared
+    * table — no all-pairs product, no dedup shuffle.
     * Approximate — recall measured in tests against bruteForceTopK. */
   def lshTopK(embeddings: DataFrame, queryPred: org.apache.spark.sql.Column,
               k: Int, nPlanes: Int = 4, tables: Int = 8, dim: Int = 64): DataFrame = {
     val emb = graft.ops.Par.spread(embeddings, col("vec_id"))
-    val bucketCols = (0 until tables).map { t =>
-      lshBucket(col("embedding"), hyperplanesFor(t, nPlanes, dim)).as(s"b$t")
-    }
-    val withB = emb.select(col("*") +: bucketCols: _*)
-      .select(col("vec_id"), col("embedding"),
-        posexplode(array((0 until tables).map(t => col(s"b$t")): _*)))
-      .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "bucket")
-    val q = withB.filter(queryPred)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("tbl"), col("bucket"))
-    val cand = broadcast(q).join(withB, Seq("tbl", "bucket"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .dropDuplicates("q_id", "vec_id")
-      .withColumn("cos", fns.cosine_sim(col("q_emb"), col("embedding")))
-      .withColumn("cos9", round(col("cos") * lit(1e9), 0).cast("long"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos9").desc, col("vec_id"))
-    cand.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("q_id"), col("rk"), col("vec_id").as("neighbor"),
-        (col("cos9").cast("double") / lit(1e9)).as("cos_sim"))
+    val q = emb.filter(queryPred).select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    val cand = graft.ops.Bands.pairs(
+      (broadcast(q), lshKeys(col("q_emb"), nPlanes, tables, dim)),
+      (emb.select(col("vec_id"), col("embedding")), lshKeys(col("embedding"), nPlanes, tables, dim)),
+      col("q_id") =!= col("vec_id"))
+      .withColumn("cos9", cos9)
+    ranked(cand, k)
   }
 
   /** IVF (inverted-file) ANN — the classic coarse-quantizer scale path
@@ -281,12 +272,8 @@ object SimOps {
       .select(col("q_id"), col("q_emb"), col("sc.cid").as("p_list"))
     val cand = broadcast(probes)
       .join(assigned, col("p_list") === col("list_id") && col("q_id") =!= col("vec_id"))
-      .withColumn("cos9",
-        round(fns.cosine_sim(col("q_emb"), col("embedding")) * lit(1e9), 0).cast("long"))
-    val w = Window.partitionBy("q_id").orderBy(col("cos9").desc, col("vec_id"))
-    cand.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("q_id"), col("rk"), col("vec_id").as("neighbor"),
-        (col("cos9").cast("double") / lit(1e9)).as("cos_sim"))
+      .withColumn("cos9", cos9)
+    ranked(cand, k)
   }
 
   /** deterministic PQ codebooks: subvectors of the first nCentroids corpus
@@ -369,12 +356,9 @@ object SimOps {
         fns.pq_dot_table(col("embedding"), books).as("qtab"))
     val cand = broadcast(qs).join(codes, col("q_id") =!= col("vec_id"))
       .withColumn("cos9", fns.pq_adc_cos9(col("qtab"), col("codes"), books))
-    val w = Window.partitionBy("q_id").orderBy(col("cos9").desc, col("vec_id"))
-    if (rerankFactor <= 0) {
-      cand.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-        .select(col("q_id"), col("rk"), col("vec_id").as("neighbor"),
-          (col("cos9").cast("double") / lit(1e9)).as("cos_pq"))
-    } else {
+    if (rerankFactor <= 0) ranked(cand, k, "cos_pq")
+    else {
+      val w = Window.partitionBy("q_id").orderBy(col("cos9").desc, col("vec_id"))
       val short = cand.withColumn("prk", row_number().over(w))
         .filter(col("prk") <= k * rerankFactor)
         .select("q_id", "vec_id")
@@ -383,12 +367,8 @@ object SimOps {
       val exact = short
         .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
         .join(broadcast(qe), Seq("q_id"))
-        .withColumn("cos9",
-          round(fns.cosine_sim(col("q_emb"), col("embedding")) * lit(1e9), 0).cast("long"))
-      val w2 = Window.partitionBy("q_id").orderBy(col("cos9").desc, col("vec_id"))
-      exact.withColumn("rk", row_number().over(w2)).filter(col("rk") <= k)
-        .select(col("q_id"), col("rk"), col("vec_id").as("neighbor"),
-          (col("cos9").cast("double") / lit(1e9)).as("cos_sim"))
+        .withColumn("cos9", cos9)
+      ranked(exact, k)
     }
   }
 
@@ -396,8 +376,9 @@ object SimOps {
     * Single-table recall at cos θ is p^k with p = 1−θ/π (round 1 shipped one
     * table: recall ≈ 0.43 at cos 0.95 — near-dups were silently dropped);
     * T independent tables amplify to 1−(1−p^k)^T ≈ 0.9997 at cos 0.9 with
-    * k=8, T=16. Scale shape: candidate generation is an equi-join on
-    * (table, bucket) over NARROW (id) rows; embeddings join back per id for
+    * k=8, T=16. Scale shape: candidate generation is one banded pair join
+    * on (table, bucket) over NARROW (id, buckets) rows, each pair kept at its
+    * first shared table; embeddings join back per id for
     * exact cosine verification (pairs ≪ n²), so precision is exact and only
     * recall is probabilistic. Identical embeddings collapse into one bucket —
     * bucket size is bounded by the near-dup cluster size, which dedup use
@@ -405,18 +386,11 @@ object SimOps {
     * for pathological clusters. */
   def cosineNearDupPairs(embeddings: DataFrame, cosMin: Double,
                          nPlanes: Int = 8, tables: Int = 16, dim: Int = 64): DataFrame = {
-    val bucketCols = (0 until tables).map { t =>
-      lshBucket(col("embedding"), hyperplanesFor(t, nPlanes, dim)).as(s"b$t")
-    }
     val emb = graft.ops.Par.spread(embeddings, col("vec_id"))
-    val withB = emb.select(col("vec_id") +: col("embedding") +: bucketCols: _*)
-      .select(col("vec_id"),
-        posexplode(array((0 until tables).map(t => col(s"b$t")): _*)))
-      .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "bucket")
-    val l = withB.select(col("tbl"), col("bucket"), col("vec_id").as("id1"))
-    val r = withB.select(col("tbl"), col("bucket"), col("vec_id").as("id2"))
-    val pairs = l.join(r, Seq("tbl", "bucket")).filter(col("id1") < col("id2"))
-      .select("id1", "id2").dropDuplicates("id1", "id2")
+    def side(id: String, e: String) = (emb.select(col("vec_id").as(id), col("embedding").as(e)),
+      lshKeys(col(e), nPlanes, tables, dim))
+    val pairs = graft.ops.Bands.pairs(side("id1", "e1"), side("id2", "e2"), col("id1") < col("id2"))
+      .select("id1", "id2")
     val e1 = emb.select(col("vec_id").as("id1"), col("embedding").as("e1"))
     val e2 = emb.select(col("vec_id").as("id2"), col("embedding").as("e2"))
     pairs.join(e1, Seq("id1")).join(e2, Seq("id2"))
@@ -528,8 +502,7 @@ object SimOps {
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("label").as("q_label"))
     val cand = broadcast(anchors).join(emb, col("label") =!= col("q_label"))
-      .withColumn("cos9",
-        round(fns.cosine_sim(col("q_emb"), col("embedding")) * lit(1e9), 0).cast("long"))
+      .withColumn("cos9", cos9)
     val w = Window.partitionBy("q_id").orderBy(col("cos9").desc, col("vec_id"))
     cand.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
       .select(col("q_id"), col("q_label"), col("rk"),

@@ -1,9 +1,10 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession, Column}
+import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.exprs.fns
+import graft.ops.Bands
 
 /** Text-analysis + deduplication operators over the `documents` table —
   * the training-data-pipeline surface (builder brief): exact dedup,
@@ -182,31 +183,21 @@ object TextOps {
   /** MinHash+LSH near-dup candidate pairs, verified by exact shingle
     * Jaccard. k minhashes in b bands of r rows (k = b*r): docs sharing any
     * band bucket become candidates — the standard Broder/LSH construction.
-    * Scale shape: explode(bands) → groupBy(band bucket) → within-bucket
-    * self-join; no all-pairs product ever materializes.
+    * Scale shape: one banded pair join (`Bands.pairs`) on each band's
+    * 32-bit slice hash, each pair kept at its first shared band, so no
+    * all-pairs product and no dedup shuffle; the verify joins the shingle
+    * sets back in by id for just the candidates.
     */
-  def minHashLshPairs(spark: SparkSession, docs: DataFrame,
-                      bands: Int = 8, rows: Int = 4,
+  def minHashLshPairs(docs: DataFrame, bands: Int = 8, rows: Int = 4,
                       jaccardMin: Double = 0.5): DataFrame = {
-    val k = bands * rows
-    val sig = graft.ops.Par.spread(docs, col("doc_id"))
-      .select(col("doc_id"), shingles(col("text")).as("sh"))
-      .withColumn("sig", fns.minhash_sig(col("sh"), k))
-      .cache()
-    // candidate generation on NARROW rows (doc_id, band, bucket): the band
-    // self-join and pair dedup never carry shingle arrays
-    val banded = sig.select(col("doc_id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => hash(slice(col("sig"), b * lit(rows) + lit(1), lit(rows)), b))))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-    val l = banded.select(col("band"), col("bucket"), col("doc_id").as("id1"))
-    val r = banded.select(col("band"), col("bucket"), col("doc_id").as("id2"))
-    val pairs = l.join(r, Seq("band", "bucket")).filter(col("id1") < col("id2"))
-      .select("id1", "id2").dropDuplicates("id1", "id2")
-    // verification joins the shingle sets back in by id (pairs << docs²)
+    val sig = signed(docs, bands * rows)
+    val buckets = minhashBuckets(_: Column, bands, rows)
+    // the band join runs on NARROW rows (id, band keys), never shingle arrays
+    val pairs = Bands.pairs(bandSide(sig, "id1", buckets), bandSide(sig, "id2", buckets),
+      col("id1") < col("id2"))
     val sh1 = sig.select(col("doc_id").as("id1"), col("sh").as("sh1"))
     val sh2 = sig.select(col("doc_id").as("id2"), col("sh").as("sh2"))
-    pairs.join(sh1, Seq("id1")).join(sh2, Seq("id2"))
+    pairs.select("id1", "id2").join(sh1, Seq("id1")).join(sh2, Seq("id2"))
       .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))).cast("double"))
       .withColumn("uni", size(array_union(col("sh1"), col("sh2"))).cast("double"))
       .withColumn("jaccard", col("inter") / col("uni"))
@@ -214,45 +205,58 @@ object TextOps {
       .select("id1", "id2", "jaccard")
   }
 
+  /** (doc_id, sh, sig): the shingles and k-minhash signature of each doc,
+    * materialized once for the band join's two sides and the verify */
+  private def signed(docs: DataFrame, k: Int): DataFrame =
+    graft.ops.Par.spread(docs, col("doc_id"))
+      .select(col("doc_id"), shingles(col("text")).as("sh"))
+      .withColumn("sig", fns.minhash_sig(col("sh"), k))
+      .localCheckpoint(true)
+
+  /** a minhash band join side: `sigs`' doc ids as `id`, keyed by `keys` */
+  private def bandSide(sigs: DataFrame, id: String, keys: Column => Seq[Column]) =
+    (sigs.select(col("doc_id").as(id), col("sig").as(s"${id}_sig")), keys(col(s"${id}_sig")))
+
+  /** band b's key: the 32-bit hash of sig's b-th `rows`-long slice, seed b */
+  private[graft] def minhashBuckets(sig: Column, bands: Int, rows: Int): Seq[Column] =
+    (0 until bands).map(b => hash(slice(sig, b * rows + 1, rows), lit(b)))
+
+  /** band b's key: the b-th `rows`-long slice of `sig` as comma-joined
+    * decimals, so key equality is slice equality (no hash collisions) */
+  private[graft] def minhashSlices(sig: Column, bands: Int, rows: Int): Seq[Column] =
+    (0 until bands).map(b => concat_ws(",", slice(sig, b * rows + 1, rows).cast("array<string>")))
+
+  /** the four 16-bit quarters of a 64-bit simhash, low quarter first */
+  private[graft] def simhashQuarters(sim: Column): Seq[Column] =
+    (0 until 4).map(b => shiftright(sim, b * 16).bitwiseAND(lit(0xffffL)))
+
   /** INCREMENTAL (daily-ingest) text dedup — the text twin of
     * `ImageOps.incrementalPhashDedup`: a new batch probes the AT-REST
     * (band, bucket) minhash index of the standing corpus plus its own
     * batch-internal pairs; corpus × corpus is never re-paired — the shape
     * that makes daily dedup O(batch·index-probe) instead of O(corpus²) at
-    * 100 TB. Candidates verify by EXACT integer Jaccard (jac_milli =
-    * 1000·|∩| DIV |∪| ≥ tMilli); each batch doc keeps its best match by
-    * the (jac_milli DESC, match_id ASC) total order (min-struct on the
-    * complement — map-side combinable). Batch-internal duplicates credit
-    * the SMALLER doc_id as the original.
+    * 100 TB. Both probes are banded pair joins (`Bands.pairs`), so each
+    * candidate comes out once. Candidates verify by EXACT integer Jaccard
+    * (jac_milli = 1000·|∩| DIV |∪| ≥ tMilli); each batch doc keeps its best
+    * match by the (jac_milli DESC, match_id ASC) total order (min-struct on
+    * the complement — map-side combinable, and blind to repeated rows).
+    * Batch-internal duplicates credit the SMALLER doc_id as the original.
     *
     * Output per batch doc: (doc_id, keep, dup_of, jac_milli). */
   def incrementalTextDedup(corpus: DataFrame, batch: DataFrame,
                            bands: Int = 8, rows: Int = 4,
                            tMilli: Long = 200L): DataFrame = {
-    val k = bands * rows
-    def withSig(d: DataFrame): DataFrame = graft.ops.Par.spread(d, col("doc_id"))
-      .select(col("doc_id"), shingles(col("text")).as("sh"))
-      .withColumn("sig", fns.minhash_sig(col("sh"), k))
-      .localCheckpoint(true)
-    def banded(s0: DataFrame): DataFrame = s0.select(col("doc_id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => hash(slice(col("sig"), b * lit(rows) + lit(1), lit(rows)), b))))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-    val sc0 = withSig(corpus); val sb0 = withSig(batch)
-    val bc = banded(sc0); val bb = banded(sb0)
-    val vsCorpus = bb
-      .join(bc.select(col("band"), col("bucket"), col("doc_id").as("match_id")),
-        Seq("band", "bucket"))
-      .select(col("doc_id"), col("match_id")).dropDuplicates()
-    val internal = bb.select(col("band"), col("bucket"), col("doc_id").as("id1"))
-      .join(bb.select(col("band"), col("bucket"), col("doc_id").as("id2")),
-        Seq("band", "bucket"))
-      .filter(col("id1") < col("id2"))
+    val sc0 = signed(corpus, bands * rows); val sb0 = signed(batch, bands * rows)
+    val buckets = minhashBuckets(_: Column, bands, rows)
+    val vsCorpus = Bands.pairs(bandSide(sb0, "doc_id", buckets),
+      bandSide(sc0, "match_id", buckets), lit(true))
+      .select(col("doc_id"), col("match_id"))
+    val internal = Bands.pairs(bandSide(sb0, "id1", buckets), bandSide(sb0, "id2", buckets),
+      col("id1") < col("id2"))
       .select(col("id2").as("doc_id"), col("id1").as("match_id"))
-      .dropDuplicates()
     val allSh = sc0.select(col("doc_id").as("match_id"), col("sh").as("msh"))
       .unionByName(sb0.select(col("doc_id").as("match_id"), col("sh").as("msh")))
-    val verified = vsCorpus.unionByName(internal).dropDuplicates()
+    val verified = vsCorpus.unionByName(internal)
       .join(sb0.select(col("doc_id"), col("sh")), Seq("doc_id"))
       .join(allSh, Seq("match_id"))
       .withColumn("jac_milli", expr(
@@ -269,20 +273,17 @@ object TextOps {
   }
 
   /** SimHash near-dup pairs: 64-bit simhash over tokens, 4×16-bit band
-    * blocking (any equal quarter → candidate), verified by Hamming ≤ maxHam.
+    * blocking (any equal quarter → candidate; a banded pair join keeps
+    * each pair at its first equal quarter), verified by Hamming ≤ maxHam.
+    * The banding is complete only for maxHam < 4, on purpose: the oracle
+    * mirrors the same candidate set.
     */
   def simHashPairs(docs: DataFrame, maxHam: Int = 8): DataFrame = {
     val sh = graft.ops.Par.spread(docs, col("doc_id")).select(col("doc_id"),
       fns.simhash64(split(col("text"), " ")).as("sim"))
-    val bandExprs = (0 until 4).map(b =>
-      shiftright(col("sim"), b * 16).bitwiseAND(lit(0xffffL)))
-    val banded = sh.select(col("doc_id"), col("sim"),
-      posexplode(array(bandExprs: _*)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-    val l = banded.select(col("band"), col("bucket"), col("doc_id").as("id1"), col("sim").as("s1"))
-    val r = banded.select(col("band"), col("bucket"), col("doc_id").as("id2"), col("sim").as("s2"))
-    l.join(r, Seq("band", "bucket")).filter(col("id1") < col("id2"))
-      .dropDuplicates("id1", "id2")
+    def side(id: String, sim: String) =
+      (sh.select(col("doc_id").as(id), col("sim").as(sim)), simhashQuarters(col(sim)))
+    Bands.pairs(side("id1", "s1"), side("id2", "s2"), col("id1") < col("id2"))
       .withColumn("hamming", bit_count(col("s1").bitwiseXOR(col("s2"))))
       .filter(col("hamming") <= maxHam)
       .select("id1", "id2", "hamming")
@@ -307,7 +308,12 @@ object TextOps {
     * fill the prefix without it — bounding the d² fan-out the plain inverted
     * index pays on exactly the shingles that are most common (the 100 TB
     * failure mode). df ties break on the shingle string, so the order (and
-    * the candidate set) is deterministic under any partitioning. */
+    * the candidate set) is deterministic under any partitioning.
+    * The prefix is no positional band family, so the candidates keep one
+    * dedup instead of `Bands.pairs`: an owner test (first common prefix
+    * shingle) needs each doc's whole prefix on every posting row, and at
+    * t = 0.05 the prefix is nearly the whole doc (nsh − ⌈0.05·nsh⌉ + 1
+    * shingles), O(P²) rows per doc of prefix length P. */
   def prefixCandidates(docs: DataFrame, jaccardMin: Double): DataFrame =
     prefixCandidatesOf(shingled(docs), jaccardMin)
 
@@ -342,6 +348,27 @@ object TextOps {
       .select("lang", "source", "id1", "id2").dropDuplicates()
   }
 
+  /** the PPJoin candidates of `sets` at Jaccard threshold t, each with both
+    * docs' sorted shingles (sh1, sh2), sizes (n1, n2) and exact |∩| (inter) */
+  private def prefixIntersections(sets: DataFrame, t: Double): DataFrame = {
+    // the verify stage is CPU-dense on tiny rows (a per-pair set merge over
+    // (id, id) pairs): AQE coalesces its input by BYTES and was measured
+    // pinning ~9 CPU-s of verify onto 2 tasks — pin the stage width with an
+    // explicit repartition (narrow pair rows; no payload shuffled)
+    val cand = prefixCandidatesOf(sets, t)
+      .repartition(sets.sparkSession.sparkContext.defaultParallelism,
+        col("id1"), col("id2"))
+    def side(i: Int) = sets.select(col("lang"), col("source"), col("doc_id").as(s"id$i"),
+      col("sh").as(s"sh$i"), col("nsh").as(s"n$i"))
+    cand
+      .join(side(1), Seq("lang", "source", "id1"))
+      .join(side(2), Seq("lang", "source", "id2"))
+      // sh is sorted (shingled/globalShingleSets contract): linear-merge
+      // count instead of array_intersect's per-pair hash set — same exact
+      // integer |∩|, ~10× less CPU on the candidate-pair hot path
+      .withColumn("inter", fns.sorted_inter_count(col("sh1"), col("sh2")))
+  }
+
   /** Asymmetric CONTAINMENT near-dup pairs — the crawl-snapshot/page-update
     * detector Jaccard misses: C(A,B) = |A∩B| / min(|A|,|B|) is high when one
     * doc is (mostly) embedded in the other even though their Jaccard is
@@ -365,19 +392,7 @@ object TextOps {
     require(cMin > 0.0 && cMin <= 1.0, s"cMin out of range: $cMin")
     require(growthMax >= 1.0, s"growthMax must be >= 1: $growthMax")
     val sets = shingled(docs).localCheckpoint(true)
-    val jmin = cMin / (1.0 + growthMax)
-    // same CPU-dense-verify stage-width pin as jaccardPairsDetailed
-    val cand = prefixCandidatesOf(sets, jmin)
-      .repartition(sets.sparkSession.sparkContext.defaultParallelism,
-        col("id1"), col("id2"))
-    val s1 = sets.select(col("lang"), col("source"), col("doc_id").as("id1"),
-      col("sh").as("sh1"), col("nsh").as("n1"))
-    val s2 = sets.select(col("lang"), col("source"), col("doc_id").as("id2"),
-      col("sh").as("sh2"), col("nsh").as("n2"))
-    cand
-      .join(s1, Seq("lang", "source", "id1"))
-      .join(s2, Seq("lang", "source", "id2"))
-      .withColumn("inter", fns.sorted_inter_count(col("sh1"), col("sh2")))
+    prefixIntersections(sets, cMin / (1.0 + growthMax))
       .withColumn("n_small", least(col("n1"), col("n2")).cast("long"))
       .withColumn("containment",
         col("inter").cast("double") / col("n_small").cast("double"))
@@ -425,25 +440,7 @@ object TextOps {
     * the shingled corpus twice per audit query. */
   private def jaccardPairsDetailed(sets: DataFrame, jaccardMin: Double): DataFrame = {
     require(jaccardMin > 0.0, "prefix-filtered form requires a positive threshold")
-    val d = sets
-    // the verify stage is CPU-dense on tiny rows (a per-pair set merge over
-    // (id, id) pairs): AQE coalesces its input by BYTES and was measured
-    // pinning ~9 CPU-s of verify onto 2 tasks — pin the stage width with an
-    // explicit repartition (narrow pair rows; no payload shuffled)
-    val cand = prefixCandidatesOf(d, jaccardMin)
-      .repartition(d.sparkSession.sparkContext.defaultParallelism,
-        col("id1"), col("id2"))
-    val s1 = d.select(col("lang"), col("source"), col("doc_id").as("id1"),
-      col("sh").as("sh1"), col("nsh").as("n1"))
-    val s2 = d.select(col("lang"), col("source"), col("doc_id").as("id2"),
-      col("sh").as("sh2"), col("nsh").as("n2"))
-    cand
-      .join(s1, Seq("lang", "source", "id1"))
-      .join(s2, Seq("lang", "source", "id2"))
-      // sh is sorted (shingled/globalShingleSets contract): linear-merge
-      // count instead of array_intersect's per-pair hash set — same exact
-      // integer |∩|, ~10× less CPU on the candidate-pair hot path
-      .withColumn("inter", fns.sorted_inter_count(col("sh1"), col("sh2")))
+    prefixIntersections(sets, jaccardMin)
       .withColumn("uni", col("n1") + col("n2") - col("inter"))
       .withColumn("jaccard",
         col("inter").cast("double") / col("uni").cast("double"))
@@ -476,8 +473,7 @@ object TextOps {
     *
     * Output: ONE row — (n_truth, n_cand, tp, fn, fp, recall_milli,
     * precision_milli), the integer-exact confusion counts. */
-  def minHashLshEval(spark: SparkSession, docs: DataFrame,
-                     bands: Int = 8, rows: Int = 4,
+  def minHashLshEval(docs: DataFrame, bands: Int = 8, rows: Int = 4,
                      jaccardMin: Double = 0.5): DataFrame = {
     val sh = globalShingleSets(docs)
     val truth = jaccardPairsOf(sh, jaccardMin).select("id1", "id2")
@@ -488,30 +484,19 @@ object TextOps {
     * audits run in — shingled ONCE and materialized, shared by the truth
     * and signature passes (the module's materialize-shingles-once rule). */
   private def globalShingleSets(docs: DataFrame): DataFrame =
-    graft.ops.Par.spread(docs, col("doc_id"))
-      .select(lit("all").as("lang"), lit("all").as("source"),
-        col("doc_id"), sort_array(array_distinct(shingles(col("text")))).as("sh"))
-      .withColumn("nsh", size(col("sh")))
+    shingled(docs.select(col("doc_id"), col("text"), lit("all").as("lang"), lit("all").as("source")))
       .localCheckpoint(true)
 
   /** the minhash band-equality candidate stage over shingle sets: signature
     * → per-band slice keys (slice EQUALITY, not 32-bit hash() buckets, so
-    * the set is engine-reproducible) → distinct same-key pairs. Signatures
-    * feed BOTH legs of the self-join — materialized once. */
+    * the set is engine-reproducible) → one banded pair join, each pair once.
+    * Signatures feed BOTH legs of the self-join — materialized once. */
   private def minhashBandCandidates(sh: DataFrame, bands: Int, rows: Int): DataFrame = {
-    val banded = sh
-      .withColumn("sig", fns.minhash_sig(col("sh"), bands * rows))
-      .select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => concat_ws(",", transform(
-            slice(col("sig"), b * lit(rows) + lit(1), lit(rows)),
-            x => x.cast("string"))))))
-      .toDF("doc_id", "band", "key")
+    val sigs = sh.select(col("doc_id"), fns.minhash_sig(col("sh"), bands * rows).as("sig"))
       .localCheckpoint(true)
-    val l = banded.select(col("band"), col("key"), col("doc_id").as("id1"))
-    val r = banded.select(col("band"), col("key"), col("doc_id").as("id2"))
-    l.join(r, Seq("band", "key")).filter(col("id1") < col("id2"))
-      .select("id1", "id2").dropDuplicates("id1", "id2")
+    val slices = minhashSlices(_: Column, bands, rows)
+    Bands.pairs(bandSide(sigs, "id1", slices), bandSide(sigs, "id2", slices),
+      col("id1") < col("id2")).select("id1", "id2")
   }
 
   /** The simhash twin of minHashLshEval, against the SAME shingle-Jaccard
@@ -520,8 +505,8 @@ object TextOps {
     * (bands × rows) family for one 64-bit sketch per doc — 1/8th the
     * signature state — and this audit measures what that trade costs.
     * Same pairs-only scale shape as minHashLshEval. */
-  def simHashEval(spark: SparkSession, docs: DataFrame,
-                  maxHam: Int = 12, jaccardMin: Double = 0.5): DataFrame = {
+  def simHashEval(docs: DataFrame, maxHam: Int = 12,
+                  jaccardMin: Double = 0.5): DataFrame = {
     val truth = jaccardPairsOf(globalShingleSets(docs), jaccardMin)
       .select("id1", "id2")
     val cand = simHashPairs(docs, maxHam).select("id1", "id2")
@@ -537,8 +522,7 @@ object TextOps {
     * integers (1000·|∩| ≥ t·|∪| — no double in the contract). fp at
     * threshold t counts every candidate pair below t, so n_cand is constant
     * across rows and precision falls as t rises — the real trade surface. */
-  def minHashLshThresholdSweep(spark: SparkSession, docs: DataFrame,
-                               bands: Int = 8, rows: Int = 4,
+  def minHashLshThresholdSweep(docs: DataFrame, bands: Int = 8, rows: Int = 4,
                                thresholdsMilli: Seq[Int] = Seq(400, 500, 600, 700))
       : DataFrame = {
     require(thresholdsMilli.nonEmpty)
@@ -611,7 +595,8 @@ object TextOps {
   def bm25TopK(docs: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val toks = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
     val dl = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-    val st = dl.agg(count(lit(1)).as("n"), sum(col("dl")).as("sumdl")).collect()(0)
+    val st = graft.ops.Driver.collectBounded(
+      dl.agg(count(lit(1)).as("n"), sum(col("dl")).as("sumdl")), 1, 1L << 12, "bm25 corpus stats")(0)
     require(st.getLong(0) > 0L,
       "bm25TopK: empty document corpus — corpus stats (n, avgdl) are undefined")
     val n = st.getLong(0).toDouble
@@ -881,8 +866,9 @@ object TextOps {
     require(minCount > 0, s"heavyHitters: minCount must be positive, got $minCount")
     val toks = docs.select(explode(tokensCol(col("text"))).as("tok"))
       .filter(col("tok") =!= "")
-    val row = toks.agg(sketches.cms_sketch(col("tok"), d, w).as("s"))
-      .collect()(0) // bounded artifact: one row, d*w longs
+    // one row of d·w longs, about 28 bytes each as boxed values on the driver
+    val row = graft.ops.Driver.collectBounded(toks.agg(sketches.cms_sketch(col("tok"), d, w).as("s")),
+      1, 32L * d * w + (1L << 12), "count-min sketch")(0)
     val sketch = row.getSeq[Long](0).toArray
     toks.filter(sketches.cms_min_count(col("tok"), sketch, d, w) >= minCount)
       .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))

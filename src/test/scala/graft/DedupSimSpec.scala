@@ -81,7 +81,7 @@ class DedupSimSpec extends AnyFunSuite {
       (100 + i, t.split(" ").updated(3, "CHANGED").mkString(" "))
     }
     val docs = (base ++ dups).toDF("doc_id", "text")
-    val lsh = TextOps.minHashLshPairs(spark, docs, bands = 8, rows = 4, jaccardMin = 0.5)
+    val lsh = TextOps.minHashLshPairs(docs, bands = 8, rows = 4, jaccardMin = 0.5)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     // brute force ground truth
     def sh(t: String): Set[String] =

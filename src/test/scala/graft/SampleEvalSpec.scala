@@ -45,7 +45,7 @@ class SampleEvalSpec extends AnyFunSuite {
       .map(i => (i, s"t${i}a t${i}b t${i}c t${i}d t${i}e t${i}f"))
     val docs = base.toDF("doc_id", "text")
       .unionByName(Seq((100L, base(5)._2)).toDF("doc_id", "text"))
-    val r = TextOps.minHashLshEval(spark, docs).head()
+    val r = TextOps.minHashLshEval(docs).head()
     val Seq(nt, nc, tp, fn, fp) = (0 to 4).map(r.getLong)
     assert(tp + fn === nt)
     assert(tp + fp === nc)
