@@ -634,8 +634,8 @@ object SparkEntry {
 
     // raster→vector POLYGONIZE (the closing leg of the raster↔vector pair):
     // 4-connected OFF regions of the street-grid raster = city BLOCKS,
-    // labeled via RLE runs + RangeBins-binned adjacency edges + distributed
-    // CC — cost O(ink + height), never O(raster area). Closed-form oracle:
+    // labeled by OFF row runs, a union-find per row band and one over the
+    // band seams — O(ink + height), never O(raster area). Closed-form oracle:
     // blocks are the cross product of consecutive street-column pixel gaps
     // (width 9, except the Twin pair's 2 and 16) × street-row gaps, with
     // block_id = the packed bottom-left OFF pixel.
@@ -646,9 +646,9 @@ object SparkEntry {
         .orderBy("block_id")
     }),
 
-    // polygonize capstone: geotagged images assigned to city blocks by
-    // exact integer-pixel containment (cell-bucketed candidates, never a
-    // theta join), zero-image blocks kept — block-granular image density.
+    // polygonize capstone: geotagged images assigned to the row-band-labeled
+    // blocks by exact integer-pixel containment (cell-bucketed candidates,
+    // never a theta join), zero-image blocks kept — block image density.
     // Oracle: closed-form blocks range-joined to the closed-form image
     // pixels in DuckDB.
     "q_image_block_density" -> ((s, dir) => {

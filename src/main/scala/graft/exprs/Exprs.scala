@@ -668,6 +668,21 @@ object CosineSim {
   }
 }
 
+/** Sign-LSH bucket key of a float vector: bit i is set when the left fold
+  * ((0.0 + x0·p0) + x1·p1) + … of float → double products with planes(i)
+  * is >= 0 — bit-identical to `aggregate(zip_with(v, plane, …), 0.0, …)
+  * >= 0`, so 0 where that is null (a null element, a length mismatch) and
+  * 1 for NaN. Static entry of fns.lsh_sign_bits. */
+object LshSignBits {
+  def bits(planes: Array[Array[Double]], v: ArrayData): Long =
+    planes.indices.foldLeft(0L) { (key, i) =>
+      val (p, n) = (planes(i), v.numElements())
+      var (dot, j) = (0.0, 0)
+      while (j < n && j < p.length && !v.isNullAt(j)) { dot += v.getFloat(j).toDouble * p(j); j += 1 }
+      if (j == n && n == p.length && !(dot < 0)) key | (1L << i) else key
+    }
+}
+
 object Hashing {
   /** stable 64-bit hash of UTF8 bytes (FNV-1a 64). */
   def utf8Hash(s: UTF8String): Long = bytesHash(s.getBytes)
@@ -1009,6 +1024,11 @@ object fns {
   def simhash64(tokens: Column): Column = c(SimHash64(e(tokens)))
   def rolling_min_hash(text: Column, window: Int): Column = c(RollingMinHash(e(text), window))
   def cosine_sim(a: Column, b: Column): Column = c(CosineSim(e(a), e(b)))
+  /** sign-LSH bucket key of an array<float> (null for null), codegen'd */
+  def lsh_sign_bits(emb: Column, planes: Array[Array[Double]]): Column =
+    c(org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke(classOf[LshSignBits.type],
+      LongType, "bits", Seq(Literal(planes, ObjectType(planes.getClass)), e(emb)),
+      propagateNull = true))
   def walk_within_way(nodes: Column, flat: Column, nodeId: Column, meters: Column): Column =
     c(WalkWithinWay(e(nodes), e(flat), e(nodeId), e(meters)))
   def patterns_matched(text: Column, regexes: Array[String], negates: Array[Boolean]): Column =

@@ -85,32 +85,16 @@ object GraphOps {
   /** driver-side ordering that mirrors Spark's `min`/`least` for the id
     * types the CC consumers use: integral numerics and strings (UTF8String
     * compares unsigned UTF-8 bytes — NOT Java String order for
-    * supplementary chars, so the byte compare is spelled out). Any other
+    * supplementary chars, so it is UTF8String's binaryCompare). Any other
     * type returns None and the caller keeps the distributed path. */
   private def driverOrdering(dt: org.apache.spark.sql.types.DataType): Option[Ordering[Any]] = {
     import org.apache.spark.sql.types._
     dt match {
       case LongType | IntegerType | ShortType | ByteType =>
-        Some(Ordering.by((v: Any) => v match {
-          case l: java.lang.Long => l.longValue
-          case i: java.lang.Integer => i.longValue
-          case s: java.lang.Short => s.longValue
-          case b: java.lang.Byte => b.longValue
-        }))
-      case StringType => Some(new Ordering[Any] {
-        def compare(x: Any, y: Any): Int = {
-          val a = x.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val b = y.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          var i = 0
-          val n = math.min(a.length, b.length)
-          while (i < n) {
-            val c = (a(i) & 0xff) - (b(i) & 0xff)
-            if (c != 0) return c
-            i += 1
-          }
-          a.length - b.length
-        }
-      })
+        Some(Ordering.by((v: Any) => v.asInstanceOf[Number].longValue))
+      case StringType =>
+        def utf8(v: Any) = org.apache.spark.unsafe.types.UTF8String.fromString(v.asInstanceOf[String])
+        Some((x: Any, y: Any) => utf8(x).binaryCompare(utf8(y)))
       case _ => None
     }
   }
@@ -123,38 +107,16 @@ object GraphOps {
                                edgeRows: Array[org.apache.spark.sql.Row],
                                edgeSchema: org.apache.spark.sql.types.StructType,
                                ord: Ordering[Any]): DataFrame = {
-    val parent = new java.util.HashMap[Any, Any]()
-    def find(x: Any): Any = {
-      var r = x
-      while (parent.get(r) != null && parent.get(r) != r) r = parent.get(r)
-      var c = x // path compression
-      while (parent.get(c) != null && parent.get(c) != r) {
-        val nxt = parent.get(c); parent.put(c, r); c = nxt
-      }
-      r
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val ids = edgeRows.flatMap(r => Seq(r.get(0), r.get(1))).distinct
+    val (index, uf) = (ids.zipWithIndex.toMap, new UnionFind)
+    edgeRows.foreach(r => uf.union(index(r.get(0)), index(r.get(1))))
+    val out = ids.indices.groupBy(uf.find).values.flatMap { members =>
+      val component = members.map(ids).min(ord)
+      members.map(i => org.apache.spark.sql.Row(ids(i), component))
     }
-    edgeRows.foreach { row =>
-      val a = row.get(0); val b = row.get(1)
-      if (parent.get(a) == null) parent.put(a, a)
-      if (parent.get(b) == null) parent.put(b, b)
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) parent.put(ra, rb)
-    }
-    val minOf = new java.util.HashMap[Any, Any]() // root -> min member id
-    parent.keySet().forEach { v =>
-      val r = find(v)
-      val m = minOf.get(r)
-      if (m == null || ord.lt(v, m)) minOf.put(r, v)
-    }
-    val out = new java.util.ArrayList[org.apache.spark.sql.Row](parent.size())
-    parent.keySet().forEach { v =>
-      out.add(org.apache.spark.sql.Row(v, minOf.get(find(v))))
-    }
-    val dt = edgeSchema.head.dataType
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", dt, nullable = false),
-      org.apache.spark.sql.types.StructField("component", dt, nullable = false)))
-    spark.createDataFrame(out, schema)
+    spark.createDataFrame(java.util.Arrays.asList(out.toSeq: _*), StructType(
+      Seq("id", "component").map(StructField(_, edgeSchema.head.dataType, nullable = false))))
   }
 
   /** One star round. Both emit (node → m) edges where m is the minimum of
@@ -429,4 +391,18 @@ object GraphOps {
           |  'n_triangles', n_triangles,
           |  'n_wedges', n_wedges) AS (metric, value)""".stripMargin))
   }
+}
+
+/** Union-find over the ids 0, 1, 2, … (an id not seen yet is its own
+  * root), with path halving: the driver closure above, and polygonize's
+  * band pass and seams. */
+private[ops] final class UnionFind {
+  private val parent = scala.collection.mutable.ArrayBuffer[Int]()
+  def find(x: Int): Int = {
+    while (parent.size <= x) parent += parent.size
+    var i = x
+    while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+    i
+  }
+  def union(i: Int, j: Int): Unit = parent(find(i)) = find(j)
 }

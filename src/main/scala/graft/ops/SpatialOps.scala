@@ -456,138 +456,64 @@ object SpatialOps {
 
   /** RASTER→VECTOR POLYGONIZE — the closing leg of the raster↔vector pair
     * (rasterizeWays renders vectors INTO a raster; this extracts the vector
-    * regions back OUT): labels every 4-connected component of OFF pixels
-    * within the ON-pixel bounding box and returns one row per region —
-    * applied to a road raster this is city-BLOCK extraction, the classic
-    * OSM polygonize workload.
+    * regions back OUT): one row per 4-connected component of OFF pixels
+    * within the ON-pixel bounding box — on a road raster, the city BLOCKS.
     *
-    * Never materializes the raster area. The OFF set is run-length encoded:
-    *  - per occupied row, the maximal OFF intervals between consecutive ON
-    *    pixels (one `lag`/`lead` window pass partitioned by row — parallel
-    *    across rows);
-    *  - maximal bands of completely-empty rows coalesce into ONE full-width
-    *    multi-row run each (a window over the DISTINCT occupied-row table,
-    *    whose size is bounded by the raster HEIGHT — ≤ 180·10^res rows
-    *    regardless of data volume, so its single-task sort is O(height),
-    *    not O(data));
-    *  - runs with the IDENTICAL lon interval in consecutive rows merge into
-    *    one multi-row run before labeling (one partitioned window per
-    *    interval stack), so a rectangular region is ONE run and the CC
-    *    graph holds only genuine shape transitions — on a street grid it
-    *    is empty.
-    * Total runs = O(ink + height), the same cost class as the rasterizer.
+    * Two-pass raster labeling over row bands on maximal OFF row runs (the
+    * run form of Raptor, VLDB 2019, and Raster Intervals, SIGMOD 2023),
+    * never materializing the raster area: cost O(ink + height).
+    *  - Bands: a bbox job fixes [l0, l1] × [a0, a1] and the ON count. Rows
+    *    fall into bands of h rows, one per shuffle partition, more when the
+    *    run bound ON + height would average over `BandRuns` runs a band. ON
+    *    pixels and one sentinel row per band (so an empty band runs too)
+    *    are hash-partitioned on band.
+    *  - Band pass: one typed mapPartitions over the sorted rows cuts each
+    *    row into OFF runs inside [l0, l1] and, by two pointers, unions those
+    *    overlapping a run of the row below. A local component with no run on
+    *    its band's first or last row is a whole region.
+    *  - Seams: those rows' runs and components come back in one
+    *    Driver.collectBounded, capped at `SeamRows` rows (the bound is
+    *    4 × bands × (width/2 + 1)) and `SeamBytes`; over a cap it fails
+    *    loudly. A driver union-find joins runs of consecutive rows.
+    *  - Output: the whole regions plus the seam regions as a local relation.
+    * Jobs: pixel checkpoint 1, bbox 2, band-pass checkpoint 2, seam collect
+    * 1, the caller's map-only job 1 — however many regions cross a seam.
     *
-    * Region labeling is the dedup pipeline's own machinery: runs in
-    * vertically adjacent rows whose lon intervals overlap are CC edges, and
-    * [[graft.ops.GraphOps.connectedComponents]] (large/small-star, O(log n)
-    * rounds, nothing graph-sized on the driver) closes them. Edge
-    * generation reuses the RangeJoinRewrite expressions ([[graft.plans.RangeBins]]
-    * / [[graft.plans.FloorDivBin]]): each run explodes into the fixed-width
-    * lon bins it covers, candidates equi-join on (row boundary, bin) — never
-    * a per-boundary all-pairs — and the first-shared-bin conjunct keeps each
-    * adjacent pair exactly once before the exact interval-overlap refine.
-    * The bin width auto-sizes to ceil(rasterWidth/2048) so a full-width run
-    * explodes into ≤2049 bins (inside RangeBins' loud 4096 guard).
-    *
-    * Run id = packed bottom-left pixel (GridCell.pack layout), so the
-    * region label (CC minimum) is the packed leftmost-then-bottom run
-    * origin — closed-form predictable on rectangular regions.
-    *
-    * Input contract: `pixels` has one DISTINCT row per ON pixel
-    * (lon_idx, lat_idx) — rasterizeWays' per-pixel aggregate satisfies it.
-    * Output: (block_id, n_pixels, n_rows, lon_min, lon_max, lat_min,
-    * lat_max) per OFF region. Reference analogue: the city-block faces the
-    * reference's way grid implies (gpsBins.js binning world) but never
-    * computes — a pipeline addition, not a port. */
-  def polygonizeRaster(pixels: DataFrame, minBin: Long = 64L): DataFrame = {
-    import graft.cells.GridCell.{OFF, SCALE}
+    * Input: one DISTINCT row per ON pixel (lon_idx, lat_idx). Output:
+    * (block_id, n_pixels, n_rows, lon_min, lon_max, lat_min, lat_max) per
+    * region; block_id = its minimum packed pixel (GridCell.pack: leftmost,
+    * then lowest), n_rows = its maximal row runs. Reference analogue: the
+    * city-block faces the reference's way grid implies (gpsBins.js binning
+    * world) but never computes — a pipeline addition, not a port. */
+  def polygonizeRaster(pixels: DataFrame): DataFrame = {
+    val spark = pixels.sparkSession
+    import spark.implicits._
     val px = pixels.select(col("lon_idx").cast("long"), col("lat_idx").cast("long"))
       .localCheckpoint(true)
-    // raster domain = ON bbox: four longs to the driver, once
-    val bb = px.agg(min("lon_idx"), max("lon_idx"), min("lat_idx"), max("lat_idx")).head()
+    val bb = px.agg(min("lon_idx"), max("lon_idx"), min("lat_idx"), max("lat_idx"),
+      count(lit(1))).head()
     require(!bb.isNullAt(0), "polygonizeRaster: empty raster")
-    val (l0, l1) = (bb.getLong(0), bb.getLong(1))
-
-    // horizontal OFF runs inside occupied rows: gaps between consecutive ON
-    // pixels, plus the leading run from the domain edge (trailing runs fall
-    // out of the lead() gap at the sentinel below)
-    val w = Window.partitionBy("lat_idx").orderBy("lon_idx")
-    // gap/leading run ending at this ON pixel (prev sentinel l0-2 makes a
-    // row-leading pixel at lon_idx > l0 emit [l0, lon_idx-1]); trailing run
-    // of the row is emitted by the row's last ON pixel
-    val candidates = array(
-      struct(greatest(col("prev") + 1L, lit(l0)).as("lo"), (col("lon_idx") - 1L).as("hi")),
-      struct(when(col("nxt").isNull, col("lon_idx") + 1L).as("lo"), lit(l1).as("hi")))
-    val keep = (r: org.apache.spark.sql.Column) =>
-      r.getField("lo").isNotNull && r.getField("lo") <= r.getField("hi")
-    val rowRuns = px
-      .withColumn("prev", coalesce(lag(col("lon_idx"), 1).over(w), lit(l0 - 2L)))
-      .withColumn("nxt", lead(col("lon_idx"), 1).over(w))
-      .select(col("lat_idx"), explode(filter(candidates, keep)).as("run"))
-      .select(col("run.lo").as("lon_lo"), col("run.hi").as("lon_hi"),
-        col("lat_idx").as("lat_lo"), col("lat_idx").as("lat_hi"))
-
-    // completely-empty row bands between consecutive occupied rows: one
-    // full-width multi-row run each. The DISTINCT occupied-row table is
-    // bounded by raster height (≤ 180·10^res), so the global-order window's
-    // single task is O(height) — independent of data volume.
-    val wr = Window.orderBy("lat_idx")
-    val bandRuns = px.select("lat_idx").distinct()
-      .withColumn("prev", lag(col("lat_idx"), 1).over(wr))
-      .filter(col("prev").isNotNull && col("lat_idx") - col("prev") >= 2L)
-      .select(lit(l0).as("lon_lo"), lit(l1).as("lon_hi"),
-        (col("prev") + 1L).as("lat_lo"), (col("lat_idx") - 1L).as("lat_hi"))
-
-    // vertical coalescing: runs with the IDENTICAL lon interval stacked in
-    // consecutive rows are one region by construction (4-connected via every
-    // column), so merge each maximal stack into one multi-row run BEFORE the
-    // CC — a rectangular region collapses to a single run and contributes
-    // ZERO CC edges (the grid-city case: the CC loop sees an empty graph).
-    // One window per (lon_lo, lon_hi) stack — fully partitioned, bounded by
-    // raster height per stack. Labels are unchanged: the region minimum run
-    // id survives merging (only lat-dominated candidates within a stack are
-    // removed).
-    val wv = Window.partitionBy("lon_lo", "lon_hi").orderBy("lat_lo")
-    val runs = rowRuns.unionByName(bandRuns)
-      .withColumn("brk",
-        when(col("lat_lo") === lag(col("lat_hi"), 1).over(wv) + 1L, 0L).otherwise(1L))
-      .withColumn("grp", sum("brk").over(wv.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("lon_lo"), col("lon_hi"), col("grp"))
-      .agg(min("lat_lo").as("lat_lo"), max("lat_hi").as("lat_hi"))
-      .drop("grp")
-      .withColumn("run_id", (col("lon_lo") + OFF) * SCALE + (col("lat_lo") + OFF))
-      .localCheckpoint(true)
-
-    // CC edges: runs in vertically adjacent rows with overlapping lon
-    // intervals. Bin the lon axis (RangeJoinRewrite's own expressions) so
-    // the per-boundary match is an equi-join on (boundary, bin); the
-    // first-shared-bin conjunct emits each qualifying pair exactly once.
-    val bin = math.max(minBin, Math.floorDiv(l1 - l0, 2048L) + 1L)
-    import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
-    def binned(df: DataFrame, lo: String, hi: String) = df.withColumn("bin", explode(column(
-      graft.plans.RangeBins(expression(col(lo)), expression(col(hi)), bin))))
-    val below = binned(runs.select(col("run_id").as("src"), (col("lat_hi") + 1L).as("bndry"),
-      col("lon_lo").as("a_lo"), col("lon_hi").as("a_hi")), "a_lo", "a_hi")
-    val above = binned(runs.select(col("run_id").as("dst"), col("lat_lo").as("bndry"),
-      col("lon_lo").as("b_lo"), col("lon_hi").as("b_hi")), "b_lo", "b_hi")
-    val firstShared = column(graft.plans.FloorDivBin(
-      expression(greatest(col("a_lo"), col("b_lo"))), bin))
-    val edges = below.join(above, Seq("bndry", "bin"))
-      .filter(col("bin") === firstShared &&
-        col("a_lo") <= col("b_hi") && col("b_lo") <= col("a_hi"))
-      .select("src", "dst")
-
-    // label = component minimum (packed leftmost-then-bottom run origin);
-    // runs with no edges are their own single-run regions
-    val labeled = runs.join(
-        GraphOps.connectedComponents(edges).withColumnRenamed("id", "run_id"),
-        Seq("run_id"), "left")
-      .withColumn("block_id", coalesce(col("component"), col("run_id")))
-    labeled.groupBy("block_id").agg(
-      sum((col("lon_hi") - col("lon_lo") + 1L) * (col("lat_hi") - col("lat_lo") + 1L)).as("n_pixels"),
-      sum(col("lat_hi") - col("lat_lo") + 1L).as("n_rows"),
-      min("lon_lo").as("lon_min"), max("lon_hi").as("lon_max"),
-      min("lat_lo").as("lat_min"), max("lat_hi").as("lat_max"))
+    val Seq(l0, l1, a0, a1, on) = (0 until 5).map(bb.getLong)
+    val (height, parts) = (a1 - a0 + 1, spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    def ceilDiv(a: Long, b: Long) = (a + b - 1) / b
+    val h = ceilDiv(height, math.max(parts, (on + height) / RowBands.BandRuns + 1))
+    val bands = ceilDiv(height, h).toInt
+    val pieces = px.select(expr(s"CAST((lat_idx - $a0) DIV $h AS INT)").as("band"),
+        col("lat_idx"), col("lon_idx"))
+      .unionByName(spark.range(0, bands, 1, 1).select(col("id").cast("int").as("band"),
+        lit(Long.MinValue).as("lat_idx"), lit(Long.MinValue).as("lon_idx")))
+      .repartition(parts, col("band"))
+      .sortWithinPartitions("band", "lat_idx", "lon_idx")
+      .as[(Int, Long, Long)]
+      .mapPartitions(rows => RowBands.bands(rows.buffered, l0, l1, a0, a1, h))
+      .toDF().localCheckpoint(true)
+    val seamCap = math.min(4L * bands * ((l1 - l0 + 1) / 2 + 1), RowBands.SeamRows).toInt
+    val seams = Driver.collectBounded(pieces.filter(col("kind") =!= 0), seamCap,
+        RowBands.SeamBytes, "polygonizeRaster seam pieces")
+      .map(r => RowBands.Piece(r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7)))
+    pieces.filter(col("kind") === 0).drop("kind")
+      .unionByName(RowBands.closeSeams(seams).toSeq.toDF().drop("kind"))
   }
 
   /** Images per city BLOCK — the polygonize capstone: geotagged images
@@ -605,13 +531,9 @@ object SpatialOps {
     * (at planet scale blocks ∝ area — too big to broadcast, small enough
     * to hash-build per partition). Zero-image blocks are kept (count 0):
     * the empty blocks are the coverage story, not noise. */
-  def blockImageDensity(blocks0: DataFrame, images: DataFrame,
+  def blockImageDensity(blocks: DataFrame, images: DataFrame,
                         res: Int = 4, cellRes: Int = 3): DataFrame = {
     val p = graft.cells.GridCell.pow10(res)
-    // blocks feed two consumers (covering-cell explode + the keep-empty
-    // left join); materialize once so the upstream labeling aggregate is
-    // not recomputed
-    val blocks = blocks0.localCheckpoint(true)
     val bc = blocks.select(col("block_id"), col("lon_min"), col("lon_max"),
         col("lat_min"), col("lat_max"))
       .withColumn("cell", explode(fns.cells_covering(
@@ -631,5 +553,88 @@ object SpatialOps {
       .join(counted, Seq("block_id"), "left")
       .select(col("block_id"), col("n_pixels"),
         coalesce(col("n_images"), lit(0L)).as("n_images"))
+  }
+}
+
+/** The band pass and the seam union-find of [[SpatialOps.polygonizeRaster]]. */
+private[ops] object RowBands {
+  /** runs per band (bounds the band pass's run buffer); the seam collect's caps */
+  val BandRuns = 1L << 18
+  val SeamRows = 1L << 21
+  val SeamBytes = 1L << 28
+
+  /** A run [lon_min, lon_max] in row lat_min, or the stats of a component
+    * of runs labeled by its minimum packed pixel (GridCell.pack), unique
+    * across bands. kind 0: a whole region; kind 2: a local component with a
+    * run on its band's first or last row; kind 1: such a run, labeled by
+    * its local component. */
+  case class Piece(kind: Int, block_id: Long, n_pixels: Long, n_rows: Long,
+                   lon_min: Long, lon_max: Long, lat_min: Long, lat_max: Long)
+
+  /** the stats of two disjoint pieces as one */
+  def merge(s: Piece, t: Piece): Piece = s.copy(block_id = math.min(s.block_id, t.block_id),
+    n_pixels = s.n_pixels + t.n_pixels, n_rows = s.n_rows + t.n_rows,
+    lon_min = math.min(s.lon_min, t.lon_min), lon_max = math.max(s.lon_max, t.lon_max),
+    lat_min = math.min(s.lat_min, t.lat_min), lat_max = math.max(s.lat_max, t.lat_max))
+
+  /** f(i, j) for each overlapping pair of the lon-sorted disjoint runs
+    * runs(i), i in [a, aEnd), and runs(j), j in [b, bEnd) */
+  def overlaps(runs: collection.IndexedSeq[Piece], a: Int, aEnd: Int, b: Int, bEnd: Int)(
+      f: (Int, Int) => Unit): Unit = {
+    var (i, j) = (a, b)
+    while (i < aEnd && j < bEnd) {
+      val (s, t) = (runs(i), runs(j))
+      if (s.lon_min <= t.lon_max && t.lon_min <= s.lon_max) f(i, j)
+      if (s.lon_max <= t.lon_max) i += 1
+      if (t.lon_max <= s.lon_max) j += 1
+    }
+  }
+
+  /** the pieces of the bands of a partition sorted by (band, lat, lon),
+    * each band led by its sentinel row */
+  def bands(in: BufferedIterator[(Int, Long, Long)], l0: Long, l1: Long, a0: Long,
+            a1: Long, h: Long): Iterator[Piece] = if (!in.hasNext) Iterator.empty else {
+    val b = in.next()._1
+    val (r0, r1) = (a0 + b * h, math.min(a0 + (b + 1) * h - 1, a1))
+    val (runs, uf) = (scala.collection.mutable.ArrayBuffer[Piece](), new UnionFind)
+    def add(x0: Long, x1: Long, y: Long): Unit =
+      runs += Piece(0, graft.cells.GridCell.pack(x0, y), x1 - x0 + 1, 1L, x0, x1, y, y)
+    // each row's OFF runs, joined to the overlapping runs of the row below
+    var (prev, firstEnd) = (0, 0)
+    for (y <- r0 to r1) {
+      val beg = runs.size
+      var x = l0
+      while (in.hasNext && in.head._1 == b && in.head._2 == y) {
+        val lon = in.next()._3
+        if (lon > x) add(x, lon - 1, y)
+        x = lon + 1
+      }
+      if (x <= l1) add(x, l1, y)
+      overlaps(runs, prev, beg, beg, runs.size)(uf.union _)
+      if (y == r0) firstEnd = runs.size
+      prev = beg
+    }
+    val seam = (0 until firstEnd) ++ (math.max(prev, firstEnd) until runs.size)
+    val onSeam = seam.map(uf.find).toSet
+    val comps = runs.indices.groupBy(uf.find).map { case (root, rs) =>
+      root -> rs.map(runs).reduce(merge).copy(kind = if (onSeam(root)) 2 else 0)
+    }
+    comps.valuesIterator ++ seam.iterator.map(i =>
+      runs(i).copy(kind = 1, block_id = comps(uf.find(i)).block_id)) ++ bands(in, l0, l1, a0, a1, h)
+  }
+
+  /** the regions that cross a seam, from every band's seam pieces: runs
+    * (kind 1) in consecutive rows that overlap join their local components
+    * (kind 2), and each region sums its local components */
+  def closeSeams(seams: Seq[Piece]): Iterable[Piece] = {
+    val (comps, runs) = seams.partition(_.kind == 2)
+    val (index, uf) = (comps.map(_.block_id).zipWithIndex.toMap, new UnionFind)
+    val byRow = runs.groupBy(_.lat_min).map { case (y, rs) => y -> rs.sortBy(_.lon_min) }
+    for ((y, below) <- byRow; above <- byRow.get(y + 1)) {
+      val both = (below ++ above).toIndexedSeq
+      overlaps(both, 0, below.size, below.size, both.size)((i, j) =>
+        uf.union(index(both(i).block_id), index(both(j).block_id)))
+    }
+    comps.indices.groupBy(uf.find).values.map(_.map(comps).reduce(merge))
   }
 }

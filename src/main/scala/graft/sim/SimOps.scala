@@ -188,13 +188,10 @@ object SimOps {
     }
 
   /** the sign-LSH bucket key of `emb` in each of `tables` plane sets: the
-    * nPlanes sign bits of dot(embedding, plane). */
+    * nPlanes sign bits of dot(embedding, plane); 0 for a null embedding. */
   private[graft] def lshKeys(emb: Column, nPlanes: Int, tables: Int, dim: Int): Seq[Column] =
-    (0 until tables).map(t => hyperplanesFor(t, nPlanes, dim).zipWithIndex.map { case (plane, i) =>
-      val dot = aggregate(zip_with(emb, lit(plane), (x, p) => x.cast("double") * p),
-        lit(0.0), (acc, x) => acc + x)
-      when(dot >= 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _))
+    (0 until tables).map(t =>
+      coalesce(fns.lsh_sign_bits(emb, hyperplanesFor(t, nPlanes, dim)), lit(0L)))
 
   /** Multi-table sign-LSH ANN: `tables` independent plane sets of `nPlanes`
     * bits each; candidates = union over tables of same-bucket rows (the
@@ -237,8 +234,8 @@ object SimOps {
     * never data-sized; k-means-trained centroids swap in without plan
     * changes. */
   private[sim] def seedCentroids(embeddings: DataFrame, nlist: Int): Array[(Long, Array[Float])] =
-    embeddings.filter(col("vec_id") < nlist)
-      .select(col("vec_id"), col("embedding")).collect()
+    graft.ops.Driver.collectBounded(embeddings.filter(col("vec_id") < nlist)
+        .select(col("vec_id"), col("embedding")), nlist, 1L << 26, "seed vectors")
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
 
   private[sim] def centCos9(e: org.apache.spark.sql.Column, ce: Array[Float]): org.apache.spark.sql.Column =
@@ -283,9 +280,7 @@ object SimOps {
   def pqBooks(embeddings: DataFrame, m: Int, nCentroids: Int, dim: Int): Array[Array[Array[Float]]] = {
     require(dim % m == 0, s"dim $dim must divide into m=$m subspaces")
     val dsub = dim / m
-    val seeds = embeddings.filter(col("vec_id") < nCentroids)
-      .select(col("vec_id"), col("embedding")).collect()
-      .sortBy(_.getLong(0)).map(_.getSeq[Float](1).toArray)
+    val seeds = seedCentroids(embeddings, nCentroids).map(_._2)
     Array.tabulate(m)(j => seeds.map(s => s.slice(j * dsub, (j + 1) * dsub)))
   }
 
@@ -299,6 +294,9 @@ object SimOps {
                    iters: Int = 5, sampleN: Int = 2048): Array[Array[Array[Float]]] = {
     require(dim % m == 0, s"dim $dim must divide into m=$m subspaces")
     val dsub = dim / m
+    // a raw collect on purpose: Spark runs this orderBy, limit and collect as
+    // a TakeOrderedAndProject merged on the driver with no exchange, where
+    // Driver.collectBounded's toRdd would plan a single-partition exchange
     val sample = embeddings.orderBy(col("vec_id")).limit(sampleN)
       .select(col("embedding")).collect().map(_.getSeq[Float](0).toArray)
     Array.tabulate(m) { j =>

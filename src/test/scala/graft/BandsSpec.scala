@@ -98,4 +98,34 @@ class BandsSpec extends AnyFunSuite {
     val emb = Gen.listOfN(4, Gen.choose(-1.0f, 1.0f))
     family[List[Float]](emb, _.toDF("id", "v"), SimOps.lshKeys(_, 2, 4, 4))
   }
+
+  test("sign-LSH keys: the codegen'd sign bits equal the aggregate(zip_with) fold") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261020L)
+    def vec(n: Int): Seq[Option[Float]] = Seq.fill(n)(Some(rnd.nextFloat() * 2 - 1))
+    val vecs: Seq[Option[Seq[Option[Float]]]] = Seq.fill(40)(Some(vec(4))) ++ Seq(
+      None, Some(Seq.empty), Some(vec(3)), Some(vec(5)), Some(vec(2) ++ Seq(None) ++ vec(1)),
+      Some(vec(3) :+ Some(Float.NaN)), Some(Seq.fill(4)(Some(0.0f))), Some(Seq.fill(4)(Some(-0.0f))))
+    val df = vecs.zipWithIndex.map { case (v, i) => (i, v) }.toDF("id", "v")
+    // the key as the interpreted higher-order functions computed it
+    val folded = (0 until 3).map(t => SimOps.hyperplanesFor(t, 5, 4).zipWithIndex.map {
+      case (plane, i) =>
+        val dot = aggregate(zip_with(col("v"), lit(plane), (x, p) => x.cast("double") * p),
+          lit(0.0), (acc, x) => acc + x)
+        when(dot >= 0, lit(1L << i)).otherwise(lit(0L))
+    }.reduce(_ + _))
+    val key = "spark.sql.codegen.factoryMode"
+    for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, mode)
+      try {
+        val got = df.select((col("id") +: (SimOps.lshKeys(col("v"), 5, 3, 4) ++ folded)): _*)
+          .collect()
+        assert(got.length === vecs.length)
+        assert(got.map(_.getLong(1)).distinct.length > 4, s"$mode: too few distinct keys")
+        for (r <- got) assert((1 to 3).map(r.getLong) === (4 to 6).map(r.getLong),
+          s"$mode, vector ${r.getInt(0)}")
+      } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+  }
 }

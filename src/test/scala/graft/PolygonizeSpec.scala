@@ -4,9 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.SpatialOps
 
 /** raster→vector polygonize vs an INDEPENDENT per-pixel BFS flood fill:
-  * the operator never materializes pixels (RLE runs + binned adjacency +
-  * distributed CC), the reference materializes every OFF pixel and flood
-  * fills — agreement on every aggregate column is the gate. */
+  * the operator never materializes pixels (row runs labeled per row band,
+  * band seams closed on the driver), the reference materializes every OFF
+  * pixel and flood fills — agreement on every aggregate column is the
+  * gate. */
 class PolygonizeSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -134,5 +135,73 @@ class PolygonizeSpec extends AnyFunSuite {
         assert(got.toSeq.map(_._2).sum + onInBox === (l1 - l0 + 1) * (a1 - a0 + 1), s"seed $seed")
       }
     }
+  }
+
+  /** `body` at `n` shuffle partitions, which is also the band count of a
+    * raster this small */
+  private def withPartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try body finally spark.conf.set(key, prev)
+  }
+
+  /** one OFF corridor through every row: full OFF rows between ON walls,
+    * each inner wall open at alternating ends */
+  private def serpentine(w: Long, walls: Int): Set[(Long, Long)] =
+    (0 until walls).flatMap { k =>
+      val gap = if (k == 0 || k == walls - 1) -1L else if (k % 2 == 0) w - 2 else 1L
+      (0L until w).filter(_ != gap).map(x => (x, 2L * k))
+    }.toSet
+
+  test("seeded rasters taller than the band count match the flood fill at 1, 3 and 8 bands") {
+    for (parts <- Seq(1, 3, 8); seed <- Seq(11, 42, 77)) withPartitions(parts) {
+      val rnd = new scala.util.Random(seed * 31 + parts)
+      val (w, h) = (8 + rnd.nextInt(25), 40 + rnd.nextInt(161))
+      val p = 0.15 + 0.35 * rnd.nextDouble()
+      val on = (for { x <- 0L until w; y <- 0L until h if rnd.nextDouble() < p } yield (x, y)).toSet
+      assert(run(on) === floodFill(on), s"seed $seed, $w x $h, at $parts partitions")
+    }
+  }
+
+  test("a serpentine corridor crosses every seam and stays one region") {
+    val on = serpentine(9, 30)
+    for (parts <- Seq(3, 8)) withPartitions(parts) {
+      val got = run(on)
+      assert(got.size === 1)
+      assert(got === floodFill(on))
+      assert(got.head._2 === 29L * 9L + 28L) // 29 corridor rows and 28 wall gaps
+    }
+  }
+
+  test("bands with no ON pixel still run: their rows join the regions above and below") {
+    val on = (0L to 5L).flatMap(x => Seq((x, 0L), (x, 99L))).toSet ++
+      Set((0L, 50L), (1L, 50L), (2L, 50L), (3L, 10L), (4L, 70L), (4L, 71L))
+    withPartitions(8) { // bands of 13 rows: bands 1, 2, 4 and 6 hold no ON pixel
+      val got = run(on)
+      assert(got === floodFill(on))
+      assert(got.size === 1)
+    }
+  }
+
+  test("degenerate rasters: one row, one column, one pixel") {
+    val row = Set((0L, 0L), (3L, 0L), (4L, 0L), (7L, 0L))
+    assert(run(row) === floodFill(row))
+    assert(run(row).size === 2)
+    val column = Set((0L, 0L), (0L, 3L), (0L, 5L))
+    assert(run(column) === floodFill(column))
+    assert(run(column).size === 2)
+    assert(run(Set((5L, -3L))).isEmpty)
+  }
+
+  test("polygonize runs in at most 7 jobs, as many on a street grid as on a serpentine") {
+    import spark.implicits._
+    def jobs(on: Set[(Long, Long)]) = JobCounter.jobs(spark)(
+      SpatialOps.polygonizeRaster(on.toSeq.toDF("lon_idx", "lat_idx")).collect())
+    val grid = (for { x <- 0L to 60L; y <- 0L to 60L if x % 10 == 0 || y % 10 == 0 }
+      yield (x, y)).toSet
+    val (g, s) = (jobs(grid), jobs(serpentine(9, 30)))
+    assert(g <= 7, s"$g jobs on the street grid")
+    assert(s === g, s"$s jobs on the serpentine, $g on the street grid")
   }
 }
