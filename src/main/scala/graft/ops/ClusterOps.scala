@@ -231,10 +231,10 @@ object ClusterOps {
       }.mkString("array_min(array(", ", ", ")).j"))
     var assigned = points.withColumn("cluster", argmin(cents))
     for (_ <- 2 to iters) {
-      val sums = assigned.groupBy(col("cluster"))
-        .agg(sum(col("u")).as("su"), sum(col("v")).as("sv"), count(lit(1)).as("n"))
-        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
-        .toMap
+      val sums = Driver.collectBounded(assigned.groupBy(col("cluster"))
+        .agg(sum(col("u")).as("su"), sum(col("v")).as("sv"), count(lit(1)).as("n")),
+        k, k * 1024L + (1L << 16), "kmeans centroid sums")
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
       cents = cents.zipWithIndex.map { case (prev, j) =>
         sums.get(j.toLong).fold(prev) { case (su, sv, n) => (su / n, sv / n) }
       }

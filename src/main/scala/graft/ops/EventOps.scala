@@ -280,6 +280,7 @@ object EventOps {
     val b = events.withColumn("bucket",
       expr(s"unix_micros(cast(ts as timestamp)) DIV ${windowSec * 1000000L}"))
     val r = b.agg(min(col("bucket")), max(col("bucket"))).head()
+    require(!r.isNullAt(0), "lagCrossCorr: no events — the bucket range [min, max] is undefined")
     val (b0, b1) = (r.getLong(0), r.getLong(1)) // driver scalars
     val xs = b.filter(col("event_type") === typeX)
       .groupBy("bucket").agg(count(lit(1)).as("xc"))

@@ -181,10 +181,11 @@ object GeoStatsOps {
       .localCheckpoint(true) // reused 3x: moments, probe side, neighbor side
     val pairs = tileNeighbours(tiles.select(col("tile_id"), col("n").as("ni")),
       tiles.select(col("tile_id"), col("n").as("nj")), Ring8)
-    val pa = pairs.agg(count(lit(1)).as("wp"),
-      sum(col("ni") * col("nj")).as("p"), sum(col("ni")).as("si")).head()
     val ta = tiles.agg(count(lit(1)).as("nt"),
       sum(col("n")).as("s1"), sum(col("n") * col("n")).as("s2")).head()
+    require(ta.getLong(0) > 0, "moranI: no points — the tile moments are undefined")
+    val pa = pairs.agg(count(lit(1)).as("wp"), coalesce(sum(col("ni") * col("nj")), lit(0L)),
+      coalesce(sum(col("ni")), lit(0L))).head() // no pairs: empty sums are 0
     points.sparkSession.range(1).select(
         lit(ta.getLong(0)).as("n_tiles"), lit(pa.getLong(0)).as("w_pairs"),
         lit(pa.getLong(1)).as("p_sum"), lit(pa.getLong(2)).as("si_sum"),
@@ -273,6 +274,7 @@ object GeoStatsOps {
       count(lit(1)).as("nt"),
       sum(col("n")).as("sn"),
       sum(col("n") * col("n")).as("sn2")).head()
+    require(g.getLong(0) > 0, "giStarHotspots: no points — the global moments are undefined")
     val (nt, sn, sn2) = (g.getLong(0), g.getLong(1), g.getLong(2))
     val hood = tileNeighbours(tiles.select(col("tile_id")),
         tiles.select(col("tile_id"), col("n").as("nbr_n")), Ring8Self)
@@ -432,6 +434,7 @@ object GeoStatsOps {
       .localCheckpoint(true) // reused 3x: moments, probe side, neighbor side
     val g = tiles.agg(count(lit(1)).as("nt"), sum(col("n")).as("s1"),
       sum(col("n") * col("n")).as("s2")).head()
+    require(g.getLong(0) > 0, "localMoran: no points — the global moments are undefined")
     val (nt, s1) = (g.getLong(0), g.getLong(1))
     val s2 = g.getLong(2)
     val hood = tileNeighbours(tiles.select(col("tile_id")),

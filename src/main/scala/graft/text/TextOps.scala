@@ -1040,6 +1040,8 @@ object TextOps {
     // two driver scalars (BM25 pattern): corpus token and bigram totals
     val totals = toks.agg(sum(col("n_tokens")).as("t"),
       sum(col("n_tokens") - 1).as("b")).head()
+    require(!totals.isNullAt(0),
+      "pmiCollocations: empty document corpus — the token and bigram totals are undefined")
     val nTok = totals.getLong(0); val nBig = totals.getLong(1)
     def ln9(c: Column): Column =
       round(log(c.cast("double")) * lit(1e9), 0).cast("long")
@@ -1074,7 +1076,9 @@ object TextOps {
     import spark.implicits._
     val toks = docs.select(col("doc_id"),
       size(tokensCol(col("text"))).cast("long").as("n_tokens"))
-    val maxId = docs.agg(max(col("doc_id"))).head().getLong(0) // driver scalar
+    val top = docs.agg(max(col("doc_id"))).head()
+    require(!top.isNullAt(0), "vocabGrowth: empty document corpus — max doc_id is undefined")
+    val maxId = top.getLong(0) // driver scalar
     // a doc/term first lands in checkpoint i(d) = min{i : cp_i ≥ d}; since
     // cp_i = floor(maxId·i/B) and d is integer, that is ceil(B·d / maxId)
     // (clamped to ≥ 1 for d = 0) — an EQUI key, so the corpus collapses to
@@ -1123,7 +1127,9 @@ object TextOps {
     val sw = tok.groupBy("source", "w").agg(count(lit(1)).as("csw"))
     val cw = sw.groupBy("w").agg(sum(col("csw")).as("cwv"))
     val ns = sw.groupBy("source").agg(sum(col("csw")).as("nsv"))
-    val nTot = ns.agg(sum(col("nsv"))).head().getLong(0) // driver scalar
+    val tot = ns.agg(sum(col("nsv"))).head()
+    require(!tot.isNullAt(0), "sourceDrift: no tokens — the corpus total N is undefined")
+    val nTot = tot.getLong(0) // driver scalar
     def ln9(c: Column): Column =
       round(log(c.cast("double")) * lit(1e9), 0).cast("long")
     val lnN = Math.round(math.log(nTot.toDouble) * 1e9)

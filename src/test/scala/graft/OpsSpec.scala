@@ -276,4 +276,24 @@ class OpsSpec extends AnyFunSuite {
     assert(jobs(2) === 34)
     assert(jobs(1) === 30)
   }
+
+  test("empty input: ops that need a global scalar fail with a named message") {
+    val events = Seq.empty[(Long, String)].toDF("ts", "event_type")
+    val docs = Seq.empty[(Long, String, String)].toDF("doc_id", "source", "text")
+    val points = Seq.empty[(Double, Double)].toDF("lat", "lon")
+    def fails(op: String, scalar: String)(run: => org.apache.spark.sql.DataFrame): Unit = {
+      val e = intercept[IllegalArgumentException](run.collect())
+      assert(e.getMessage.contains(op) && e.getMessage.contains(scalar), e.getMessage)
+    }
+    fails("lagCrossCorr", "bucket range")(EventOps.lagCrossCorr(events, "view", "purchase"))
+    fails("pmiCollocations", "totals")(graft.text.TextOps.pmiCollocations(docs))
+    fails("vocabGrowth", "max doc_id")(graft.text.TextOps.vocabGrowth(docs))
+    fails("sourceDrift", "total N")(graft.text.TextOps.sourceDrift(docs))
+    fails("moranI", "tile moments")(GeoStatsOps.moranI(points, 12))
+    fails("giStarHotspots", "global moments")(GeoStatsOps.giStarHotspots(points, 12))
+    fails("localMoran", "global moments")(GeoStatsOps.localMoran(points, 12))
+    // one occupied tile has no neighbour pairs: their sums are 0, not null
+    val one = GeoStatsOps.moranI(Seq((0.5, 0.5)).toDF("lat", "lon"), 12).head()
+    assert((one.getLong(0), one.getLong(1), one.getLong(2), one.getLong(3)) === ((1L, 0L, 0L, 0L)))
+  }
 }

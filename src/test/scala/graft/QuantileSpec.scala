@@ -1,5 +1,8 @@
 package graft
 
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.Prop.propBoolean
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.ops.QuantileOps
@@ -60,5 +63,58 @@ class QuantileSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](
       QuantileOps.exactQuantiles(df, "x", Seq(0.5)).collect())
     assert(e.getMessage.contains("no non-null values"))
+  }
+
+  // values whose order a float bucket width gets wrong: the non-finite
+  // ends, the extremes of the finite range, subnormals and both zeros
+  private val edges = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+    Double.MaxValue, -Double.MaxValue, Double.MinPositiveValue, -Double.MinPositiveValue,
+    3 * Double.MinPositiveValue, java.lang.Double.MIN_NORMAL, 0.0, -0.0, 1.0, -1.0)
+
+  private def bitsEqual(a: Double, b: Double) =
+    java.lang.Double.doubleToLongBits(a) == java.lang.Double.doubleToLongBits(b)
+
+  test("property: any doubles, buckets and collectLimit give the sorted-array quantiles") {
+    val value = Gen.frequency(3 -> Gen.oneOf(edges), 2 -> Gen.choose(-1e3, 1e3),
+      1 -> Gen.choose(-1e-310, 1e-310), 1 -> Gen.choose(-Double.MaxValue, Double.MaxValue))
+    val gen = for {
+      pool <- Gen.choose(1, 12).flatMap(Gen.listOfN(_, value))
+      n <- Gen.choose(1, 300)
+      // pool(0) takes most draws: heavy duplicates
+      vals <- Gen.listOfN(n, Gen.frequency(3 -> Gen.const(0), 2 -> Gen.choose(0, pool.size - 1)))
+        .map(_.map(pool).toArray)
+      qs <- Gen.choose(1, 6).flatMap(Gen.listOfN(_,
+        Gen.frequency(1 -> Gen.oneOf(0.0, 1.0), 3 -> Gen.choose(0.0, 1.0))))
+      buckets <- Gen.choose(2, 64)
+      limit <- Gen.choose(4, 256)
+    } yield (vals, qs, buckets, limit)
+    val r = Test.check(Test.Parameters.default.withMinSuccessfulTests(24)
+      .withInitialSeed(Seed(20261021L)), Prop.forAllNoShrink(gen) { case (vals, qs, buckets, limit) =>
+      val df = spark.createDataFrame(vals.toSeq.map(Tuple1(_))).toDF("x").repartition(3)
+      val sorted = vals.clone(); java.util.Arrays.sort(sorted)
+      val want = qs.sorted.map(q => q -> sorted(math.floor(q * (vals.length - 1).toDouble).toInt))
+      // the same answer whether or not n exceeds collectLimit
+      Seq(limit, vals.length).forall { cl =>
+        val got = QuantileOps.exactQuantiles(df, "x", qs, buckets, cl).collect()
+          .map(r => r.getDouble(0) -> r.getDouble(1)).toSeq
+        got.map(_._1) == want.map(_._1) &&
+          got.zip(want).forall { case ((_, g), (_, w)) => bitsEqual(g, w) }
+      } :| s"n=${vals.length} buckets=$buckets limit=$limit qs=$qs vals=${vals.distinct.toSeq}"
+    })
+    assert(r.passed, org.scalacheck.util.Pretty.pretty(r))
+  }
+
+  test("jobs: 1 and 7 quantiles whose target buckets fit collectLimit run the same jobs") {
+    // 20,000 values over 40 binary exponents: each level-0 bucket (sign,
+    // exponent, top mantissa bit) holds about 250 of them
+    val vals = Array.tabulate(20000)(i => math.scalb(1.0 + (i / 40) / 500.0, i % 40))
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(vals.toSeq.map(Tuple1(_)), 4)).toDF("x")
+    def jobs(qs: Seq[Double]) = JobCounter.jobs(spark) {
+      val got = QuantileOps.exactQuantiles(df, "x", qs, collectLimit = 8192).collect()
+      for (r <- got) assert(r.getDouble(1) == truth(vals, r.getDouble(0)))
+    }
+    val (one, seven) = (jobs(Seq(0.5)), jobs(QS))
+    assert(one == seven, s"1 quantile: $one jobs, 7 quantiles: $seven jobs")
   }
 }
