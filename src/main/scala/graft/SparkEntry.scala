@@ -2588,7 +2588,7 @@ object SparkEntry {
     "q_quantiles_exact" -> ((s, dir) =>
       QuantileOps.exactQuantiles(
         s.read.parquet(s"$dir/lineitem.parquet"), "l_extendedprice",
-        Seq(0.25, 0.5, 0.75, 0.9, 0.99)).orderBy("q")),
+        Seq(0.25, 0.5, 0.75, 0.9, 0.99))),
 
     // TPC-H Q5-shaped local-supplier revenue: the 6-way join anchor. Fact
     // tables (lineitem, orders) shuffle on their join keys; customer/

@@ -41,22 +41,22 @@ object GridCell {
   /** All cells covered by the closed bbox — the reference replicates a way
     * into every cell its BOUNDS cover (`gpsBins.js:94-116`), not just cells
     * its geometry passes through; we reproduce that (coarse candidate set,
-    * refined later by exact geometry).
+    * refined later by exact geometry). An inverted box fails, as does one over MaxDiskCells.
     */
   def covering(minLat: Double, minLon: Double, maxLat: Double, maxLon: Double, res: Int): Array[Long] = {
     val lo0 = lonIdx(minLon, res); val hi0 = lonIdx(maxLon, res)
     val la0 = latIdx(minLat, res); val la1 = latIdx(maxLat, res)
-    val n = ((hi0 - lo0 + 1) * (la1 - la0 + 1)).toInt
-    val out = new Array[Long](n)
+    val w = hi0 - lo0 + 1; val h = la1 - la0 + 1 // <= 0 only on Long overflow
+    require(minLat <= maxLat && minLon <= maxLon && w > 0 && h > 0 && w <= MaxDiskCells / h,
+      s"cells_covering: box [$minLat, $minLon, $maxLat, $maxLon] at res $res must have " +
+        s"min <= max on each axis and cover at most $MaxDiskCells cells")
+    val out = new Array[Long]((w * h).toInt)
     var k = 0
-    var x = lo0
-    while (x <= hi0) {
-      var y = la0
-      while (y <= la1) {
-        out(k) = pack(x, y); k += 1
-        y += 1
-      }
-      x += 1
+    var i = 0L
+    while (i < w) {
+      var j = 0L
+      while (j < h) { out(k) = pack(lo0 + i, la0 + j); k += 1; j += 1 }
+      i += 1
     }
     out
   }

@@ -6,20 +6,19 @@ import graft.exprs.fns
 
 /** Geometric intersection finding (SURVEY J2-J5, P4, P7): reference
   * `findIntersectionsGeomtric` geo.js:248-329 over the 0.01° grid bins
-  * (gpsBins.js). Expressed Spark-first as a cell-bucketed self-join:
-  * each way replicates into every grid cell its bbox covers
-  * (explode(cells_covering(bbox))), candidate pairs are an equi-join on
-  * cell_id, refined by exact polyline intersection. The left side is the
-  * motorway subset (P4: `way.bridge` is never set on the objects the
-  * reference tests, so the effective predicate is motorway-only) — tiny,
-  * so Spark broadcasts it.
+  * (gpsBins.js). Expressed Spark-first as a theta-join on "the two ways'
+  * bbox coverings share a cell" (arrays_overlap of cells_covering), which
+  * [[graft.plans.CoverJoinRewrite]] plans as a cell-bucketed equi-join,
+  * refined by exact polyline intersection. The left side is the motorway
+  * subset (P4: `way.bridge` is never set on the objects the reference
+  * tests, so the effective predicate is motorway-only) — tiny, so it is
+  * broadcast.
   *
   * The reference's bin iterator may yield the same way pair once per shared
   * cell and tolerates the duplicate output rows ("intersections of >2 ways
   * could appear multiple times", geo.js:270); here each pair is kept in
-  * exactly one shared cell by a reference-point owner conjunct (W4
-  * normalization): the low corner of the two coverings' overlap, in index
-  * space, lies in both coverings exactly once. No dedup shuffle.
+  * exactly one shared cell by the rule's owner conjunct (W4 normalization).
+  * No dedup shuffle.
   *
   * Output columns: lat, lon, raw, streets, wayIds array<long>, nodeId
   * string ('Geom' or first common node id), ord (large sentinel — geometric
@@ -36,32 +35,20 @@ object GeomIntersections {
       .withColumn("max_lon", array_max(transform(col("geometry"), g => g.getField("lon"))))
 
   def apply(spark: SparkSession, wayData: DataFrame, res: Int = 2): DataFrame = {
-    val bounded = withBounds(wayData)
-    val withCells = bounded
-      .select(col("way_id"), col("name"), col("highway"), col("nodes"), col("geometry"),
-        col("min_lat"), col("min_lon"),
-        explode(fns.cells_covering(col("min_lat"), col("min_lon"),
-          col("max_lat"), col("max_lon"), res)).as("cell"))
-
+    graft.plans.GraftPlans.enable(spark)
+    val named = withBounds(wayData).filter(length(col("name")) > 0)
+      .select(col("way_id").as("id"), col("name"), col("highway").as("hw"), col("nodes"),
+        col("geometry").as("geom"), col("min_lat"), col("min_lon"), col("max_lat"), col("max_lon"))
+    def side(i: Int) = named.select(named.columns.toSeq.map(c => col(c).as(s"$c$i")): _*)
+    def cover(i: Int) = fns.cells_covering(col(s"min_lat$i"), col(s"min_lon$i"),
+      col(s"max_lat$i"), col(s"max_lon$i"), res)
     // P4 (effective): candidate way1 must be a motorway with a nonempty name
-    val left = withCells
-      .filter(col("highway") === "motorway" && length(col("name")) > 0)
-      .select(col("cell"), col("way_id").as("id1"), col("name").as("name1"),
-        col("highway").as("hw1"), col("nodes").as("nodes1"), col("geometry").as("geom1"),
-        col("min_lat").as("min_lat1"), col("min_lon").as("min_lon1"))
-    val right = withCells
-      .filter(length(col("name")) > 0)
-      .select(col("cell"), col("way_id").as("id2"), col("name").as("name2"),
-        col("highway").as("hw2"), col("nodes").as("nodes2"), col("geometry").as("geom2"),
-        col("min_lat").as("min_lat2"), col("min_lon").as("min_lon2"))
+    val left = side(1).filter(col("hw1") === "motorway")
 
     // J3 symmetry breaking (gpsBins.js:216-226): yield way2 iff it fails the
-    // predicate or has a larger id; never self-pair. W4 owner: the pair is
-    // kept only in the cell of its coverings' common low corner.
-    val pairs = broadcast(left).join(right,
-        left("cell") === right("cell") &&
-          left("cell") === fns.cell_encode(greatest(col("min_lat1"), col("min_lat2")),
-            greatest(col("min_lon1"), col("min_lon2")), res) &&
+    // predicate or has a larger id; never self-pair
+    val pairs = broadcast(left).join(side(2),
+        arrays_overlap(cover(1), cover(2)) &&
           col("id1") =!= col("id2") &&
           (col("hw2") =!= "motorway" || col("id2") > col("id1")), "inner")
 

@@ -419,32 +419,31 @@ object SpatialOps {
   /** J6 at the million-polygon scale: the broadcast-prepared-polys path
     * (imageCity) dies when the boundary table no longer fits every
     * executor — countries ship ~50 MB of city polygons, cadastral/parcel
-    * layers ship millions. This twin keeps polygons DISTRIBUTED: each
-    * polygon explodes to its bbox-covering cells (a few hundred cells at
-    * res 2), points equi-join on their single cell (SHUFFLE_HASH — the
-    * index scales with the polygon table, never the driver), and the exact
-    * ray-cast PIP refines candidates only. First-match-wins parity with
-    * imageCity via min(poly_idx) over containing polygons (the prepared
-    * path scans polys in array order). Must produce the IDENTICAL rowset —
-    * registered on the same oracle SQL as q_image_city. */
+    * layers ship millions. This twin keeps polygons DISTRIBUTED: a point
+    * joins each polygon whose bbox covering holds its cell, which
+    * [[graft.plans.CoverJoinRewrite]] plans as polygons exploded to their
+    * covering cells (a few hundred at res 2) and points keyed on their one
+    * cell (SHUFFLE_HASH — the index scales with the polygon table, never
+    * the driver); the exact ray-cast PIP refines candidates only.
+    * First-match-wins parity with imageCity via min(poly_idx) over
+    * containing polygons (the prepared path scans polys in array order).
+    * Must produce the IDENTICAL rowset — registered on the same oracle SQL
+    * as q_image_city. */
   def imageCityIndexed(images: DataFrame,
                        polys: Array[(String, Array[Array[Double]])],
                        res: Int = 2, default: String = "Unincorporated"): DataFrame = {
     val spark = images.sparkSession
     import spark.implicits._
+    graft.plans.GraftPlans.enable(spark)
     val polyDf = polys.zipWithIndex.map { case ((name, rings), i) =>
-      (i, name, rings.map(_.toSeq).toSeq)
-    }.toSeq.toDF("poly_idx", "poly_name", "rings")
-    // outer-ring bbox: rings[0] is flat [lon,lat,...]
-    val lons = expr("transform(sequence(0, size(rings[0]) div 2 - 1), i -> rings[0][2*i])")
-    val lats = expr("transform(sequence(0, size(rings[0]) div 2 - 1), i -> rings[0][2*i + 1])")
-    val polyCells = polyDf
-      .withColumn("cell", explode(fns.cells_covering(
-        array_min(lats), array_min(lons), array_max(lats), array_max(lons), res)))
-    val firstHit = images
-      .select(col("image_id"), col("lat"), col("lon"),
-        fns.cell_encode(col("lat"), col("lon"), res).as("cell"))
-      .join(polyCells.hint("SHUFFLE_HASH"), Seq("cell"))
+      // outer-ring bbox: rings(0) is flat [lon,lat,...]
+      val (lons, lats) = rings(0).grouped(2).map(p => (p(0), p(1))).toSeq.unzip
+      (i, name, rings.map(_.toSeq).toSeq, lats.min, lons.min, lats.max, lons.max)
+    }.toSeq.toDF("poly_idx", "poly_name", "rings", "lat0", "lon0", "lat1", "lon1")
+    val firstHit = images.select(col("image_id"), col("lat"), col("lon"))
+      .join(polyDf.drop("poly_name").hint("SHUFFLE_HASH"), array_contains(
+        fns.cells_covering(col("lat0"), col("lon0"), col("lat1"), col("lon1"), res),
+        fns.cell_encode(col("lat"), col("lon"), res)))
       .filter(fns.point_in_polygon(col("lat"), col("lon"), col("rings")))
       .groupBy(col("image_id")).agg(min(col("poly_idx")).as("poly_idx"))
       .join(polyDf.select(col("poly_idx"), col("poly_name")), Seq("poly_idx"))
@@ -522,32 +521,29 @@ object SpatialOps {
     * image density — the tile statistic a curation pipeline shards and
     * rebalances by.
     *
-    * Join shape: blocks explode into their coarse covering cells
-    * (`cells_covering` — a handful per block), images bucket by the same
-    * cell, the candidate equi-join refines by EXACT integer pixel
-    * containment (floor(coord·10^res), the rasterizer's own floor
-    * convention — an image sitting ON a street pixel belongs to no block).
+    * Join shape: an image joins each block whose coarse covering
+    * (`cells_covering`, a handful of cells per block) holds its cell, the
+    * point × box form of [[graft.plans.CoverJoinRewrite]]; candidates
+    * refine by EXACT integer pixel containment (floor(coord·10^res), the
+    * rasterizer's own floor convention — an image sitting ON a street pixel
+    * belongs to no block).
     * The image side is never replicated; the block side is SHUFFLE_HASH
     * (at planet scale blocks ∝ area — too big to broadcast, small enough
     * to hash-build per partition). Zero-image blocks are kept (count 0):
     * the empty blocks are the coverage story, not noise. */
   def blockImageDensity(blocks: DataFrame, images: DataFrame,
                         res: Int = 4, cellRes: Int = 3): DataFrame = {
+    graft.plans.GraftPlans.enable(images.sparkSession)
     val p = graft.cells.GridCell.pow10(res)
     val bc = blocks.select(col("block_id"), col("lon_min"), col("lon_max"),
-        col("lat_min"), col("lat_max"))
-      .withColumn("cell", explode(fns.cells_covering(
-        col("lat_min").cast("double") / p, col("lon_min").cast("double") / p,
-        (col("lat_max") + 1L).cast("double") / p, (col("lon_max") + 1L).cast("double") / p,
-        cellRes)))
-    val imgs = images
-      .select(col("image_id"),
-        fns.cell_encode(col("lat"), col("lon"), cellRes).as("cell"),
-        floor(col("lon") * p).cast("long").as("ilon"),
-        floor(col("lat") * p).cast("long").as("ilat"))
-    val counted = imgs.join(bc.hint("SHUFFLE_HASH"), Seq("cell"))
-      .filter(col("ilon").between(col("lon_min"), col("lon_max")) &&
-        col("ilat").between(col("lat_min"), col("lat_max")))
+      col("lat_min"), col("lat_max"))
+    val counted = images.select(col("lat"), col("lon"))
+      .join(bc.hint("SHUFFLE_HASH"), array_contains(fns.cells_covering(
+          col("lat_min").cast("double") / p, col("lon_min").cast("double") / p,
+          (col("lat_max") + 1L).cast("double") / p, (col("lon_max") + 1L).cast("double") / p,
+          cellRes), fns.cell_encode(col("lat"), col("lon"), cellRes)) &&
+        floor(col("lon") * p).cast("long").between(col("lon_min"), col("lon_max")) &&
+        floor(col("lat") * p).cast("long").between(col("lat_min"), col("lat_max")))
       .groupBy("block_id").agg(count(lit(1)).as("n_images"))
     blocks.select("block_id", "n_pixels")
       .join(counted, Seq("block_id"), "left")

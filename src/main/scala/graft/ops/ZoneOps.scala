@@ -43,11 +43,9 @@ object ZoneOps {
       .withColumn("zf_lons", expr(
         "transform(sequence(0, size(zf_flat) DIV 2 - 1), i -> zf_flat[2*i])"))
 
-  /** the res-`res` cells covering the rings' bbox, from its low corner
-    * (`lat0`, `lon0`) to the rings' maxima, one row each */
-  private def ringCover(lat0: Column, lon0: Column, res: Int): Column =
-    explode(fns.cells_covering(lat0, lon0,
-      array_max(col("zf_lats")), array_max(col("zf_lons")), res))
+  /** the res-`res` cells covering the rings' bbox, one row each */
+  private def ringCover(res: Int): Column = explode(fns.cells_covering(array_min(col("zf_lats")),
+    array_min(col("zf_lons")), array_max(col("zf_lats")), array_max(col("zf_lons")), res))
 
   /** POLYFILL: every res-`res` grid cell whose CENTER lies inside the
     * zone's polygon (the standard H3/S2 polyfill containment mode).
@@ -63,7 +61,7 @@ object ZoneOps {
   def polyfill(zones: DataFrame, res: Int): DataFrame = {
     val p10 = pow10(res)
     ringCoords(zones)
-      .withColumn("cell", ringCover(array_min(col("zf_lats")), array_min(col("zf_lons")), res))
+      .withColumn("cell", ringCover(res))
       .withColumn("c_lat", (latIdx.cast("double") + lit(0.5)) / lit(p10))
       .withColumn("c_lon", (lonIdx.cast("double") + lit(0.5)) / lit(p10))
       .filter(fns.point_in_polygon(col("c_lat"), col("c_lon"), col("rings")))
@@ -196,7 +194,7 @@ object ZoneOps {
   def cellOverlap(zones: DataFrame, res: Int): DataFrame = {
     val p10 = pow10(res)
     ringCoords(zones)
-      .withColumn("cell", ringCover(array_min(col("zf_lats")), array_min(col("zf_lons")), res))
+      .withColumn("cell", ringCover(res))
       .withColumn("c_lat_lo", latIdx.cast("double") / lit(p10))
       .withColumn("c_lon_lo", lonIdx.cast("double") / lit(p10))
       .withColumn("area_q4", round(fns.clip_rect_area(col("rings"),
@@ -223,33 +221,27 @@ object ZoneOps {
     * (id, zone, overlap_q4) for pairs with positive overlap, exact
     * quarter-µ°² integers (extent edges whole-µ°, zone edges half-µ°).
     *
-    * Scale shape: both sides explode their bbox covering map-side, the
-    * candidate join is a SHUFFLE_HASH equi-join on the cell, each pair is
-    * kept in ONE shared cell by a reference-point owner conjunct (the cell
-    * of the two bboxes' common low corner, which both coverings hold
-    * exactly once: no dedup shuffle), and the refine is a per-row
-    * codegen'd static call. At 10⁶ polygons × 10⁶ extents nothing is
-    * broadcast and nothing is quadratic; res trades candidate fan-out
+    * Scale shape: [[graft.plans.CoverJoinRewrite]] plans the shared-cell
+    * test as a SHUFFLE_HASH cell equi-join whose owner conjunct keeps each
+    * pair once (no dedup shuffle); the refine is a codegen'd static call.
+    * Nothing is broadcast or quadratic; res trades candidate fan-out
     * against refine count.
     */
   def extentZoneJoin(extents: DataFrame, zones: DataFrame, res: Int,
                      frameLat0: Double = graft.synth.Synth.LAT0,
                      frameLon0: Double = graft.synth.Synth.LON0): DataFrame = {
-    val uDeg = (u: Column) => GeoStatsOps.frameDeg(u, frameLat0)
-    val vDeg = (v: Column) => GeoStatsOps.frameDeg(v, frameLon0)
-    val a = extents.withColumn("cell", explode(fns.cells_covering(
-      uDeg(col("uLo")), vDeg(col("vLo")), uDeg(col("uHi")), vDeg(col("vHi")), res)))
-    val b = ringCoords(zones)
-      .withColumn("zf_lat0", array_min(col("zf_lats")))
-      .withColumn("zf_lon0", array_min(col("zf_lons")))
-      .withColumn("cell", ringCover(col("zf_lat0"), col("zf_lon0"), res))
-      .select(col("zone"), col("rings"), col("zf_lat0"), col("zf_lon0"), col("cell"))
-    a.join(b.hint("SHUFFLE_HASH"), Seq("cell"))
-      .filter(col("cell") === fns.cell_encode(greatest(uDeg(col("uLo")), col("zf_lat0")),
-        greatest(vDeg(col("vLo")), col("zf_lon0")), res))
+    graft.plans.GraftPlans.enable(extents.sparkSession)
+    val uDeg = (u: String) => GeoStatsOps.frameDeg(col(u), frameLat0)
+    val vDeg = (v: String) => GeoStatsOps.frameDeg(col(v), frameLon0)
+    val b = ringCoords(zones).select(col("zone"), col("rings"),
+      array_min(col("zf_lats")).as("zf_lat0"), array_min(col("zf_lons")).as("zf_lon0"),
+      array_max(col("zf_lats")).as("zf_lat1"), array_max(col("zf_lons")).as("zf_lon1"))
+    extents.select("id", "uLo", "uHi", "vLo", "vHi")
+      .join(b.hint("SHUFFLE_HASH"), arrays_overlap(
+        fns.cells_covering(uDeg("uLo"), vDeg("vLo"), uDeg("uHi"), vDeg("vHi"), res),
+        fns.cells_covering(col("zf_lat0"), col("zf_lon0"), col("zf_lat1"), col("zf_lon1"), res)))
       .withColumn("overlap_q4", round(fns.clip_rect_area(col("rings"),
-        uDeg(col("uLo")), vDeg(col("vLo")), uDeg(col("uHi")), vDeg(col("vHi")))
-        * lit(4.0e12)).cast("long"))
+        uDeg("uLo"), vDeg("vLo"), uDeg("uHi"), vDeg("vHi")) * lit(4.0e12)).cast("long"))
       .filter(col("overlap_q4") > 0L)
       .select(col("id"), col("zone"), col("overlap_q4"))
   }

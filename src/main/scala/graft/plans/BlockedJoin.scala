@@ -17,8 +17,8 @@ import org.apache.spark.sql.types.ArrayType
   * scalar key), block-key equality is the new hash key, the OWNER conjunct
   * keeps exactly one copy of a pair that shares several blocks (the
   * reference-point duplicate test — no dedup shuffle, arbitrary payload
-  * columns preserved), and the ORIGINAL condition stays as the exact
-  * refinement, so results are identical to the naive join.
+  * columns preserved), and the original condition (less a conjunct the key
+  * equality implies) stays as the exact refinement: the naive join's rows.
   *
   * A rule fires only on an inner join whose condition has NO equi-join
   * conjunct between the sides (if one exists, Spark already has a hash key)
@@ -75,18 +75,19 @@ abstract class BlockedJoin extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   /** `keys` pairs (left, right) as the hash key, then the owner conjunct,
-    * then `j`'s original condition; `j`'s output columns only. */
+    * then `residual`, what is left of `j`'s condition; `j`'s output only. */
   protected def assemble(j: Join, left: LogicalPlan, right: LogicalPlan,
-                         keys: Seq[(Attribute, Attribute)],
-                         owner: Option[Expression]): LogicalPlan = {
-    val cond = (keys.map { case (l, r) => EqualTo(l, r): Expression } ++ owner :+
-      j.condition.get).reduce(And)
+                         keys: Seq[(Attribute, Attribute)], owner: Option[Expression],
+                         residual: Seq[Expression]): LogicalPlan = {
+    val cond = (keys.map { case (l, r) => EqualTo(l, r): Expression } ++ owner ++
+      residual).reduce(And)
     Project(j.output, Join(left, right, Inner, Some(cond), j.hint))
   }
 }
 
 object BlockedJoin {
-  val rules: Seq[BlockedJoin] = Seq(DistanceJoinRewrite, HammingJoinRewrite, RangeJoinRewrite)
+  val rules: Seq[BlockedJoin] =
+    Seq(CoverJoinRewrite, DistanceJoinRewrite, HammingJoinRewrite, RangeJoinRewrite)
 }
 
 /** `spark.sql.extensions` entry point: registers the blocked-join rules in

@@ -113,6 +113,6 @@ object DistanceJoinRewrite extends BlockedJoin {
       if (j.left.stats.sizeInBytes <= j.right.stats.sizeInBytes)
         (disk(j.left, latL, lonL), cell(j.right, latR, lonR))
       else (cell(j.left, latL, lonL), disk(j.right, latR, lonR))
-    assemble(j, l, r, Seq((kl, kr)), owner = None)
+    assemble(j, l, r, Seq((kl, kr)), owner = None, j.condition.toSeq)
   }
 }

@@ -96,6 +96,6 @@ object HammingJoinRewrite extends BlockedJoin {
       And(EqualTo(bandL, Literal(b)), bandsDifferBelow(b)): Expression
     }.reduce(Or)
 
-    assemble(j, lp, rp, Seq((bandL, bandR), (bktL, bktR)), Some(firstMatch))
+    assemble(j, lp, rp, Seq((bandL, bandR), (bktL, bktR)), Some(firstMatch), j.condition.toSeq)
   }
 }

@@ -148,6 +148,6 @@ object RangeJoinRewrite extends BlockedJoin {
     val firstShared = FloorDivBin(
       Greatest(Seq(Least(Seq(asLong(sL), asLong(eL))),
                    Least(Seq(asLong(sR), asLong(eR))))), bin)
-    assemble(j, lp, rp, Seq((binL, binR)), Some(EqualTo(binL, firstShared)))
+    assemble(j, lp, rp, Seq((binL, binR)), Some(EqualTo(binL, firstShared)), j.condition.toSeq)
   }
 }

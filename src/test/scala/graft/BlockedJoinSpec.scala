@@ -150,6 +150,64 @@ class BlockedJoinSpec extends AnyFunSuite {
     })
   }
 
+  /** boxes (minLat, minLon, maxLat, maxLon) on a half-cell lattice around
+    * the origin at `res`, so they touch cell edges, straddle negative
+    * coordinates and cover 1-16 cells; pairs often share 2-9 */
+  private def half(res: Int): Double = 0.5 / graft.cells.GridCell.pow10(res)
+
+  private def boxPool(res: Int): Gen[Seq[(Double, Double, Double, Double)]] =
+    Gen.listOfN(8, for {
+      lat <- Gen.choose(-6, 6); lon <- Gen.choose(-6, 6)
+      h <- Gen.choose(0, 6); w <- Gen.choose(0, 6)
+    } yield (lat * half(res), lon * half(res), (lat + h) * half(res), (lon + w) * half(res)))
+
+  private def cover(p: String, res: Int) = fns.cells_covering(col(s"${p}_lat0"),
+    col(s"${p}_lon0"), col(s"${p}_lat1"), col(s"${p}_lon1"), res)
+
+  test("exactly once: cover rewrite, box x box sharing several cells") {
+    import spark.implicits._
+    val gen = for {
+      res <- Gen.choose(0, 3)
+      poolA <- boxPool(res)
+      poolB <- boxPool(res)
+      l <- drawn(poolA, Gen.choose(3, 10))
+      r <- drawn(poolB, Gen.choose(3, 10))
+      refine <- Gen.oneOf(false, true)
+    } yield (l, r, res, refine)
+    holds(Prop.forAllNoShrink(gen) { case c @ (l, r, res, refine) =>
+      val a = l.map { case (i, (y0, x0, y1, x1)) => (i, y0, x0, y1, x1) }
+        .toDF("a_id", "a_lat0", "a_lon0", "a_lat1", "a_lon1")
+      val b = r.map { case (i, (y0, x0, y1, x1)) => (i, y0, x0, y1, x1) }
+        .toDF("b_id", "b_lat0", "b_lon0", "b_lat1", "b_lon1")
+      val overlap = arrays_overlap(cover("a", res), cover("b", res))
+      sameRows("cell#") {
+        a.join(b, if (refine) overlap && col("a_id") =!= col("b_id") else overlap)
+      } :| c.toString
+    })
+  }
+
+  test("exactly once: cover rewrite, point x box on either side") {
+    import spark.implicits._
+    val gen = for {
+      res <- Gen.choose(0, 3)
+      pool <- boxPool(res)
+      pts <- Gen.listOfN(8, Gen.zip(Gen.choose(-8, 14), Gen.choose(-8, 14))
+        .map { case (y, x) => (y * half(res), x * half(res)) })
+      l <- drawn(pool, Gen.choose(3, 10))
+      r <- drawn(pts, Gen.choose(3, 10))
+      pointLeft <- Gen.oneOf(false, true)
+    } yield (l, r, res, pointLeft)
+    holds(Prop.forAllNoShrink(gen) { case c @ (l, r, res, pointLeft) =>
+      val box = l.map { case (i, (y0, x0, y1, x1)) => (i, y0, x0, y1, x1) }
+        .toDF("a_id", "a_lat0", "a_lon0", "a_lat1", "a_lon1")
+      val pt = r.map { case (i, (y, x)) => (i, y, x) }.toDF("b_id", "b_lat", "b_lon")
+      val within = array_contains(cover("a", res), fns.cell_encode(col("b_lat"), col("b_lon"), res))
+      sameRows("cell#") {
+        if (pointLeft) pt.join(box, within) else box.join(pt, within)
+      } :| c.toString
+    })
+  }
+
   private def withBin[A](bin: Long)(body: => A): A = {
     val key = RangeJoinRewrite.BinConfKey
     val prev = spark.conf.getOption(key)

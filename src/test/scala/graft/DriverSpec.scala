@@ -108,6 +108,14 @@ class DriverSpec extends AnyFunSuite {
     assert(over.isEmpty, over.mkString("\n"))
   }
 
+  test("lint: no hand-written cell-cover owner conjunct in ops, text, sim and sources") {
+    // a covering explode + cell equi-join is a theta-join on arrays_overlap /
+    // array_contains of cells_covering, planned by CoverJoinRewrite, whose
+    // owner conjunct is the one copy
+    val over = overCap("cell_encode\\(greatest\\(", Map.empty)
+    assert(over.isEmpty, over.mkString("\n"))
+  }
+
   test("lint: the registry replays streams only through Streaming.replay") {
     // the streaming twins' MemoryStream, feed collect and shuffle-partition
     // scope live in one harness

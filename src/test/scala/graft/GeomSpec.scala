@@ -237,6 +237,31 @@ class CellsSpec extends AnyFunSuite {
     assert(cells.toSet.size === cells.length)
   }
 
+  private def coveringFails(minLat: Double, minLon: Double, maxLat: Double, maxLon: Double,
+                            res: Int, why: String): Unit = {
+    val e = intercept[IllegalArgumentException](
+      GridCell.covering(minLat, minLon, maxLat, maxLon, res))
+    assert(e.getMessage.contains(s"[$minLat, $minLon, $maxLat, $maxLon] at res $res") &&
+      e.getMessage.contains(why), e.getMessage)
+  }
+
+  test("covering: a box inverted on both axes fails, not a fake cell 0") {
+    coveringFails(37.03, -122.0, 37.0, -122.02, 2, "min <= max")
+  }
+
+  test("covering: a box inverted on one axis fails by name, not NegativeArraySize") {
+    coveringFails(37.03, -122.02, 37.0, -122.0, 2, "min <= max")
+    coveringFails(37.0, -122.0, 37.03, -122.02, 2, "min <= max")
+    coveringFails(Double.NaN, -122.02, 37.0, -122.0, 2, "min <= max")
+  }
+
+  test("covering: a box over MaxDiskCells fails instead of wrapping its Int size") {
+    // 36,000,001 x 18,000,001 cells: the Long product wraps an Int cast
+    coveringFails(-90.0, -180.0, 90.0, 180.0, 5, s"${GridCell.MaxDiskCells} cells")
+    // the index span itself overflows a Long
+    coveringFails(0.0, 0.0, 1e300, 1e300, 5, s"${GridCell.MaxDiskCells} cells")
+  }
+
   test("ring sizes: 1, 8k") {
     val c = GridCell.encode(37.0, -122.0, 2)
     assert(GridCell.ring(c, 0).toSeq === Seq(c))

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{Skew, SpatialOps}
 
@@ -115,5 +115,37 @@ class PlanSpec extends AnyFunSuite {
     val (_, vocab) = graft.text.TextOps.bpeTrain(docs.limit(50), nMerges = 1)
     val plan = planOf(graft.text.TextOps.bpeEncode(docs, vocab))
     assert(plan.contains("BroadcastHashJoin"), s"vocab join not broadcast:\n$plan")
+  }
+
+  test("cell-cover joins plan as hash joins in sessions that never enabled the rules") {
+    // each op builds its inputs and is planned in a fresh session of its own
+    def fresh(op: SparkSession => DataFrame): String = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.adaptive.enabled", "false")
+      op(s).queryExecution.executedPlan.toString
+    }
+    val ring = Array(Array(-122.03, 36.99, -121.99, 36.99, -121.99, 37.03, -122.03, 37.03))
+    def images(s: SparkSession) =
+      s.createDataFrame(Seq(("i1", 37.01, -122.01))).toDF("image_id", "lat", "lon")
+    val plans = Seq(
+      "BroadcastHashJoin" -> fresh(s => graft.ops.GeomIntersections(s, s.sql("""SELECT * FROM VALUES
+          (1L, 'A', 'motorway', array(1L, 2L), array(named_struct('lat', 37.0D, 'lon', -122.0D),
+            named_struct('lat', 37.02D, 'lon', -122.02D))),
+          (2L, 'B', 'primary', array(3L, 4L), array(named_struct('lat', 37.02D, 'lon', -122.0D),
+            named_struct('lat', 37.0D, 'lon', -122.02D)))
+          AS t(way_id, name, highway, nodes, geometry)"""))),
+      "ShuffledHashJoin" -> fresh(s => graft.ops.ZoneOps.extentZoneJoin(
+        s.createDataFrame(Seq((1L, 0L, 10000L, 0L, 10000L)))
+          .toDF("id", "uLo", "uHi", "vLo", "vHi"),
+        s.createDataFrame(Seq(("z", ring.map(_.toSeq).toSeq))).toDF("zone", "rings"), res = 3)),
+      "ShuffledHashJoin" -> fresh(s => SpatialOps.imageCityIndexed(images(s), Array(("c", ring)))),
+      "ShuffledHashJoin" -> fresh(s => SpatialOps.blockImageDensity(
+        s.createDataFrame(Seq((1L, 4L, -1220200L, -1220000L, 370000L, 370200L)))
+          .toDF("block_id", "n_pixels", "lon_min", "lon_max", "lat_min", "lat_max"), images(s))))
+    for ((strategy, plan) <- plans) {
+      assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
+        s"nested-loop cell-cover join:\n$plan")
+      assert(plan.contains(s"$strategy [cell"), s"cell join not a $strategy:\n$plan")
+    }
   }
 }

@@ -10,7 +10,7 @@ import graft.ops.QuantileOps
 /** Histogram-narrowing exact quantiles vs brute-force sorted-array truth,
   * with collectLimit forced tiny so the multi-level narrowing path (not
   * the collect shortcut) is what's under test. */
-class QuantileSpec extends AnyFunSuite {
+class QuantileSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
 
   private val QS = Seq(0.0, 0.01, 0.25, 0.5, 0.75, 0.99, 1.0)
@@ -116,5 +116,22 @@ class QuantileSpec extends AnyFunSuite {
     }
     val (one, seven) = (jobs(Seq(0.5)), jobs(QS))
     assert(one == seven, s"1 quantile: $one jobs, 7 quantiles: $seven jobs")
+  }
+
+  test("registry q_quantiles_exact: rows ascend in q, in the bare call's jobs") {
+    val dir = tempDir("quantiles")
+    spark.range(0, 20000, 1, 3).select((col("id") * 7919L % 20000L).cast("double")
+      .as("l_extendedprice")).write.parquet(s"$dir/lineitem.parquet")
+    val qs = Seq(0.25, 0.5, 0.75, 0.9, 0.99)
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    val registry = JobCounter.jobs(spark) {
+      rows = SparkEntry.queries("q_quantiles_exact")(spark, dir).collect()
+    }
+    val bare = JobCounter.jobs(spark) {
+      QuantileOps.exactQuantiles(spark.read.parquet(s"$dir/lineitem.parquet"),
+        "l_extendedprice", qs).collect()
+    }
+    assert(rows.map(_.getDouble(0)).toSeq == qs)
+    assert(registry == bare, s"registry frame: $registry jobs, bare call: $bare jobs")
   }
 }
